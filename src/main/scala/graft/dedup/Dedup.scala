@@ -1,9 +1,11 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.sketch.BloomFilter
 
 import graft.text.TextFunctions._
 
@@ -885,6 +887,28 @@ object Dedup {
   def bloomBits(expectedItems: Long, fpp: Double): Long =
     math.ceil(-expectedItems * math.log(fpp) / (math.log(2) * math.log(2))).toLong
 
+  /** Stored filter bytes ([[digestFilter]], `bloom.bin`) deserialized
+    * and broadcast for [[bloomProbe]]. Executors fetch the filter once
+    * per JVM; the caller owns the broadcast's lifetime — destroy it
+    * once every frame probing it is materialized, or leave it to the
+    * ContextCleaner (released when the last plan holding it is GC'd). */
+  private[graft] def broadcastFilter(spark: SparkSession,
+      bytes: Array[Byte]): Broadcast[BloomFilter] =
+    spark.sparkContext.broadcast(
+      BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes)))
+
+  /** Bloom probe: true when `hash` (`xxhash64` of the digest, as the
+    * filter was built) may be in the filter — false means definitely
+    * new; a null hash yields null (dropped by a filter), as with
+    * Spark's `might_contain`. The plan carries the broadcast HANDLE,
+    * named in the probe's string form: `might_contain` would need the
+    * filter as a plan literal, which every plan render (explain, the
+    * SQL status store's plan info) hex-formats and retains — megabytes
+    * per execution at the default 2^20-item sizing. */
+  def bloomProbe(filter: Broadcast[BloomFilter], hash: Column): Column =
+    udf((h: Long) => filter.value.mightContainLong(h))
+      .withName(s"graft_bloom_probe_broadcast_${filter.id}")(hash)
+
   /** Incremental EXACT dedup of a batch against a stored corpus: keep
     * the batch rows whose content digest does not exist in the corpus.
     * Result is exact — the bloom filter only routes:
@@ -905,12 +929,15 @@ object Dedup {
     * shuffle-free scan gated on candidates — the pattern that keeps
     * exact dedup incremental at 100 TB. `corpusDigests` is the stored
     * digest column (`digest`), typically a column-pruned read of the
-    * corpus table or a maintained digest sidecar. */
+    * corpus table or a maintained digest sidecar. The probe reads
+    * `filter` through a per-call broadcast ([[bloomProbe]]); the frame
+    * is lazy, so the ContextCleaner releases the broadcast once the
+    * frame is GC'd. */
   def bloomNewDocs(batch: DataFrame, corpusDigests: DataFrame,
       textCol: String, filter: Array[Byte]): DataFrame = {
     val keyed = batch.withColumn("__digest", contentKey(col(textCol)))
-    val isHit = call_function("graft_bloom_contains",
-      lit(filter), xxhash64(col("__digest")))
+    val isHit = bloomProbe(broadcastFilter(batch.sparkSession, filter),
+      xxhash64(col("__digest")))
     val candDigests = keyed.filter(isHit).select(col("__digest")).distinct()
     val dupDigests = corpusDigests
       .join(broadcast(candDigests), col("digest") === col("__digest"), "left_semi")
@@ -921,13 +948,13 @@ object Dedup {
 
   /** SHARDED-STORE twin of [[bloomNewDocs]] — same probe→verify
     * contract, with the probe executor-side against a
-    * [[ShardedBloom]] directory instead of a plan-literal filter. At
-    * ~10^9 corpus digests the monolithic filter hits the task-binary
-    * wall (a billion-item 1% filter is ~1.2 GB riding every task);
-    * this path ships NOTHING on the plan — each task lazily opens only
-    * the megabyte shard files its partition routes to. Exactness is
-    * identical: the bloom layer only routes, the corpus digest column
-    * confirms. */
+    * [[ShardedBloom]] directory instead of one broadcast filter. At
+    * ~10^9 corpus digests the monolithic filter stops scaling (a
+    * billion-item 1% filter is ~1.2 GB, deserialized on the driver and
+    * held whole by every executor); this path broadcasts NOTHING —
+    * each task lazily opens only the megabyte shard files its
+    * partition routes to. Exactness is identical: the bloom layer only
+    * routes, the corpus digest column confirms. */
   def bloomNewDocsSharded(batch: DataFrame, corpusDigests: DataFrame,
       textCol: String, storeDir: String, spec: ShardedBloom.Spec): DataFrame = {
     val keyed = batch.withColumn("__digest", contentKey(col(textCol)))
@@ -949,8 +976,8 @@ object Dedup {
       filter: Array[Byte], storeDir: String, spec: DigestIndex.Spec,
       corpusDigests: => DataFrame): DataFrame = {
     val keyed = batch.withColumn("__digest", contentKey(col(textCol)))
-    val isHit = call_function("graft_bloom_contains",
-      lit(filter), xxhash64(col("__digest")))
+    val isHit = bloomProbe(broadcastFilter(batch.sparkSession, filter),
+      xxhash64(col("__digest")))
     val cand = keyed.filter(isHit).select(col(idCol), col("__digest"))
     val dup = indexedDupDigests(cand, idCol, "__digest", storeDir, spec,
       corpusDigests)

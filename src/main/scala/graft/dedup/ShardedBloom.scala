@@ -13,13 +13,14 @@ import org.apache.spark.util.sketch.BloomFilter
 /** Digest-prefix-SHARDED bloom store — the billion-doc scale path for
   * the incremental exact-dedup gate ([[Dedup.bloomNewDocs]] is the
   * single-filter twin). One monolithic filter stops scaling because it
-  * ships to every task as a plan literal: at 10^9 digests / 1% fpp the
-  * literal is ~1.2 GB of task binary. Sharding by digest hash splits it
-  * into `numShards` independent megabyte-scale filters stored as FILES
-  * beside the corpus, and the probe moves executor-side: the batch is
-  * shuffled by shard, and each task reads only the shard files its
-  * partition contains (total filter I/O per batch = the store size
-  * ONCE, spread across tasks — nothing rides the plan).
+  * is deserialized on the driver and broadcast whole to every
+  * executor: at 10^9 digests / 1% fpp that is ~1.2 GB per JVM. Sharding
+  * by digest hash splits it into `numShards` independent
+  * megabyte-scale filters stored as FILES beside the corpus, and the
+  * probe moves executor-side: the batch is shuffled by shard, and each
+  * task reads only the shard files its partition contains (total
+  * filter I/O per batch = the store size ONCE, spread across tasks —
+  * nothing is broadcast).
   *
   * Crash-safety (same superset invariant as the monolithic filter —
   * [[graft.streaming.CorpusBuilder]]): every shard file is always a

@@ -154,14 +154,19 @@ object Pipeline {
       // saves the per-partition serialized driver jobs.
       // (an empty listing yields no chunks — grouped() never emits an
       // empty group, so every chunk below is non-empty)
-      val chunks: Iterator[Seq[String]] = cfg.maxObjectsPerBatch match {
+      // Each chunk reads an object ONCE even when it was notified more
+      // than once (two deliveries in one micro-batch): the streaming
+      // dedup anti-joins only rows already in the table, so a doubled
+      // path would land its records twice. Across chunks the later
+      // chunk's dedup sees the earlier chunk's rows.
+      val chunks: Iterator[Seq[String]] = (cfg.maxObjectsPerBatch match {
         case None =>
           val all: IndexedSeq[String] =
             matched.collect().map(_.getString(0)).toIndexedSeq
           if (all.isEmpty) Iterator.empty else Iterator.single(all)
         case Some(n) =>
           matched.toLocalIterator().asScala.map(_.getString(0)).grouped(n.max(1))
-      }
+      }).map(_.distinct)
       chunks.flatMap { chunk =>
         // rules sharing (parser, multiDoc) parse the chunk ONCE; every
         // such rule's schema passes run over that one cached batch

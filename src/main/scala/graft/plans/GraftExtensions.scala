@@ -53,12 +53,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graft_misra_gries"),
       new ExpressionInfo(classOf[MisraGriesAgg].getName, "graft_misra_gries"),
       (args: Seq[Expression]) => MisraGriesAgg(args(0), args(1))))
-    // Spark ships codegen'd bloom-filter expressions for its runtime
-    // join filters but does NOT register them for users — surface them
-    // (same classes, zero custom code) for the incremental-dedup
-    // operator ([[graft.dedup.Dedup.bloomNewDocs]]):
+    // Spark ships a codegen'd bloom-filter aggregate for its runtime
+    // join filters but does NOT register it for users — surface it
+    // (same class, zero custom code) for the incremental-dedup stores
+    // ([[graft.dedup.Dedup.digestFilter]]):
     //   graft_bloom_agg(xxhash64(key), estimatedItems, numBits) → binary
-    //   graft_bloom_contains(filterBinary, xxhash64(key)) → boolean
+    // (the probe side is [[graft.dedup.Dedup.bloomProbe]], over a
+    // broadcast filter rather than a binary plan literal)
     ext.injectFunction((
       FunctionIdentifier("graft_bloom_agg"),
       new ExpressionInfo(
@@ -67,12 +68,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) =>
         new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
           args(0), args(1), args(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_bloom_contains"),
-      (args: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(args(0), args(1))))
   }
 }

@@ -640,7 +640,7 @@ case class DotProductExpr(left: Expression, right: Expression)
 /** `graft_bpe_encode(text, lefts, rights)`: byte-pair-encoding tokens of
   * `text` under the merge table `(lefts(i), rights(i)) = rank-i merge`
   * (both must be FOLDABLE array<string> — the trained merges arrive as
-  * plan literals, exactly like the bloom-filter bytes and PQ codebooks).
+  * plan literals, exactly like the IVF centroids).
   *
   * Tokenization is the standard two-level scheme: the text is first
   * pre-tokenized into pieces by [[graft.text.Bpe.PiecePattern]] (a

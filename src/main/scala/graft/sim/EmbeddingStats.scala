@@ -38,19 +38,6 @@ import graft.relational.RelationalQueries.dsum
   */
 object EmbeddingStats {
 
-  /** Per-dimension Fisher separability of `vec` w.r.t. `label`:
-    * between-class scatter over within-class scatter,
-    *
-    *   between_d = Σ_c n_c · (μ_cd − μ_d)²
-    *   within_d  = Σ_c (Σx² − (Σx)²/n_c)
-    *
-    * from one-pass per-class sufficient statistics. Dimensions whose
-    * within-class scatter rounds to 0 return a null ratio (constant
-    * dimension — degenerate, flagged rather than ±Inf).
-    *
-    * @return (dim, scatter_between, scatter_within, fisher) — one row
-    *         per dimension, ordered by dim, rounded to 6 decimals
-    */
   /** Anisotropy: the mean pairwise cosine over all vector pairs, in
     * closed form — `(‖Σx̂‖² − Σ‖x̂‖²) / (n·(n−1))` over the normalized
     * vectors x̂, so the O(n²) pair space collapses to one pass plus a
@@ -60,6 +47,12 @@ object EmbeddingStats {
     * downstream — semantic dedup, ANN, SemDeDup clustering — loses
     * discrimination. Zero-norm vectors are excluded; n < 2 returns a
     * null mean.
+    *
+    * Eager: the call itself runs Spark jobs — [[graft.util.Materialize.eager]]
+    * computes the per-dim stats before the frame is returned — and the
+    * frame inherits that checkpoint's lifetime (localCheckpoint unless
+    * a checkpoint dir is set: executor loss fails later actions
+    * instead of recomputing). See the class doc.
     *
     * @return one row: (n, mean_cos) rounded to 6 decimals
     */
@@ -91,6 +84,25 @@ object EmbeddingStats {
           .as("mean_cos"))
   }
 
+  /** Per-dimension Fisher separability of `vec` w.r.t. `label`:
+    * between-class scatter over within-class scatter,
+    *
+    *   between_d = Σ_c n_c · (μ_cd − μ_d)²
+    *   within_d  = Σ_c (Σx² − (Σx)²/n_c)
+    *
+    * from one-pass per-class sufficient statistics. Dimensions whose
+    * within-class scatter rounds to 0 return a null ratio (constant
+    * dimension — degenerate, flagged rather than ±Inf).
+    *
+    * Eager: the call itself runs Spark jobs — [[graft.util.Materialize.eager]]
+    * computes the per-(label, dim) stats before the frame is returned —
+    * and the frame inherits that checkpoint's lifetime (localCheckpoint
+    * unless a checkpoint dir is set: executor loss fails later actions
+    * instead of recomputing). See the class doc.
+    *
+    * @return (dim, scatter_between, scatter_within, fisher) — one row
+    *         per dimension, ordered by dim, rounded to 6 decimals
+    */
   def fisherRatio(emb: DataFrame, vec: Column, label: Column): DataFrame = {
     val e = emb.select(label.as("label"), posexplode(vec).as(Seq("dim", "xf")))
       .select(col("label"), col("dim").cast(LongType).as("dim"),

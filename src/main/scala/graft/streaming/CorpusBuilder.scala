@@ -36,14 +36,16 @@ import graft.dedup.{BandIndex, Dedup, DigestIndex, ShardedBloom}
   * Filter capacity (`expectedItems`/`fpp`) is declared per corpus;
   * outgrowing it only raises the false-positive rate — more exact-verify
   * work per batch, never wrong results. The DEFAULT (`numShards = 1`)
-  * filter ships to executors as a plan literal (`might_contain`
-  * requires a foldable filter), so size it for the task-binary budget:
-  * the 2^20-item default is ~1.2 MB. A billion-doc corpus doesn't scale
-  * one monolithic filter — set `numShards > 1` and the store becomes a
-  * digest-prefix-SHARDED directory of megabyte filters probed
-  * executor-side ([[graft.dedup.ShardedBloom]]): nothing rides the
-  * plan, per-task filter memory is a few shards, and resizes rebuild
-  * into a fresh layout with an atomic pointer flip. Pick
+  * filter is one `bloom.bin` (~1.2 MB at the 2^20-item default), read
+  * on the driver and BROADCAST for each trigger's probe
+  * ([[Dedup.bloomProbe]]) — the plan carries only the broadcast handle,
+  * and the broadcast is destroyed once the gate's frame is
+  * materialized. A billion-doc corpus doesn't scale one monolithic
+  * filter (every executor would hold all of it) — set `numShards > 1`
+  * and the store becomes a digest-prefix-SHARDED directory of megabyte
+  * filters probed executor-side ([[graft.dedup.ShardedBloom]]): nothing
+  * is broadcast, per-task filter memory is a few shards, and resizes
+  * rebuild into a fresh layout with an atomic pointer flip. Pick
   * `numShards ≈ expectedItems / 2^20`.
   *
   * Rows whose `textCol` is NULL are REJECTED up front (both gate
@@ -304,7 +306,7 @@ object CorpusBuilder {
       /** Some(params) switches the per-batch gate from exact-content
         * to MinHash near-dup ([[appendNearDupNew]]). */
       nearDup: Option[NearDup] = None,
-      /** > 1 switches the digest filter from one plan-literal bloom to
+      /** > 1 switches the digest filter from one broadcast bloom to
         * the sharded executor-side store — see class doc. */
       numShards: Int = 1,
       /** Directory-bucket count of the persisted exact-verify index
@@ -439,16 +441,17 @@ object CorpusBuilder {
       val stored = graft.streaming.ScoreStream.lap("corpus-resolve")(
         monolithicFilter(spark, bloomPath, docsDir, hasDocs,
           expectedItems, fpp))
-      val fresh = stored match {
-        case Some(f) if idxReady =>
-          indexVerified(keyed.filter(call_function("graft_bloom_contains",
-            lit(f), xxhash64(col(DigestCol)))))
-        case _ => keyed // no corpus yet — everything is new
-      }
+      // no corpus yet → no probe: everything is new
+      val probe = stored.filter(_ => idxReady).map(Dedup.broadcastFilter(spark, _))
       // survivors are consumed by filter build, index append, docs
-      // append and count — materialize once; output-sized
-      val staged = graft.streaming.ScoreStream.lap("corpus-stage")(
-        graft.util.Materialize.eager(fresh))
+      // append and count — materialize once; output-sized. The
+      // materialized frame no longer needs the filter: release it now
+      val staged = try {
+        val fresh = probe.fold(keyed)(bf =>
+          indexVerified(keyed.filter(Dedup.bloomProbe(bf, xxhash64(col(DigestCol))))))
+        graft.streaming.ScoreStream.lap("corpus-stage")(
+          graft.util.Materialize.eager(fresh))
+      } finally probe.foreach(_.destroy())
       val appended = staged.count()
       if (appended > 0) {
         graft.streaming.ScoreStream.lap("corpus-commit")(
@@ -680,7 +683,7 @@ object CorpusBuilder {
     * corpus table unconditionally; both gates are candidate-routed
     * derived-store probes whose per-batch cost tracks the BATCH size:
     *
-    *   - exact: the bloom store (plan-literal or sharded, same as
+    *   - exact: the bloom store (broadcast or sharded, same as
     *     [[appendNew]]) routes — only probe-HIT digests (true dups +
     *     fpp·batch false positives) reach the verify, which reads the
     *     bucket-pruned [[graft.dedup.DigestIndex]], not the corpus
@@ -755,49 +758,52 @@ object CorpusBuilder {
     // side effect: rebuild-or-trust; with docs present the index is
     // guaranteed probe-ready below
     resolveDigestIndex(spark, corpusDir, docsDir, hasDocs, idCol, idxSpec)
-    val corpusDrops: Seq[DataFrame] =
-      if (!hasDocs) Nil
-      else {
-        // EXACT pre-gate: bloom probe routes — only probe-hit digests
-        // (batch-sized) reach the verify step, and the verify reads the
-        // bucket-pruned digest INDEX, not the corpus digest column
-        // (the [[Dedup.bloomNewDocsIndexed]] contract, kept here in
-        // drop-id shape; same-id matches fall back to the corpus —
-        // see [[Dedup.indexedDupDigests]])
-        val hits =
-          if (numShards <= 1)
-            staged.filter(call_function("graft_bloom_contains",
-              lit(monoStored.get), xxhash64(col(DigestCol))))
-          else
-            ShardedBloom.probeHits(
-              staged.withColumn("__h", xxhash64(col(DigestCol))), "__h",
-              corpusDir, shardSpec.get)
-              .filter(col("__hit"))
-        val dup = Dedup.indexedDupDigests(
-          hits.select(col(idCol), col(DigestCol)), idCol, DigestCol,
-          corpusDir, idxSpec, corpusDigests(spark, docsDir))
-        val exactDrop = staged
-          .join(broadcast(dup), col(DigestCol) === col("__dup"), "left_semi")
-          .select(col(idCol).as("__drop"))
-        val nearDrop =
-          if (!bandReady) Nil
-          else {
-            val cands = BandIndex.probe(batchSigs, idCol, SigCol, corpusDir, bandSpec)
-              .filter(agrees(col("nsig"), col("csig")))
-            // ghost absorb — see scaladoc: a candidate (id, sig)-equal
-            // to a batch row is this batch's own crash-window ghost
-            val ghosts = batchSigs
-              .select(col(idCol).as("__gid"), col(SigCol).as("__gsig"))
-            Seq(cands.join(broadcast(ghosts),
-                col("corpus_id") === col("__gid") && col("csig") === col("__gsig"),
-                "left_anti")
-              .select(col("new_id").as("__drop")))
-          }
-        exactDrop +: nearDrop
-      }
-    val drops = (withinDrop +: corpusDrops).reduce(_ union _).distinct()
-    val fresh = graft.util.Materialize.eager(
-      staged.join(broadcast(drops), col(idCol) === col("__drop"), "left_anti"))
+    // the gate's probe filter, released once `fresh` is materialized
+    val probe = if (hasDocs) monoStored.map(Dedup.broadcastFilter(spark, _)) else None
+    val fresh = try {
+      val corpusDrops: Seq[DataFrame] =
+        if (!hasDocs) Nil
+        else {
+          // EXACT pre-gate: bloom probe routes — only probe-hit digests
+          // (batch-sized) reach the verify step, and the verify reads the
+          // bucket-pruned digest INDEX, not the corpus digest column
+          // (the [[Dedup.bloomNewDocsIndexed]] contract, kept here in
+          // drop-id shape; same-id matches fall back to the corpus —
+          // see [[Dedup.indexedDupDigests]])
+          val hits =
+            if (numShards <= 1)
+              staged.filter(Dedup.bloomProbe(probe.get, xxhash64(col(DigestCol))))
+            else
+              ShardedBloom.probeHits(
+                staged.withColumn("__h", xxhash64(col(DigestCol))), "__h",
+                corpusDir, shardSpec.get)
+                .filter(col("__hit"))
+          val dup = Dedup.indexedDupDigests(
+            hits.select(col(idCol), col(DigestCol)), idCol, DigestCol,
+            corpusDir, idxSpec, corpusDigests(spark, docsDir))
+          val exactDrop = staged
+            .join(broadcast(dup), col(DigestCol) === col("__dup"), "left_semi")
+            .select(col(idCol).as("__drop"))
+          val nearDrop =
+            if (!bandReady) Nil
+            else {
+              val cands = BandIndex.probe(batchSigs, idCol, SigCol, corpusDir, bandSpec)
+                .filter(agrees(col("nsig"), col("csig")))
+              // ghost absorb — see scaladoc: a candidate (id, sig)-equal
+              // to a batch row is this batch's own crash-window ghost
+              val ghosts = batchSigs
+                .select(col(idCol).as("__gid"), col(SigCol).as("__gsig"))
+              Seq(cands.join(broadcast(ghosts),
+                  col("corpus_id") === col("__gid") && col("csig") === col("__gsig"),
+                  "left_anti")
+                .select(col("new_id").as("__drop")))
+            }
+          exactDrop +: nearDrop
+        }
+      val drops = (withinDrop +: corpusDrops).reduce(_ union _).distinct()
+      graft.util.Materialize.eager(
+        staged.join(broadcast(drops), col(idCol) === col("__drop"), "left_anti"))
+    } finally probe.foreach(_.destroy())
     val appended = fresh.count()
     if (appended > 0) {
       // commit order: {bloom, digest index, band index} → docs

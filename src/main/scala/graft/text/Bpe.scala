@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   *
   * Encoding is a per-row native kernel
   * ([[graft.plans.BpeEncodeExpr]]): shuffle-free, codegen'd, with the
-  * trained merges shipped as plan literals (bloom-bytes precedent) —
+  * trained merges shipped as plan literals (IVF-centroid precedent) —
   * so the encode pass scales embarrassingly.
   *
   * Determinism contract: ties in pair frequency break toward the

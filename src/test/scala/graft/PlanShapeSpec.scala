@@ -250,6 +250,41 @@ class PlanShapeSpec extends SparkSpec {
     assert(gated.count() == 25L)
   }
 
+  test("bloom dedup gates probe a broadcast filter: plans stay small at the 2^20-item default") {
+    import graft.dedup.{Dedup, DigestIndex}
+    val dir = tmpDir("plan-bloom-size")
+    val corpus = (0L until 50L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+      .withColumn("digest", Dedup.contentKey(col("text")))
+    val spec = DigestIndex.Spec(8)
+    DigestIndex.rebuild(corpus.select($"doc_id", $"digest"), "doc_id", "digest", dir, spec)
+    val items = 1L << 20
+    val filter = Dedup.digestFilter(corpus, "text", items, Dedup.bloomBits(items, 0.01))
+    assert(filter.length > 1000000, "the default sizing serializes to ~1.2 MB")
+    // read from files, as a landed batch is: a local batch would be
+    // folded into a LocalRelation at optimization, probe and all
+    (25L until 75L).map(i => (i + 1000L, s"doc $i")).toDF("doc_id", "text")
+      .write.parquet(s"$dir/batch")
+    val batch = spark.read.parquet(s"$dir/batch")
+    val limit = 64 * 1024
+    val gated = Dedup.bloomNewDocs(batch, corpus.select("digest"), "text", filter)
+    val plan = formatted(gated)
+    assert(plan.length < limit, s"bloomNewDocs plan is ${plan.length} chars")
+    assert(gated.count() == 25L)
+    // the indexed gate runs its probe while building the frame (the
+    // candidates materialize) — check the executed plans too
+    val before = lastExecutionId
+    val indexed = Dedup.bloomNewDocsIndexed(batch, "doc_id", "text", filter,
+      dir, spec, corpus.select("digest"))
+    val indexedPlan = formatted(indexed)
+    assert(indexedPlan.length < limit,
+      s"bloomNewDocsIndexed plan is ${indexedPlan.length} chars")
+    val executed = planDescriptionsAfter(before)(_.contains("xxhash64"))
+    assert(executed.exists(_.contains("xxhash64")), "the probe execution was not recorded")
+    assert(executed.forall(_.length < limit),
+      s"executed plan sizes: ${executed.map(_.length).mkString(", ")}")
+    assert(indexed.count() == 25L)
+  }
+
   test("BPE encode runs ONCE per row under multi-consumer projection (q86 shape)") {
     import graft.text.Bpe
     val dir = tmpDir("plan-bpe")

@@ -14,6 +14,25 @@ trait SparkSpec extends AnyFunSuite {
     java.nio.file.Files.write(p, content.getBytes("UTF-8"))
     p.toString
   }
+  /** Id of the newest SQL execution the status store has recorded. */
+  def lastExecutionId: Long =
+    spark.sharedState.statusStore.executionsList().map(_.executionId)
+      .maxOption.getOrElse(-1L)
+  /** Physical-plan descriptions the SQL status store keeps for the
+    * executions after `afterId` — the strings it retains per execution.
+    * The listener bus is async, so this waits (up to 15 s) until one of
+    * them satisfies `arrived`. */
+  def planDescriptionsAfter(afterId: Long)(arrived: String => Boolean): Seq[String] = {
+    val deadline = System.currentTimeMillis() + 15000
+    def recorded = spark.sharedState.statusStore.executionsList()
+      .filter(_.executionId > afterId).map(_.physicalPlanDescription)
+    var plans = recorded
+    while (!plans.exists(arrived) && System.currentTimeMillis() < deadline) {
+      Thread.sleep(100)
+      plans = recorded
+    }
+    plans
+  }
   def writeGzip(dir: String, name: String, content: String): String = {
     val p = java.nio.file.Paths.get(dir, name)
     java.nio.file.Files.createDirectories(p.getParent)

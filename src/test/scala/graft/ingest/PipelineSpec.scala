@@ -469,6 +469,28 @@ class PipelineSpec extends SparkSpec {
     assert(TableSink.read(spark, registry, "swarm_test", "my_log_table").count() == 3)
   }
 
+  test("two notifications of one object in one micro-batch commit each record once") {
+    val objects = tmpDir("twice-objects")
+    writeFile(objects, "access.log", accessLogNdjson)
+    // two deliveries (distinct message ids, so the push receiver spools
+    // both) of the same object land in ONE notification micro-batch
+    val spool = tmpDir("twice-spool")
+    val event = """{"kind":"storage#object","bucket":"b","name":"access.log",""" +
+      """"size":"123","timeCreated":"2024-05-01T10:00:00Z"}"""
+    writeFile(spool, "m-1.json", event + "\n")
+    writeFile(spool, "m-2.json", event + "\n")
+    val registry = new SchemaRegistry(tmpDir("tables"))
+    val q = Pipeline.streamNotifications(spark,
+      Pipeline.Config(registry, accessRules()), s"$spool/*.json", tmpDir("ckpt"),
+      pathRewrite = Some(("gs://b/", s"$objects/")))
+    q.awaitTermination()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1,
+      "both notifications must arrive in one micro-batch")
+    val out = TableSink.read(spark, registry, "swarm_test", "my_log_table")
+    assert(out.select("id").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("a1", "a2"))
+  }
+
   test("backpressure: maxFilesPerTrigger bounds each micro-batch (T6)") {
     val landing = tmpDir("landing")
     val registry = new SchemaRegistry(tmpDir("tables"))

@@ -423,6 +423,33 @@ class CorpusBuilderSpec extends SparkSpec {
     assert(corpusDocs(corpus).count() == 21L)
   }
 
+  test("near-dup drain keeps every recorded plan small (the filter is broadcast, not a plan literal)") {
+    val landing = tmpDir("nd-plans-landing")
+    (0 until 3).foreach { f =>
+      val lines = (0 until 8).map { i =>
+        val words = (0 until 12).map(w => s"w${(f * 8 + i) % 10}x$w").mkString(" ")
+        s"""{"doc_id": ${f * 8 + i}, "text": "$words"}"""
+      }.mkString("\n")
+      writeFile(landing, s"f$f.json", lines + "\n")
+    }
+    val corpus = tmpDir("nd-plans-corpus")
+    val before = lastExecutionId
+    // default 2^20-item filter: ~1.2 MB serialized
+    val q = CorpusBuilder.build(spark, s"$landing/*.json", tmpDir("nd-plans-ckpt"),
+      corpus, maxFilesPerTrigger = Some(1), nearDup = Some(CorpusBuilder.NearDup()))
+    q.awaitTermination()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+    assert(corpusDocs(corpus).count() == 10L)
+    // the later triggers probe the stored filter (`might_contain` is
+    // Spark's own probe, which takes the filter as a plan literal)
+    def isProbe(p: String) = p.contains("bloom_probe") || p.contains("might_contain")
+    val plans = planDescriptionsAfter(before)(isProbe)
+    assert(plans.exists(isProbe), "no probe execution was recorded")
+    val limit = 64 * 1024
+    assert(plans.forall(_.length < limit),
+      s"largest recorded plan: ${plans.map(_.length).max} chars")
+  }
+
   test("streaming build with a SHARDED store: same exactly-once-by-content across micro-batches") {
     import graft.dedup.ShardedBloom
     val landing = tmpDir("sharded-stream-landing")
