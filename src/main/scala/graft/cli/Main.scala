@@ -36,7 +36,7 @@ object Main {
       |  schema  --rules <file|dir> <glob>...
       |  migrate --warehouse <dir> [--partition <unit>] <srcDs.srcTbl> <dstDs.dstTbl>
       |  sql     --warehouse <dir> [--limit <n>] <query>
-      |  corpus  --corpus <dir> --checkpoint <dir> [--id-col <c>] [--text-col <c>] [--continuous <ms>] [--max-files <n> | --max-bytes <b>] [--expected-items <n>] [--fpp <p>] [--shards <n>] [--near-dup] [--min-agree <f>] [--compact-every <n>] <glob>
+      |  corpus  --corpus <dir> --checkpoint <dir> [--id-col <c>] [--text-col <c>] [--continuous <ms>] [--max-files <n> | --max-bytes <b>] [--expected-items <n>] [--fpp <p>] [--near-dup] [--min-agree <f>] [--compact-every <n>] <glob>
       |  corpus compact --corpus <dir> [--target-bytes <b>] [--small-bytes <b>] [--min-files <n>]
       |  cluster --store <dir> --checkpoint <dir> [--output <dir>] [--id-col <c>] [--text-col <c>] [--threshold <t>] [--buckets <n>] [--max-files <n> | --max-bytes <b>] <glob>
       |  cluster compact --store <dir> [--min-dirs <n>]
@@ -325,6 +325,8 @@ object Main {
       case "corpus" | "c" =>
         // streaming exact-deduped corpus builder (CorpusBuilder):
         // exactly-once by content under any replay
+        require(!flags.contains("shards"), "corpus --shards was removed: " +
+          "the corpus keeps one bloom.bin filter in front of its digest index")
         require(pos.size == 1, "corpus needs exactly one landing glob")
         val trigger = flags.get("continuous")
           .map(ms => Trigger.ProcessingTime(ms.toLong))
@@ -347,9 +349,6 @@ object Main {
             Some(graft.streaming.CorpusBuilder.NearDup(
               minAgree = flags.get("min-agree").map(_.toDouble).getOrElse(0.8)))
           else None,
-          // --shards <n>: sharded executor-side digest store (use
-          // ~expected-items/2^20 so each filter stays ~1 MB at scale)
-          numShards = flags.get("shards").map(_.toInt).getOrElse(1),
           compactEvery = flags.get("compact-every").map(_.toInt)
             .getOrElse(graft.streaming.CorpusBuilder.DefaultCompactEvery))
         q.awaitTermination()

@@ -23,13 +23,13 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType,
   * is never shuffled and, for a batch touching few buckets, mostly
   * never read.
   *
-  * Like every derived store here (bloom shards, IVF layout), the index
+  * Like every derived store here (bloom filter, IVF layout), the index
   * is REBUILDABLE from the corpus table — the stored `(id, sig)`
   * projection re-bands in one pass — so losing it costs a rebuild,
   * never correctness. Freshness is declared by `bands-meta.json`
-  * (spec + LSM state pointer, tmp+rename): a param change targets a
-  * fresh layout directory and flips the pointer only after the rebuild
-  * completes, exactly the [[ShardedBloom]] resize discipline. A
+  * (spec + LSM state pointer, [[LsmIndex.atomicWrite]]): a param
+  * change targets a fresh layout directory and flips the pointer only
+  * after the rebuild completes — the [[LsmIndex]] rebuild-then-flip. A
   * pre-LSM (ver-1) meta parses as ABSENT, so legacy layouts migrate
   * through the same rebuild path instead of being misread.
   *
@@ -185,7 +185,7 @@ object BandIndex {
       storeDir: String, spec: Spec, st: LsmIndex.State): Unit = {
     val fs = new Path(storeDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val previous = declaredLayout(spark, storeDir)
-    ShardedBloom.atomicWrite(fs, new Path(storeDir, MetaFile),
+    LsmIndex.atomicWrite(fs, new Path(storeDir, MetaFile),
       metaJson(spec, st).getBytes("UTF-8"))
     previous.filter(_ != spec.layoutDir)
       .foreach(old => fs.delete(new Path(storeDir, old), true))

@@ -946,23 +946,6 @@ object Dedup {
       .drop("__digest")
   }
 
-  /** SHARDED-STORE twin of [[bloomNewDocs]] — same probe→verify
-    * contract, with the probe executor-side against a
-    * [[ShardedBloom]] directory instead of one broadcast filter. At
-    * ~10^9 corpus digests the monolithic filter stops scaling (a
-    * billion-item 1% filter is ~1.2 GB, deserialized on the driver and
-    * held whole by every executor); this path broadcasts NOTHING —
-    * each task lazily opens only the megabyte shard files its
-    * partition routes to. Exactness is identical: the bloom layer only
-    * routes, the corpus digest column confirms. */
-  def bloomNewDocsSharded(batch: DataFrame, corpusDigests: DataFrame,
-      textCol: String, storeDir: String, spec: ShardedBloom.Spec): DataFrame = {
-    val keyed = batch.withColumn("__digest", contentKey(col(textCol)))
-      .withColumn("__h", xxhash64(col("__digest")))
-    shardedNewRows(keyed, "__digest", "__h", corpusDigests, storeDir, spec)
-      .drop("__digest", "__h")
-  }
-
   /** INDEX-VERIFIED twin of [[bloomNewDocs]] — same probe→verify
     * contract, with the verify pointed at a persisted
     * [[DigestIndex]] instead of the full corpus digest column. The
@@ -1019,28 +1002,6 @@ object Dedup {
       if (self.isEmpty) self // steady state: no corpus read at all
       else corpusDigests.join(broadcast(self), Seq("digest"), "left_semi")
     trueDups.union(resolved).distinct().select(col("digest").as("__dup"))
-  }
-
-  /** Probe→verify core over a sharded store, shared with the streaming
-    * corpus builder: annotate via [[ShardedBloom.probeHits]]
-    * (materialized once, so the shard files are read once per batch,
-    * not once per plan branch), confirm probe-hit digests against the
-    * corpus digest column (broadcast semi-join — AQE eliminates the
-    * corpus scan when nothing hit), drop confirmed dups (broadcast
-    * anti-join). Keeps every caller column, including `hashCol` (the
-    * commit path reuses it). */
-  private[graft] def shardedNewRows(hashed: DataFrame, digestCol: String,
-      hashCol: String, corpusDigests: DataFrame, storeDir: String,
-      spec: ShardedBloom.Spec): DataFrame = {
-    val flagged = graft.util.Materialize.eager(
-      ShardedBloom.probeHits(hashed, hashCol, storeDir, spec))
-    val cand = flagged.filter(col("__hit"))
-      .select(col(digestCol).as("__cand")).distinct()
-    val dup = corpusDigests
-      .join(broadcast(cand), col("digest") === col("__cand"), "left_semi")
-      .select(col("digest").as("__dup"))
-    flagged.join(broadcast(dup), col(digestCol) === col("__dup"), "left_anti")
-      .drop("__hit")
   }
 
   // ---- content-defined chunking (CDC) ----

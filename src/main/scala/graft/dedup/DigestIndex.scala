@@ -24,13 +24,13 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
   * the flat post-compaction tail — per-batch verify I/O tracks the
   * BATCH plus one compaction cadence of runs, not the corpus.
   *
-  * Like every derived store here (bloom shards, band index, IVF
+  * Like every derived store here (bloom filter, band index, IVF
   * layout), it is REBUILDABLE from the corpus table's stored digest
   * column, so losing it costs one rebuild scan, never correctness.
   * Freshness is declared by `digests-meta.json` (spec + LSM state
-  * pointer, tmp+rename): a bucketing change rebuilds into a fresh
-  * layout directory and flips the pointer only after the rebuild
-  * completes — the [[ShardedBloom]] resize discipline. A pre-LSM
+  * pointer, [[LsmIndex.atomicWrite]]): a bucketing change rebuilds
+  * into a fresh layout directory and flips the pointer only after the
+  * rebuild completes — the [[LsmIndex]] rebuild-then-flip. A pre-LSM
   * (ver-1) meta parses as ABSENT, so legacy layouts migrate through
   * the same rebuild path instead of being misread.
   *
@@ -203,7 +203,7 @@ object DigestIndex {
       storeDir: String, spec: Spec, st: LsmIndex.State): Unit = {
     val fs = new Path(storeDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val previous = declaredLayout(spark, storeDir)
-    ShardedBloom.atomicWrite(fs, new Path(storeDir, MetaFile),
+    LsmIndex.atomicWrite(fs, new Path(storeDir, MetaFile),
       metaJson(spec, st).getBytes("UTF-8"))
     previous.filter(_ != spec.layoutDir)
       .foreach(old => fs.delete(new Path(storeDir, old), true))

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -79,6 +79,25 @@ private[graft] object LsmIndex {
       }
       Some(State(seq, names(BulksRe), names(RunsRe)))
     }
+
+  /** tmp → rename; delete-then-rename where rename-over is unsupported
+    * — the commit of each index's meta pointer. The tmp name is
+    * ATTEMPT-UNIQUE: two writers of one pointer each write their own
+    * tmp in full, so no commit can ever rename interleaved half-writes
+    * into place. Readers only ever read `dst`, so a torn tmp (crash
+    * mid-write) is inert: the previously committed pointer stays
+    * active. No post-commit tmp cleanup: a sweep could delete a
+    * CONCURRENT writer's in-flight tmp between its write and rename,
+    * failing its commit after it already removed dst. */
+  private[dedup] def atomicWrite(fs: FileSystem, dst: Path, bytes: Array[Byte]): Unit = {
+    val tmp = dst.suffix(s".${java.util.UUID.randomUUID()}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(bytes) finally out.close()
+    if (!fs.rename(tmp, dst)) {
+      fs.delete(dst, false)
+      if (!fs.rename(tmp, dst)) sys.error(s"cannot commit $dst")
+    }
+  }
 
   /** The append entry guard shared by the index stores: the active LSM
     * state when the declared layout matches the requested one, [[Empty]]

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.dedup.{BandIndex, Dedup, DigestIndex, ShardedBloom}
+import graft.dedup.{BandIndex, Dedup, DigestIndex}
 
 /** Continuously build an exact-deduped corpus from a landing stream —
   * the streaming face of the incremental-dedup family (q52 band table,
@@ -35,18 +35,12 @@ import graft.dedup.{BandIndex, Dedup, DigestIndex, ShardedBloom}
   *
   * Filter capacity (`expectedItems`/`fpp`) is declared per corpus;
   * outgrowing it only raises the false-positive rate — more exact-verify
-  * work per batch, never wrong results. The DEFAULT (`numShards = 1`)
-  * filter is one `bloom.bin` (~1.2 MB at the 2^20-item default), read
-  * on the driver and BROADCAST for each trigger's probe
-  * ([[Dedup.bloomProbe]]) — the plan carries only the broadcast handle,
-  * and the broadcast is destroyed once the gate's frame is
-  * materialized. A billion-doc corpus doesn't scale one monolithic
-  * filter (every executor would hold all of it) — set `numShards > 1`
-  * and the store becomes a digest-prefix-SHARDED directory of megabyte
-  * filters probed executor-side ([[graft.dedup.ShardedBloom]]): nothing
-  * is broadcast, per-task filter memory is a few shards, and resizes
-  * rebuild into a fresh layout with an atomic pointer flip. Pick
-  * `numShards ≈ expectedItems / 2^20`.
+  * work per batch, never wrong results. The filter is one `bloom.bin`
+  * (~1.2 MB at the 2^20-item default), read on the driver and
+  * BROADCAST for each trigger's probe ([[Dedup.bloomProbe]]) — the plan
+  * carries only the broadcast handle, and the broadcast is destroyed
+  * once the gate's frame is materialized. It only routes: the
+  * [[graft.dedup.DigestIndex]] verify makes the exact decision.
   *
   * Rows whose `textCol` is NULL are REJECTED up front (both gate
   * modes): null has no content identity — `contentKey(null)` is null,
@@ -225,9 +219,8 @@ object CorpusBuilder {
     * is the only corpus-proportional step and is amortized over
     * `minFiles × maxBulks` batches. Row content is preserved exactly,
     * so every derived-store invariant (bloom superset, index superset,
-    * PartitionFilters pruning) holds across a compaction; bloom shards
-    * never fragment (merges rewrite shard files in place) and need no
-    * maintenance.
+    * PartitionFilters pruning) holds across a compaction; `bloom.bin` is
+    * one file rewritten in place and needs no maintenance.
     *
     * Concurrency: the docs compaction is append-safe by
     * [[graft.ingest.Compact]]'s swap discipline, but the index folds
@@ -306,9 +299,6 @@ object CorpusBuilder {
       /** Some(params) switches the per-batch gate from exact-content
         * to MinHash near-dup ([[appendNearDupNew]]). */
       nearDup: Option[NearDup] = None,
-      /** > 1 switches the digest filter from one broadcast bloom to
-        * the sharded executor-side store — see class doc. */
-      numShards: Int = 1,
       /** Directory-bucket count of the persisted exact-verify index
         * ([[graft.dedup.DigestIndex]]) — more buckets prune the
         * per-batch verify scan harder. */
@@ -344,10 +334,10 @@ object CorpusBuilder {
           nearDup match {
             case Some(nd) =>
               appendNearDupNew(spark, batch, corpusDir, idCol, textCol, nd,
-                expectedItems, fpp, numShards, digestBuckets,
+                expectedItems, fpp, digestBuckets,
                 lockToken = Some(token))
             case None => appendNew(spark, batch, corpusDir, idCol, textCol,
-              expectedItems, fpp, numShards, digestBuckets,
+              expectedItems, fpp, digestBuckets,
               lockToken = Some(token))
           }
           // batchId is monotonic across restarts (checkpointed), so the
@@ -414,7 +404,7 @@ object CorpusBuilder {
     * corpus maintenance). Returns the number of docs appended. */
   def appendNew(spark: SparkSession, batch: DataFrame, corpusDir: String,
       idCol: String, textCol: String,
-      expectedItems: Long, fpp: Double, numShards: Int = 1,
+      expectedItems: Long, fpp: Double,
       digestBuckets: Int = DefaultDigestBuckets,
       lockToken: Option[String] = None): Long = {
     requireBuildLock(corpusDir, lockToken)
@@ -427,87 +417,44 @@ object CorpusBuilder {
     val idxSpec = DigestIndex.Spec(digestBuckets)
     val idxReady = resolveDigestIndex(spark, corpusDir, docsDir, hasDocs,
       idCol, idxSpec)
-    // verify probe-hit candidates against the digest INDEX (bucket-
-    // pruned, batch-sized I/O), not the corpus-wide digest column; the
-    // corpus itself is consulted only for same-id matches — see
-    // [[Dedup.indexedDupDigests]]
-    def indexVerified(hits: DataFrame): DataFrame = {
-      val dup = Dedup.indexedDupDigests(hits.select(col(idCol), col(DigestCol)),
-        idCol, DigestCol, corpusDir, idxSpec, corpusDigests(spark, docsDir))
-      keyed.join(broadcast(dup), col(DigestCol) === col("__dup"), "left_anti")
-    }
-    if (numShards <= 1) {
-      val bloomPath = Paths.get(corpusDir, "bloom.bin")
-      val stored = graft.streaming.ScoreStream.lap("corpus-resolve")(
-        monolithicFilter(spark, bloomPath, docsDir, hasDocs,
-          expectedItems, fpp))
-      // no corpus yet → no probe: everything is new
-      val probe = stored.filter(_ => idxReady).map(Dedup.broadcastFilter(spark, _))
-      // survivors are consumed by filter build, index append, docs
-      // append and count — materialize once; output-sized. The
-      // materialized frame no longer needs the filter: release it now
-      val staged = try {
-        val fresh = probe.fold(keyed)(bf =>
-          indexVerified(keyed.filter(Dedup.bloomProbe(bf, xxhash64(col(DigestCol))))))
-        graft.streaming.ScoreStream.lap("corpus-stage")(
-          graft.util.Materialize.eager(fresh))
-      } finally probe.foreach(_.destroy())
-      val appended = staged.count()
-      if (appended > 0) {
-        graft.streaming.ScoreStream.lap("corpus-commit")(
-          commitBatch(spark, staged, docsDir, bloomPath, stored, expectedItems,
-            fpp, corpusDir, idCol, idxSpec, lockToken, appended))
-        // one store at a time: this corpus is monolithic-owned now
-        ShardedBloom.deleteStore(spark, corpusDir)
+    val bloomPath = Paths.get(corpusDir, "bloom.bin")
+    val stored = graft.streaming.ScoreStream.lap("corpus-resolve")(
+      resolveFilter(spark, bloomPath, docsDir, hasDocs, expectedItems, fpp))
+    // no corpus yet → no probe: everything is new
+    val probe = stored.filter(_ => idxReady).map(Dedup.broadcastFilter(spark, _))
+    // survivors are consumed by filter build, index append, docs
+    // append and count — materialize once; output-sized. The
+    // materialized frame no longer needs the filter: release it now
+    val staged = try {
+      // verify probe-hit candidates against the digest INDEX (bucket-
+      // pruned, batch-sized I/O), not the corpus-wide digest column;
+      // the corpus itself is consulted only for same-id matches — see
+      // [[Dedup.indexedDupDigests]]
+      val fresh = probe.fold(keyed) { bf =>
+        val hits = keyed.filter(Dedup.bloomProbe(bf, xxhash64(col(DigestCol))))
+        val dup = Dedup.indexedDupDigests(hits.select(col(idCol), col(DigestCol)),
+          idCol, DigestCol, corpusDir, idxSpec, corpusDigests(spark, docsDir))
+        keyed.join(broadcast(dup), col(DigestCol) === col("__dup"), "left_anti")
       }
-      appended
-    } else {
-      val declared = ShardedBloom.Spec(numShards, expectedItems, fpp)
-      val active = resolveSharded(spark, corpusDir, docsDir, hasDocs, declared)
-      val hashed = keyed.withColumn("__h", xxhash64(col(DigestCol)))
-      val fresh = active match {
-        case Some(spec) if idxReady =>
-          // shard files are read once per batch, not once per plan
-          // branch — materialize the annotated probe
-          val flagged = graft.util.Materialize.eager(
-            ShardedBloom.probeHits(hashed, "__h", corpusDir, spec))
-          val dup = Dedup.indexedDupDigests(
-            flagged.filter(col("__hit")).select(col(idCol), col(DigestCol)),
-            idCol, DigestCol, corpusDir, idxSpec, corpusDigests(spark, docsDir))
-          flagged.join(broadcast(dup), col(DigestCol) === col("__dup"), "left_anti")
-            .drop("__hit")
-        case _ => hashed
-      }
-      val staged = graft.util.Materialize.eager(fresh)
-      val appended = staged.count()
-      if (appended > 0) {
-        // superset-first commit order, as in commitBatch: every derived
-        // store absorbs the batch digests BEFORE the docs append
-        persistDerived(spark, corpusDir, Seq(
-          "bloom" -> (() =>
-            ShardedBloom.mergeBatch(staged, "__h", corpusDir, declared)),
-          "digest-index" -> (() =>
-            DigestIndex.append(staged.select(col(idCol), col(DigestCol)),
-              idCol, DigestCol, corpusDir, idxSpec,
-              runFiles = graft.dedup.LsmIndex.runParts(appended, DigestRowsPerRunFile)))))
-        requireBuildLock(corpusDir, lockToken)
-        staged.drop("__h").write.mode("append").parquet(docsDir)
-        // one store at a time: drop the other mode's filter
-        Files.deleteIfExists(Paths.get(corpusDir, "bloom.bin"))
-      }
-      appended
-    }
+      graft.streaming.ScoreStream.lap("corpus-stage")(
+        graft.util.Materialize.eager(fresh))
+    } finally probe.foreach(_.destroy())
+    val appended = staged.count()
+    if (appended > 0)
+      graft.streaming.ScoreStream.lap("corpus-commit")(
+        commitBatch(spark, staged, docsDir, bloomPath, stored, expectedItems,
+          fpp, corpusDir, idCol, idxSpec, lockToken, appended))
+    appended
   }
 
   /** Resolve the ACTIVE digest index against the corpus, rebuilding
     * from the stored `(id, digest)` projection whenever the layout
     * can't be trusted: first run on a corpus predating the index, a
     * bucketing change (fresh layout + atomic pointer flip), or a
-    * layout lost out-of-band. Unlike the bloom stores the index is
-    * mode-independent — BOTH gate modes append to it on every commit —
-    * so a declared, present layout is fresh by construction. Returns
-    * false only when there are no docs to verify against (the first
-    * commit creates the index). */
+    * layout lost out-of-band. BOTH gate modes append to the index on
+    * every commit, so a declared, present layout is fresh by
+    * construction. Returns false only when there are no docs to verify
+    * against (the first commit creates the index). */
   private def resolveDigestIndex(spark: SparkSession, corpusDir: String,
       docsDir: String, hasDocs: Boolean, idCol: String,
       spec: DigestIndex.Spec): Boolean =
@@ -522,76 +469,33 @@ object CorpusBuilder {
       true
     }
 
-  /** Resolve the ACTIVE sharded store, rebuilding from the corpus
-    * digest column whenever the stored filters can't be trusted:
-    * first sharded run on an existing corpus, a sizing change (resize
-    * → new layout + atomic pointer flip), a layout directory lost
-    * out-of-band while the meta pointer survived, or a MODE SWITCH —
-    * monolithic artifacts (bloom.bin) present mean a `numShards = 1`
-    * run may have appended docs this store never saw, so existence of
-    * the declared layout proves nothing about freshness. Commits then
-    * delete the other mode's store, keeping exactly one filter
-    * authority per corpus. Returns None when there are no docs to
-    * probe against. */
-  private def resolveSharded(spark: SparkSession, corpusDir: String,
+  /** The filter to probe/merge against, REBUILT from the corpus
+    * digest column (one column-pruned scan) when bloom.bin is missing
+    * while docs exist: lost out-of-band, or never written (a corpus
+    * built with the removed `--shards` store). Trusting "no filter"
+    * would re-admit duplicates AND leave the rewritten filter covering
+    * only this batch — a permanent superset break. */
+  private def resolveFilter(spark: SparkSession, bloomPath: java.nio.file.Path,
       docsDir: String, hasDocs: Boolean,
-      declared: ShardedBloom.Spec): Option[ShardedBloom.Spec] =
-    if (!hasDocs) None
-    else {
-      val modeSwitch = Files.exists(Paths.get(corpusDir, "bloom.bin"))
-      val fresh = !modeSwitch &&
-        ShardedBloom.readMeta(spark, corpusDir).contains(declared) &&
-        ShardedBloom.layoutExists(spark, corpusDir, declared)
-      if (!fresh) {
-        ShardedBloom.rebuild(corpusHashes(spark, docsDir), "__h",
-          corpusDir, declared)
-        // take single ownership NOW, not at the next commit — leaving
-        // bloom.bin in place keeps modeSwitch true, and a stream of
-        // all-duplicate batches (which never commit) would repeat this
-        // corpus-wide rebuild on every micro-batch
-        Files.deleteIfExists(Paths.get(corpusDir, "bloom.bin"))
-      }
-      Some(declared)
-    }
-
-  /** The monolithic filter to probe/merge against, REBUILT from the
-    * corpus digest column (one column-pruned scan) whenever the stored
-    * bytes can't be trusted: bloom.bin lost out-of-band (trusting "no
-    * filter" would re-admit duplicates AND leave the rewritten filter
-    * covering only this batch — a permanent superset break), or a MODE
-    * SWITCH — a sharded store present means `numShards > 1` runs may
-    * have appended docs bloom.bin never saw. The commit then deletes
-    * the sharded store, keeping one filter authority per corpus. */
-  private def monolithicFilter(spark: SparkSession, bloomPath: java.nio.file.Path,
-      docsDir: String, hasDocs: Boolean,
-      expectedItems: Long, fpp: Double): Option[Array[Byte]] = {
-    val corpusDir = bloomPath.getParent.toString
-    val modeSwitch = ShardedBloom.readMeta(spark, corpusDir).isDefined
-    if (hasDocs && (modeSwitch || !Files.exists(bloomPath))) {
+      expectedItems: Long, fpp: Double): Option[Array[Byte]] =
+    if (Files.exists(bloomPath)) Some(Files.readAllBytes(bloomPath))
+    else if (hasDocs) {
       val rebuilt = filterFromCorpus(spark, docsDir, expectedItems, fpp)
-      // persist the rebuild and take single ownership NOW, not at the
-      // next commit — a stream of all-duplicate batches (which never
-      // commit) would otherwise repeat this corpus-wide rebuild on
-      // every micro-batch
+      // persist the rebuild NOW, not at the next commit — a stream of
+      // all-duplicate batches (which never commit) would otherwise
+      // repeat this corpus-wide rebuild on every micro-batch
       writeFilter(bloomPath, rebuilt)
-      ShardedBloom.deleteStore(spark, corpusDir)
       Some(rebuilt)
     }
-    else if (Files.exists(bloomPath)) Some(Files.readAllBytes(bloomPath))
     else None
-  }
 
-  /** Monolithic filter built from the corpus' stored digest column. */
+  /** The filter built from the corpus' stored digest column. */
   private def filterFromCorpus(spark: SparkSession, docsDir: String,
       expectedItems: Long, fpp: Double): Array[Byte] =
     corpusDigests(spark, docsDir)
       .agg(call_function("graft_bloom_agg", xxhash64(col("digest")),
         lit(expectedItems), lit(Dedup.bloomBits(expectedItems, fpp))).as("f"))
       .head.getAs[Array[Byte]]("f")
-
-  /** Corpus digest hashes, keyed the way the sharded store hashes them. */
-  private def corpusHashes(spark: SparkSession, docsDir: String): DataFrame =
-    corpusDigests(spark, docsDir).withColumn("__h", xxhash64(col("digest")))
 
   /** The corpus digest column (mergeSchema: exact-mode and near-dup-mode
     * appends carry different optional columns; a single-footer read
@@ -600,10 +504,9 @@ object CorpusBuilder {
     spark.read.option("mergeSchema", "true").parquet(docsDir)
       .select(col(DigestCol).as("digest"))
 
-  /** Single-writer atomic swap of the monolithic filter (the driver's
+  /** Single-writer atomic swap of the filter (the driver's
     * foreachBatch is serial per corpus, so the fixed tmp name inside
-    * [[StoreManifest.atomicWriteBytes]] is safe here — unlike the
-    * executor-side shard writes). */
+    * [[StoreManifest.atomicWriteBytes]] is safe here). */
   private def writeFilter(bloomPath: java.nio.file.Path, bytes: Array[Byte]): Unit =
     StoreManifest.atomicWriteBytes(bloomPath, bytes)
 
@@ -637,7 +540,10 @@ object CorpusBuilder {
       docsDir: String, bloomPath: java.nio.file.Path, stored: Option[Array[Byte]],
       expectedItems: Long, fpp: Double): Unit = {
     val bits = Dedup.bloomBits(expectedItems, fpp)
-    def batchFilter = staged.agg(call_function("graft_bloom_agg",
+    // one batch-filter job; only the MERGE may fail on a resize — a
+    // failure of the job itself (e.g. cancelled by query.stop())
+    // propagates instead of being answered with a corpus-wide rebuild
+    val batchFilter = staged.agg(call_function("graft_bloom_agg",
         xxhash64(col(DigestCol)), lit(expectedItems), lit(bits)).as("f"))
       .head.getAs[Array[Byte]]("f")
     val merged = stored match {
@@ -655,13 +561,8 @@ object CorpusBuilder {
           // belong to docs that never landed, so the batch filter alone
           // upholds the superset invariant.
           if (!Files.exists(Paths.get(docsDir))) batchFilter
-          else {
-            val rebuilt = spark.read.option("mergeSchema", "true").parquet(docsDir)
-              .agg(call_function("graft_bloom_agg",
-                xxhash64(col(DigestCol)), lit(expectedItems), lit(bits)).as("f"))
-              .head.getAs[Array[Byte]]("f")
-            mergeFilters(rebuilt, batchFilter)
-          }
+          else mergeFilters(
+            filterFromCorpus(spark, docsDir, expectedItems, fpp), batchFilter)
         }
     }
     writeFilter(bloomPath, merged)
@@ -683,8 +584,8 @@ object CorpusBuilder {
     * corpus table unconditionally; both gates are candidate-routed
     * derived-store probes whose per-batch cost tracks the BATCH size:
     *
-    *   - exact: the bloom store (broadcast or sharded, same as
-    *     [[appendNew]]) routes — only probe-HIT digests (true dups +
+    *   - exact: the broadcast bloom filter (same as [[appendNew]])
+    *     routes — only probe-HIT digests (true dups +
     *     fpp·batch false positives) reach the verify, which reads the
     *     bucket-pruned [[graft.dedup.DigestIndex]], not the corpus
     *     digest column (same-id matches fall back to the corpus —
@@ -710,7 +611,7 @@ object CorpusBuilder {
   def appendNearDupNew(spark: SparkSession, batch: DataFrame, corpusDir: String,
       idCol: String, textCol: String, nd: NearDup,
       expectedItems: Long = 1L << 20, fpp: Double = 0.01,
-      numShards: Int = 1, digestBuckets: Int = DefaultDigestBuckets,
+      digestBuckets: Int = DefaultDigestBuckets,
       lockToken: Option[String] = None): Long = {
     import graft.text.TextFunctions.tokens
     requireBuildLock(corpusDir, lockToken)
@@ -739,18 +640,11 @@ object CorpusBuilder {
     val withinDrop = Dedup.lshCandidatesWithSigs(batchSigs, idCol, SigCol, nd.bands)
       .filter(agrees(col("siga"), col("sigb")))
       .select(col("b").as("__drop"))
-    // both derived stores resolve BEFORE the gate (rebuild-then-flip on
-    // resize / mode switch / loss), and the gate and commit share them
+    // the derived stores resolve BEFORE the gate (rebuild on resize /
+    // loss), and the gate and commit share them
     val bloomPath = Paths.get(corpusDir, "bloom.bin")
-    val monoStored: Option[Array[Byte]] =
-      if (numShards <= 1)
-        monolithicFilter(spark, bloomPath, docsDir, hasDocs, expectedItems, fpp)
-      else None
-    val shardSpec: Option[ShardedBloom.Spec] =
-      if (numShards > 1)
-        resolveSharded(spark, corpusDir, docsDir, hasDocs,
-          ShardedBloom.Spec(numShards, expectedItems, fpp))
-      else None
+    val stored =
+      resolveFilter(spark, bloomPath, docsDir, hasDocs, expectedItems, fpp)
     val bandSpec = BandIndex.Spec(nd.bands, nd.indexBuckets)
     val bandReady = resolveBandIndex(spark, corpusDir, docsDir, hasDocs,
       idCol, bandSpec)
@@ -759,7 +653,7 @@ object CorpusBuilder {
     // guaranteed probe-ready below
     resolveDigestIndex(spark, corpusDir, docsDir, hasDocs, idCol, idxSpec)
     // the gate's probe filter, released once `fresh` is materialized
-    val probe = if (hasDocs) monoStored.map(Dedup.broadcastFilter(spark, _)) else None
+    val probe = if (hasDocs) stored.map(Dedup.broadcastFilter(spark, _)) else None
     val fresh = try {
       val corpusDrops: Seq[DataFrame] =
         if (!hasDocs) Nil
@@ -771,13 +665,7 @@ object CorpusBuilder {
           // drop-id shape; same-id matches fall back to the corpus —
           // see [[Dedup.indexedDupDigests]])
           val hits =
-            if (numShards <= 1)
-              staged.filter(Dedup.bloomProbe(probe.get, xxhash64(col(DigestCol))))
-            else
-              ShardedBloom.probeHits(
-                staged.withColumn("__h", xxhash64(col(DigestCol))), "__h",
-                corpusDir, shardSpec.get)
-                .filter(col("__hit"))
+            staged.filter(Dedup.bloomProbe(probe.get, xxhash64(col(DigestCol))))
           val dup = Dedup.indexedDupDigests(
             hits.select(col(idCol), col(DigestCol)), idCol, DigestCol,
             corpusDir, idxSpec, corpusDigests(spark, docsDir))
@@ -813,18 +701,8 @@ object CorpusBuilder {
       // modes, so a later exact-mode run probes correctly)
       persistDerived(spark, corpusDir, Seq(
         "bloom" -> (() =>
-          if (numShards <= 1) {
-            persistMergedFilter(spark, fresh, docsDir, bloomPath, monoStored,
-              expectedItems, fpp)
-            ShardedBloom.deleteStore(spark, corpusDir)
-          } else {
-            ShardedBloom.mergeBatch(
-              fresh.withColumn("__h", xxhash64(col(DigestCol))), "__h",
-              corpusDir, shardSpec.getOrElse(
-                ShardedBloom.Spec(numShards, expectedItems, fpp)))
-            Files.deleteIfExists(bloomPath)
-            ()
-          }),
+          persistMergedFilter(spark, fresh, docsDir, bloomPath, stored,
+            expectedItems, fpp)),
         "digest-index" -> (() =>
           DigestIndex.append(fresh.select(col(idCol), col(DigestCol)),
             idCol, DigestCol, corpusDir, idxSpec,

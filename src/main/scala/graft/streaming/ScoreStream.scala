@@ -118,13 +118,9 @@ object ScoreStream {
         // definition when split-starved); a production mega-batch
         // already carries >= defaultParallelism splits and passes
         // through untouched, so this never caps cluster-scale inputs
-        // GRAFT_SCORE_NOSPREAD=1 disables the spread — the A/B knob for
-        // isolating its contribution on a given box (debug-only, like
-        // GRAFT_SCORE_DEBUG)
         val par = batch.sparkSession.sparkContext.defaultParallelism
         val in =
-          if (!spread || sys.env.contains("GRAFT_SCORE_NOSPREAD") ||
-            batch.rdd.getNumPartitions >= par) batch
+          if (!spread || batch.rdd.getNumPartitions >= par) batch
           else batch.repartition(par)
         lap(s"trigger $batchId")(
           score(in).write.mode("overwrite").parquet(s"$outDir/batch=$batchId"))

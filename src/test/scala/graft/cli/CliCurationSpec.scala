@@ -156,6 +156,18 @@ class CliCurationSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$dir/corpus2", "BUILD.lock")))
   }
 
+  test("corpus refuses the removed --shards flag instead of ignoring it") {
+    val dir = tmpDir("cli-corpus-shards")
+    writeFile(s"$dir/landing", "f0.json", """{"doc_id": 1, "text": "alpha"}""" + "\n")
+    val ex = intercept[IllegalArgumentException] {
+      Main.run(spark, Array("corpus", "--corpus", s"$dir/corpus",
+        "--checkpoint", s"$dir/ckpt", "--shards", "2", s"$dir/landing/*.json"))
+    }
+    assert(ex.getMessage.contains("--shards was removed"))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/corpus")),
+      "a refused call must not start a build")
+  }
+
   test("score --stream drains a landing glob against a frozen NB artifact; --max-bytes mega-batches") {
     val dir = tmpDir("cli-score-stream")
     val docs = Seq(

@@ -79,32 +79,6 @@ class DedupSpec extends SparkSpec {
     assert(keptSat == kept, "bloom false positives must not drop new docs")
   }
 
-  test("bloomNewDocsSharded: sharded-store twin keeps bloomNewDocs' exact results") {
-    val corpus = Seq((1L, "alpha beta gamma"), (2L, "delta epsilon"),
-      (3L, "zeta eta theta")).toDF("doc_id", "text")
-    val batch = Seq((10L, "alpha beta gamma"), (11L, "totally new document"),
-      (12L, "delta epsilon"), (13L, "another new one"),
-      (14L, "alpha beta gamma extended"))
-      .toDF("doc_id", "text")
-    val digests = corpus.select(Dedup.contentKey(col("text")).as("digest"))
-    val store = tmpDir("dedup-sharded-store")
-    val spec = ShardedBloom.Spec(numShards = 4, expectedItems = 256L, fpp = 0.01)
-    ShardedBloom.rebuild(
-      digests.withColumn("__h", xxhash64(col("digest"))), "__h", store, spec)
-    val kept = Dedup.bloomNewDocsSharded(batch, digests, "text", store, spec)
-    assert(kept.select("doc_id").as[Long].collect().sorted.toSeq == Seq(11L, 13L, 14L),
-      "sharded probe + exact verify must keep exactly the new docs")
-    assert(kept.columns.toSeq == Seq("doc_id", "text"),
-      "no probe scaffolding columns may leak to the caller")
-    // tiny store (64 per-shard bits → high fpp): extra candidates, same
-    // exact result — sizing is a routing knob, never a correctness one
-    val tiny = ShardedBloom.Spec(numShards = 2, expectedItems = 4L, fpp = 0.5)
-    ShardedBloom.rebuild(
-      digests.withColumn("__h", xxhash64(col("digest"))), "__h", store, tiny)
-    assert(Dedup.bloomNewDocsSharded(batch, digests, "text", store, tiny)
-      .select("doc_id").as[Long].collect().sorted.toSeq == Seq(11L, 13L, 14L))
-  }
-
   test("bloomBits: standard sizing formula, monotone in items and precision") {
     assert(Dedup.bloomBits(1000L, 0.01) > Dedup.bloomBits(1000L, 0.1))
     // linear in items (up to ceil rounding)

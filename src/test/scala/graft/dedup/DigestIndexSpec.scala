@@ -64,6 +64,21 @@ class DigestIndexSpec extends SparkSpec {
     assert(m == Seq(3L))
   }
 
+  test("a torn meta tmp (crash mid-write) is inert: the committed pointer stays active") {
+    val dir = tmpDir("dix-torn-tmp")
+    DigestIndex.rebuild(digested(Seq((1L, "one"))), "doc_id", "digest", dir, spec)
+    // a crash between the tmp write and its rename leaves garbage
+    // beside the pointer; readers only ever read the committed name
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir, "digests-meta.json.crashed-attempt.tmp"),
+      "not a meta".getBytes("UTF-8"))
+    assert(DigestIndex.readMeta(spark, dir).contains(spec))
+    DigestIndex.append(digested(Seq((2L, "two"))), "doc_id", "digest", dir, spec)
+    val m = DigestIndex.probe(digested(Seq((8L, "one"), (9L, "two"))),
+      "doc_id", "digest", dir, spec).select("corpus_id").as[Long].collect().sorted.toSeq
+    assert(m == Seq(1L, 2L))
+  }
+
   test("indexedDupDigests: different-id dups drop with ZERO corpus reads (steady state)") {
     val dir = tmpDir("dix-steady")
     val corpus = digested((0L until 10L).map(i => (i, s"c$i")))

@@ -183,10 +183,19 @@ class CorpusBuilderSpec extends SparkSpec {
     assert(n3 == 0L, "bloom must be maintained by the near-dup gate too")
     // resize the declared capacity: stored filter has different bits —
     // the merge rebuilds from the corpus digest column at the new size
+    val before = lastExecutionId
     val n4 = CorpusBuilder.appendNew(spark,
       Seq((5L, "entirely new"), (6L, "alpha beta gamma")).toDF("doc_id", "text"),
       corpus, "doc_id", "text", 4096L, 0.001)
     assert(n4 == 1L, "resize must keep dedup exact, not crash the merge")
+    // one batch-filter job plus one corpus rebuild — the batch filter
+    // is not recomputed after the failed merge. The marker query runs
+    // last, so once the async listener has recorded it, it has
+    // recorded every execution of the append too
+    spark.range(1).selectExpr("'resize-marker' AS m").collect()
+    val aggs = planDescriptionsAfter(before)(_.contains("resize-marker"))
+      .count(_.contains("bloom_filter_agg"))
+    assert(aggs == 2, s"resize ran $aggs bloom aggregate jobs, expected 2")
     assert(corpusDocs(corpus).count() == 3L)
     // and the resized filter still gates correctly
     assert(CorpusBuilder.appendNew(spark,
@@ -297,96 +306,6 @@ class CorpusBuilderSpec extends SparkSpec {
     assert(corpusDocs(corpus).count() == 3L)
   }
 
-  test("sharded store: dedup across appends, per-shard byte budget, per-shard superset") {
-    import graft.dedup.ShardedBloom
-    val corpus = tmpDir("sharded-corpus")
-    val spec = ShardedBloom.Spec(numShards = 8, expectedItems = 1024L, fpp = 0.01)
-    def append(rows: Seq[(Long, String)]): Long =
-      CorpusBuilder.appendNew(spark, rows.toDF("doc_id", "text"), corpus,
-        "doc_id", "text", spec.expectedItems, spec.fpp, spec.numShards)
-    val b1 = (1L to 40L).map(i => (i, s"content ${i % 20}"))
-    assert(append(b1) == 20L)
-    assert(append(b1) == 0L, "full replay must drop everything")
-    val b2 = (100L to 119L).map(i => (i, s"content ${i - 90}")) // 10 dup, 10 new
-    assert(append(b2) == 10L)
-    val docs = corpusDocs(corpus)
-    assert(docs.count() == 30L && docs.select("text").distinct().count() == 30L)
-    // every shard file stays inside its declared byte budget across
-    // appends — the whole point of sharding (bits/8 + sketch header)
-    val budget = spec.perShardBits / 8 + 64
-    val maxBytes = ShardedBloom.maxShardBytes(spark, corpus, spec)
-    assert(maxBytes > 0L && maxBytes <= budget,
-      s"shard files must stay <= $budget bytes, got $maxBytes")
-    // superset invariant PER SHARD: every stored corpus digest probes
-    // as a hit in its own shard
-    val hashed = docs.select(col(CorpusBuilder.DigestCol).as("digest"))
-      .withColumn("__h", xxhash64(col("digest")))
-    val misses = ShardedBloom.probeHits(hashed, "__h", corpus, spec)
-      .filter(!col("__hit")).count()
-    assert(misses == 0L, "every corpus digest must hit its shard filter")
-  }
-
-  test("sharded store: resize rebuilds into a fresh layout with an atomic pointer flip") {
-    import graft.dedup.ShardedBloom
-    val corpus = tmpDir("sharded-resize-corpus")
-    val b1 = (1L to 20L).map(i => (i, s"doc $i"))
-    assert(CorpusBuilder.appendNew(spark, b1.toDF("doc_id", "text"), corpus,
-      "doc_id", "text", 1024L, 0.01, numShards = 8) == 20L)
-    val oldLayout = ShardedBloom.Spec(8, 1024L, 0.01).layoutDir
-    // resize: different shard count AND capacity — must rebuild from the
-    // corpus digest column at the new layout and keep gating exactly
-    val resized = ShardedBloom.Spec(4, 4096L, 0.01)
-    assert(CorpusBuilder.appendNew(spark,
-      (b1 ++ Seq((99L, "resize survivor"))).toDF("doc_id", "text"), corpus,
-      "doc_id", "text", resized.expectedItems, resized.fpp, resized.numShards) == 1L)
-    assert(ShardedBloom.readMeta(spark, corpus).contains(resized),
-      "meta pointer must flip to the resized layout")
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(corpus, oldLayout)),
-      "old layout must be garbage-collected after the flip")
-    // lost store: delete the layout dir + meta — the next append
-    // rebuilds from the corpus and still drops every duplicate
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(java.nio.file.Paths.get(corpus, resized.layoutDir))
-      .iterator().asScala.toSeq.reverse
-      .foreach(java.nio.file.Files.delete)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(corpus, "bloom-meta.json"))
-    assert(CorpusBuilder.appendNew(spark, b1.toDF("doc_id", "text"), corpus,
-      "doc_id", "text", resized.expectedItems, resized.fpp, resized.numShards) == 0L)
-    assert(corpusDocs(corpus).count() == 21L)
-  }
-
-  test("numShards mode switches rebuild from the corpus — stale filters are never trusted") {
-    import graft.dedup.ShardedBloom
-    val corpus = tmpDir("mode-switch-corpus")
-    def append(rows: Seq[(Long, String)], shards: Int): Long =
-      CorpusBuilder.appendNew(spark, rows.toDF("doc_id", "text"), corpus,
-        "doc_id", "text", 1024L, 0.01, numShards = shards)
-    val b1 = (1L to 10L).map(i => (i, s"sharded-era doc $i"))
-    assert(append(b1, shards = 4) == 10L)
-    // switch to MONOLITHIC: the shard files don't know about b2, and
-    // bloom.bin doesn't exist — the gate must rebuild from the corpus
-    val b2 = (20L to 29L).map(i => (i, s"mono-era doc $i"))
-    assert(append(b1 ++ b2, shards = 1) == 10L, "b1 replay must drop via rebuild")
-    // the commit claimed single ownership: the sharded store is gone
-    assert(ShardedBloom.readMeta(spark, corpus).isEmpty,
-      "a monolithic commit must delete the sharded store")
-    // switch BACK to sharded: bloom.bin exists but no sharded meta —
-    // full rebuild again; every doc from both eras must be dropped.
-    // The rebuild itself takes ownership (bloom.bin deleted) even
-    // though this all-duplicate batch never commits — otherwise every
-    // all-dup batch would repeat the corpus-wide rebuild
-    assert(append(b1 ++ b2, shards = 4) == 0L,
-      "mode switches must never re-admit stored content")
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(corpus, "bloom.bin")),
-      "a sharded rebuild must take single ownership immediately")
-    val b3 = Seq((40L, "late sharded doc"))
-    assert(append(b1 ++ b3, shards = 4) == 1L)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(corpus, "bloom.bin")),
-      "a sharded commit must delete the monolithic filter")
-    assert(append(b2 ++ b3, shards = 4) == 0L)
-    assert(corpusDocs(corpus).count() == 21L)
-  }
-
   test("streaming build drains a landing dir exactly-once by content across restarts") {
     val landing = tmpDir("corpus-landing")
     val ckpt = tmpDir("corpus-ckpt")
@@ -448,30 +367,6 @@ class CorpusBuilderSpec extends SparkSpec {
     val limit = 64 * 1024
     assert(plans.forall(_.length < limit),
       s"largest recorded plan: ${plans.map(_.length).max} chars")
-  }
-
-  test("streaming build with a SHARDED store: same exactly-once-by-content across micro-batches") {
-    import graft.dedup.ShardedBloom
-    val landing = tmpDir("sharded-stream-landing")
-    val corpus = tmpDir("sharded-stream-corpus")
-    (0 until 3).foreach { f =>
-      val lines = (0 until 10).map { i =>
-        s"""{"doc_id": ${f * 10 + i}, "text": "stream content ${(f * 10 + i) % 15}"}"""
-      }.mkString("\n")
-      writeFile(landing, s"f$f.json", lines + "\n")
-    }
-    val q = CorpusBuilder.build(spark, s"$landing/*.json", tmpDir("sharded-stream-ckpt"),
-      corpus, maxFilesPerTrigger = Some(1), numShards = 4)
-    q.awaitTermination()
-    assert(corpusDocs(corpus).count() == 15L)
-    // replay from a fresh checkpoint: the sharded gate drops everything
-    val q2 = CorpusBuilder.build(spark, s"$landing/*.json", tmpDir("sharded-stream-ckpt2"),
-      corpus, numShards = 4)
-    q2.awaitTermination()
-    assert(corpusDocs(corpus).count() == 15L)
-    val spec = ShardedBloom.Spec(4, 1L << 20, 0.01)
-    assert(ShardedBloom.readMeta(spark, corpus).contains(spec))
-    assert(ShardedBloom.maxShardBytes(spark, corpus, spec) > 0L)
   }
 
   test("stream killed between derived-store persist and docs append recovers exactly-once (exact gate)") {
