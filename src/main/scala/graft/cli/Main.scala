@@ -30,16 +30,18 @@ object Main {
   private val usage: String =
     """usage: graft [ingest|serve|push|enqueue|schema|migrate|sql|corpus|cluster|sample|select|strip|tokenize|pack|recall|split|rank|score|phrases|dsir|freq|health|negatives|agree|calibrate|decontam|imagedup|chunkdup|txlog] <flags> <args>
       |  ingest  --rules <file|dir> --warehouse <dir> [--backend registry|txlog] [--dry-run] [--output <dir>] [--dedup] [--batch-size <n>] <glob>...
-      |  serve   --rules <file|dir> --warehouse <dir> [--backend registry|txlog] --checkpoint <dir> [--continuous <ms>] [--max-files <n>] <glob>
-      |  push    --rules <file|dir> --warehouse <dir> --checkpoint <dir> --spool <dir> [--port <n>] [--interval <ms>] [--path-rewrite <from=to>] [--auth-rego <file>] [--auth-token <t>] [--jwt-secret <s> [--jwt-issuer <iss>]] [--jwks <file|url> [--jwt-issuer <iss>] [--jwt-email <e>]] [--state <dir>] [--memory-limit <bytes>]
+      |  serve   --rules <file|dir> --warehouse <dir> [--backend registry|txlog] --checkpoint <dir> [--continuous <ms>] [--max-files <n>] [--dedup] <glob>
+      |  push    --rules <file|dir> --warehouse <dir> [--backend registry|txlog] --checkpoint <dir> --spool <dir> [--port <n>] [--interval <ms>] [--path-rewrite <from=to>] [--auth-rego <file>] [--auth-token <t>] [--jwt-secret <s> [--jwt-issuer <iss>]] [--jwks <file|url> [--jwt-issuer <iss>] [--jwt-email <e>]] [--state <dir>] [--memory-limit <bytes>] [--dedup]
       |  enqueue --output <dir> [--count-limit <n>] [--size-limit <bytes>] <glob>
-      |  schema  --rules <file|dir> <glob>...
-      |  migrate --warehouse <dir> [--partition <unit>] <srcDs.srcTbl> <dstDs.dstTbl>
-      |  sql     --warehouse <dir> [--limit <n>] <query>
+      |  schema  --rules <file|dir> [--warehouse <dir>] <glob>...
+      |  migrate --warehouse <dir> [--backend registry] [--partition <unit>] <srcDs.srcTbl> <dstDs.dstTbl>
+      |  sql     --warehouse <dir> [--backend registry] [--limit <n>] <query>
       |  corpus  --corpus <dir> --checkpoint <dir> [--id-col <c>] [--text-col <c>] [--continuous <ms>] [--max-files <n> | --max-bytes <b>] [--expected-items <n>] [--fpp <p>] [--near-dup] [--min-agree <f>] [--compact-every <n>] <glob>
       |  corpus compact --corpus <dir> [--target-bytes <b>] [--small-bytes <b>] [--min-files <n>]
       |  cluster --store <dir> --checkpoint <dir> [--output <dir>] [--id-col <c>] [--text-col <c>] [--threshold <t>] [--buckets <n>] [--max-files <n> | --max-bytes <b>] <glob>
       |  cluster compact --store <dir> [--min-dirs <n>]
+      |  cluster status --store <dir>
+      |  cluster expire --store <dir> --keep-from <batchId>
       |  sample  --output <dir> [--id-col <c>] (--per-mille <n> | --strata <c1,c2> --cap <n> | --cluster-cap <n> [--nlist <n>] [--vec-col <c>] | --shuffle-seed <s> | --weighted --weight-col <c> --n <n> [--strata-col <c1,c2>] [--seed <s>] | --mix-alpha <a> --stratum <c> --budget <n> --weight-col <c> [--seed <s>]) [--warehouse <dir>] <ds.tbl|parquetDir>
       |  select  --output <dir> --budget <n> --score <col> --weight <col> [--id-col <c>] [--warehouse <dir>] <ds.tbl|parquetDir>
       |  strip   --output <dir> [--intra | --ref "<bool SQL>" [--p <n>]] [--k <n>] [--id-col <c>] [--text-col <c>] [--warehouse <dir>] <ds.tbl|parquetDir>
@@ -50,12 +52,18 @@ object Main {
       |  rank    --output <dir> --query "<id>:<terms>[;<id>:<terms>...]" [--k <n>] [--k1 <f>] [--b <f>] [--id-col <c>] [--text-col <c>] [--warehouse <dir>] <ds.tbl|parquetDir>
       |  score   --output <dir> [--band <loQ,hiQ> --value-col <c> | --label <c>] [--ngram 2|3] [--save-model <dir> | --load-model <dir>] [--id-col <c>] [--text-col <c>] [--warehouse <dir>] <ds.tbl|parquetDir>
       |  score --stream --load-model <dir> --output <dir> --checkpoint <dir> [--label <c>] [--id-col <c>] [--text-col <c>] [--max-files <n> | --max-bytes <b>] <parquetGlob>
-      |  decontam --output <dir> --eval "<bool SQL>" [--fuzzy | --semantic [--threshold <t>] [--vec-col <c>]] [--k <n>] [--min-shared <n>] [--id-col <c>] [--text-col <c>] [--warehouse <dir>] <ds.tbl|parquetDir>
+      |  phrases --output <dir> [--k <n>] [--min-count <n>] [--text-col <c>] [--warehouse <dir>] <ds.tbl|parquetDir>
+      |  decontam --output <dir> --eval "<bool SQL>" [--fuzzy [--w <n>] | --semantic [--threshold <t>] [--vec-col <c>]] [--k <n>] [--min-shared <n>] [--id-col <c>] [--text-col <c>] [--warehouse <dir>] <ds.tbl|parquetDir>
       |  decontam --save-model <dir> --eval "<bool SQL>" [--k <n>] [--w <n>] [--id-col <c>] [--text-col <c>] [--warehouse <dir>] <ds.tbl|parquetDir>
       |  decontam --stream --load-model <dir> --output <dir> --checkpoint <dir> [--k <n>] [--w <n>] [--min-shared <n>] [--id-col <c>] [--text-col <c>] [--max-files <n> | --max-bytes <b>] <parquetGlob>
       |  dsir    --output <dir> --target "<bool SQL>" [--n <n>] [--buckets <n>] [--temperature <t>] [--id-col <c>] [--text-col <c>] [--warehouse <dir>] <ds.tbl|parquetDir>
       |  dsir    --save-model <dir> --target "<bool SQL>" [--buckets <n>] [--id-col <c>] [--text-col <c>] [--warehouse <dir>] <ds.tbl|parquetDir>
       |  dsir    --stream --load-model <dir> --threshold <t> --output <dir> --checkpoint <dir> [--buckets <n>] [--id-col <c>] [--text-col <c>] [--max-files <n> | --max-bytes <b>] <parquetGlob>
+      |  freq    --output <dir> [--support <num/den>] [--text-col <c>] [--warehouse <dir>] <ds.tbl|parquetDir>
+      |  health  --output <dir> [--group-col <c>] [--text-col <c>] [--overlap [--max-group-freq <n>]] [--embeddings <ds.tbl|parquetDir> [--vec-col <c>] [--label <c>]] [--warehouse <dir>] <ds.tbl|parquetDir>
+      |  negatives --output <dir> --queries "<bool SQL>" [--k <n>] [--nlist <n> [--nprobe <n>]] [--id-col <c>] [--vec-col <c>] [--label-col <c>] [--warehouse <dir>] <ds.tbl|parquetDir>
+      |  agree   --output <dir> [--queries "<bool SQL>"] [--k <n>] [--id-col <c>] [--vec-col <c>] [--label-col <c>] [--warehouse <dir>] <ds.tbl|parquetDir>
+      |  calibrate --output <dir> [--sample-mod <n>] [--id-col <c>] [--vec-col <c>] [--warehouse <dir>] <ds.tbl|parquetDir>
       |  imagedup --output <dir> [--radius <n> [--hash-bits <n>]] [--warehouse <dir>] <ds.tbl|parquetDir>
       |  chunkdup --output <dir> [--ref "<bool SQL>"] [--k <n>] [--p <n>] [--id-col <c>] [--text-col <c>] [--warehouse <dir>] <ds.tbl|parquetDir>
       |  txlog versions --warehouse <dir> <ds.tbl>
@@ -64,6 +72,34 @@ object Main {
       |  txlog compact  --warehouse <dir> [--target-partitions <n>] [--expire] <ds.tbl>
       |  txlog diff     --warehouse <dir> --output <dir> [--from <v>] [--to <v>] <ds.tbl>
       |every <ds.tbl|parquetDir> verb also takes --select "<expr AS name>,..." to project at read (e.g. --select "data.doc_id AS doc_id,data.text AS text" off an ingested table)""".stripMargin
+
+  /** Each verb's flags, read off its own `usage` lines — the one list
+    * of them — plus the global `--select`. */
+  private val verbFlags: Map[String, Set[String]] =
+    usage.linesIterator.map(_.trim.split("\\s+", 2)).toSeq.collect {
+      case Array(verb, rest) =>
+        verb -> ("--([a-z][a-z0-9-]*)".r.findAllMatchIn(rest).map(_.group(1)).toSet + "select")
+    }.groupMapReduce(_._1)(_._2)(_ ++ _)
+
+  /** Short names of the oldest verbs. */
+  private val aliases =
+    Map("i" -> "ingest", "s" -> "serve", "p" -> "push", "e" -> "enqueue",
+      "m" -> "migrate", "c" -> "corpus")
+
+  /** Flags a verb no longer takes, with why. */
+  private val removedFlags = Map(("corpus", "shards") -> ("corpus --shards " +
+    "was removed: the corpus keeps one bloom.bin filter in front of its digest index"))
+
+  /** Refuse any flag the verb does not take — a misspelled or foreign
+    * flag would otherwise be ignored and the run proceed on defaults.
+    * Unknown verbs pass through to the dispatch's own error. */
+  private def checkFlags(verb: String, flags: Map[String, String]): Unit =
+    verbFlags.get(verb).foreach { allowed =>
+      flags.keys.toSeq.sorted.find(!allowed(_)).foreach { f =>
+        throw new IllegalArgumentException(removedFlags.getOrElse((verb, f),
+          s"$verb does not take --$f\n$usage"))
+      }
+    }
 
   /** Parsed flags + positional args (flags may appear anywhere). */
   private def parse(args: Seq[String]): (Map[String, String], Seq[String]) = {
@@ -162,9 +198,11 @@ object Main {
     * lifecycle; tests drive verbs on a shared session. */
   def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
     val (flags, pos) = parse(args.toSeq.tail)
-    args(0) match {
+    val verb = aliases.getOrElse(args(0), args(0))
+    checkFlags(verb, flags)
+    verb match {
 
-      case "ingest" | "i" =>
+      case "ingest" =>
         require(pos.nonEmpty, "ingest needs at least one object path/glob")
         val cfg = Pipeline.Config(
           backendFor(flags),
@@ -177,7 +215,7 @@ object Main {
         res.results.foreach(r => println(
           s"${r.dataset}.${r.table} v${r.schemaVersion} rows=${r.logCount} ok=${r.success}"))
 
-      case "serve" | "s" =>
+      case "serve" =>
         require(pos.size == 1, "serve needs exactly one landing glob")
         val cfg = Pipeline.Config(
           backendFor(flags),
@@ -192,7 +230,7 @@ object Main {
         q.awaitTermination()
         sl.drain() // let the final batch's telemetry land before stop
 
-      case "push" | "p" =>
+      case "push" =>
         // HTTP Pub/Sub push endpoint (S6): receiver spools notifications,
         // the continuous query ingests the referenced objects
         val cfg = Pipeline.Config(
@@ -252,7 +290,7 @@ object Main {
           rewrite)
         try q.awaitTermination() finally { sl.drain(); rx.stop() }
 
-      case "enqueue" | "e" =>
+      case "enqueue" =>
         require(pos.size == 1, "enqueue needs exactly one prefix glob")
         val files = Enqueue.enqueue(spark, pos.head, req(flags, "output"),
           flags.get("count-limit").map(_.toInt).getOrElse(Enqueue.DefaultCountLimit),
@@ -269,7 +307,7 @@ object Main {
           println(schema.treeString)
         }
 
-      case "migrate" | "m" =>
+      case "migrate" =>
         // registry-layout reads only — silently constructing a registry
         // over a txlog warehouse would find no tables, with no hint why
         flags.get("backend").filter(_ != "registry").foreach(b =>
@@ -301,7 +339,7 @@ object Main {
         val rows = flags.get("limit").map(n => df.limit(n.toInt)).getOrElse(df)
         rows.toJSON.toLocalIterator().forEachRemaining(println(_))
 
-      case "corpus" | "c" if pos == Seq("compact") =>
+      case "corpus" if pos == Seq("compact") =>
         // bounded-growth maintenance for the corpus stores (docs dir +
         // digest/band index layouts): small-file bin packing, serialized
         // against concurrent compactions via the maintenance lock
@@ -322,11 +360,9 @@ object Main {
             s"${r.filesBefore} -> ${r.filesAfter} (${r.bytes} bytes)"))
         }
 
-      case "corpus" | "c" =>
+      case "corpus" =>
         // streaming exact-deduped corpus builder (CorpusBuilder):
         // exactly-once by content under any replay
-        require(!flags.contains("shards"), "corpus --shards was removed: " +
-          "the corpus keeps one bloom.bin filter in front of its digest index")
         require(pos.size == 1, "corpus needs exactly one landing glob")
         val trigger = flags.get("continuous")
           .map(ms => Trigger.ProcessingTime(ms.toLong))

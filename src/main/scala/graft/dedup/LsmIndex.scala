@@ -1,13 +1,14 @@
 package graft.dedup
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
 /** The LSM layout shared by the persisted dedup indexes
-  * ([[DigestIndex]], [[BandIndex]]) — the [[graft.streaming.ClusterStream]]
-  * label-store treatment applied to the corpus gate's derived stores:
+  * ([[DigestIndex]], [[BandIndex]], both instances of [[LsmIndex.Store]])
+  * — the [[graft.streaming.ClusterStream]] label-store treatment applied
+  * to the corpus gate's derived stores:
   *
   *   - APPEND (per micro-batch, the hot path) writes ONE FLAT
   *     single-file run `layout/run-<seq>` — no rebalance shuffle, no
@@ -51,7 +52,7 @@ private[graft] object LsmIndex {
   val Empty: State = State(0L, Nil, Nil)
 
   /** Meta-fragment renderer — the index's own spec fields prefix it. */
-  def render(st: State): String = {
+  private def render(st: State): String = {
     def arr(xs: Seq[String]) = xs.map(x => s""""$x"""").mkString(",")
     s""""ver":2,"seq":${st.seq},"bulks":[${arr(st.bulks)}],"runs":[${arr(st.runs)}]"""
   }
@@ -61,24 +62,241 @@ private[graft] object LsmIndex {
   private val RunsRe = """"runs":\[([^\]]*)\]""".r.unanchored
 
   /** Parse the state fragment out of a meta string; None for any
-    * pre-LSM (ver-1) meta — the caller treats that as "no trustable
-    * index" and rebuilds from the corpus (the migration guard: a ver-1
-    * layout mixes structures this reader must not guess at). */
-  def parse(s: String): Option[State] =
+    * pre-LSM (ver-1) meta. */
+  private def parse(s: String, unreadable: => Nothing): Option[State] =
     if (!s.contains(""""ver":2""")) None
     else {
       def names(re: scala.util.matching.Regex): Seq[String] = s match {
         case re(inner) =>
           inner.split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
             .filter(_.nonEmpty)
-        case _ => sys.error(s"unreadable LSM index meta: $s")
+        case _ => unreadable
       }
       val seq = s match {
         case SeqRe(n) => n.toLong
-        case _ => sys.error(s"unreadable LSM index meta (no seq): $s")
+        case _ => unreadable
       }
       Some(State(seq, names(BulksRe), names(RunsRe)))
     }
+
+  /** A declared index spec: its int fields in meta order (the names
+    * are the [[Store]]'s), its directory-bucket count, and the layout
+    * directory it names — so a spec change targets a fresh directory
+    * and the pointer flip is atomic. */
+  trait Spec {
+    def fields: Seq[Int]
+    def buckets: Int
+    def layoutDir: String
+  }
+
+  /** ONE read of a store's meta: the layout dir it declares, whatever
+    * its spec or version (the cleanup at a spec flip needs it), and the
+    * active LSM spec and state — None for a pre-LSM (ver-1) meta. */
+  final case class Meta[S](declared: String, active: Option[(S, State)])
+
+  /** A persisted, REBUILDABLE index in this layout: `(doc, <key>, ...)`
+    * rows, bucketed by `pmod(xxhash64(keyCol), buckets)` into
+    * `BucketCol` at compaction. Losing it costs one rebuild scan of the
+    * corpus, never correctness.
+    *
+    * Freshness is declared by `metaFile`: the spec's `fieldNames` then
+    * the LSM state, committed by [[atomicWrite]]. A spec change
+    * REBUILDS into a fresh layout directory and flips the pointer only
+    * after the rebuild completes; the superseded layout is removed
+    * after the flip (rebuild-then-flip). A pre-LSM (ver-1) meta — the
+    * spec fields alone — reads as no active index, so legacy layouts
+    * migrate through the same rebuild path instead of being misread.
+    * A meta whose spec fields don't parse (another store's meta,
+    * damage) fails loudly, naming the store.
+    *
+    * An instance supplies its `Spec` type, the row projection
+    * ([[project]]) with its flat schema, and its probe's final join. */
+  abstract class Store(kind: String, metaFile: String, val BucketCol: String,
+      keyCol: String, fieldNames: Seq[String]) {
+    type Spec <: LsmIndex.Spec
+
+    protected def specOf(fields: Seq[Int]): Spec
+
+    /** The store's flat rows for a frame of `(idCol, valueCol)`. */
+    protected def project(rows: DataFrame, idCol: String, valueCol: String,
+        spec: Spec): DataFrame
+
+    /** [[project]]'s schema for an id column of type `idType`. */
+    protected def flatSchema(idType: DataType): StructType
+
+    /** Default row count above which a probe stops broadcasting the
+      * batch side (a 1M-band-row frame of 64-hash signatures is ~0.5 GB
+      * serialized — past any sane broadcast budget). */
+    val DefaultMaxBroadcastRows: Long = 1L << 20
+
+    private val SpecRe = fieldNames.map(n => s""""$n":(\\d+)""")
+      .mkString("""\{""", ",", "[,}]").r
+
+    private[dedup] def metaJson(spec: Spec, st: State): String =
+      fieldNames.zip(spec.fields).map { case (n, v) => s""""$n":$v""" }
+        .mkString("{", ",", s",${render(st)}}")
+
+    /** The meta, read once; None for a fresh store. */
+    private[dedup] def meta(spark: SparkSession, storeDir: String): Option[Meta[Spec]] =
+      graft.streaming.StoreManifest.readFsString(spark, storeDir, metaFile).map { s =>
+        def unreadable = sys.error(s"unreadable $kind meta at $storeDir/$metaFile: $s")
+        val declared = SpecRe.findPrefixMatchOf(s)
+          .fold(unreadable)(m => specOf(m.subgroups.map(_.toInt)))
+        Meta(declared.layoutDir, parse(s, unreadable).map(declared -> _))
+      }
+
+    /** The ACTIVE spec, or None when no LSM-shaped index exists yet
+      * (absent, or ver-1: callers rebuild rather than misread it). */
+    def readMeta(spark: SparkSession, storeDir: String): Option[Spec] =
+      meta(spark, storeDir).flatMap(_.active).map(_._1)
+
+    /** Does the layout directory for `spec` exist? A meta pointer whose
+      * layout was deleted out-of-band must trigger a rebuild, not
+      * quietly probe "no index" ≡ "no match". */
+    def layoutExists(spark: SparkSession, storeDir: String, spec: Spec): Boolean =
+      graft.streaming.StoreManifest.fsExists(spark, storeDir, spec.layoutDir)
+
+    /** Is `spec` the active index with its layout present — the
+      * trust-or-rebuild test of every resolve path? */
+    def ready(spark: SparkSession, storeDir: String, spec: Spec): Boolean =
+      readMeta(spark, storeDir).contains(spec) && layoutExists(spark, storeDir, spec)
+
+    /** The LSM state when `spec` is the active index. */
+    private def activeState(spark: SparkSession, storeDir: String,
+        spec: Spec): Option[State] =
+      meta(spark, storeDir).flatMap(_.active).collect {
+        case (active, st) if active == spec => st
+      }
+
+    private def bucketOf(spec: Spec): Column =
+      pmod(xxhash64(col(keyCol)), lit(spec.buckets.toLong)).cast(IntegerType)
+
+    private def layoutPath(storeDir: String, spec: Spec): String =
+      new Path(storeDir, spec.layoutDir).toString
+
+    private def fsOf(spark: SparkSession, storeDir: String): FileSystem =
+      new Path(storeDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+    /** Swap the meta pointer to `(spec, st)` (data before pointer), then
+      * drop the `previous`ly declared layout if this flip superseded it. */
+    private def commit(spark: SparkSession, storeDir: String, spec: Spec,
+        st: State, previous: Option[String]): Unit = {
+      val fs = fsOf(spark, storeDir)
+      atomicWrite(fs, new Path(storeDir, metaFile), metaJson(spec, st).getBytes("UTF-8"))
+      previous.filter(_ != spec.layoutDir)
+        .foreach(old => fs.delete(new Path(storeDir, old), true))
+    }
+
+    /** Append rows for newly-admitted docs as one FLAT run and swap the
+      * meta pointer (data before pointer; the first append on a fresh
+      * corpus creates both). NO shuffle and NO dynamic-partition commit
+      * on this path — it runs inside every streaming trigger. Call
+      * BEFORE the docs append (the superset direction).
+      *
+      * FAILS LOUDLY when a meta exists but isn't ver-2 with this exact
+      * spec: silently starting from [[Empty]] would have the pointer
+      * swap DELETE the active layout — orphaning every existing index
+      * row and re-admitting its duplicates through the gate. Only a
+      * truly ABSENT meta means a fresh store; everything else routes
+      * through [[rebuild]] (the [[graft.streaming.CorpusBuilder]]
+      * resolve path). */
+    def append(rows: DataFrame, idCol: String, valueCol: String,
+        storeDir: String, spec: Spec,
+        /** Run-file count for mega-batch appends — callers that counted
+          * the staged batch pass [[runParts]]; the micro-batch default
+          * keeps the flat tail at one footer per batch. */
+        runFiles: Int = 1): Unit = {
+      val spark = rows.sparkSession
+      val current = meta(spark, storeDir)
+      val st = current match {
+        case None => Empty
+        case Some(Meta(_, Some((active, st)))) if active == spec => st
+        case Some(Meta(declared, Some(_))) => sys.error(
+          s"$kind at $storeDir is declared for $declared but this append " +
+            s"arrived for ${spec.layoutDir} — rebuild() into the new spec " +
+            "first; a restart-from-empty append would orphan the active " +
+            "layout and break the index-superset-of-corpus invariant")
+        case Some(Meta(_, None)) => sys.error(
+          s"$kind at $storeDir has a pre-LSM (ver-1) meta — rebuild() it " +
+            "into the LSM layout first; appending over it would orphan " +
+            "every existing index row and re-admit their duplicates")
+      }
+      val (_, next) = writeRun(project(rows, idCol, valueCol, spec),
+        layoutPath(storeDir, spec), st, runFiles)
+      commit(spark, storeDir, spec, next, current.map(_.declared))
+    }
+
+    /** Build the index from scratch out of the corpus' stored
+      * `(idCol, valueCol)` projection — first index on an existing
+      * corpus, spec change, lost layout, ver-1 migration. The new
+      * layout (one bucket-partitioned bulk, zero runs) is fully written
+      * before the meta pointer flips; the superseded layout is removed
+      * after. */
+    def rebuild(rows: DataFrame, idCol: String, valueCol: String,
+        storeDir: String, spec: Spec): Unit = {
+      val spark = rows.sparkSession
+      val previous = meta(spark, storeDir).map(_.declared)
+      val fs = fsOf(spark, storeDir)
+      val layout = new Path(storeDir, spec.layoutDir)
+      // a half-written layout from a crashed rebuild is stale, not a
+      // superset candidate — clear it so this rebuild starts clean
+      if (fs.exists(layout)) fs.delete(layout, true)
+      val bulk = "compact-0"
+      writeBulk(project(rows, idCol, valueCol, spec), s"$layout/$bulk",
+        BucketCol, bucketOf(spec))
+      // an empty corpus writes zero rows; the bulk dir must still exist
+      // so the probe's explicit-schema read sees "empty", not "lost"
+      if (!fs.exists(new Path(layout, bulk))) fs.mkdirs(new Path(layout, bulk))
+      commit(spark, storeDir, spec, State(1L, Seq(bulk), Nil), previous)
+    }
+
+    /** Fold accumulated flat runs into the bucket-partitioned bulk —
+      * maintenance on the [[graft.streaming.CorpusBuilder.compactStores]]
+      * cadence, SERIALIZED with appends (both swap the same meta
+      * pointer). Tiered: an L1 fold's I/O is bounded by the run mass; a
+      * full merge (every `maxBulks` folds) rewrites the bulk set into
+      * one. Returns (runs folded, bulks after), or None when `spec`
+      * isn't active or fewer than `minRuns` runs wait. */
+    def compact(spark: SparkSession, storeDir: String, spec: Spec,
+        minRuns: Int = 4, maxBulks: Int = 4): Option[(Int, Int)] =
+      activeState(spark, storeDir, spec).flatMap { st =>
+        val layout = layoutPath(storeDir, spec)
+        compactStep(spark, layout, st, BucketCol, bucketOf(spec), minRuns, maxBulks)
+          .map { next =>
+            commit(spark, storeDir, spec, next, None) // same layout: nothing superseded
+            sweep(spark, layout, next)
+            (st.runs.size, next.bulks.size)
+          }
+      }
+
+    /** The probe prelude: the batch's store-shaped `rows` (carrying
+      * `keyCol`) bucketed and materialized once — consumed twice, bucket
+      * list and join side — then ONE metadata-sized job (≤ buckets rows)
+      * that serves both the bucket prune list and the broadcast guard's
+      * row count. Returns (the batch side as `batchCols`, broadcast
+      * while it holds at most `maxBroadcastRows` rows; the live store
+      * read pruned to the touched buckets). Past the threshold the join
+      * falls back to a shuffle on the key — a cap-less backfill can
+      * make the batch side batch-SIZED, and AQE may still pick a
+      * broadcast from actual sizes, the safe version of the hint. */
+    protected def probeSides(rows: DataFrame, idType: DataType,
+        storeDir: String, spec: Spec, maxBroadcastRows: Long)(
+        batchCols: Column*): (DataFrame, DataFrame) = {
+      val spark = rows.sparkSession
+      val st = activeState(spark, storeDir, spec).getOrElse(sys.error(
+        s"no active $kind at $storeDir for ${spec.layoutDir} — rebuild it " +
+          "from the corpus first"))
+      val n = graft.util.Materialize.eager(rows.withColumn(BucketCol, bucketOf(spec)))
+      val perBucket = n.groupBy(BucketCol).count().collect()
+      val touched = perBucket.map(_.getInt(0)).toIndexedSeq
+      val batchSide = n.select(batchCols: _*)
+      val guarded =
+        if (perBucket.map(_.getLong(1)).sum <= maxBroadcastRows) broadcast(batchSide)
+        else batchSide
+      (guarded, readLive(spark, layoutPath(storeDir, spec), st,
+        flatSchema(idType), BucketCol, Some(touched)))
+    }
+  }
 
   /** tmp → rename; delete-then-rename where rename-over is unsupported
     * — the commit of each index's meta pointer. The tmp name is
@@ -98,29 +316,6 @@ private[graft] object LsmIndex {
       if (!fs.rename(tmp, dst)) sys.error(s"cannot commit $dst")
     }
   }
-
-  /** The append entry guard shared by the index stores: the active LSM
-    * state when the declared layout matches the requested one, [[Empty]]
-    * when no meta exists at all (fresh store), and a loud error
-    * otherwise — appending over a mismatched-spec or pre-LSM (ver-1)
-    * meta would orphan the active layout at the pointer swap and break
-    * the index-superset-of-corpus invariant (duplicates re-admitted
-    * through the gate). */
-  def appendableState(kind: String, storeDir: String, requestedLayout: String,
-      active: Option[(String, State)], metaExists: Boolean): State =
-    active match {
-      case Some((layout, st)) if layout == requestedLayout => st
-      case Some((layout, _)) => sys.error(
-        s"$kind at $storeDir is declared for $layout but this append " +
-          s"arrived for $requestedLayout — rebuild() into the new spec " +
-          "first; a restart-from-empty append would orphan the active " +
-          "layout and break the index-superset-of-corpus invariant")
-      case None if metaExists => sys.error(
-        s"$kind at $storeDir has a pre-LSM (ver-1) meta — rebuild() it " +
-          "into the LSM layout first; appending over it would orphan " +
-          "every existing index row and re-admit their duplicates")
-      case None => Empty
-    }
 
   /** Write one flat run for `rows` and return (run name, next state).
     * Single-file by default (`coalesce(1)`): the designed input is a

@@ -40,7 +40,8 @@ object Mining {
     * cross join itself is |Q|·|C|), so rather than silently falling
     * back to a cartesian shuffle the guard fails loudly and names the
     * scale path ([[hardNegativesIvf]] / a per-cluster composition),
-    * mirroring [[graft.dedup.BandIndex.probe]]'s broadcast guard. */
+    * mirroring the dedup index probes' broadcast guard
+    * ([[graft.dedup.LsmIndex.Store.probeSides]]). */
   val MaxBroadcastQueryRows: Long = 1L << 16
 
   /** Count-once guard shared by the exact entry points: returns the
@@ -129,7 +130,7 @@ object Mining {
     // both query-side joins are EQUI-joins (cluster / query_id), so a
     // corpus-scale query side degrades safely to a shuffle: broadcast
     // is only a hint applied under the row cap, never a requirement
-    // (the BandIndex.probe guard shape)
+    // (the LsmIndex.Store.probeSides guard shape)
     val hint: DataFrame => DataFrame =
       if (queries.count() <= maxBroadcastQueryRows) broadcast(_) else identity
     val ql = hint(queries.select(col(idCol).as("query_id"),

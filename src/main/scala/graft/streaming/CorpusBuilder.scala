@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.dedup.{BandIndex, Dedup, DigestIndex}
+import graft.dedup.{BandIndex, Dedup, DigestIndex, LsmIndex}
 
 /** Continuously build an exact-deduped corpus from a landing stream —
   * the streaming face of the incremental-dedup family (q52 band table,
@@ -212,8 +212,7 @@ object CorpusBuilder {
     * [[graft.ingest.Compact.compactSmallFiles]] over the docs dir
     * (schema-merged: exact-era and near-dup-era files carry different
     * optional columns) and the tiered LSM fold over each ACTIVE index
-    * ([[graft.dedup.DigestIndex.compact]] /
-    * [[graft.dedup.BandIndex.compact]]): runs fold into a
+    * ([[graft.dedup.LsmIndex.Store.compact]]): runs fold into a
     * bucket-partitioned bulk once `minFiles` of them accumulate — an
     * L1 fold's I/O is bounded by the RUN mass; the periodic full merge
     * is the only corpus-proportional step and is amortized over
@@ -256,15 +255,13 @@ object CorpusBuilder {
           folded.map { case (runs, bulks) =>
             graft.ingest.Compact.Report(layout, runs, bulks, 0L)
           }.toSeq
-        val digest = DigestIndex.readMeta(spark, corpusDir)
-          .filter(DigestIndex.layoutExists(spark, corpusDir, _)).toSeq
-          .map(s => "digest-index" -> foldReport(s.layoutDir,
-            DigestIndex.compact(spark, corpusDir, s, minRuns = minFiles)))
-        val band = BandIndex.readMeta(spark, corpusDir)
-          .filter(BandIndex.layoutExists(spark, corpusDir, _)).toSeq
-          .map(s => "band-index" -> foldReport(s.layoutDir,
-            BandIndex.compact(spark, corpusDir, s, minRuns = minFiles)))
-        docs ++ digest ++ band
+        val indexes = Seq("digest-index" -> DigestIndex, "band-index" -> BandIndex)
+          .flatMap { case (name, ix) =>
+            ix.readMeta(spark, corpusDir).filter(ix.layoutExists(spark, corpusDir, _))
+              .map(s => name -> foldReport(s.layoutDir,
+                ix.compact(spark, corpusDir, s, minRuns = minFiles)))
+          }
+        docs ++ indexes
       }.getOrElse(Nil)
     } finally owned.foreach(t => releaseBuildLock(corpusDir, t))
   }
@@ -415,8 +412,8 @@ object CorpusBuilder {
     val hasDocs = Files.exists(Paths.get(docsDir))
     val keyed = inBatch.withColumn(DigestCol, Dedup.contentKey(col(textCol)))
     val idxSpec = DigestIndex.Spec(digestBuckets)
-    val idxReady = resolveDigestIndex(spark, corpusDir, docsDir, hasDocs,
-      idCol, idxSpec)
+    val idxReady = resolveIndex(DigestIndex)(spark, docsDir, hasDocs, corpusDir,
+      idCol, DigestCol, idxSpec)(digestRows(idCol))
     val bloomPath = Paths.get(corpusDir, "bloom.bin")
     val stored = graft.streaming.ScoreStream.lap("corpus-resolve")(
       resolveFilter(spark, bloomPath, docsDir, hasDocs, expectedItems, fpp))
@@ -447,27 +444,29 @@ object CorpusBuilder {
     appended
   }
 
-  /** Resolve the ACTIVE digest index against the corpus, rebuilding
-    * from the stored `(id, digest)` projection whenever the layout
-    * can't be trusted: first run on a corpus predating the index, a
-    * bucketing change (fresh layout + atomic pointer flip), or a
-    * layout lost out-of-band. BOTH gate modes append to the index on
-    * every commit, so a declared, present layout is fresh by
-    * construction. Returns false only when there are no docs to verify
-    * against (the first commit creates the index). */
-  private def resolveDigestIndex(spark: SparkSession, corpusDir: String,
-      docsDir: String, hasDocs: Boolean, idCol: String,
-      spec: DigestIndex.Spec): Boolean =
-    if (!hasDocs) false
-    else {
-      if (!(DigestIndex.readMeta(spark, corpusDir).contains(spec) &&
-          DigestIndex.layoutExists(spark, corpusDir, spec)))
-        DigestIndex.rebuild(
-          spark.read.option("mergeSchema", "true").parquet(docsDir)
-            .select(col(idCol), col(DigestCol)),
-          idCol, DigestCol, corpusDir, spec)
-      true
-    }
+  /** Resolve an index store against the corpus — rebuild-or-trust.
+    * With docs present, an index whose active spec matches and whose
+    * layout exists is fresh by construction (every commit appends to
+    * it) and is trusted as is; otherwise it is rebuilt from the rows
+    * `source` projects out of the stored docs: first run on a corpus
+    * predating the index, a spec change (fresh layout + atomic pointer
+    * flip), or a layout lost out-of-band. The docs read uses
+    * mergeSchema: exact-era and near-dup-era files carry different
+    * optional columns, and a single-footer read could throw or drop
+    * one. Returns false when there is nothing to probe: no docs yet, or
+    * `source` finds no rows to index (the first commit creates it). */
+  private def resolveIndex(ix: LsmIndex.Store)(spark: SparkSession,
+      docsDir: String, hasDocs: Boolean, corpusDir: String, idCol: String,
+      valueCol: String, spec: ix.Spec)(source: DataFrame => Option[DataFrame]): Boolean =
+    hasDocs && (ix.ready(spark, corpusDir, spec) ||
+      source(spark.read.option("mergeSchema", "true").parquet(docsDir)).exists { rows =>
+        ix.rebuild(rows, idCol, valueCol, corpusDir, spec)
+        true
+      })
+
+  /** The digest index's rebuild source: every doc's `(id, digest)`. */
+  private def digestRows(idCol: String)(docs: DataFrame): Option[DataFrame] =
+    Some(docs.select(col(idCol), col(DigestCol)))
 
   /** The filter to probe/merge against, REBUILT from the corpus
     * digest column (one column-pruned scan) when bloom.bin is missing
@@ -528,7 +527,7 @@ object CorpusBuilder {
       "digest-index" -> (() =>
         DigestIndex.append(staged.select(col(idCol), col(DigestCol)),
           idCol, DigestCol, corpusDir, idxSpec,
-          runFiles = graft.dedup.LsmIndex.runParts(appended, DigestRowsPerRunFile)))))
+          runFiles = LsmIndex.runParts(appended, DigestRowsPerRunFile)))))
     requireBuildLock(corpusDir, lockToken)
     graft.streaming.ScoreStream.lap("corpus-commit-docs")(
       staged.write.mode("append").parquet(docsDir))
@@ -646,12 +645,19 @@ object CorpusBuilder {
     val stored =
       resolveFilter(spark, bloomPath, docsDir, hasDocs, expectedItems, fpp)
     val bandSpec = BandIndex.Spec(nd.bands, nd.indexBuckets)
-    val bandReady = resolveBandIndex(spark, corpusDir, docsDir, hasDocs,
-      idCol, bandSpec)
+    // steady state trusts the band index without a corpus footer scan;
+    // a rebuild needs signature history — an exact-era corpus has no
+    // SigCol, nothing to probe, and the first near-dup commit creates it
+    val bandReady = resolveIndex(BandIndex)(spark, docsDir, hasDocs, corpusDir,
+      idCol, SigCol, bandSpec) { docs =>
+      Option.when(docs.columns.contains(SigCol))(
+        docs.filter(col(SigCol).isNotNull).select(col(idCol), col(SigCol)))
+    }
     val idxSpec = DigestIndex.Spec(digestBuckets)
     // side effect: rebuild-or-trust; with docs present the index is
     // guaranteed probe-ready below
-    resolveDigestIndex(spark, corpusDir, docsDir, hasDocs, idCol, idxSpec)
+    resolveIndex(DigestIndex)(spark, docsDir, hasDocs, corpusDir, idCol,
+      DigestCol, idxSpec)(digestRows(idCol))
     // the gate's probe filter, released once `fresh` is materialized
     val probe = if (hasDocs) stored.map(Dedup.broadcastFilter(spark, _)) else None
     val fresh = try {
@@ -706,48 +712,17 @@ object CorpusBuilder {
         "digest-index" -> (() =>
           DigestIndex.append(fresh.select(col(idCol), col(DigestCol)),
             idCol, DigestCol, corpusDir, idxSpec,
-            runFiles = graft.dedup.LsmIndex.runParts(appended, DigestRowsPerRunFile))),
+            runFiles = LsmIndex.runParts(appended, DigestRowsPerRunFile))),
         "band-index" -> (() =>
           BandIndex.append(fresh.filter(col(SigCol).isNotNull)
             .select(col(idCol), col(SigCol)), idCol, SigCol, corpusDir, bandSpec,
-            runFiles = graft.dedup.LsmIndex.runParts(
+            runFiles = LsmIndex.runParts(
               appended * nd.bands, BandRowsPerRunFile)))))
       requireBuildLock(corpusDir, lockToken)
       fresh.write.mode("append").parquet(docsDir)
     }
     appended
   }
-
-  /** Resolve the ACTIVE band index against the corpus, rebuilding from
-    * the stored (id, sig) projection whenever the layout can't be
-    * trusted: first near-dup run on a corpus with signature history, a
-    * banding/bucketing param change (fresh layout + atomic pointer
-    * flip), or a layout lost out-of-band. Returns false when the corpus
-    * has no signature column at all (exact-era corpus — nothing to
-    * probe; the first near-dup commit will create the index). */
-  private def resolveBandIndex(spark: SparkSession, corpusDir: String,
-      docsDir: String, hasDocs: Boolean, idCol: String,
-      spec: BandIndex.Spec): Boolean =
-    if (!hasDocs) false
-    else if (BandIndex.readMeta(spark, corpusDir).contains(spec) &&
-        BandIndex.layoutExists(spark, corpusDir, spec))
-      // steady state: a fresh index implies near-dup commits (hence
-      // SigCol) exist — skip the corpus-wide footer scan below, which
-      // would otherwise be paid on EVERY micro-batch
-      true
-    else {
-      // mergeSchema: a corpus first built in exact mode has no SigCol
-      // in its older files — a single-footer read could either throw
-      // (all files exact-era) or silently drop the column (mixed)
-      val corpus = spark.read.option("mergeSchema", "true").parquet(docsDir)
-      if (!corpus.columns.contains(SigCol)) false
-      else {
-        BandIndex.rebuild(
-          corpus.filter(col(SigCol).isNotNull).select(col(idCol), col(SigCol)),
-          idCol, SigCol, corpusDir, spec)
-        true
-      }
-    }
 
   /** Union of two serialized filters (both sides were sized with the
     * same expectedItems/fpp, so the bitsets are compatible). */

@@ -68,7 +68,13 @@ object CountStream {
     * (digest, SUM count, MIN example-id) table). Same pointer guard,
     * generation swap, cardinality ceiling and shard sizing; the merge
     * must be associative and commutative over batches for
-    * streaming-equals-batch to hold. */
+    * streaming-equals-batch to hold.
+    *
+    * Generation 0 is the first `table(batch)` written verbatim — there
+    * is no store to merge it with, and a single-shard generation is not
+    * repartitioned (see [[advance]]) — so `table` should return an
+    * AGGREGATED frame: an unaggregated one lands generation 0 as one
+    * file per input partition, until the next merge rewrites it. */
   def accumulateWith(spark: SparkSession, stream: DataFrame, storeDir: String,
       checkpointDir: String, maxKeys: Long = MaxStoreKeys)
       (table: DataFrame => DataFrame)
@@ -299,7 +305,9 @@ object CountStream {
     // and an explicit repartition(1) would add a full extra exchange
     // (plus its sort-before-repartition) of the store EVERY trigger.
     // Only a store big enough to want multiple shard files pays the
-    // explicit round-robin spread.
+    // explicit round-robin spread. Generation 0's `merged` is the
+    // caller's frame verbatim (no exchange to coalesce) — the reason
+    // accumulateWith asks for an aggregated `table`.
     val sharded = if (shards > 1) merged.repartition(shards) else merged
     StoreManifest.advanceGen(storeDir,
       writeGen = dir =>

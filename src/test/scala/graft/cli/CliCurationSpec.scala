@@ -168,6 +168,19 @@ class CliCurationSpec extends SparkSpec {
       "a refused call must not start a build")
   }
 
+  test("corpus refuses a misspelled flag before any build starts") {
+    val dir = tmpDir("cli-corpus-typo")
+    writeFile(s"$dir/landing", "f0.json", """{"doc_id": 1, "text": "alpha"}""" + "\n")
+    val ex = intercept[IllegalArgumentException] {
+      Main.run(spark, Array("corpus", "--corpus", s"$dir/corpus",
+        "--checkpoint", s"$dir/ckpt", "--max-file", "2", s"$dir/landing/*.json"))
+    }
+    assert(ex.getMessage.contains("corpus does not take --max-file"), ex.getMessage)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/corpus")) &&
+      !java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/ckpt")),
+      "a refused call must not start a build")
+  }
+
   test("score --stream drains a landing glob against a frozen NB artifact; --max-bytes mega-batches") {
     val dir = tmpDir("cli-score-stream")
     val docs = Seq(

@@ -188,6 +188,41 @@ class DigestIndexSpec extends SparkSpec {
     assert(BandIndex.readMeta(spark, bDir).contains(bSpec))
   }
 
+  test("meta bytes are pinned for both stores; a wrong-kind or unreadable meta fails naming the store") {
+    // the literals every existing corpus holds on disk: a store must
+    // render them byte for byte and read them back as the active spec
+    val st = LsmIndex.State(3L, Seq("compact-0"), Seq("run-1", "run-2"))
+    val tail = """"ver":2,"seq":3,"bulks":["compact-0"],"runs":["run-1","run-2"]}"""
+    val digestMeta = """{"buckets":8,""" + tail
+    val bandMeta = """{"bands":4,"buckets":8,""" + tail
+    val bSpec = BandIndex.Spec(bands = 4, buckets = 8)
+    assert(DigestIndex.metaJson(spec, st) == digestMeta)
+    assert(BandIndex.metaJson(bSpec, st) == bandMeta)
+    def withMeta(name: String, body: String): String = {
+      val dir = tmpDir("lsm-meta")
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, name), body)
+      dir
+    }
+    assert(DigestIndex.meta(spark, withMeta("digests-meta.json", digestMeta)) ==
+      Some(LsmIndex.Meta(spec.layoutDir, Some((spec, st)))))
+    assert(BandIndex.meta(spark, withMeta("bands-meta.json", bandMeta)) ==
+      Some(LsmIndex.Meta(bSpec.layoutDir, Some((bSpec, st)))))
+    def refused(read: String => Any, dir: String, kind: String): Unit = {
+      val e = intercept[RuntimeException](read(dir))
+      assert(e.getMessage.contains(s"unreadable $kind meta"), e.getMessage)
+    }
+    val digestRead = (d: String) => DigestIndex.readMeta(spark, d)
+    val bandRead = (d: String) => BandIndex.readMeta(spark, d)
+    // wrong kind: each store's meta under the other's name
+    refused(digestRead, withMeta("digests-meta.json", bandMeta), "digest index")
+    refused(bandRead, withMeta("bands-meta.json", digestMeta), "band index")
+    // unreadable: garbage, and a ver-2 meta that lost its seq
+    refused(digestRead, withMeta("digests-meta.json", "not a meta"), "digest index")
+    refused(bandRead, withMeta("bands-meta.json",
+      bandMeta.replace(""""seq":3,""", "")), "band index")
+  }
+
   test("tiered compaction: runs fold at minRuns, bulks cap at maxBulks, every era stays probeable") {
     val dir = tmpDir("dix-tiers")
     (0 until 10).foreach { b =>
