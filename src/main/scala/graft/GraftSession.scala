@@ -56,13 +56,7 @@ object GraftSession {
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
 
   def get(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
-    val b = builder(cpus)
-    // GRAFT_JOB_TRACE=1: print every Spark job's duration/tasks/call
-    // site to stderr (graft.util.JobTraceListener) — the decomposition
-    // knob for any drain, debug-only like GRAFT_SCORE_DEBUG
-    val b2 = if (sys.env.contains("GRAFT_JOB_TRACE"))
-      b.config("spark.extraListeners", "graft.util.JobTraceListener") else b
-    val s = b2.getOrCreate()
+    val s = builder(cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

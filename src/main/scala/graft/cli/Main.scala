@@ -73,12 +73,17 @@ object Main {
       |  txlog diff     --warehouse <dir> --output <dir> [--from <v>] [--to <v>] <ds.tbl>
       |every <ds.tbl|parquetDir> verb also takes --select "<expr AS name>,..." to project at read (e.g. --select "data.doc_id AS doc_id,data.text AS text" off an ingested table)""".stripMargin
 
-  /** Each verb's flags, read off its own `usage` lines — the one list
-    * of them — plus the global `--select`. */
-  private val verbFlags: Map[String, Set[String]] =
-    usage.linesIterator.map(_.trim.split("\\s+", 2)).toSeq.collect {
-      case Array(verb, rest) =>
-        verb -> ("--([a-z][a-z0-9-]*)".r.findAllMatchIn(rest).map(_.group(1)).toSet + "select")
+  /** Each form's flags, read off its own `usage` line — the one list of
+    * them — plus the global `--select`. A form is keyed by its verb and
+    * the line's sub-command word or leading mode flag ("" for neither);
+    * the mode flags are listed in the order the dispatch tests them. */
+  private val modeFlags = Seq("--stream", "--save-model")
+  private val formFlags: Map[(String, String), Set[String]] =
+    usage.linesIterator.map(_.trim.split("\\s+", 3)).toSeq.collect {
+      case Array(verb, first, rest) =>
+        val form = if (first.matches("[a-z]+") || modeFlags.contains(first)) first else ""
+        (verb, form) -> ("--([a-z][a-z0-9-]*)".r.findAllMatchIn(s"$first $rest")
+          .map(_.group(1)).toSet + "select")
     }.groupMapReduce(_._1)(_._2)(_ ++ _)
 
   /** Short names of the oldest verbs. */
@@ -90,16 +95,23 @@ object Main {
   private val removedFlags = Map(("corpus", "shards") -> ("corpus --shards " +
     "was removed: the corpus keeps one bloom.bin filter in front of its digest index"))
 
-  /** Refuse any flag the verb does not take — a misspelled or foreign
-    * flag would otherwise be ignored and the run proceed on defaults.
-    * Unknown verbs pass through to the dispatch's own error. */
-  private def checkFlags(verb: String, flags: Map[String, String]): Unit =
-    verbFlags.get(verb).foreach { allowed =>
+  /** Refuse any flag the form the call dispatches to does not take — a
+    * misspelled or foreign flag would otherwise be ignored and the run
+    * proceed on defaults. Unknown verbs and forms pass through to the
+    * dispatch's own error. */
+  private def checkFlags(verb: String, flags: Map[String, String],
+      pos: Seq[String]): Unit = {
+    def has(form: String) = formFlags.contains((verb, form))
+    val form = pos.headOption.filter(has)
+      .orElse(modeFlags.find(m => flags.contains(m.drop(2)) && has(m)))
+      .getOrElse("")
+    formFlags.get((verb, form)).foreach { allowed =>
       flags.keys.toSeq.sorted.find(!allowed(_)).foreach { f =>
         throw new IllegalArgumentException(removedFlags.getOrElse((verb, f),
-          s"$verb does not take --$f\n$usage"))
+          s"${s"$verb $form".trim} does not take --$f\n$usage"))
       }
     }
+  }
 
   /** Parsed flags + positional args (flags may appear anywhere). */
   private def parse(args: Seq[String]): (Map[String, String], Seq[String]) = {
@@ -199,7 +211,7 @@ object Main {
   def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
     val (flags, pos) = parse(args.toSeq.tail)
     val verb = aliases.getOrElse(args(0), args(0))
-    checkFlags(verb, flags)
+    checkFlags(verb, flags, pos)
     verb match {
 
       case "ingest" =>

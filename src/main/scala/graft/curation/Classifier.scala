@@ -187,7 +187,7 @@ object Classifier {
       label: Column, modelDir: String): Unit = {
     val base = docs.select(id.as("__id"), label.as("label"), toks.as("__t"))
     val m = modelFrames(base)
-    graft.streaming.ScoreStream.lap("nb-train") {
+    graft.util.Span("nb-train") {
       val cwc = m.cwc.persist()
       val cls = m.cls.persist()
       try {
@@ -238,7 +238,7 @@ object Classifier {
     // compiled ONCE, before the drain: the per-trigger plan then joins
     // two frozen broadcast-side frames — the model fold-in (and its
     // one tiny fallback-argmax job) never re-runs inside the loop
-    val sm = graft.streaming.ScoreStream.lap("nb-compile")(
+    val sm = graft.util.Span("nb-compile")(
       compileModel(loadModel(spark, modelDir)))
     graft.streaming.ScoreStream.replay(stream,
       Seq(sm.lpSeen, sm.clsPrior), outDir, checkpointDir)(batch =>

@@ -250,24 +250,28 @@ private[graft] object LsmIndex {
       commit(spark, storeDir, spec, State(1L, Seq(bulk), Nil), previous)
     }
 
-    /** Fold accumulated flat runs into the bucket-partitioned bulk —
-      * maintenance on the [[graft.streaming.CorpusBuilder.compactStores]]
-      * cadence, SERIALIZED with appends (both swap the same meta
-      * pointer). Tiered: an L1 fold's I/O is bounded by the run mass; a
-      * full merge (every `maxBulks` folds) rewrites the bulk set into
-      * one. Returns (runs folded, bulks after), or None when `spec`
-      * isn't active or fewer than `minRuns` runs wait. */
-    def compact(spark: SparkSession, storeDir: String, spec: Spec,
-        minRuns: Int = 4, maxBulks: Int = 4): Option[(Int, Int)] =
-      activeState(spark, storeDir, spec).flatMap { st =>
-        val layout = layoutPath(storeDir, spec)
-        compactStep(spark, layout, st, BucketCol, bucketOf(spec), minRuns, maxBulks)
-          .map { next =>
-            commit(spark, storeDir, spec, next, None) // same layout: nothing superseded
-            sweep(spark, layout, next)
-            (st.runs.size, next.bulks.size)
-          }
-      }
+    /** Fold the ACTIVE index's accumulated flat runs into its
+      * bucket-partitioned bulk — maintenance on the
+      * [[graft.streaming.CorpusBuilder.compactStores]] cadence,
+      * SERIALIZED with appends (both swap the same meta pointer).
+      * Tiered: an L1 fold's I/O is bounded by the run mass; a full merge
+      * (every `maxBulks` folds) rewrites the bulk set into one. Returns
+      * None when no index is active or its layout is gone, else the
+      * active spec with (runs folded, bulks after) — None when fewer
+      * than `minRuns` runs wait. One meta read. */
+    def compact(spark: SparkSession, storeDir: String, minRuns: Int = 4,
+        maxBulks: Int = 4): Option[(Spec, Option[(Int, Int)])] =
+      meta(spark, storeDir).flatMap(_.active)
+        .filter { case (spec, _) => layoutExists(spark, storeDir, spec) }
+        .map { case (spec, st) =>
+          val layout = layoutPath(storeDir, spec)
+          spec -> compactStep(spark, layout, st, BucketCol, bucketOf(spec),
+            minRuns, maxBulks).map { next =>
+              commit(spark, storeDir, spec, next, None) // same layout: nothing superseded
+              sweep(spark, layout, next)
+              (st.runs.size, next.bulks.size)
+            }
+        }
 
     /** The probe prelude: the batch's store-shaped `rows` (carrying
       * `keyCol`) bucketed and materialized once — consumed twice, bucket

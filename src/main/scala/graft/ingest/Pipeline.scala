@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.rules.{EventRule, Rules}
 import graft.schema.TableBackend
 import graft.sources.{ConcatJsonReader, ObjectSource}
+import graft.util.Span
 
 /** End-to-end ingest: objects → event rules → parse/infer → schema rules
   * → evolve → partitioned append — the reference's `Load` pipeline
@@ -95,16 +96,6 @@ object Pipeline {
     * on one directory race the commit protocol. */
   private val quarantineLock = new Object
 
-  /** Set GRAFT_TIMING=1 to print per-phase ingest timings to stderr —
-    * the local feedback loop for keeping the ingest hot path flat. */
-  private val timing = sys.env.contains("GRAFT_TIMING")
-  private def timed[A](tag: String)(f: => A): A =
-    if (!timing) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[ingest] $tag ${(System.nanoTime() - t0) / 1e9}%.3fs"); r
-    }
-
   /** Ingest explicit object paths (≡ `swarm ingest` CLI, SURVEY §3.2). */
   def ingestPaths(spark: SparkSession, cfg: Config, paths: Seq[String]): LoadResult = {
     val objects = ObjectSource.list(spark, paths.head)
@@ -133,7 +124,7 @@ object Pipeline {
     * — including across OVERLAPPING event rules (N rules matching one
     * object = N schema routes over one parse, exactly the reference's
     * one-download set semantics, not N downloads). */
-  def ingestObjects(spark: SparkSession, cfg: Config, objects: DataFrame): LoadResult = {
+  def ingestObjects(spark: SparkSession, cfg: Config, objects: DataFrame): LoadResult = Span("ingest") {
     val ingestId = UUID.randomUUID().toString
     val started = System.currentTimeMillis()
     val sourceLogs = Seq.newBuilder[(String, String, Long)] // (rule, path, rows)
@@ -172,7 +163,7 @@ object Pipeline {
         // such rule's schema passes run over that one cached batch
         group.map(r => (r.parser, r.multiDoc)).distinct.flatMap { pk =>
           val sharing = group.filter(r => (r.parser, r.multiDoc) == pk)
-          val batch = timed("readBatch")(
+          val batch = Span("readBatch")(
             readBatch(spark, sharing.head, chunk, cfg.distributedInference))
           try {
             // per-source decoded-row counts (ref SourceLog.RowCount,
@@ -181,7 +172,7 @@ object Pipeline {
             // sharing rule logs the same counts under its own name
             val counts: Seq[(String, Long)] =
               if (cfg.telemetry && cfg.dryRunDir.isEmpty)
-                timed("sourceCounts")(batch.sourceCounts.collect()
+                Span("sourceCounts")(batch.sourceCounts.collect()
                   .map(r => (r.getString(0), r.getLong(1))).toSeq)
               else Nil
             // SET semantics (ref Rego `log[d]`): every same-name schema
@@ -205,7 +196,7 @@ object Pipeline {
                   DumpSink.dump(Transform.pruneDataSchema(routed), dir, ingestId).map { case (ds, tbl) =>
                     TableSink.IngestResult(ds, tbl, "", 0, 0L, success = true)
                   }
-                case None => timed("append")(TableSink.append(spark, cfg.registry, routed,
+                case None => Span("append")(TableSink.append(spark, cfg.registry, routed,
                   cfg.dedup.getOrElse(false), knownDests = schemaRule.literalDests))
               }
               invalidObs.foreach { obs =>
@@ -213,7 +204,7 @@ object Pipeline {
                   // one _meta.quarantine destination for every rule —
                   // concurrent tasks must not race its parquet commit
                   quarantineLock.synchronized {
-                    timed("quarantine")(writeQuarantine(spark, cfg.registry, started,
+                    Span("quarantine")(writeQuarantine(spark, cfg.registry, started,
                       Transform.invalid(batch.records, schemaRule, ingestId)))
                   }
               }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.dedup.Dedup
+import graft.util.Span
 
 /** INCREMENTAL duplicate clustering — connected components maintained
   * under a live feed, the fourth streaming state discipline next to
@@ -189,19 +190,21 @@ object ClusterStream {
     org.apache.spark.network.util.JavaUtils.timeStringAsMs(
       spark.conf.get("graft.cluster.storeWriteTimeout", "10m"))
 
-  /** The three local properties `SparkContext.setJobGroup` writes —
-    * captured on the SUBMITTING thread (the stream's micro-batch
-    * thread, whose job group the streaming engine cancels on
-    * `query.stop()`) and re-set on the writer stripe per submission,
-    * so an async store write's Spark jobs stay cancellable with the
-    * query instead of detaching onto a group-less daemon thread and
-    * wedging the `awaitWrites` on stop. */
+  /** The three local properties `SparkContext.setJobGroup` writes, and
+    * the [[Span]] path — captured on the SUBMITTING thread (the
+    * stream's micro-batch thread, whose job group the streaming engine
+    * cancels on `query.stop()`) and re-set on the pool thread per
+    * submission, so an async store write's Spark jobs stay cancellable
+    * with the query instead of detaching onto a group-less daemon
+    * thread and wedging the `awaitWrites` on stop, and carry the span
+    * of the step that submitted them rather than the path the pool
+    * thread inherited when it was created. */
   private val JobGroupKeys = Seq("spark.jobGroup.id", "spark.job.description",
-    "spark.job.interruptOnCancel")
-  private[streaming] def jobGroupSnapshot(
+    "spark.job.interruptOnCancel", Span.Key)
+  private[graft] def jobGroupSnapshot(
       sc: org.apache.spark.SparkContext): Seq[(String, String)] =
     JobGroupKeys.map(k => k -> sc.getLocalProperty(k))
-  private[streaming] def withJobGroup[T](sc: org.apache.spark.SparkContext,
+  private[graft] def withJobGroup[T](sc: org.apache.spark.SparkContext,
       props: Seq[(String, String)])(body: => T): T = {
     props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
     body
@@ -280,9 +283,9 @@ object ClusterStream {
     val ckptId = Paths.get(checkpointDir).toAbsolutePath.normalize.toString
     stream.writeStream
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        fold(spark, storeDir, batch, idCol, textCol, shingleK, threshold,
-          k, bands, nBuckets, batchId, maxLocalEdges, ckptId,
-          maxLocalEdgeBytes)
+        Span("fold")(fold(spark, storeDir, batch, idCol, textCol, shingleK,
+          threshold, k, bands, nBuckets, batchId, maxLocalEdges, ckptId,
+          maxLocalEdgeBytes))
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -361,13 +364,6 @@ object ClusterStream {
     val ownDirs = NewDirs(Seq(s"sigs/batch=$batchId"),
       Seq(s"bands/batch=$batchId"), Seq(s"edges/batch=$batchId"))
 
-    def t0 = System.nanoTime()
-    var tm = t0
-    def lap(tag: String): Unit = if (sys.env.contains("GRAFT_CLUSTER_DEBUG")) {
-      val now = System.nanoTime()
-      System.err.println(f"[fold $batchId] $tag ${(now - tm) / 1e9}%.2fs")
-      tm = now
-    }
     // NOT spread before signaturing, unlike [[ScoreStream]]'s scorers:
     // measured A/B (r14) shows the fold LOSES ~15-25% to the
     // round-robin shuffle — its heavy laps (cross-edge probe, roots,
@@ -418,8 +414,7 @@ object ClusterStream {
     try {
       // eager fill: banding + both verify joins must hit the cache; the
       // count also decides registration below
-      val nSigs = sigsB.count()
-      lap("stage-sigs")
+      val nSigs = Span("stage-sigs")(sigsB.count())
       if (nSigs == 0) {
         // every doc too short to shingle (or an empty trigger): no
         // signatures, no possible edge — advance the pointer WITHOUT
@@ -451,19 +446,15 @@ object ClusterStream {
       val bandBk =
         if (priorBandDirs.forall(isFlatRun)) 0
         else cur.map(_.bandBk).getOrElse(BandBuckets)
-      storeWrites = Some(scala.concurrent.Future {
-        withJobGroup(spark.sparkContext, jobProps) {
-          val w0 = System.nanoTime()
+      storeWrites = Span("store-writes-submit")(Some(scala.concurrent.Future {
+        withJobGroup(spark.sparkContext, jobProps)(Span("store-writes") {
           sigsB.withColumn("__batch", lit(batchId))
             .write.mode("overwrite").parquet(s"$storeDir/sigs/batch=$batchId")
           bandB.withColumn("__batch", lit(batchId))
             .write.mode("overwrite").parquet(s"$storeDir/bands/batch=$batchId")
           afterStoreWrites(storeDir)
-          if (sys.env.contains("GRAFT_CLUSTER_DEBUG")) System.err.println(
-            f"[fold $batchId] store-writes(async) ${(System.nanoTime() - w0) / 1e9}%.2fs")
-        }
-      }(writeEc))
-      lap("store-writes-submit")
+        })
+      }(writeEc)))
 
       // batch-internal edges (the q51 pipeline restricted to the batch).
       // NOT materialized on its own: the candidate plan is single-use
@@ -473,26 +464,27 @@ object ClusterStream {
       // never matter. A separate eager here was one pure
       // materialization job per trigger, measured ~0.2-0.4 s of
       // one-file-trigger floor
-      val internal = Dedup.lshCandidates(sigsB, "doc", "sig", bands)
-        .join(sigsB.select(col("doc").as("a"), col("sh").as("sha")), "a")
-        .join(sigsB.select(col("doc").as("b"), col("sh").as("shb")), "b")
-        .filter(Dedup.jaccard(col("sha"), col("shb")) >= threshold)
-        .select(col("a"), col("b"))
-      lap("internal-cand")
+      val internal = Span("internal-cand")(
+        Dedup.lshCandidates(sigsB, "doc", "sig", bands)
+          .join(sigsB.select(col("doc").as("a"), col("sh").as("sha")), "a")
+          .join(sigsB.select(col("doc").as("b"), col("sh").as("shb")), "b")
+          .filter(Dedup.jaccard(col("sha"), col("shb")) >= threshold)
+          .select(col("a"), col("b")))
 
       // cross edges vs the PRIOR corpus: batch band keys broadcast, the
       // stored band table scanned map-side, candidates fetched back
       // one-sided — the corpus is never shuffled, never re-signatured,
       // never re-banded
-      val edges = if (priorSigDirs.isEmpty) graft.util.Materialize.eager(internal)
-      else {
-        val cross = crossEdges(
-          readLsm(spark, storeDir, priorBandDirs),
-          readLsm(spark, storeDir, priorSigDirs),
-          bandB, sigsB, threshold, sigBk = sigBk, bandBk = bandBk)
-        graft.util.Materialize.eager(internal.unionByName(cross))
+      val edges = Span("edges") {
+        if (priorSigDirs.isEmpty) graft.util.Materialize.eager(internal)
+        else {
+          val cross = crossEdges(
+            readLsm(spark, storeDir, priorBandDirs),
+            readLsm(spark, storeDir, priorSigDirs),
+            bandB, sigsB, threshold, sigBk = sigBk, bandBk = bandBk)
+          graft.util.Materialize.eager(internal.unionByName(cross))
+        }
       }
-      lap("edges")
       // the guard job: one count over the checkpointed edges
       val eCount = edges.count()
       if (eCount == 0) { // nothing to merge — just advance the pointer
@@ -539,10 +531,10 @@ object ClusterStream {
       // class as the candidate broadcasts the probe already ships, so
       // it lives on the driver — zero shuffles, three jobs total
       // (roots probe, member fetch, bucket write)
-      val edgeRows = edges.collect().map(r => (r.get(0), r.get(1)))
+      val edgeRows =
+        Span("edge-collect")(edges.collect().map(r => (r.get(0), r.get(1))))
       val endpointSet = edgeRows.iterator
         .flatMap { case (a, b) => Iterator(a, b) }.toSet
-      lap("edge-collect")
 
       // touched roots + the per-component index, in the ONE probe job
       // the roots read always was: every label row carries its
@@ -559,11 +551,10 @@ object ClusterStream {
       def idsDf(ids: Iterable[Any], as: String) =
         ClusterStream.idsDf(spark, ids, as, idType)
       val rootInfo: Map[Any, (Option[Long], Option[Set[Int]])] =
-        cur.filter(_.buckets.nonEmpty)
+        Span("roots")(cur.filter(_.buckets.nonEmpty)
           .map(m => probeRoots(spark, storeDir, m, endpointSet, idType))
-          .getOrElse(Map.empty)
+          .getOrElse(Map.empty))
       val roots: Set[Any] = rootInfo.keySet
-      lap("roots")
 
       // the member bound, exact and job-free when every touched comp
       // carries the index; a legacy comp falls back to the maintained
@@ -571,7 +562,7 @@ object ClusterStream {
       // edge into a mega-component (crawl boilerplate families) must
       // not pull the whole component onto the driver, so oversized
       // folds route to the distributed path BEFORE anything collects
-      val memberCount: Long =
+      val memberCount: Long = Span("member-count") {
         if (roots.isEmpty) 0L
         else if (rootInfo.values.forall(_._1.isDefined))
           rootInfo.values.map(_._1.get).sum
@@ -580,7 +571,7 @@ object ClusterStream {
           case _ => readBuckets(spark, storeDir, cur.get, cur.get.buckets.keySet)
             .join(broadcast(idsDf(roots, "comp")), "comp").count()
         }
-      lap("member-count")
+      }
       // member rows collect as (member, root) pairs of the same id
       // type, so the byte guard prices them with the same pairBytes
       if (eCount + memberCount > maxLocalEdges ||
@@ -593,13 +584,12 @@ object ClusterStream {
       // root): touched components' connectivity rides into the
       // union-find, so the result is exactly the batch CC over
       // everything seen
-      val starRows: Array[(Any, Any)] =
+      val starRows: Array[(Any, Any)] = Span("members") {
         if (roots.isEmpty) Array.empty
         else fetchMembers(spark, storeDir, cur.get, rootInfo, idType)
-      lap("members")
+      }
 
-      val labels = unionFind(edgeRows ++ starRows, idOrdering(idType))
-      lap("cc")
+      val labels = Span("cc")(unionFind(edgeRows ++ starRows, idOrdering(idType)))
 
       // rewrite exactly the buckets holding changed rows; carry the
       // rest forward as manifest pointers. Every written row carries
@@ -607,47 +597,49 @@ object ClusterStream {
       // of a touched comp is a union-find key, so no stale index row
       // can survive a fold
       val tb = labels.keysIterator.map(bucketOfValue(_, idType, nBuckets)).toSet
-      val newLabels = driverLabelsDf(spark, labels, idType, nBuckets)
-      val keep = cur.map(_.buckets.keySet.intersect(tb)) match {
-        case Some(hit) if hit.nonEmpty =>
-          val bkt = readBuckets(spark, storeDir, cur.get, hit)
-          // untouched rows carry their stored index forward unchanged
-          // (legacy rows stay null until their comp is next touched)
-          val inTb = if (bkt.columns.contains("members")) bkt
-          else bkt.withColumn("members", lit(null).cast("long"))
-            .withColumn("bks", lit(null).cast("array<int>"))
-          if (roots.isEmpty) inTb
-          else inTb.join(broadcast(idsDf(roots, "comp")), Seq("comp"), "left_anti")
-        case _ => newLabels.limit(0)
+      Span("keep-write") {
+        val newLabels = driverLabelsDf(spark, labels, idType, nBuckets)
+        val keep = cur.map(_.buckets.keySet.intersect(tb)) match {
+          case Some(hit) if hit.nonEmpty =>
+            val bkt = readBuckets(spark, storeDir, cur.get, hit)
+            // untouched rows carry their stored index forward unchanged
+            // (legacy rows stay null until their comp is next touched)
+            val inTb = if (bkt.columns.contains("members")) bkt
+            else bkt.withColumn("members", lit(null).cast("long"))
+              .withColumn("bks", lit(null).cast("array<int>"))
+            if (roots.isEmpty) inTb
+            else inTb.join(broadcast(idsDf(roots, "comp")), Seq("comp"), "left_anti")
+          case _ => newLabels.limit(0)
+        }
+        keep.unionByName(newLabels)
+          // joins reorder — pin the layout
+          .select(col("id"), col("comp"), col("members"), col("bks"))
+          .withColumn(SigBucketCol, bucketOf(col("id")))
+          // ONE flat single-file commit (batch-bounded by the fast-path
+          // guard), __bk a data column — the per-fold partitionBy this
+          // replaced paid the dynamic-partition commit protocol on every
+          // touched bucket dir, measured as the fold's LARGEST lap
+          // (~1.5 s of a ~2.6 s trigger at sf0.1); readers filter each
+          // flat run to its live buckets, and compaction rebuilds the
+          // read-optimized partitioned bulk (the sig-store LSM
+          // discipline applied to labels)
+          .coalesce(1)
+          .write.mode("overwrite")
+          .parquet(s"$storeDir/labels/data/batch=$batchId")
       }
-      keep.unionByName(newLabels)
-        // joins reorder — pin the layout
-        .select(col("id"), col("comp"), col("members"), col("bks"))
-        .withColumn(SigBucketCol, bucketOf(col("id")))
-        // ONE flat single-file commit (batch-bounded by the fast-path
-        // guard), __bk a data column — the per-fold partitionBy this
-        // replaced paid the dynamic-partition commit protocol on every
-        // touched bucket dir, measured as the fold's LARGEST lap
-        // (~1.5 s of a ~2.6 s trigger at sf0.1); readers filter each
-        // flat run to its live buckets, and compaction rebuilds the
-        // read-optimized partitioned bulk (the sig-store LSM
-        // discipline applied to labels)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(s"$storeDir/labels/data/batch=$batchId")
-      lap("keep-write")
-      val repointed = tb.map(bk => bk -> s"data/batch=$batchId").toMap
-      // every touched-comp member is a union-find key, so the store's
-      // row total moves by exactly (labels written) - (members replaced)
-      // -- maintained driver-side, no counting job
-      val newRows = cur.map(_.rows).getOrElse(0L) match {
-        case known if known >= 0 => known - starRows.length + labels.size
-        case _ => -1L // legacy store without a maintained total
+      Span("label-rewrite") {
+        val repointed = tb.map(bk => bk -> s"data/batch=$batchId").toMap
+        // every touched-comp member is a union-find key, so the store's
+        // row total moves by exactly (labels written) - (members replaced)
+        // -- maintained driver-side, no counting job
+        val newRows = cur.map(_.rows).getOrElse(0L) match {
+          case known if known >= 0 => known - starRows.length + labels.size
+          case _ => -1L // legacy store without a maintained total
+        }
+        awaitWrites()
+        commit(storeDir, cur, repointed, nBuckets, batchId, ownDirs, ckptId,
+          newRows)
       }
-      awaitWrites()
-      commit(storeDir, cur, repointed, nBuckets, batchId, ownDirs, ckptId,
-        newRows)
-      lap("label-rewrite")
     } finally {
       // on ANY exit (incl. an exception upstream of the awaits): never
       // leave a straggler write racing a redelivered fold's overwrite
@@ -990,7 +982,7 @@ object ClusterStream {
       fromBatch: Long, beforeSwap: () => Unit,
       maxLocalEdges: Long = MaxLocalEdges,
       maxLocalEdgeBytes: Long = MaxLocalEdgeBytes): Option[(Long, Long)] =
-    readManifest(storeDir).map { m =>
+    Span("expire")(readManifest(storeDir).map { m =>
       require(m.buckets.isEmpty || m.edgeDirs.nonEmpty,
         s"cluster store at $storeDir has labels but no retained edge " +
           "dirs (predates edge retention) — expiry cannot recompute the " +
@@ -998,16 +990,6 @@ object ClusterStream {
       val lockToken = acquireMaintenanceLock(storeDir, "expiry")
       try {
         def abs(rel: String) = s"$storeDir/$rel"
-        // the fold's GRAFT_CLUSTER_DEBUG lap discipline on the expiry
-        // path: decompose a slow horizon cut without a listener
-        var tm = System.nanoTime()
-        def lap(tag: String): Unit =
-          if (sys.env.contains("GRAFT_CLUSTER_DEBUG")) {
-            val now = System.nanoTime()
-            System.err.println(
-              f"[expire->$fromBatch] $tag ${(now - tm) / 1e9}%.2fs")
-            tm = now
-          }
         // the edge-dirs guard above only catches a PURE pre-upgrade
         // store: on an upgraded one (old dirs + post-upgrade folds),
         // pre-upgrade sig/band rows lack the landing stamp — they read
@@ -1030,11 +1012,10 @@ object ClusterStream {
                 "retention, so expiry would silently lose those docs " +
                 "and their components; rebuild the store")
           }
-        if (m.ver < StampedVer) {
+        if (m.ver < StampedVer) Span("stamp-probe") {
           requireStamped("sig", m.sigDirs)
           requireStamped("band", m.bandDirs)
         }
-        lap("stamp-probe")
         val tag = s"expire-${m.batchId}-$fromBatch"
 
         // ---- the touched-partition cut. Flat per-batch runs classify
@@ -1073,23 +1054,21 @@ object ClusterStream {
           }
           (cut.flatMap(_._1), cut.flatMap(_._2))
         }
-        val (sigLive, sigExpired) = cutArea("sigs", m.sigDirs, m.sigBk, "doc")
-        lap("cut-sigs")
-        val (bandLive, _) = cutArea("bands", m.bandDirs, m.bandBk, "band_key")
-        lap("cut-bands")
+        val (sigLive, sigExpired) =
+          Span("cut-sigs")(cutArea("sigs", m.sigDirs, m.sigBk, "doc"))
+        val (bandLive, _) =
+          Span("cut-bands")(cutArea("bands", m.bandDirs, m.bandBk, "band_key"))
         // edge dirs are never bucket-partitioned; dead edges (earlier
         // endpoint expired) surviving in kept dirs are filtered at
         // every read — see the class doc
-        val (edgeLive, _) = cutArea("edges", m.edgeDirs, 0, "")
-        lap("cut-edges")
+        val (edgeLive, _) = Span("cut-edges")(cutArea("edges", m.edgeDirs, 0, ""))
 
         // ---- expired docs: the sig rows the cut dropped. Materialized
         // EAGERLY — the frames read dirs the post-swap sweep deletes ----
-        val expiredIds: Option[DataFrame] = sigExpired
+        val expiredIds: Option[DataFrame] = Span("expired-ids")(sigExpired
           .map(_.select(col("doc").as("id")))
           .reduceOption(_.unionByName(_))
-          .map(df => graft.util.Materialize.eager(df.distinct()))
-        lap("expired-ids")
+          .map(df => graft.util.Materialize.eager(df.distinct())))
 
         // ---- labels: recompute ONLY the touched components ----
         val noChange = (m.buckets, m.rows)
@@ -1099,46 +1078,51 @@ object ClusterStream {
             case None => noChange // nothing expired anywhere
             case Some(eIds) =>
               val idType = eIds.schema("id").dataType
-              // the expired ids' own buckets — the label probe's prune
-              val eBks = eIds
-                .select(pmod(hash(col("id")), lit(m.nBuckets)).as("b"))
-                .distinct().collect().map(_.getInt(0)).toSet
-              val hit = m.buckets.keySet.intersect(eBks)
-              if (hit.isEmpty) noChange // every expired doc was an unlabeled singleton
-              else {
-                val eLabeled = graft.util.Materialize.eager(
-                  readBuckets(spark, storeDir, m, hit).join(eIds, "id")
-                    .select(col("comp"), col("bks")))
-                lap("expired-labels")
-                // touched comps' member-bucket union: ≤ nBuckets ints,
-                // null (a legacy row without the index) widens to all
-                val bkRows = eLabeled.select(explode_outer(col("bks")).as("b"))
-                  .distinct().collect()
-                if (bkRows.isEmpty) noChange // expired docs all unlabeled
+              // the expired docs' label rows and the touched comps'
+              // member-bucket union (≤ nBuckets ints, null — a legacy row
+              // without the index — widens to all); None when no expired
+              // doc is labeled
+              val touched: Option[(DataFrame, Array[Row])] = Span("expired-labels") {
+                // the expired ids' own buckets — the label probe's prune
+                val eBks = eIds
+                  .select(pmod(hash(col("id")), lit(m.nBuckets)).as("b"))
+                  .distinct().collect().map(_.getInt(0)).toSet
+                val hit = m.buckets.keySet.intersect(eBks)
+                if (hit.isEmpty) None // every expired doc was an unlabeled singleton
                 else {
-                  val tComps = graft.util.Materialize.eager(
-                    eLabeled.select(col("comp")).distinct())
-                  val tBks: Set[Int] =
-                    if (bkRows.exists(_.isNullAt(0))) m.buckets.keySet
-                    else bkRows.map(_.getInt(0)).toSet
-                      .intersect(m.buckets.keySet)
-                  // every row of the touched buckets, read ONCE: the
-                  // touched comps' members split out, the rest is the
-                  // keep side of the rewrite
+                  val eLabeled = graft.util.Materialize.eager(
+                    readBuckets(spark, storeDir, m, hit).join(eIds, "id")
+                      .select(col("comp"), col("bks")))
+                  val bkRows = eLabeled.select(explode_outer(col("bks")).as("b"))
+                    .distinct().collect()
+                  Option.when(bkRows.nonEmpty)((eLabeled, bkRows))
+                }
+              }
+              touched.fold(noChange) { case (eLabeled, bkRows) =>
+                val tComps = graft.util.Materialize.eager(
+                  eLabeled.select(col("comp")).distinct())
+                val tBks: Set[Int] =
+                  if (bkRows.exists(_.isNullAt(0))) m.buckets.keySet
+                  else bkRows.map(_.getInt(0)).toSet
+                    .intersect(m.buckets.keySet)
+                // every row of the touched buckets, read ONCE: the
+                // touched comps' members split out, the rest is the
+                // keep side of the rewrite
+                val (tRows, mCount, retained) = Span("members") {
                   val tRows = graft.util.Materialize.eager(
                     readBuckets(spark, storeDir, m, tBks))
                   val members = graft.util.Materialize.eager(
                     tRows.join(tComps, "comp")
                       .select(col("id"), col("comp")))
-                  val mCount = members.count()
-                  val retained = graft.util.Materialize.eager(
+                  (tRows, members.count(), graft.util.Materialize.eager(
                     members.select(col("id"))
-                      .join(eIds, Seq("id"), "left_anti"))
-                  lap("members")
-                  // retained edges of the touched comps: endpoints BOTH
-                  // live members — this one filter restricts to touched
-                  // comps (untouched comps' endpoints are not in R) AND
-                  // drops edges through expired docs, current or prior
+                      .join(eIds, Seq("id"), "left_anti")))
+                }
+                // retained edges of the touched comps: endpoints BOTH
+                // live members — this one filter restricts to touched
+                // comps (untouched comps' endpoints are not in R) AND
+                // drops edges through expired docs, current or prior
+                val (tEdges, eCnt) = Span("retained-edges") {
                   val tEdges =
                     if (edgeLive.isEmpty) None
                     else Some(graft.util.Materialize.eager(
@@ -1148,36 +1132,37 @@ object ClusterStream {
                           Seq("a"), "left_semi")
                         .join(retained.select(col("id").as("b")),
                           Seq("b"), "left_semi")))
-                  val eCnt = tEdges.map(_.count()).getOrElse(0L)
-                  lap("retained-edges")
-                  // the touched comps' new labels: the fold's guarded
-                  // local/distributed split — batch-bounded expiries run
-                  // the driver union-find, oversized ones distribute
-                  val (newLabels, ccCount): (Option[DataFrame], Long) =
-                    tEdges.filter(_ => eCnt > 0) match {
-                      case None => (None, 0L)
-                      case Some(edges) =>
-                        lazy val pairBytes = estimatedPairBytes(edges,
-                          eCnt, idType, maxLocalEdgeBytes)
-                        if (eCnt <= maxLocalEdges &&
-                            eCnt <= maxLocalEdgeBytes / pairBytes) {
-                          onExpiryCc("local")
-                          val labels = unionFind(
-                            edges.collect().map(r => (r.get(0), r.get(1))),
-                            idOrdering(idType))
-                          (Some(driverLabelsDf(spark, labels, idType,
-                            m.nBuckets)), labels.size.toLong)
-                        } else {
-                          onExpiryCc("distributed")
-                          val cc = graft.util.Materialize.eager(
-                            Dedup.connectedComponents(edges, "a", "b")
-                              .select(col("id"), col("comp")))
-                          (Some(withCompIndex(cc,
-                              c => pmod(hash(c), lit(m.nBuckets)))
-                            .drop("__bk")), cc.count())
-                        }
-                    }
-                  lap("cc")
+                  (tEdges, tEdges.map(_.count()).getOrElse(0L))
+                }
+                // the touched comps' new labels: the fold's guarded
+                // local/distributed split — batch-bounded expiries run
+                // the driver union-find, oversized ones distribute
+                val (newLabels, ccCount): (Option[DataFrame], Long) = Span("cc") {
+                  tEdges.filter(_ => eCnt > 0) match {
+                    case None => (None, 0L)
+                    case Some(edges) =>
+                      lazy val pairBytes = estimatedPairBytes(edges,
+                        eCnt, idType, maxLocalEdgeBytes)
+                      if (eCnt <= maxLocalEdges &&
+                          eCnt <= maxLocalEdgeBytes / pairBytes) {
+                        onExpiryCc("local")
+                        val labels = unionFind(
+                          edges.collect().map(r => (r.get(0), r.get(1))),
+                          idOrdering(idType))
+                        (Some(driverLabelsDf(spark, labels, idType,
+                          m.nBuckets)), labels.size.toLong)
+                      } else {
+                        onExpiryCc("distributed")
+                        val cc = graft.util.Materialize.eager(
+                          Dedup.connectedComponents(edges, "a", "b")
+                            .select(col("id"), col("comp")))
+                        (Some(withCompIndex(cc,
+                            c => pmod(hash(c), lit(m.nBuckets)))
+                          .drop("__bk")), cc.count())
+                      }
+                  }
+                }
+                Span("label-rewrite") {
                   // rewrite exactly the touched buckets: untouched rows
                   // in them carry forward, untouched BUCKETS stay
                   // manifest pointers at their existing dirs
@@ -1209,57 +1194,59 @@ object ClusterStream {
                   // dropped — the same row-total identity as the fold
                   val nr =
                     if (m.rows >= 0) m.rows - mCount + ccCount else -1L
-                  lap("label-rewrite")
                   (nb, nr)
                 }
               }
           }
-        // the post-expiry label count (returned + stamped): maintained
-        // arithmetic when the store tracks its total, one count for a
-        // legacy store
-        val labelRows: Long =
-          if (newRows >= 0) newRows
-          else if (newBuckets.isEmpty) 0L
-          else readBuckets(spark, storeDir, m.copy(buckets = newBuckets),
-            newBuckets.keySet).count()
-        // the retained-doc stat from the live sig dirs' parquet FOOTERS
-        // (driver metadata reads, zero Spark jobs): every signatured doc
-        // has exactly ONE sig row in exactly ONE live dir — ids are
-        // unique across the feed, a redelivered batch overwrites its own
-        // dir, and compaction/cuts replace the dirs they merged/filtered
-        // — so the row total IS the distinct-doc count. The
-        // distinct().count() this replaces scanned the whole retained
-        // corpus (shuffle ∝ store) for a returned statistic
-        val rowConf = spark.sparkContext.hadoopConfiguration
-        val retainedDocs: Long = sigLive.map { rel =>
-          StoreManifest.parquetRowCount(
-            new org.apache.hadoop.fs.Path(
-              Paths.get(abs(rel)).toUri), rowConf, recursive = true)
-        }.sum
-        lap("counts")
-        // same interleave guard as compactStores: a fold that read the
-        // manifest BEFORE the lock appeared may have committed while
-        // the cut ran — swapping now would drop its registered dirs
-        beforeSwap()
-        val m2 = readManifest(storeDir)
-        require(m2.exists(_.batchId == m.batchId),
-          s"cluster store at $storeDir advanced during expiry " +
-            s"(batch ${m.batchId} -> ${m2.map(_.batchId).getOrElse(-1L)})" +
-            " — expiry runs BETWEEN drains; aborting the swap")
-        // ver upgrades unconditionally: either the probe just proved
-        // the store stamped, or it already was — and live dirs carry
-        // only stamped rows
-        writeManifest(storeDir, m.copy(buckets = newBuckets,
-          sigDirs = sigLive, bandDirs = bandLive, edgeDirs = edgeLive,
-          rows = labelRows, seq = m.seq + 1, ver = StampedVer))
-        sweepUnreferenced(storeDir, "sigs", sigLive.toSet)
-        sweepUnreferenced(storeDir, "bands", bandLive.toSet)
-        sweepUnreferenced(storeDir, "edges", edgeLive.toSet)
-        sweepLabels(storeDir, newBuckets.values.toSet)
-        lap("swap-sweep")
+        val (labelRows, retainedDocs) = Span("counts") {
+          // the post-expiry label count (returned + stamped): maintained
+          // arithmetic when the store tracks its total, one count for a
+          // legacy store
+          val labelRows: Long =
+            if (newRows >= 0) newRows
+            else if (newBuckets.isEmpty) 0L
+            else readBuckets(spark, storeDir, m.copy(buckets = newBuckets),
+              newBuckets.keySet).count()
+          // the retained-doc stat from the live sig dirs' parquet FOOTERS
+          // (driver metadata reads, zero Spark jobs): every signatured doc
+          // has exactly ONE sig row in exactly ONE live dir — ids are
+          // unique across the feed, a redelivered batch overwrites its own
+          // dir, and compaction/cuts replace the dirs they merged/filtered
+          // — so the row total IS the distinct-doc count. The
+          // distinct().count() this replaces scanned the whole retained
+          // corpus (shuffle ∝ store) for a returned statistic
+          val rowConf = spark.sparkContext.hadoopConfiguration
+          val retainedDocs: Long = sigLive.map { rel =>
+            StoreManifest.parquetRowCount(
+              new org.apache.hadoop.fs.Path(
+                Paths.get(abs(rel)).toUri), rowConf, recursive = true)
+          }.sum
+          (labelRows, retainedDocs)
+        }
+        Span("swap-sweep") {
+          // same interleave guard as compactStores: a fold that read the
+          // manifest BEFORE the lock appeared may have committed while
+          // the cut ran — swapping now would drop its registered dirs
+          beforeSwap()
+          val m2 = readManifest(storeDir)
+          require(m2.exists(_.batchId == m.batchId),
+            s"cluster store at $storeDir advanced during expiry " +
+              s"(batch ${m.batchId} -> ${m2.map(_.batchId).getOrElse(-1L)})" +
+              " — expiry runs BETWEEN drains; aborting the swap")
+          // ver upgrades unconditionally: either the probe just proved
+          // the store stamped, or it already was — and live dirs carry
+          // only stamped rows
+          writeManifest(storeDir, m.copy(buckets = newBuckets,
+            sigDirs = sigLive, bandDirs = bandLive, edgeDirs = edgeLive,
+            rows = labelRows, seq = m.seq + 1, ver = StampedVer))
+          sweepUnreferenced(storeDir, "sigs", sigLive.toSet)
+          sweepUnreferenced(storeDir, "bands", bandLive.toSet)
+          sweepUnreferenced(storeDir, "edges", edgeLive.toSet)
+          sweepLabels(storeDir, newBuckets.values.toSet)
+        }
         (retainedDocs, labelRows)
       } finally StoreManifest.releaseHolderLock(lockFile(storeDir), lockToken)
-    }
+    })
 
   /** Delete every dir under `storeDir/area` the manifest no longer
     * references (relative refs like "sigs/batch=3"). A ghost dir from a

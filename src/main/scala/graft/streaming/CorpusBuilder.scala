@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.{BandIndex, Dedup, DigestIndex, LsmIndex}
+import graft.util.Span
 
 /** Continuously build an exact-deduped corpus from a landing stream —
   * the streaming face of the incremental-dedup family (q52 band table,
@@ -163,7 +164,7 @@ object CorpusBuilder {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     def one(step: (String, () => Unit)): Unit = {
-      graft.streaming.ScoreStream.lap(s"corpus-commit-${step._1}")(step._2())
+      Span(step._1)(step._2())
       commitFault(step._1, corpusDir)
     }
     if (steps.lengthCompare(1) <= 0) steps.foreach(one)
@@ -251,15 +252,13 @@ object CorpusBuilder {
           if (!Files.exists(Paths.get(docsDir))) Nil
           else Seq("docs" -> graft.ingest.Compact.compactSmallFiles(spark,
             docsDir, targetBytes, smallBytes, minFiles, mergeSchema = true))
-        def foldReport(layout: String, folded: Option[(Int, Int)]) =
-          folded.map { case (runs, bulks) =>
-            graft.ingest.Compact.Report(layout, runs, bulks, 0L)
-          }.toSeq
         val indexes = Seq("digest-index" -> DigestIndex, "band-index" -> BandIndex)
           .flatMap { case (name, ix) =>
-            ix.readMeta(spark, corpusDir).filter(ix.layoutExists(spark, corpusDir, _))
-              .map(s => name -> foldReport(s.layoutDir,
-                ix.compact(spark, corpusDir, s, minRuns = minFiles)))
+            ix.compact(spark, corpusDir, minRuns = minFiles).map { case (s, folded) =>
+              name -> folded.map { case (runs, bulks) =>
+                graft.ingest.Compact.Report(s.layoutDir, runs, bulks, 0L)
+              }.toSeq
+            }
           }
         docs ++ indexes
       }.getOrElse(Nil)
@@ -403,7 +402,7 @@ object CorpusBuilder {
       idCol: String, textCol: String,
       expectedItems: Long, fpp: Double,
       digestBuckets: Int = DefaultDigestBuckets,
-      lockToken: Option[String] = None): Long = {
+      lockToken: Option[String] = None): Long = Span("corpus") {
     requireBuildLock(corpusDir, lockToken)
     val docsDir = s"$corpusDir/docs"
     Files.createDirectories(Paths.get(corpusDir))
@@ -412,17 +411,18 @@ object CorpusBuilder {
     val hasDocs = Files.exists(Paths.get(docsDir))
     val keyed = inBatch.withColumn(DigestCol, Dedup.contentKey(col(textCol)))
     val idxSpec = DigestIndex.Spec(digestBuckets)
-    val idxReady = resolveIndex(DigestIndex)(spark, docsDir, hasDocs, corpusDir,
-      idCol, DigestCol, idxSpec)(digestRows(idCol))
     val bloomPath = Paths.get(corpusDir, "bloom.bin")
-    val stored = graft.streaming.ScoreStream.lap("corpus-resolve")(
-      resolveFilter(spark, bloomPath, docsDir, hasDocs, expectedItems, fpp))
+    val (idxReady, stored) = Span("resolve") {
+      (resolveIndex(DigestIndex)(spark, docsDir, hasDocs, corpusDir,
+        idCol, DigestCol, idxSpec)(digestRows(idCol)),
+        resolveFilter(spark, bloomPath, docsDir, hasDocs, expectedItems, fpp))
+    }
     // no corpus yet → no probe: everything is new
     val probe = stored.filter(_ => idxReady).map(Dedup.broadcastFilter(spark, _))
     // survivors are consumed by filter build, index append, docs
     // append and count — materialize once; output-sized. The
     // materialized frame no longer needs the filter: release it now
-    val staged = try {
+    val staged = try Span("stage") {
       // verify probe-hit candidates against the digest INDEX (bucket-
       // pruned, batch-sized I/O), not the corpus-wide digest column;
       // the corpus itself is consulted only for same-id matches — see
@@ -433,12 +433,11 @@ object CorpusBuilder {
           idCol, DigestCol, corpusDir, idxSpec, corpusDigests(spark, docsDir))
         keyed.join(broadcast(dup), col(DigestCol) === col("__dup"), "left_anti")
       }
-      graft.streaming.ScoreStream.lap("corpus-stage")(
-        graft.util.Materialize.eager(fresh))
+      graft.util.Materialize.eager(fresh)
     } finally probe.foreach(_.destroy())
     val appended = staged.count()
     if (appended > 0)
-      graft.streaming.ScoreStream.lap("corpus-commit")(
+      Span("commit")(
         commitBatch(spark, staged, docsDir, bloomPath, stored, expectedItems,
           fpp, corpusDir, idCol, idxSpec, lockToken, appended))
     appended
@@ -529,8 +528,7 @@ object CorpusBuilder {
           idCol, DigestCol, corpusDir, idxSpec,
           runFiles = LsmIndex.runParts(appended, DigestRowsPerRunFile)))))
     requireBuildLock(corpusDir, lockToken)
-    graft.streaming.ScoreStream.lap("corpus-commit-docs")(
-      staged.write.mode("append").parquet(docsDir))
+    Span("docs")(staged.write.mode("append").parquet(docsDir))
   }
 
   /** The filter half of [[commitBatch]] — the near-dup path interleaves
@@ -611,7 +609,7 @@ object CorpusBuilder {
       idCol: String, textCol: String, nd: NearDup,
       expectedItems: Long = 1L << 20, fpp: Double = 0.01,
       digestBuckets: Int = DefaultDigestBuckets,
-      lockToken: Option[String] = None): Long = {
+      lockToken: Option[String] = None): Long = Span("corpus") {
     import graft.text.TextFunctions.tokens
     requireBuildLock(corpusDir, lockToken)
     val docsDir = s"$corpusDir/docs"
@@ -623,7 +621,7 @@ object CorpusBuilder {
     // one projection computes digest + signature; consumed by several
     // gates below — materialize once, batch-sized
     // (null text rejected, not gated — see class doc)
-    val staged = graft.util.Materialize.eager(
+    val staged = Span("stage")(graft.util.Materialize.eager(
       Dedup.exact(batch.filter(col(textCol).isNotNull), textCol, idCol)
         .withColumn(DigestCol, Dedup.contentKey(col(textCol)))
         .withColumn("__t", tokens(col(textCol)))
@@ -631,7 +629,7 @@ object CorpusBuilder {
           call_function("graft_minhash_mix",
             array_distinct(call_function("graft_shingles", col("__t"), lit(nd.shingleK))),
             lit(nd.k))))
-        .drop("__t"))
+        .drop("__t")))
     val batchSigs = staged.filter(col(SigCol).isNotNull)
       .select(col(idCol), col(SigCol))
     // within-batch: drop the larger id of any agreeing pair (canonical
@@ -642,25 +640,28 @@ object CorpusBuilder {
     // the derived stores resolve BEFORE the gate (rebuild on resize /
     // loss), and the gate and commit share them
     val bloomPath = Paths.get(corpusDir, "bloom.bin")
-    val stored =
-      resolveFilter(spark, bloomPath, docsDir, hasDocs, expectedItems, fpp)
     val bandSpec = BandIndex.Spec(nd.bands, nd.indexBuckets)
-    // steady state trusts the band index without a corpus footer scan;
-    // a rebuild needs signature history — an exact-era corpus has no
-    // SigCol, nothing to probe, and the first near-dup commit creates it
-    val bandReady = resolveIndex(BandIndex)(spark, docsDir, hasDocs, corpusDir,
-      idCol, SigCol, bandSpec) { docs =>
-      Option.when(docs.columns.contains(SigCol))(
-        docs.filter(col(SigCol).isNotNull).select(col(idCol), col(SigCol)))
-    }
     val idxSpec = DigestIndex.Spec(digestBuckets)
-    // side effect: rebuild-or-trust; with docs present the index is
-    // guaranteed probe-ready below
-    resolveIndex(DigestIndex)(spark, docsDir, hasDocs, corpusDir, idCol,
-      DigestCol, idxSpec)(digestRows(idCol))
+    val (stored, bandReady) = Span("resolve") {
+      val stored =
+        resolveFilter(spark, bloomPath, docsDir, hasDocs, expectedItems, fpp)
+      // steady state trusts the band index without a corpus footer scan;
+      // a rebuild needs signature history — an exact-era corpus has no
+      // SigCol, nothing to probe, and the first near-dup commit creates it
+      val bandReady = resolveIndex(BandIndex)(spark, docsDir, hasDocs, corpusDir,
+        idCol, SigCol, bandSpec) { docs =>
+        Option.when(docs.columns.contains(SigCol))(
+          docs.filter(col(SigCol).isNotNull).select(col(idCol), col(SigCol)))
+      }
+      // side effect: rebuild-or-trust; with docs present the index is
+      // guaranteed probe-ready below
+      resolveIndex(DigestIndex)(spark, docsDir, hasDocs, corpusDir, idCol,
+        DigestCol, idxSpec)(digestRows(idCol))
+      (stored, bandReady)
+    }
     // the gate's probe filter, released once `fresh` is materialized
     val probe = if (hasDocs) stored.map(Dedup.broadcastFilter(spark, _)) else None
-    val fresh = try {
+    val fresh = try Span("gate") {
       val corpusDrops: Seq[DataFrame] =
         if (!hasDocs) Nil
         else {
@@ -699,7 +700,7 @@ object CorpusBuilder {
         staged.join(broadcast(drops), col(idCol) === col("__drop"), "left_anti"))
     } finally probe.foreach(_.destroy())
     val appended = fresh.count()
-    if (appended > 0) {
+    if (appended > 0) Span("commit") {
       // commit order: {bloom, digest index, band index} → docs
       // (superset invariant for every derived store — each must be
       // persisted before the docs append, in no particular order among
@@ -719,7 +720,7 @@ object CorpusBuilder {
             runFiles = LsmIndex.runParts(
               appended * nd.bands, BandRowsPerRunFile)))))
       requireBuildLock(corpusDir, lockToken)
-      fresh.write.mode("append").parquet(docsDir)
+      Span("docs")(fresh.write.mode("append").parquet(docsDir))
     }
     appended
   }

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.util.Span
+
 /** The ONE place for the train-once / score-a-live-feed scaffold shared
   * by every streaming twin of a batch scorer (q120 LM, q122 NB, q127
   * DSIR gate, q129 fuzzy decontamination): freeze the model frames by
@@ -28,34 +30,6 @@ import org.apache.spark.sql.streaming.Trigger
   * replaying a feed through the streaming scorer must land exactly the
   * batch answer. */
 object ScoreStream {
-
-  /** Env-gated lap profiler (`GRAFT_SCORE_DEBUG=1`) — the ClusterStream
-    * debug-lap discipline for the scoring drains: `lap("tag")(body)`
-    * prints the tag and elapsed seconds to stderr, so a slow scoring
-    * query decomposes into train / feed / per-trigger laps without a
-    * listener. Zero-cost when the env var is unset. */
-  private[graft] def lap[T](tag: String)(body: => T): T =
-    if (!sys.env.contains("GRAFT_SCORE_DEBUG")) body
-    else {
-      val t0 = System.nanoTime()
-      try body
-      finally System.err.println(
-        f"[score] $tag ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    }
-
-  /** `GRAFT_SCORE_DEBUG=jobs` additionally prints every Spark job run
-    * during a [[replay]] drain (duration, task count, first line of
-    * the call site) — the decomposition that tells a broadcast-build
-    * job from the write job from scheduler dead time inside a
-    * trigger's lap. */
-  private def withJobTrace[T](spark: org.apache.spark.sql.SparkSession)(
-      body: => T): T =
-    if (!sys.env.get("GRAFT_SCORE_DEBUG").contains("jobs")) body
-    else {
-      val l = new graft.util.JobTraceListener("score-job")
-      spark.sparkContext.addSparkListener(l)
-      try body finally spark.sparkContext.removeSparkListener(l)
-    }
 
   /** Drain `stream` with AvailableNow, appending `score(batch)` to
     * `outDir` per micro-batch. Every frame in `frozen` is persisted
@@ -101,7 +75,7 @@ object ScoreStream {
     // unaffected)
     Lineage.bind(outDir, checkpointDir, "score-stream output")
     frozen.foreach(_.persist())
-    try lap("drain")(withJobTrace(stream.sparkSession)(stream.writeStream
+    try Span("drain")(stream.writeStream
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         // idempotent under at-least-once redelivery: each micro-batch
         // OWNS the batch=<id> subdir, so a batch re-delivered after a
@@ -122,12 +96,12 @@ object ScoreStream {
         val in =
           if (!spread || batch.rdd.getNumPartitions >= par) batch
           else batch.repartition(par)
-        lap(s"trigger $batchId")(
+        Span("trigger")(
           score(in).write.mode("overwrite").parquet(s"$outDir/batch=$batchId"))
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .start().awaitTermination()))
+      .start().awaitTermination())
     finally frozen.foreach(_.unpersist(blocking = false))
   }
 
@@ -154,7 +128,7 @@ object ScoreStream {
     * the 6-file default: their value is cross-batch state-MERGE
     * coverage, and more boundaries mean more merges under the gate. */
   def feed(df: DataFrame, dir: String, files: Int = 6): DataFrame = {
-    lap("feed-write")(
+    Span("feed-write")(
       df.repartition(files).write.mode("overwrite").parquet(dir))
     df.sparkSession.readStream.schema(df.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)

@@ -33,6 +33,29 @@ trait SparkSpec extends AnyFunSuite {
     }
     plans
   }
+  /** The [[graft.util.Span]] path of every Spark job `body` starts, in
+    * start order (None: started outside any span). The listener bus is
+    * async, so this waits until no job start has arrived for 300 ms. */
+  def jobSpans(body: => Unit): Seq[Option[String]] = {
+    val spans = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        spans.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty(graft.util.Span.Key))))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      var (seen, quiet) = (-1, 0)
+      val deadline = System.currentTimeMillis() + 15000
+      while (quiet < 3 && System.currentTimeMillis() < deadline) {
+        Thread.sleep(100)
+        if (spans.size == seen) quiet += 1 else { quiet = 0; seen = spans.size }
+      }
+      spans.toArray.toSeq.map(_.asInstanceOf[Option[String]])
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
   def writeGzip(dir: String, name: String, content: String): String = {
     val p = java.nio.file.Paths.get(dir, name)
     java.nio.file.Files.createDirectories(p.getParent)

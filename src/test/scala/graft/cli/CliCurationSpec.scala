@@ -176,6 +176,21 @@ class CliCurationSpec extends SparkSpec {
         "--checkpoint", s"$dir/ckpt", "--max-file", "2", s"$dir/landing/*.json"))
     }
     assert(ex.getMessage.contains("corpus does not take --max-file"), ex.getMessage)
+    // a flag of another form of the same verb is refused by the form
+    // the call dispatches to
+    Seq(
+      Seq("corpus", "compact", "--corpus", s"$dir/corpus", "--near-dup") ->
+        "corpus compact does not take --near-dup",
+      Seq("score", "--stream", "--load-model", s"$dir/model", "--output", s"$dir/out",
+        "--checkpoint", s"$dir/ckpt", "--band", "0.1,0.9", s"$dir/landing/*.json") ->
+        "score --stream does not take --band",
+      Seq("dsir", "--stream", "--load-model", s"$dir/model", "--threshold", "0.5",
+        "--output", s"$dir/out", "--checkpoint", s"$dir/ckpt", "--temperature", "2",
+        s"$dir/landing/*.json") -> "dsir --stream does not take --temperature"
+    ).foreach { case (args, msg) =>
+      val e = intercept[IllegalArgumentException](Main.run(spark, args.toArray))
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/corpus")) &&
       !java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/ckpt")),
       "a refused call must not start a build")

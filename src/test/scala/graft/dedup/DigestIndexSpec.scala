@@ -229,7 +229,7 @@ class DigestIndexSpec extends SparkSpec {
       DigestIndex.append(digested(Seq((b.toLong, s"tier doc $b"))),
         "doc_id", "digest", dir, spec)
       if (b % 2 == 1)
-        DigestIndex.compact(spark, dir, spec, minRuns = 2, maxBulks = 2)
+        DigestIndex.compact(spark, dir, minRuns = 2, maxBulks = 2)
     }
     def children(prefix: String) =
       Option(new java.io.File(s"$dir/${spec.layoutDir}").listFiles())
@@ -249,7 +249,7 @@ class DigestIndexSpec extends SparkSpec {
     // below the threshold the fold is a no-op
     DigestIndex.append(digested(Seq((20L, "tier doc 20"))),
       "doc_id", "digest", dir, spec)
-    assert(DigestIndex.compact(spark, dir, spec, minRuns = 2).isEmpty)
+    assert(DigestIndex.compact(spark, dir, minRuns = 2).flatMap(_._2).isEmpty)
     assert(children("run-").size == 1)
   }
 
@@ -266,7 +266,7 @@ class DigestIndexSpec extends SparkSpec {
     // OVERWRITES the leftover under the same deterministic name.
     digested(Seq((999L, "stale leftover row")))
       .write.parquet(s"$layout/compact-4") // seq after 4 appends = 4
-    assert(DigestIndex.compact(spark, dir, spec, minRuns = 2).isDefined)
+    assert(DigestIndex.compact(spark, dir, minRuns = 2).flatMap(_._2).isDefined)
     val hits = DigestIndex.probe(
       digested(Seq((100L, "crash doc 2"), (101L, "stale leftover row"))),
       "doc_id", "digest", dir, spec)
@@ -282,7 +282,7 @@ class DigestIndexSpec extends SparkSpec {
       DigestIndex.append(digested(Seq((10L + b, s"post doc $b"))),
         "doc_id", "digest", dir, spec)
     }
-    assert(DigestIndex.compact(spark, dir, spec, minRuns = 2).isDefined)
+    assert(DigestIndex.compact(spark, dir, minRuns = 2).flatMap(_._2).isDefined)
     val children = Option(new java.io.File(layout).listFiles())
       .map(_.map(_.getName).toSet).getOrElse(Set.empty)
     assert(!children.contains("run-77") && !children.contains("compact-99"),
@@ -315,7 +315,7 @@ class DigestIndexSpec extends SparkSpec {
     // the out-of-band edit invalidates the Hadoop checksum sidecar
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(dir, ".digests-meta.json.crc"))
-    assert(DigestIndex.compact(spark, dir, spec, minRuns = 2).isDefined,
+    assert(DigestIndex.compact(spark, dir, minRuns = 2).flatMap(_._2).isDefined,
       "a debris-only run must fold as empty, not crash")
     val afterTmp = DigestIndex.probe(
       digested(Seq((400L, "tmp doc 0"), (401L, "temp debris row"))),

@@ -12,10 +12,22 @@ class CorpusBuilderSpec extends SparkSpec {
   test("appendNew: within-batch dedup, cross-batch content dedup, digest column") {
     val corpus = tmpDir("corpus-batch")
     val b1 = Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha")).toDF("doc_id", "text")
-    assert(CorpusBuilder.appendNew(spark, b1, corpus, "doc_id", "text", 1024L, 0.01) == 2L)
     // replayed + partially-new batch: only the genuinely new content lands
     val b2 = Seq((4L, "beta"), (5L, "gamma"), (6L, "gamma")).toDF("doc_id", "text")
-    assert(CorpusBuilder.appendNew(spark, b2, corpus, "doc_id", "text", 1024L, 0.01) == 1L)
+    val spans = jobSpans {
+      Seq(b1 -> 2L, b2 -> 1L).zipWithIndex.foreach { case ((b, n), i) =>
+        graft.util.Span(s"b$i")(assert(
+          CorpusBuilder.appendNew(spark, b, corpus, "doc_id", "text", 1024L, 0.01) == n))
+      }
+    }
+    // every job runs inside its batch's corpus span; every commit job
+    // (the bloom and digest-index persists run on the commit pool)
+    // carries the path of the step it ran in, and every step ran one
+    assert(spans.forall(_.exists(p => p.startsWith("b0/corpus") || p.startsWith("b1/corpus"))),
+      spans)
+    val steps = for (i <- 0 to 1; step <- Seq("bloom", "digest-index", "docs"))
+      yield s"b$i/corpus/commit/$step"
+    assert(spans.flatten.filter(_.contains("/commit")).toSet == steps.toSet, spans)
     val docs = corpusDocs(corpus)
     assert(docs.count() == 3L)
     assert(docs.select("text").as[String].collect().sorted.toSeq ==
