@@ -1,5 +1,7 @@
 package graft.dedup
 
+import java.nio.file.Paths
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -100,7 +102,8 @@ private[graft] object LsmIndex {
     * corpus, never correctness.
     *
     * Freshness is declared by `metaFile`: the spec's `fieldNames` then
-    * the LSM state, committed by [[atomicWrite]]. A spec change
+    * the LSM state, a pointer beside the layouts committed by
+    * [[graft.util.FileCommit.replace]]. A spec change
     * REBUILDS into a fresh layout directory and flips the pointer only
     * after the rebuild completes; the superseded layout is removed
     * after the flip (rebuild-then-flip). A pre-LSM (ver-1) meta — the
@@ -138,7 +141,7 @@ private[graft] object LsmIndex {
 
     /** The meta, read once; None for a fresh store. */
     private[dedup] def meta(spark: SparkSession, storeDir: String): Option[Meta[Spec]] =
-      graft.streaming.StoreManifest.readFsString(spark, storeDir, metaFile).map { s =>
+      graft.util.FileCommit.read(Paths.get(storeDir, metaFile)).map { s =>
         def unreadable = sys.error(s"unreadable $kind meta at $storeDir/$metaFile: $s")
         val declared = SpecRe.findPrefixMatchOf(s)
           .fold(unreadable)(m => specOf(m.subgroups.map(_.toInt)))
@@ -154,7 +157,7 @@ private[graft] object LsmIndex {
       * layout was deleted out-of-band must trigger a rebuild, not
       * quietly probe "no index" ≡ "no match". */
     def layoutExists(spark: SparkSession, storeDir: String, spec: Spec): Boolean =
-      graft.streaming.StoreManifest.fsExists(spark, storeDir, spec.layoutDir)
+      fsOf(spark, storeDir).exists(new Path(storeDir, spec.layoutDir))
 
     /** Is `spec` the active index with its layout present — the
       * trust-or-rebuild test of every resolve path? */
@@ -181,10 +184,10 @@ private[graft] object LsmIndex {
       * drop the `previous`ly declared layout if this flip superseded it. */
     private def commit(spark: SparkSession, storeDir: String, spec: Spec,
         st: State, previous: Option[String]): Unit = {
-      val fs = fsOf(spark, storeDir)
-      atomicWrite(fs, new Path(storeDir, metaFile), metaJson(spec, st).getBytes("UTF-8"))
+      graft.util.FileCommit.replace(Paths.get(storeDir, metaFile),
+        metaJson(spec, st).getBytes("UTF-8"))
       previous.filter(_ != spec.layoutDir)
-        .foreach(old => fs.delete(new Path(storeDir, old), true))
+        .foreach(old => fsOf(spark, storeDir).delete(new Path(storeDir, old), true))
     }
 
     /** Append rows for newly-admitted docs as one FLAT run and swap the
@@ -299,25 +302,6 @@ private[graft] object LsmIndex {
         else batchSide
       (guarded, readLive(spark, layoutPath(storeDir, spec), st,
         flatSchema(idType), BucketCol, Some(touched)))
-    }
-  }
-
-  /** tmp → rename; delete-then-rename where rename-over is unsupported
-    * — the commit of each index's meta pointer. The tmp name is
-    * ATTEMPT-UNIQUE: two writers of one pointer each write their own
-    * tmp in full, so no commit can ever rename interleaved half-writes
-    * into place. Readers only ever read `dst`, so a torn tmp (crash
-    * mid-write) is inert: the previously committed pointer stays
-    * active. No post-commit tmp cleanup: a sweep could delete a
-    * CONCURRENT writer's in-flight tmp between its write and rename,
-    * failing its commit after it already removed dst. */
-  private[dedup] def atomicWrite(fs: FileSystem, dst: Path, bytes: Array[Byte]): Unit = {
-    val tmp = dst.suffix(s".${java.util.UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(dst, false)
-      if (!fs.rename(tmp, dst)) sys.error(s"cannot commit $dst")
     }
   }
 

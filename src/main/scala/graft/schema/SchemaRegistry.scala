@@ -1,10 +1,12 @@
 package graft.schema
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
+
+import graft.util.FileCommit
 
 /** Parquet-backed table catalog with create-or-evolve semantics — the
   * Spark-side analogue of the reference's `createOrUpdateTable`
@@ -43,16 +45,13 @@ final class SchemaRegistry(rootDir: String) extends TableBackend {
     Files.exists(schemaFile(dataset, table))
 
   override def currentSchema(dataset: String, table: String): Option[(Int, StructType)] = {
-    val f = schemaFile(dataset, table)
-    if (!Files.exists(f)) None
-    else {
-      val txt = new String(Files.readAllBytes(f), "UTF-8")
+    FileCommit.read(schemaFile(dataset, table)).map { txt =>
       // {"version":N,"schema":<spark json>}
       val vIdx = txt.indexOf("\"version\":")
       val version = txt.substring(vIdx + 10, txt.indexOf(',', vIdx)).trim.toInt
       val sIdx = txt.indexOf("\"schema\":")
       val schemaJson = txt.substring(sIdx + 9, txt.lastIndexOf('}'))
-      Some(version -> DataType.fromJson(schemaJson).asInstanceOf[StructType])
+      version -> DataType.fromJson(schemaJson).asInstanceOf[StructType]
     }
   }
 
@@ -74,13 +73,9 @@ final class SchemaRegistry(rootDir: String) extends TableBackend {
       }
     }
 
-  private def write(dataset: String, table: String, version: Int, s: StructType): Unit = {
-    Files.createDirectories(tableDir(dataset, table))
-    val tmp = schemaFile(dataset, table).resolveSibling("schema.json.tmp")
-    Files.write(tmp, s"""{"version":$version,"schema":${s.json}}""".getBytes("UTF-8"))
-    Files.move(tmp, schemaFile(dataset, table), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def write(dataset: String, table: String, version: Int, s: StructType): Unit =
+    FileCommit.replace(schemaFile(dataset, table),
+      s"""{"version":$version,"schema":${s.json}}""".getBytes("UTF-8"))
 
   /** Read a table under its live (evolved) schema: parquet files written
     * before an evolution lack the new columns; reading with the merged

@@ -1,6 +1,6 @@
 package graft.schema
 
-import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 
 import scala.annotation.tailrec
@@ -8,6 +8,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
+
+import graft.util.FileCommit
 
 /** Transaction-log table catalog — the SECOND [[TableBackend]], proving
   * the storage seam two-sided: same contract as the parquet-dir
@@ -81,7 +83,7 @@ final class TxLogBackend(rootDir: String) extends TableBackend {
 
   // \d{5,}: five-digit zero-padding for readability, but the match is
   // open-ended — a {5} cap would make version 100000 invisible to the
-  // listing while casCreate still succeeds, wedging the CAS loop forever
+  // listing while the create still succeeds, wedging the CAS loop forever
   private val SchemaV = """schema-v(\d{5,})\.json""".r
 
   /** List a directory through the Stream API, CLOSING it — an
@@ -112,30 +114,18 @@ final class TxLogBackend(rootDir: String) extends TableBackend {
         .asInstanceOf[StructType]
     }
 
-  /** Atomic create-if-absent with full content: stage to a tmp file,
-    * hard-link it into place (atomic, fails if the target exists — the
-    * CAS), drop the tmp. A reader can never observe a truncated file. */
-  private def casCreate(target: Path, content: Array[Byte]): Boolean = {
-    Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling(s".${target.getFileName}.${UUID.randomUUID()}.tmp")
-    Files.write(tmp, content)
-    try { Files.createLink(target, tmp); true }
-    catch { case _: FileAlreadyExistsException => false }
-    finally Files.deleteIfExists(tmp)
-  }
-
   @tailrec
   override def createOrUpdate(dataset: String, table: String,
       incoming: StructType): StructType =
     currentSchema(dataset, table) match {
       case None =>
-        if (casCreate(logDir(dataset, table).resolve(f"schema-v${1}%05d.json"),
+        if (FileCommit.create(logDir(dataset, table).resolve(f"schema-v${1}%05d.json"),
             incoming.json.getBytes("UTF-8"))) incoming
         else createOrUpdate(dataset, table, incoming) // lost the create race
       case Some((version, live)) =>
         val merged = SchemaMerge.merge(live, incoming)
         if (SchemaMerge.normalize(merged) == SchemaMerge.normalize(live)) live
-        else if (casCreate(
+        else if (FileCommit.create(
             logDir(dataset, table).resolve(f"schema-v${version + 1}%05d.json"),
             merged.json.getBytes("UTF-8"))) merged
         else createOrUpdate(dataset, table, incoming) // lost the CAS — re-merge
@@ -194,7 +184,7 @@ final class TxLogBackend(rootDir: String) extends TableBackend {
     // never moves, only the version number.
     @tailrec def publish(): Int = {
       val next = commits(dataset, table).lastOption.map(_.v).getOrElse(0) + 1
-      if (casCreate(logDir(dataset, table).resolve(f"commit-v$next%05d.json"),
+      if (FileCommit.create(logDir(dataset, table).resolve(f"commit-v$next%05d.json"),
           s"""{"dir":"batch-$batchId"}""".getBytes("UTF-8"))) next
       else publish()
     }
@@ -270,7 +260,7 @@ final class TxLogBackend(rootDir: String) extends TableBackend {
       .write.mode("overwrite").parquet(dir.toString)
     @tailrec def publish(): Int = {
       val next = commits(dataset, table).lastOption.map(_.v).getOrElse(0) + 1
-      if (casCreate(logDir(dataset, table).resolve(f"commit-v$next%05d.json"),
+      if (FileCommit.create(logDir(dataset, table).resolve(f"commit-v$next%05d.json"),
           s"""{"dir":"batch-$batchId","through":$tip}""".getBytes("UTF-8"))) next
       else publish()
     }

@@ -1,6 +1,6 @@
 package graft.schema.bigquery
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 
 import scala.annotation.tailrec
@@ -9,6 +9,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
+
+import graft.util.FileCommit
 
 /** In-process emulator of the PUBLIC BigQuery API surfaces the
   * reference engine drives — the sandbox stand-in that lets the
@@ -85,40 +87,26 @@ final class BigQueryEmulator(rootDir: String) {
   private def streamDir(ds: String, t: String, s: String): Path =
     tableDir(ds, t).resolve("streams").resolve(s)
 
-  private def atomicWrite(target: Path, content: String): Unit = {
-    Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.write(tmp, content.getBytes("UTF-8"))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
   // ---- tables.* (DDL plane) ----
 
   /** `tables.get`: metadata (ETag + schema) or None when absent. */
-  def getTable(ds: String, t: String): Option[TableMeta] = {
-    val f = metaFile(ds, t)
-    if (!Files.exists(f)) None
-    else {
-      val txt = new String(Files.readAllBytes(f), "UTF-8")
+  def getTable(ds: String, t: String): Option[TableMeta] =
+    FileCommit.read(metaFile(ds, t)).map { txt =>
       val eIdx = txt.indexOf("\"etag\":")
       val etag = txt.substring(eIdx + 7, txt.indexOf(',', eIdx)).trim.toInt
       val sIdx = txt.indexOf("\"schema\":")
-      Some(TableMeta(etag,
+      TableMeta(etag,
         DataType.fromJson(txt.substring(sIdx + 9, txt.lastIndexOf('}')))
-          .asInstanceOf[StructType]))
+          .asInstanceOf[StructType])
     }
-  }
 
   /** `tables.insert`: create with schema; AlreadyExists when present —
     * the caller loses the create race and re-reads (the reference's
     * create-then-update fallback). */
   def createTable(ds: String, t: String, schema: StructType): Unit =
-    lockFor(ds, t).synchronized {
-      if (getTable(ds, t).isDefined)
-        throw new AlreadyExistsException(s"$ds.$t already exists")
-      atomicWrite(metaFile(ds, t), s"""{"etag":1,"schema":${schema.json}}""")
-    }
+    if (!FileCommit.create(metaFile(ds, t),
+        s"""{"etag":1,"schema":${schema.json}}""".getBytes("UTF-8")))
+      throw new AlreadyExistsException(s"$ds.$t already exists")
 
   /** `tables.update` with `If-Match: etag`: the ETag compare-and-set of
     * `bq/client.go:198-204`. A stale etag throws; the caller re-reads,
@@ -136,7 +124,8 @@ final class BigQueryEmulator(rootDir: String) {
           s"$ds.$t etag $etag is stale (current ${cur.etag})")
       if (propagationLag > 0 && !lagState.contains(s"$ds.$t"))
         lagState.put(s"$ds.$t", (cur.schema, propagationLag))
-      atomicWrite(metaFile(ds, t), s"""{"etag":${etag + 1},"schema":${schema.json}}""")
+      FileCommit.replace(metaFile(ds, t),
+        s"""{"etag":${etag + 1},"schema":${schema.json}}""".getBytes("UTF-8"))
     }
 
   // ---- simulated DDL propagation lag (write plane) ----
@@ -239,11 +228,8 @@ final class BigQueryEmulator(rootDir: String) {
   private val StreamRe = """"(stream-[^"]+)"""".r
 
   /** (prunedThrough, entries in gen order). */
-  private def readLog(ds: String, t: String): (Int, Seq[CommitEntry]) = {
-    val f = commitsFile(ds, t)
-    if (!Files.exists(f)) (0, Nil)
-    else {
-      val txt = new String(Files.readAllBytes(f), "UTF-8")
+  private def readLog(ds: String, t: String): (Int, Seq[CommitEntry]) =
+    FileCommit.read(commitsFile(ds, t)).fold((0, Seq.empty[CommitEntry])) { txt =>
       val pruned = """"prunedThrough":(\d+)""".r.findFirstMatchIn(txt)
         .map(_.group(1).toInt).getOrElse(0)
       (pruned, EntryRe.findAllMatchIn(txt).map { m =>
@@ -251,15 +237,14 @@ final class BigQueryEmulator(rootDir: String) {
           StreamRe.findAllMatchIn(m.group(3)).map(_.group(1)).toSeq)
       }.toSeq)
     }
-  }
 
   private def writeLog(ds: String, t: String, pruned: Int,
       es: Seq[CommitEntry]): Unit =
-    atomicWrite(commitsFile(ds, t),
-      s"""{"prunedThrough":$pruned,"entries":[""" +
+    FileCommit.replace(commitsFile(ds, t),
+      (s"""{"prunedThrough":$pruned,"entries":[""" +
         es.map(e => s"""{"gen":${e.gen},"through":${e.through},"streams":[""" +
           e.streams.map(s => s""""$s"""").mkString(",") + "]}").mkString(",") +
-        "]}")
+        "]}").getBytes("UTF-8"))
 
   /** The entries whose streams a read at `gen` sees: the latest
     * compaction at or below `gen` plus every plain append above its

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.util.UUID
 import java.util.concurrent.Executors
 
@@ -10,6 +10,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.state.StateStore
+import graft.util.FileCommit
 
 /** Pub/Sub push ingress (SURVEY §2.1 S6) — the HTTP endpoint the
   * reference exposes for storage-notification delivery
@@ -172,14 +173,11 @@ final class PushReceiver(spoolDir: String, port: Int = 0,
     Right(Envelope(mapper.writeValueAsString(ev), id)) // compact: exactly one spool line
   }
 
-  /** Durable append: write to a hidden temp name, fsync-free atomic
-    * rename into the spool (the file source never sees half a file). */
-  private def spool(line: String): Unit = {
-    val id = UUID.randomUUID().toString
-    val tmp = Paths.get(spoolDir, s".$id.tmp")
-    Files.write(tmp, (line + "\n").getBytes(UTF_8))
-    Files.move(tmp, Paths.get(spoolDir, s"$id.json"), StandardCopyOption.ATOMIC_MOVE)
-  }
+  /** Durable append, fsync-free: [[FileCommit.replace]] stages under a
+    * hidden temp name, so the file source never sees half a file. */
+  private def spool(line: String): Unit =
+    FileCommit.replace(Paths.get(spoolDir, s"${UUID.randomUUID()}.json"),
+      (line + "\n").getBytes(UTF_8))
 }
 
 object PushReceiver {

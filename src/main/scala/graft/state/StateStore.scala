@@ -1,7 +1,8 @@
 package graft.state
 
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
-import java.time.Instant
+import java.nio.file.{Files, Path, Paths}
+
+import graft.util.FileCommit
 
 /** Message-processing state machine (SURVEY §2.7 T3): the reference
   * deduplicates Pub/Sub deliveries with a Firestore-backed transactional
@@ -13,10 +14,11 @@ import java.time.Instant
   * In the Spark design the checkpointed file source already gives
   * per-file exactly-once *discovery*, so this store is only needed when
   * mirroring the push architecture (multiple ingest drivers racing on
-  * the same queue). It is file-backed with atomic create as the
-  * transaction primitive (O_CREATE_NEW ≡ Firestore create-if-absent),
-  * which works on any shared filesystem; on object storage the same
-  * interface fronts a conditional-put.
+  * the same queue). It is file-backed with [[FileCommit.create]] as the
+  * transaction primitive (≡ Firestore create-if-absent): a record or
+  * lock is visible with its full content from the first instant, so a
+  * losing caller never reads it half-written. On object storage the
+  * same interface fronts a conditional-put.
   *
   * Acquisition semantics (`state.go:19-31`):
   *   - no state        → acquire (running)
@@ -29,10 +31,8 @@ final class StateStore(rootDir: String,
     ttlMillis: Long = 7L * 24 * 3600 * 1000,
     clock: () => Long = () => System.currentTimeMillis(),
     sleeper: Long => Unit = Thread.sleep(_),
-    /** Age past which an un-renewed lock file counts as crashed-holder
-      * stale. [[withLock]] heartbeats at a third of this, so only a
-      * holder stalled longer than the full timeout can lose a LIVE
-      * lock (the standard lease caveat). Short values are for specs. */
+    /** Age past which a lock file counts as crashed-holder stale.
+      * Short values are for specs. */
     lockTimeoutMillis: Long = 60000L) {
 
   sealed trait State { def name: String }
@@ -46,26 +46,12 @@ final class StateStore(rootDir: String,
 
   private def file(id: String): Path = Paths.get(rootDir, s"$id.state")
 
-  private def write(p: Path, r: Record, createNew: Boolean): Boolean = {
-    val body = s"""{"id":"${r.id}","state":"${r.state}","updated_at":${r.updatedAt},"expires_at":${r.expiresAt}}"""
-    try {
-      if (createNew)
-        Files.write(p, body.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-      else {
-        val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-        Files.write(tmp, body.getBytes("UTF-8"))
-        Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-      true
-    } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-  }
+  private def body(r: Record): Array[Byte] =
+    s"""{"id":"${r.id}","state":"${r.state}","updated_at":${r.updatedAt},"expires_at":${r.expiresAt}}"""
+      .getBytes("UTF-8")
 
-  def get(id: String): Option[Record] = {
-    val p = file(id)
-    if (!Files.exists(p)) None
-    else {
-      val s = new String(Files.readAllBytes(p), "UTF-8")
+  def get(id: String): Option[Record] =
+    FileCommit.read(file(id)).flatMap { s =>
       def field(k: String): String =
         s.split(s""""$k":"?""")(1).takeWhile(c => c != '"' && c != ',' && c != '}')
       val rec = Record(field("id"), field("state"),
@@ -73,127 +59,43 @@ final class StateStore(rootDir: String,
       // TTL: an expired record is as good as absent (Firestore TTL doc)
       if (clock() > rec.updatedAt + ttlMillis) None else Some(rec)
     }
-  }
 
   /** Try to acquire `id` for processing. Returns true when this caller
     * now owns it (state transitions to running).
     *
-    * Races: the absent-record path is decided by atomic CREATE_NEW; the
-    * re-acquisition paths (failed / expired-running / TTL-expired) are
-    * read-check-overwrite and would let two callers both win, so they
-    * are serialized through a short-lived lock file (also CREATE_NEW —
-    * the loser returns false and relies on redelivery). A lock left by
-    * a crashed winner is broken after `lockTimeoutMillis`. */
+    * Races: the absent-record path is decided by [[FileCommit.create]];
+    * the re-acquisition paths (failed / expired-running / TTL-expired)
+    * are read-check-overwrite and would let two callers both win, so
+    * they are serialized through a short-lived lock file (also
+    * [[FileCommit.create]] — the loser returns false and relies on
+    * redelivery). A lock left by a crashed winner is broken after
+    * `lockTimeoutMillis`. */
   def acquire(id: String): Boolean = {
     val now = clock()
     val fresh = Record(id, Running.name, now, now + timeoutMillis)
     val p = file(id)
-    if (!Files.exists(p) && write(p, fresh, createNew = true)) return true
+    if (!Files.exists(p) && FileCommit.create(p, body(fresh))) return true
     val lock = p.resolveSibling(p.getFileName.toString + ".lock")
     if (!tryLock(lock, now)) return false
     try {
-      get(id) match {
-        case None =>
-          write(p, fresh, createNew = !Files.exists(p)) ||
-            write(p, fresh, createNew = false)
-        case Some(r) if r.state == Completed.name => false
-        case Some(r) if r.state == Failed.name => write(p, fresh, createNew = false)
-        case Some(r) if r.state == Running.name && now > r.expiresAt =>
-          write(p, fresh, createNew = false)
-        case _ => false
+      val retake = get(id) match {
+        case None => true
+        case Some(r) => r.state == Failed.name ||
+          (r.state == Running.name && now > r.expiresAt)
       }
+      if (retake) FileCommit.replace(p, body(fresh))
+      retake
     } finally Files.deleteIfExists(lock)
   }
 
-  /** Run `f` while holding the exclusive lock `id`, or return None
-    * without running it when another holder is live — the
-    * MAINTENANCE mutex (store compaction, index rebuilds): unlike
-    * [[acquire]] there is no completed/failed lifecycle, just mutual
-    * exclusion with the same CREATE_NEW primitive and stale-break
-    * discipline (a lock whose holder crashed is broken after
-    * `lockTimeoutMillis`; the breaker does NOT self-grant — the next
-    * attempt wins, exactly the [[tryLock]] contract).
-    *
-    * `f` can legitimately outlive `lockTimeoutMillis` (a whole-store
-    * compaction is minutes on a large corpus), so the lock is a LEASE:
-    * a daemon heartbeat rewrites the timestamp at a third of the
-    * timeout while `f` runs, and the lock carries an ownership token so
-    * (a) the heartbeat never resurrects a lock a breaker legitimately
-    * took (token checked before each renewal) and (b) the final release
-    * deletes only THIS holder's lock, never a successor's. Only a
-    * holder whose JVM stalls past the full timeout between heartbeats
-    * can lose a live lock — the standard lease caveat. */
-  def withLock[T](id: String)(f: => T): Option[T] = {
-    val lock = Paths.get(rootDir, s"$id.lock")
-    val token = java.util.UUID.randomUUID().toString
-    if (!tryLock(lock, clock(), token)) None
-    else {
-      @volatile var renewing = true
-      val hb = new Thread(new Runnable {
-        override def run(): Unit = {
-          var live = true
-          while (live && renewing) {
-            try Thread.sleep(math.max(lockTimeoutMillis / 3, 1L))
-            catch { case _: InterruptedException => live = false }
-            if (live && renewing) renew(lock, token)
-          }
-        }
-      }, s"graft-lock-heartbeat")
-      hb.setDaemon(true)
-      hb.start()
-      try Some(f)
-      finally {
-        renewing = false
-        hb.interrupt()
-        // quiesce the heartbeat BEFORE the owner-delete: a renewal's
-        // move landing after the delete would recreate a holderless
-        // ghost lock that blocks every caller until stale-broken
-        hb.join(5000)
-        if (owns(lock, token)) Files.deleteIfExists(lock)
-      }
-    }
-  }
-
-  /** One lease renewal by ATOMIC IN-PLACE REPLACE — the lock file is
-    * never absent for even an instant (a move-aside renewal was
-    * measured letting contenders' CREATE_NEW acquire mid-hold). The
-    * token re-check immediately before the replace shrinks the
-    * clobber window — a holder stalled past the full stale timeout
-    * BETWEEN check and move overwriting a successor's lock — to
-    * microseconds; a filesystem offers no content-CAS to close it
-    * entirely, which is the documented lease caveat. */
-  private def renew(lock: Path, token: String): Unit =
-    if (owns(lock, token)) {
-      val tmp = lock.resolveSibling(lock.getFileName.toString + s".hb-$token")
-      try {
-        Files.write(tmp, s"${clock()} $token".getBytes("UTF-8"))
-        if (owns(lock, token))
-          Files.move(tmp, lock, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        else Files.deleteIfExists(tmp)
-      } catch { case _: Exception => Files.deleteIfExists(tmp) }
-    }
-
-  /** Does `lock` still carry `token`? (False on missing/foreign lock.) */
-  private def owns(lock: Path, token: String): Boolean =
-    try new String(Files.readAllBytes(lock), "UTF-8").trim
-      .split("\\s+").lift(1).contains(token)
-    catch { case _: Throwable => false }
-
-  private def tryLock(lock: Path, now: Long, token: String = "-"): Boolean =
-    try {
-      Files.write(lock, s"$now $token".getBytes("UTF-8"),
-        StandardOpenOption.CREATE_NEW)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        val content = try Some(new String(Files.readAllBytes(lock), "UTF-8").trim)
-          catch { case _: Throwable => None }
-        // content is "<millis> <token>"; age from the first field
-        val age = content.flatMap(_.split("\\s+").headOption)
-          .flatMap(_.toLongOption).map(now - _).getOrElse(0L)
-        if (age > lockTimeoutMillis) breakStaleLock(lock, content)
-        false // breaker also retries via redelivery, never self-grants
+  private def tryLock(lock: Path, now: Long): Boolean =
+    FileCommit.create(lock, s"$now -".getBytes("UTF-8")) || {
+      val content = FileCommit.read(lock).map(_.trim)
+      // content is "<millis> -"; age from the first field
+      val age = content.flatMap(_.split("\\s+").headOption)
+        .flatMap(_.toLongOption).map(now - _).getOrElse(0L)
+      if (age > lockTimeoutMillis) breakStaleLock(lock, content)
+      false // breaker also retries via redelivery, never self-grants
     }
 
   /** Break a stale lock ATOMICALLY: rename it aside first (only one
@@ -233,13 +135,12 @@ final class StateStore(rootDir: String,
     None // unreachable
   }
 
-  def markCompleted(id: String): Unit = {
-    val now = clock()
-    write(file(id), Record(id, Completed.name, now, now + timeoutMillis), createNew = false)
-  }
+  def markCompleted(id: String): Unit = mark(id, Completed)
 
-  def markFailed(id: String): Unit = {
+  def markFailed(id: String): Unit = mark(id, Failed)
+
+  private def mark(id: String, st: State): Unit = {
     val now = clock()
-    write(file(id), Record(id, Failed.name, now, now + timeoutMillis), createNew = false)
+    FileCommit.replace(file(id), body(Record(id, st.name, now, now + timeoutMillis)))
   }
 }

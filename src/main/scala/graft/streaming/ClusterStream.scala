@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -1648,9 +1648,8 @@ object ClusterStream {
 
   private[streaming] def readManifest(storeDir: String): Option[Manifest] = {
     val p = manifestFile(storeDir)
-    if (!Files.exists(p)) None
-    else {
-      val root = try jsonMapper.readTree(Files.readString(p))
+    graft.util.FileCommit.read(p).map { s =>
+      val root = try jsonMapper.readTree(s)
       catch { case e: com.fasterxml.jackson.core.JacksonException =>
         sys.error(s"unreadable cluster manifest at $p: ${e.getMessage}")
       }
@@ -1661,19 +1660,18 @@ object ClusterStream {
       val buckets = Option(root.get("buckets")).map { b =>
         b.fields.asScala.map(e => e.getKey.toInt -> e.getValue.asText).toMap
       }.getOrElse(Map.empty[Int, String])
-      Some(Manifest(root.get("batchId").asLong, root.get("nBuckets").asInt,
+      Manifest(root.get("batchId").asLong, root.get("nBuckets").asInt,
         buckets, dirList("sigDirs"), dirList("bandDirs"), dirList("edgeDirs"),
         ckpt = Option(root.get("ckpt")).map(_.asText).getOrElse(""),
         rows = Option(root.get("rows")).map(_.asLong).getOrElse(-1L),
         sigBk = Option(root.get("sigBk")).map(_.asInt).getOrElse(0),
         bandBk = Option(root.get("bandBk")).map(_.asInt).getOrElse(0),
         seq = Option(root.get("seq")).map(_.asLong).getOrElse(0L),
-        ver = Option(root.get("ver")).map(_.asInt).getOrElse(0)))
+        ver = Option(root.get("ver")).map(_.asInt).getOrElse(0))
     }
   }
 
   private[streaming] def writeManifest(storeDir: String, m: Manifest): Unit = {
-    Files.createDirectories(manifestFile(storeDir).getParent)
     val root = jsonMapper.createObjectNode()
     root.put("batchId", m.batchId)
     root.put("nBuckets", m.nBuckets)
@@ -1691,7 +1689,7 @@ object ClusterStream {
     dirList("edgeDirs", m.edgeDirs)
     val b = root.putObject("buckets")
     m.buckets.toSeq.sortBy(_._1).foreach { case (k, v) => b.put(k.toString, v) }
-    StoreManifest.atomicWrite(manifestFile(storeDir),
-      jsonMapper.writeValueAsString(root))
+    graft.util.FileCommit.replace(manifestFile(storeDir),
+      jsonMapper.writeValueAsBytes(root))
   }
 }

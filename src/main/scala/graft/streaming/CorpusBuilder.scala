@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.{BandIndex, Dedup, DigestIndex, LsmIndex}
-import graft.util.Span
+import graft.util.{FileCommit, Span}
 
 /** Continuously build an exact-deduped corpus from a landing stream —
   * the streaming face of the incremental-dedup family (q52 band table,
@@ -231,10 +231,8 @@ object CorpusBuilder {
     * passes None and this method takes the one-live-builder BUILD.lock
     * itself for the duration — failing LOUDLY if a builder is live
     * (stop it first, or let its in-stream hook do the maintenance).
-    * Compact-vs-compact is additionally serialized through a
-    * [[graft.state.StateStore]] lock under `corpusDir/maintenance` —
-    * a second caller skips the run and returns Nil rather than
-    * double-rewriting a leaf. */
+    * The same lock serializes compact-vs-compact: a second standalone
+    * caller fails loudly while the first holds it. */
   def compactStores(spark: SparkSession, corpusDir: String,
       targetBytes: Long = 256L << 20, smallBytes: Long = 64L << 20,
       minFiles: Int = 16,
@@ -245,23 +243,20 @@ object CorpusBuilder {
         s"maintenance pid=${ProcessHandle.current().pid()}"))
     }
     try {
-      val lock = new graft.state.StateStore(s"$corpusDir/maintenance")
-      lock.withLock("compact") {
-        val docsDir = s"$corpusDir/docs"
-        val docs =
-          if (!Files.exists(Paths.get(docsDir))) Nil
-          else Seq("docs" -> graft.ingest.Compact.compactSmallFiles(spark,
-            docsDir, targetBytes, smallBytes, minFiles, mergeSchema = true))
-        val indexes = Seq("digest-index" -> DigestIndex, "band-index" -> BandIndex)
-          .flatMap { case (name, ix) =>
-            ix.compact(spark, corpusDir, minRuns = minFiles).map { case (s, folded) =>
-              name -> folded.map { case (runs, bulks) =>
-                graft.ingest.Compact.Report(s.layoutDir, runs, bulks, 0L)
-              }.toSeq
-            }
+      val docsDir = s"$corpusDir/docs"
+      val docs =
+        if (!Files.exists(Paths.get(docsDir))) Nil
+        else Seq("docs" -> graft.ingest.Compact.compactSmallFiles(spark,
+          docsDir, targetBytes, smallBytes, minFiles, mergeSchema = true))
+      val indexes = Seq("digest-index" -> DigestIndex, "band-index" -> BandIndex)
+        .flatMap { case (name, ix) =>
+          ix.compact(spark, corpusDir, minRuns = minFiles).map { case (s, folded) =>
+            name -> folded.map { case (runs, bulks) =>
+              graft.ingest.Compact.Report(s.layoutDir, runs, bulks, 0L)
+            }.toSeq
           }
-        docs ++ indexes
-      }.getOrElse(Nil)
+        }
+      docs ++ indexes
     } finally owned.foreach(t => releaseBuildLock(corpusDir, t))
   }
 
@@ -304,7 +299,7 @@ object CorpusBuilder {
         * tiny file per bucket per batch FOREVER and the bucket-pruned
         * probes drown in footer reads. In-loop placement makes the
         * maintenance run serial with this stream's own appends; the
-        * StateStore lock inside compactStores covers external racers. */
+        * BUILD.lock [[compactStores]] checks covers external racers. */
       compactEvery: Int = DefaultCompactEvery): StreamingQuery = {
     // arg validation BEFORE the lock — a refused call must not leak it
     require(!(maxFilesPerTrigger.isDefined && maxBytesPerTrigger.isDefined),
@@ -378,11 +373,8 @@ object CorpusBuilder {
   private def landingSchema(spark: SparkSession, landingGlob: String,
       corpusDir: String): org.apache.spark.sql.types.StructType = {
     val f = Paths.get(corpusDir, "doc-schema.json")
-    if (Files.exists(f))
-      org.apache.spark.sql.types.DataType.fromJson(
-        new String(Files.readAllBytes(f), "UTF-8"))
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-    else {
+    FileCommit.read(f).map(org.apache.spark.sql.types.DataType.fromJson(_)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]).getOrElse {
       val inferred =
         try spark.read.json(landingGlob).schema
         catch { case e: Exception => sys.error(
@@ -390,8 +382,7 @@ object CorpusBuilder {
             s"and no stored schema at $f — land at least one file first " +
             s"(${e.getMessage})")
         }
-      Files.createDirectories(Paths.get(corpusDir))
-      Files.write(f, inferred.json.getBytes("UTF-8"))
+      FileCommit.replace(f, inferred.json.getBytes("UTF-8"))
       inferred
     }
   }
@@ -482,7 +473,7 @@ object CorpusBuilder {
       // persist the rebuild NOW, not at the next commit — a stream of
       // all-duplicate batches (which never commit) would otherwise
       // repeat this corpus-wide rebuild on every micro-batch
-      writeFilter(bloomPath, rebuilt)
+      FileCommit.replace(bloomPath, rebuilt)
       Some(rebuilt)
     }
     else None
@@ -501,12 +492,6 @@ object CorpusBuilder {
   private def corpusDigests(spark: SparkSession, docsDir: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(docsDir)
       .select(col(DigestCol).as("digest"))
-
-  /** Single-writer atomic swap of the filter (the driver's
-    * foreachBatch is serial per corpus, so the fixed tmp name inside
-    * [[StoreManifest.atomicWriteBytes]] is safe here). */
-  private def writeFilter(bloomPath: java.nio.file.Path, bytes: Array[Byte]): Unit =
-    StoreManifest.atomicWriteBytes(bloomPath, bytes)
 
   /** Persist one batch under the superset invariant: merge the batch's
     * digests into the stored filter FIRST, then append to the digest
@@ -562,7 +547,7 @@ object CorpusBuilder {
             filterFromCorpus(spark, docsDir, expectedItems, fpp), batchFilter)
         }
     }
-    writeFilter(bloomPath, merged)
+    FileCommit.replace(bloomPath, merged)
   }
 
   /** NEAR-DUP variant of [[appendNew]]: beyond exact-content drops, a

@@ -243,7 +243,7 @@ object CountStream {
     Paths.get(storeDir, "DELTAS")
 
   private def readDeltaManifest(storeDir: String): Option[(Long, Seq[String])] =
-    StoreManifest.readIfExists(deltaManifestFile(storeDir)).map { s =>
+    graft.util.FileCommit.read(deltaManifestFile(storeDir)).map { s =>
       val lines = s.split("\n", 2)
       (lines(0).trim.toLong,
         if (lines.length < 2 || lines(1).trim.isEmpty) Nil
@@ -252,8 +252,8 @@ object CountStream {
 
   private def writeDeltaManifest(storeDir: String, batchId: Long,
       dirs: Seq[String]): Unit =
-    StoreManifest.atomicWrite(deltaManifestFile(storeDir),
-      (batchId.toString +: dirs).mkString("\n"))
+    graft.util.FileCommit.replace(deltaManifestFile(storeDir),
+      (batchId.toString +: dirs).mkString("\n").getBytes("UTF-8"))
 
   /** Delete delta dirs the manifest no longer references (replaced by a
     * compaction, or ghosts of a crashed fold already re-delivered). */

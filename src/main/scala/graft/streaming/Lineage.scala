@@ -1,6 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
+
+import graft.util.FileCommit
 
 /** Checkpoint-lineage binding for BATCH-ID-guarded foreachBatch stores
   * ([[CountStream]]'s generation and delta disciplines,
@@ -32,13 +34,14 @@ object Lineage {
     Paths.get(checkpointDir).toAbsolutePath.normalize.toString
 
   /** Bind `dir` to `checkpointDir`'s lineage: stamp on first use, fail
-    * loudly on mismatch ever after. `what` names the store kind in the
-    * error. */
+    * loudly on mismatch ever after. The stamp is a create-if-absent, so
+    * of two first drains racing on one store exactly one binds. `what`
+    * names the store kind in the error. */
   def bind(dir: String, checkpointDir: String, what: String): Unit = {
     val ckpt = id(checkpointDir)
     val f = Paths.get(dir, "_LINEAGE")
-    if (Files.exists(f)) {
-      val cur = Files.readString(f).trim
+    if (!FileCommit.create(f, ckpt.getBytes("UTF-8"))) {
+      val cur = FileCommit.read(f).fold("")(_.trim)
       require(cur == ckpt,
         s"$what at $dir is bound to checkpoint lineage '$cur' but this " +
           s"stream runs from '$ckpt' — the store's batch-id replay guard " +
@@ -46,6 +49,6 @@ object Lineage {
           "would silently no-op or overwrite committed state. Resume with " +
           "the original checkpoint dir, point the new stream at a fresh " +
           s"store, or delete $f for a deliberate rebind")
-    } else StoreManifest.atomicWrite(f, ckpt)
+    }
   }
 }

@@ -1,8 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+
+import graft.util.FileCommit
 
 /** THE file-level commit discipline every streaming store here shares
   * — extracted so the invariants live once instead of in five
@@ -10,7 +13,7 @@ import scala.jdk.CollectionConverters._
   * generation and delta pointers, [[Reservoir]]'s generation,
   * [[Lineage]]'s stamp, [[CorpusBuilder]]'s filter + builder lock):
   *
-  *   1. ATOMIC POINTER SWAP — tmp-sibling write + atomic rename of
+  *   1. ATOMIC POINTER SWAP — [[graft.util.FileCommit.replace]] of
   *      one pointer/manifest file; readers see old or new, never torn.
   *   2. REFERENCED-NEVER-DELETED — data dirs are written BEFORE the
   *      pointer references them, swept only AFTER nothing does; a
@@ -18,33 +21,13 @@ import scala.jdk.CollectionConverters._
   *   3. REPLAY GUARD — the pointer carries the last committed batch
   *      id, so an at-least-once redelivery is a no-op.
   *   4. LINEAGE BIND — batch-id guards are meaningful within ONE
-  *      checkpoint lineage ([[Lineage]], built on the same swap).
-  *   5. HOLDER LOCK + COMMIT RE-CHECK — writer exclusivity via an
-  *      atomically-created lock file whose token the holder re-checks
-  *      at its commit point ([[acquireHolderLock]]).
+  *      checkpoint lineage ([[Lineage]], a
+  *      [[graft.util.FileCommit.create]] stamp).
+  *   5. HOLDER LOCK + COMMIT RE-CHECK — writer exclusivity via a lock
+  *      file taken by [[graft.util.FileCommit.create]], whose token the
+  *      holder re-checks at its commit point ([[acquireHolderLock]]).
   */
 object StoreManifest {
-
-  /** Invariant 1: tmp-sibling write + atomic rename. */
-  def atomicWrite(target: Path, content: String): Unit = {
-    Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.writeString(tmp, content)
-    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** [[atomicWrite]] for binary payloads (bloom filters). */
-  def atomicWriteBytes(target: Path, bytes: Array[Byte]): Unit = {
-    Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.write(tmp, bytes)
-    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  def readIfExists(p: Path): Option[String] =
-    if (Files.exists(p)) Some(Files.readString(p)) else None
 
   /** Total row count of the parquet data files directly under `dir`,
     * summed from the file FOOTERS on the driver — a metadata read, no
@@ -114,7 +97,7 @@ object StoreManifest {
     * space-separated token is the generation number; stores append
     * their own payload (CountStream rides the batch id). */
   def genPointer(storeDir: String): Option[String] =
-    readIfExists(Paths.get(storeDir, "GEN")).map(_.trim)
+    FileCommit.read(Paths.get(storeDir, "GEN")).map(_.trim)
 
   /** Committed generation directory (relative), if any. */
   def currentGenDir(storeDir: String): Option[String] =
@@ -133,31 +116,8 @@ object StoreManifest {
     val dir = s"$storeDir/gen=$next"
     writeGen(dir)
     afterWrite(dir)
-    atomicWrite(Paths.get(storeDir, "GEN"), pointerFor(next))
+    FileCommit.replace(Paths.get(storeDir, "GEN"), pointerFor(next).getBytes(UTF_8))
     old.foreach(g => deleteRecursively(Paths.get(storeDir, s"gen=$g")))
-  }
-
-  // ---- hadoop-FS twins (stores that must run on ANY FileSystem —
-  // the dedup meta pointers probe gs:// through the hermetic seam) ----
-
-  /** [[readIfExists]] through the Hadoop FileSystem of `dir`. */
-  def readFsString(spark: org.apache.spark.sql.SparkSession, dir: String,
-      name: String): Option[String] = {
-    val hp = new org.apache.hadoop.fs.Path(dir, name)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) None
-    else {
-      val in = fs.open(hp)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    }
-  }
-
-  /** Existence probe through the Hadoop FileSystem of `dir`. */
-  def fsExists(spark: org.apache.spark.sql.SparkSession, dir: String,
-      name: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(dir, name)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
   }
 
   // ---- invariant 5: holder lock + commit re-check ----
@@ -176,25 +136,20 @@ object StoreManifest {
     * [[ClusterStream]] compaction-lock contract). */
   def acquireHolderLock(lock: Path, role: String, holder: String,
       why: String): String = {
-    Files.createDirectories(lock.getParent)
     val token = java.util.UUID.randomUUID().toString
-    try {
-      Files.write(lock, s"$token $holder".getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-      token
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        val cur = readIfExists(lock).map(_.trim).getOrElse("<unreadable>")
-        throw new AlreadyLockedException(
-          s"store at ${lock.getParent} already has a live $role " +
-            s"($cur) — $why; stop it first, or if it crashed, delete $lock")
+    if (!FileCommit.create(lock, s"$token $holder".getBytes(UTF_8))) {
+      val cur = FileCommit.read(lock).map(_.trim).getOrElse("<unreadable>")
+      throw new AlreadyLockedException(
+        s"store at ${lock.getParent} already has a live $role " +
+          s"($cur) — $why; stop it first, or if it crashed, delete $lock")
     }
+    token
   }
 
   /** Release IF `token` still holds the lock (idempotent; a
     * force-broken lock belongs to the usurper and is left alone). */
   def releaseHolderLock(lock: Path, token: String): Unit =
-    if (readIfExists(lock).exists(_.startsWith(token)))
+    if (FileCommit.read(lock).exists(_.startsWith(token)))
       Files.deleteIfExists(lock)
 
   /** The commit re-check: a holder must still own the lock at its
@@ -204,7 +159,7 @@ object StoreManifest {
     * serialization). */
   def requireHolderLock(lock: Path, token: Option[String],
       consequence: String): Unit = token.foreach { t =>
-    val cur = readIfExists(lock).getOrElse("")
+    val cur = FileCommit.read(lock).getOrElse("")
     require(cur.startsWith(t),
       s"this holder no longer holds $lock (current holder: " +
         s"'${cur.trim}') — its lock was broken and another writer took " +

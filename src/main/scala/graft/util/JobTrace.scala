@@ -11,25 +11,31 @@ class JobTraceListener extends SparkListener {
   private val starts =
     new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int, String)]()
 
-  override def onJobStart(js: SparkListenerJobStart): Unit = {
-    def prop(k: String) =
-      Option(js.properties).flatMap(p => Option(p.getProperty(k))).filter(_.nonEmpty)
-    // filter BEFORE the fallbacks: a present-but-empty description must
-    // fall through, not swallow them. The result stage's NAME is the
-    // Spark-4-reliable call-site carrier ("count at Dedup.scala:123");
-    // callSite.short is kept for submission paths that still set it.
-    val desc = prop("spark.job.description")
-      .orElse(prop("callSite.short"))
-      .orElse(js.stageInfos.lastOption.map(_.name).filter(_.nonEmpty))
-      .getOrElse("?")
-    starts.put(js.jobId, (System.nanoTime(),
-      desc.linesIterator.find(_.trim.nonEmpty).getOrElse("?").take(90),
-      js.stageInfos.map(_.numTasks).sum, prop(Span.Key).getOrElse("-")))
-  }
+  override def onJobStart(js: SparkListenerJobStart): Unit =
+    starts.put(js.jobId, (System.nanoTime(), JobTraceListener.describe(js),
+      js.stageInfos.map(_.numTasks).sum,
+      Option(js.properties).flatMap(p => Option(p.getProperty(Span.Key))).getOrElse("-")))
 
   override def onJobEnd(je: SparkListenerJobEnd): Unit =
     Option(starts.remove(je.jobId)).foreach { case (t0, desc, tasks, span) =>
       Span.log.info(f"job #${je.jobId}%-4d ${(System.nanoTime() - t0) / 1e9}%6.3fs " +
         f"$tasks%4d tasks  $span  $desc")
     }
+}
+
+object JobTraceListener {
+
+  /** A job's one-line label: its result stage's NAME, the
+    * Spark-4-reliable call-site carrier ("count at Dedup.scala:123"),
+    * then `callSite.short`, and the job description last — a streaming
+    * query sets the description to its query name, which would label
+    * every drain job alike. Empty values fall through. */
+  def describe(js: SparkListenerJobStart): String = {
+    def prop(k: String) =
+      Option(js.properties).flatMap(p => Option(p.getProperty(k))).filter(_.nonEmpty)
+    js.stageInfos.maxByOption(_.stageId).map(_.name).filter(_.nonEmpty)
+      .orElse(prop("callSite.short"))
+      .orElse(prop("spark.job.description"))
+      .flatMap(_.linesIterator.find(_.trim.nonEmpty)).getOrElse("?").take(90)
+  }
 }

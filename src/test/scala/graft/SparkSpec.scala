@@ -14,6 +14,15 @@ trait SparkSpec extends AnyFunSuite {
     java.nio.file.Files.write(p, content.getBytes("UTF-8"))
     p.toString
   }
+  /** `body(t)` for t in 0 until n on `n` pool threads a barrier releases
+    * together; each thread's outcome, in t order. */
+  def race[A](pool: java.util.concurrent.ExecutorService, n: Int)(
+      body: Int => A): Seq[scala.util.Try[A]] = {
+    val go = new java.util.concurrent.CyclicBarrier(n)
+    (0 until n).map(t => pool.submit(new java.util.concurrent.Callable[scala.util.Try[A]] {
+      def call(): scala.util.Try[A] = { go.await(); scala.util.Try(body(t)) }
+    })).map(_.get)
+  }
   /** Id of the newest SQL execution the status store has recorded. */
   def lastExecutionId: Long =
     spark.sharedState.statusStore.executionsList().map(_.executionId)

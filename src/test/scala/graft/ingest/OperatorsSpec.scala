@@ -105,39 +105,26 @@ class OperatorsSpec extends SparkSpec {
     assert(st.acquire("m3"))
   }
 
-  test("StateStore.withLock is a lease: a live long holder is never broken; release is owner-only") {
-    val dir = tmpDir("lock-lease")
-    val st = new StateStore(dir, lockTimeoutMillis = 1500)
-    val contended = new java.util.concurrent.atomic.AtomicInteger(0)
-    val release = new java.util.concurrent.CountDownLatch(1)
-    val t = new Thread(() => {
-      // hold FAR past lockTimeoutMillis: the heartbeat (timeout/3) must
-      // keep the lock live the whole time. Released by LATCH, not a
-      // timer, so contender-loop overhead can never outlive the hold
-      // and acquire legitimately (the flaky shape of a timed hold).
-      st.withLock("compact") { release.await() }
-      ()
-    })
-    t.start()
-    Thread.sleep(400)
-    (0 until 4).foreach { _ =>
-      st.withLock("compact") { contended.incrementAndGet() }
-      Thread.sleep(600)
-    }
-    release.countDown()
-    t.join()
-    assert(contended.get() == 0,
-      "a heartbeating holder past the stale timeout must not lose the lock")
-    // after release the lock is re-acquirable
-    assert(st.withLock("compact") { 42 }.contains(42))
-    // ownership token: release must not delete a lock it no longer owns
-    val lock = java.nio.file.Paths.get(dir, "own.lock")
-    st.withLock("own") {
-      java.nio.file.Files.write(lock, "9999999999999 foreign".getBytes("UTF-8"))
-    }
-    assert(java.nio.file.Files.exists(lock),
-      "release must leave a successor's (foreign-token) lock in place")
-    java.nio.file.Files.delete(lock)
+  test("StateStore: racing acquires of a fresh id elect exactly one winner, and no loser reads a half-made record") {
+    val st = new StateStore(tmpDir("state-race-acquire"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try (0 until 200).foreach { i =>
+      val out = race(pool, 8)(_ => st.acquire(s"m$i"))
+      assert(out.forall(_.isSuccess), s"m$i: ${out.filter(_.isFailure)}")
+      assert(out.count(_.get) == 1, s"m$i: winners ${out.count(_.get)}")
+    } finally pool.shutdown()
+  }
+
+  test("StateStore: concurrent markCompleted/markFailed on one id never collide; the last record parses") {
+    val st = new StateStore(tmpDir("state-race-mark"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val out = race(pool, 2)(_ => (0 until 1000).foreach { j =>
+        if (j % 2 == 0) st.markCompleted("m") else st.markFailed("m")
+      })
+      assert(out.forall(_.isSuccess), out.filter(_.isFailure).toString)
+    } finally pool.shutdown()
+    assert(st.get("m").exists(r => Set("completed", "failed")(r.state)))
   }
 
   test("StateStore.waitState: defer-poll-decide (ref state.go:45-66, server_test.go:149+)") {

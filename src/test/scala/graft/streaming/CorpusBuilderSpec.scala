@@ -576,12 +576,6 @@ class CorpusBuilderSpec extends SparkSpec {
       .toDF("doc_id", "text")
     assert(CorpusBuilder.appendNearDupNew(spark, neard, corpus, "doc_id",
       "text", nd, 1024L, 0.01, digestBuckets = 4) == 0L)
-    // second compactor skips while the lock is held (no double rewrite)
-    val lock = new graft.state.StateStore(s"$corpus/maintenance")
-    val held = lock.withLock("compact") {
-      CorpusBuilder.compactStores(spark, corpus)
-    }
-    assert(held.contains(Nil), "locked compactStores must skip, not run")
   }
 
   test("one live builder per corpus: a second build fails loudly; the lock releases on termination") {

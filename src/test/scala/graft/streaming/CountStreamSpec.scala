@@ -200,6 +200,17 @@ class CountStreamSpec extends SparkSpec {
       "the pointer swap stays atomic across shards")
   }
 
+  test("two first drains binding one fresh store at once: exactly one binds, the other fails on the lineage") {
+    val work = graft.util.Workspace.temp("lineage-race")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try (0 until 200).foreach { i =>
+      val out = race(pool, 2)(t => Lineage.bind(s"$work/store-$i", s"$work/ckpt$t", "count store"))
+      assert(out.count(_.isSuccess) == 1, s"store-$i: $out")
+      out.filter(_.isFailure).foreach(f => assert(
+        f.failed.get.getMessage.contains("bound to checkpoint lineage"), s"store-$i: $f"))
+    } finally pool.shutdown()
+  }
+
   test("a second checkpoint lineage fails loudly on BOTH disciplines; the original resumes") {
     val work = graft.util.Workspace.temp("countstream-lineage")
     def agg(b: org.apache.spark.sql.DataFrame) =

@@ -29,6 +29,17 @@ class SpanSpec extends SparkSpec {
     assert(spans == Seq(Some("a"), Some("a/b"), None))
   }
 
+  test("a job's trace label is its result stage's name, not a streaming query's description") {
+    def stage(id: Int, name: String) = new org.apache.spark.scheduler.StageInfo(
+      id, 0, name, 1, Nil, Nil, "", resourceProfileId = 0)
+    val props = new java.util.Properties()
+    props.setProperty("spark.job.description", "graft-corpus-builder-x")
+    val js = org.apache.spark.scheduler.SparkListenerJobStart(7, 0L,
+      Seq(stage(0, "map at Stage.scala:1"), stage(1, "count at Dedup.scala:1")), props)
+    assert(JobTraceListener.describe(js) == "count at Dedup.scala:1")
+    assert(JobTraceListener.describe(js.copy(stageInfos = Nil)) == "graft-corpus-builder-x")
+  }
+
   test("a job submitted from a pool thread carries the submitting span's path, not a stale one") {
     val sc = spark.sparkContext
     val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
