@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 
@@ -52,20 +52,26 @@ object BandIndex extends LsmIndex.Store("band index", "bands-meta.json",
       StructField("sig", ArrayType(LongType)),
       StructField("band_key", StringType)))
 
+  protected def keysOf(value: Column, spec: Spec): Column =
+    Dedup.bandKeys(value, spec.bands)
+
   /** Candidate pairs between a batch's `(id, sig)` rows and the stored
     * index: one row per colliding (new, corpus) pair with both
     * signatures for agreement scoring — [[Dedup.incrementalCandidates]]
-    * over the persisted store. The batch side is broadcast while it
-    * stays under `maxBroadcastRows` band rows (trigger-bounded
-    * micro-batches always do); a cap-less `AvailableNow` backfill over
-    * a big landing prefix would OOM the driver as an unconditional
-    * broadcast, so past it the join shuffles on `band_key` — the
-    * backfill already pays batch-sized I/O. */
+    * over the persisted store. `touched` is the batch's band buckets
+    * and band-row count (observed by the caller, or [[touched]]). The
+    * batch side is broadcast while it stays under `maxBroadcastRows`
+    * band rows (trigger-bounded micro-batches always do); a cap-less
+    * `AvailableNow` backfill over a big landing prefix would OOM the
+    * driver as an unconditional broadcast, so past it the join
+    * shuffles on `band_key` — the backfill already pays batch-sized
+    * I/O. */
   def probe(batchSigs: DataFrame, idCol: String, sigCol: String,
-      storeDir: String, spec: Spec,
+      storeDir: String, spec: Spec, touched: LsmIndex.Touched,
       maxBroadcastRows: Long = DefaultMaxBroadcastRows): DataFrame = {
     val (batch, store) = probeSides(project(batchSigs, idCol, sigCol, spec),
-      batchSigs.schema(idCol).dataType, storeDir, spec, maxBroadcastRows)(
+      batchSigs.schema(idCol).dataType, storeDir, spec, touched,
+      maxBroadcastRows)(
       col("doc").as("new_id"), col("sig").as("nsig"), col("band_key"))
     store.select(col("doc").as("corpus_id"), col("sig").as("csig"), col("band_key"))
       .join(batch, "band_key")

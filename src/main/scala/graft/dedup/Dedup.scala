@@ -134,18 +134,23 @@ object Dedup {
       // re-slice the k-long signature: an id-only caller (lshCandidates)
       // gets `sig` pruned away entirely by Catalyst, and the explode
       // emits bare (doc, band_key) rows.
-      .withColumn("__keys", {
-        val rowsPerBand = floor(size(col("sig")) / bands).cast(IntegerType)
-        transform(sequence(lit(0), lit(bands - 1)), band => {
-          // when k % bands != 0 the last band absorbs the k % bands
-          // remainder rows instead of silently dropping them (recall bug)
-          val len = when(band === bands - 1,
-            size(col("sig")) - rowsPerBand * (bands - 1)).otherwise(rowsPerBand)
-          concat(band.cast(StringType), lit(":"),
-            to_json(slice(col("sig"), band * rowsPerBand + 1, len)))
-        })
-      })
+      .withColumn("__keys", bandKeys(col("sig"), bands))
       .select(col("doc"), col("sig"), explode(col("__keys")).as("band_key"))
+
+  /** The `bands` LSH band keys of one signature, `"<band>:<json slice>"`
+    * — [[banded]]'s keys, and what the near-dup gate observes to find
+    * the band-index buckets a batch touches. */
+  def bandKeys(sig: Column, bands: Int): Column = {
+    val rowsPerBand = floor(size(sig) / bands).cast(IntegerType)
+    transform(sequence(lit(0), lit(bands - 1)), band => {
+      // when k % bands != 0 the last band absorbs the k % bands
+      // remainder rows instead of silently dropping them (recall bug)
+      val len = when(band === bands - 1,
+        size(sig) - rowsPerBand * (bands - 1)).otherwise(rowsPerBand)
+      concat(band.cast(StringType), lit(":"),
+        to_json(slice(sig, band * rowsPerBand + 1, len)))
+    })
+  }
 
   /** INCREMENTAL near-dup: candidates between a NEW batch and an
     * EXISTING corpus's stored band table — the production dedup shape.
@@ -188,43 +193,41 @@ object Dedup {
     val docs = df.select(col(idCol).as("doc"), tokens(col(textCol)).as("t"))
       .select(col("doc"),
         array_distinct(wordShinglesFastOf(df.sparkSession, col("t"), shingleK)).as("sh"))
-    // postings feed three plan branches (self-join ×2 + sizes); persist
-    // so shingling+explode runs once, not per branch. Released below —
-    // the function materializes its result eagerly (Materialize.eager) so
-    // no cached postings outlive the call (library hygiene: callers in
-    // long-lived sessions must not accumulate hidden caches).
-    val allPostings = docs.select(col("doc"), explode(col("sh")).as("s")).persist()
-    try {
-      // stopword-shingle cut: a shingle occurring in more than maxDocFreq
-      // docs contributes df² candidate pairs but near-zero signal — the
-      // standard inverted-index prune for corpus-scale all-pairs jaccard.
-      // Jaccard is then computed over the PRUNED shingle sets (both the
-      // intersection counts and the set sizes), keeping it a true metric.
-      val postings =
-        if (maxDocFreq == Int.MaxValue) allPostings
-        else {
-          val rare = allPostings.groupBy(col("s"))
-            .agg(count(lit(1)).as("df")).filter(col("df") <= maxDocFreq)
-            .select(col("s"))
-          allPostings.join(rare, "s")
-        }
-      val shared = postings.as("x").join(postings.as("y"), col("x.s") === col("y.s"))
-        .filter(col("x.doc") < col("y.doc"))
-        .groupBy(col("x.doc").as("a"), col("y.doc").as("b"))
-        .agg(count(lit(1)).as("inter"))
-      val sizes = postings.groupBy(col("doc")).agg(count(lit(1)).as("n"))
-      shared
-        .join(sizes.withColumnRenamed("doc", "a").withColumnRenamed("n", "na"), "a")
-        .join(sizes.withColumnRenamed("doc", "b").withColumnRenamed("n", "nb"), "b")
-        .withColumn("sim", col("inter").cast(DoubleType) /
-          (col("na") + col("nb") - col("inter")).cast(DoubleType))
-        .filter(col("sim") >= threshold)
-        .select(col("a"), col("b"), col("sim"))
-        // eager: pairs are output-sized; frees postings. Reliable
-        // checkpoint when the session has a checkpoint dir (survives
-        // executor loss), local otherwise — see [[graft.util.Materialize]].
-        .transform(graft.util.Materialize.eager)
-    } finally allPostings.unpersist()
+    // postings feed three plan branches (self-join ×2 + sizes):
+    // materialized once up front so shingling+explode runs once, not
+    // per branch — a cached frame would be filled by concurrent scan
+    // stages of the one plan, and would outlive the call
+    val allPostings = graft.util.Materialize.eager(
+      docs.select(col("doc"), explode(col("sh")).as("s")))
+    // stopword-shingle cut: a shingle occurring in more than maxDocFreq
+    // docs contributes df² candidate pairs but near-zero signal — the
+    // standard inverted-index prune for corpus-scale all-pairs jaccard.
+    // Jaccard is then computed over the PRUNED shingle sets (both the
+    // intersection counts and the set sizes), keeping it a true metric.
+    val postings =
+      if (maxDocFreq == Int.MaxValue) allPostings
+      else {
+        val rare = allPostings.groupBy(col("s"))
+          .agg(count(lit(1)).as("df")).filter(col("df") <= maxDocFreq)
+          .select(col("s"))
+        allPostings.join(rare, "s")
+      }
+    val shared = postings.as("x").join(postings.as("y"), col("x.s") === col("y.s"))
+      .filter(col("x.doc") < col("y.doc"))
+      .groupBy(col("x.doc").as("a"), col("y.doc").as("b"))
+      .agg(count(lit(1)).as("inter"))
+    val sizes = postings.groupBy(col("doc")).agg(count(lit(1)).as("n"))
+    shared
+      .join(sizes.withColumnRenamed("doc", "a").withColumnRenamed("n", "na"), "a")
+      .join(sizes.withColumnRenamed("doc", "b").withColumnRenamed("n", "nb"), "b")
+      .withColumn("sim", col("inter").cast(DoubleType) /
+        (col("na") + col("nb") - col("inter")).cast(DoubleType))
+      .filter(col("sim") >= threshold)
+      .select(col("a"), col("b"), col("sim"))
+      // eager: pairs are output-sized. Reliable checkpoint when the
+      // session has a checkpoint dir (survives executor loss), local
+      // otherwise — see [[graft.util.Materialize]].
+      .transform(graft.util.Materialize.eager)
   }
 
   /** ASYMMETRIC containment pairs: how much of doc `a`'s shingle set
@@ -250,26 +253,26 @@ object Dedup {
     val docs = df.select(col(idCol).as("doc"), tokens(col(textCol)).as("t"))
       .select(col("doc"),
         array_distinct(wordShinglesFastOf(df.sparkSession, col("t"), shingleK)).as("sh"))
-    val allPostings = docs.select(col("doc"), explode(col("sh")).as("s")).persist()
-    try {
-      val postings =
-        if (maxDocFreq == Int.MaxValue) allPostings
-        else allPostings.join(
-          allPostings.groupBy(col("s")).agg(count(lit(1)).as("df"))
-            .filter(col("df") <= maxDocFreq).select(col("s")), "s")
-      val shared = postings.as("x").join(postings.as("y"), col("x.s") === col("y.s"))
-        .filter(col("x.doc") =!= col("y.doc"))
-        .groupBy(col("x.doc").as("a"), col("y.doc").as("b"))
-        .agg(count(lit(1)).as("inter"))
-      val sizes = postings.groupBy(col("doc")).agg(count(lit(1)).as("n"))
-      shared
-        .join(sizes.withColumnRenamed("doc", "a").withColumnRenamed("n", "na"), "a")
-        .withColumn("containment",
-          col("inter").cast(DoubleType) / col("na").cast(DoubleType))
-        .filter(col("containment") >= threshold)
-        .select(col("a"), col("b"), col("containment"))
-        .transform(graft.util.Materialize.eager)
-    } finally allPostings.unpersist()
+    // read three times by one plan (see [[jaccardPairs]])
+    val allPostings = graft.util.Materialize.eager(
+      docs.select(col("doc"), explode(col("sh")).as("s")))
+    val postings =
+      if (maxDocFreq == Int.MaxValue) allPostings
+      else allPostings.join(
+        allPostings.groupBy(col("s")).agg(count(lit(1)).as("df"))
+          .filter(col("df") <= maxDocFreq).select(col("s")), "s")
+    val shared = postings.as("x").join(postings.as("y"), col("x.s") === col("y.s"))
+      .filter(col("x.doc") =!= col("y.doc"))
+      .groupBy(col("x.doc").as("a"), col("y.doc").as("b"))
+      .agg(count(lit(1)).as("inter"))
+    val sizes = postings.groupBy(col("doc")).agg(count(lit(1)).as("n"))
+    shared
+      .join(sizes.withColumnRenamed("doc", "a").withColumnRenamed("n", "na"), "a")
+      .withColumn("containment",
+        col("inter").cast(DoubleType) / col("na").cast(DoubleType))
+      .filter(col("containment") >= threshold)
+      .select(col("a"), col("b"), col("containment"))
+      .transform(graft.util.Materialize.eager)
   }
 
   /** Cross-document SHARED-SPAN pairs (boilerplate / quotation mining,
@@ -302,23 +305,23 @@ object Dedup {
       .select(col("doc"),
         call_function("graft_winnow",
           call_function("graft_shingles", col("t"), lit(shingleK)), lit(w)).as("fps"))
-    val allPostings = docs.select(col("doc"), explode(col("fps")).as("fp")).persist()
-    try {
-      val postings =
-        if (maxDocFreq == Int.MaxValue) allPostings
-        else {
-          val rare = allPostings.groupBy(col("fp"))
-            .agg(count(lit(1)).as("df")).filter(col("df") <= maxDocFreq)
-            .select(col("fp"))
-          allPostings.join(rare, "fp")
-        }
-      postings.as("x").join(postings.as("y"), col("x.fp") === col("y.fp"))
-        .filter(col("x.doc") < col("y.doc"))
-        .groupBy(col("x.doc").as("a"), col("y.doc").as("b"))
-        .agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= minShared)
-        .transform(graft.util.Materialize.eager)
-    } finally allPostings.unpersist()
+    // read at least twice by one plan (see [[jaccardPairs]])
+    val allPostings = graft.util.Materialize.eager(
+      docs.select(col("doc"), explode(col("fps")).as("fp")))
+    val postings =
+      if (maxDocFreq == Int.MaxValue) allPostings
+      else {
+        val rare = allPostings.groupBy(col("fp"))
+          .agg(count(lit(1)).as("df")).filter(col("df") <= maxDocFreq)
+          .select(col("fp"))
+        allPostings.join(rare, "fp")
+      }
+    postings.as("x").join(postings.as("y"), col("x.fp") === col("y.fp"))
+      .filter(col("x.doc") < col("y.doc"))
+      .groupBy(col("x.doc").as("a"), col("y.doc").as("b"))
+      .agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") >= minShared)
+      .transform(graft.util.Materialize.eager)
   }
 
   /** LSH-accelerated exact-threshold near-dup pairs — the 100 TB
@@ -655,24 +658,22 @@ object Dedup {
     * is linear in total grams at any corpus size. */
   def contamination(docs: DataFrame, evalPred: Column, k: Int = 13,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // persist the exploded grams: both branches (eval gram set + train
-    // flagging) read it, and the k-token concat per shingle is the
-    // expensive part — computing it twice measured 2× on the whole query
-    val grams = docs
+    // materialize the exploded grams once: both branches (eval gram set
+    // + train flagging) read them, and the k-token concat per shingle is
+    // the expensive part — computing it twice measured 2× on the whole
+    // query; a cache would be filled by both branches' scan stages at once
+    val grams = graft.util.Materialize.eager(docs
       .withColumn("__t", tokens(col(textCol)))
       .withColumn("gram", explode(wordShinglesFastOf(docs.sparkSession, col("__t"), k)))
-      .select(col(idCol), col("gram"), evalPred.as("__eval"))
-      .persist()
-    try {
-      val evalGrams = grams.filter(col("__eval")).select("gram").distinct()
-      grams.filter(!col("__eval"))
-        .join(broadcast(evalGrams), "gram")
-        .groupBy(col(idCol))
-        .agg(countDistinct(col("gram")).as("n_shared"))
-        // eager: per-doc counts; frees the gram cache (checkpoint mode
-        // follows the session — [[graft.util.Materialize]])
-        .transform(graft.util.Materialize.eager)
-    } finally grams.unpersist()
+      .select(col(idCol), col("gram"), evalPred.as("__eval")))
+    val evalGrams = grams.filter(col("__eval")).select("gram").distinct()
+    grams.filter(!col("__eval"))
+      .join(broadcast(evalGrams), "gram")
+      .groupBy(col(idCol))
+      .agg(countDistinct(col("gram")).as("n_shared"))
+      // eager: per-doc counts (checkpoint mode follows the session —
+      // [[graft.util.Materialize]])
+      .transform(graft.util.Materialize.eager)
   }
 
   /** FUZZY train/eval decontamination — [[contamination]]'s hygiene
@@ -708,17 +709,17 @@ object Dedup {
   def fuzzyContamination(docs: DataFrame, evalPred: Column,
       shingleK: Int = 3, w: Int = 4, minShared: Int = 2,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val fps = winnowFps(docs, shingleK, w, idCol, textCol,
-      extra = Seq(evalPred.as("__eval"))).persist()
-    try {
-      val evalFps = fps.filter(col("__eval")).select("fp").distinct()
-      fps.filter(!col("__eval"))
-        .join(broadcast(evalFps), "fp")
-        .groupBy(col(idCol))
-        .agg(count(lit(1)).as("n_shared")) // fps already distinct per doc
-        .filter(col("n_shared") >= minShared)
-        .transform(graft.util.Materialize.eager)
-    } finally fps.unpersist()
+    // read by both join sides: materialized once up front — a cached
+    // frame would be filled by two concurrent scan stages of one plan
+    val fps = graft.util.Materialize.eager(winnowFps(docs, shingleK, w, idCol,
+      textCol, extra = Seq(evalPred.as("__eval"))))
+    val evalFps = fps.filter(col("__eval")).select("fp").distinct()
+    fps.filter(!col("__eval"))
+      .join(broadcast(evalFps), "fp")
+      .groupBy(col(idCol))
+      .agg(count(lit(1)).as("n_shared")) // fps already distinct per doc
+      .filter(col("n_shared") >= minShared)
+      .transform(graft.util.Materialize.eager)
   }
 
   /** Freeze the eval partition's winnowed-fingerprint set as a model
@@ -787,28 +788,33 @@ object Dedup {
     * automaton approach but in three codegen'd relational stages. */
   def stripDuplicateSpans(docs: DataFrame, k: Int,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
-    // both cached: toks feeds three consumers (postings, the rebuild's
-    // posexplode, the final n_tokens select — one source scan +
-    // tokenize instead of three), grams feeds two (duplicate agg, flag
-    // join) and the k-token concat is the expensive part
-    val toks = docs.select(col(idCol), tokens(col(textCol)).as("__t")).persist()
-    // postings (doc, pos, gram); staged __t keeps the shingle HOF bound
-    // (the *Of contract) and the posexplode input un-reinlined
-    val grams = toks
-      .withColumn("__sh", wordShinglesFastOf(spark, col("__t"), k))
-      .select(col(idCol), posexplode(col("__sh")).as(Seq("pos", "gram")))
-      .persist()
-    try {
-      val dup = grams.groupBy("gram")
-        .agg(min(col(idCol)).as("__keep"), countDistinct(col(idCol)).as("__nd"))
-        .filter(col("__nd") >= 2)
-        .select(col("gram"), col("__keep"))
-      val flagged = grams.join(dup, "gram")
-        .filter(col(idCol) =!= col("__keep"))
-        .select(col(idCol), col("pos"))
-      rebuildWithoutSpans(toks, flagged, k, idCol)
-    } finally { grams.unpersist(); toks.unpersist() }
+    val (toks, grams) = tokensAndGrams(docs, k, idCol, textCol)
+    val dup = grams.groupBy("gram")
+      .agg(min(col(idCol)).as("__keep"), countDistinct(col(idCol)).as("__nd"))
+      .filter(col("__nd") >= 2)
+      .select(col("gram"), col("__keep"))
+    val flagged = grams.join(dup, "gram")
+      .filter(col(idCol) =!= col("__keep"))
+      .select(col(idCol), col("pos"))
+    rebuildWithoutSpans(toks, flagged, k, idCol)
+  }
+
+  /** The span strippers' two shared frames, each materialized once:
+    * `toks` feeds three consumers (postings, the rebuild's posexplode,
+    * the final n_tokens select — one source scan + tokenize instead of
+    * three), `grams` (doc, pos, gram) two (duplicate agg, flag join),
+    * and the k-token concat is the expensive part. Materialized up
+    * front rather than cached: a cached frame read twice by one plan is
+    * filled by two concurrent scan stages. The staged `__t` keeps the
+    * shingle HOF bound (the *Of contract) and the posexplode input
+    * un-reinlined. */
+  private def tokensAndGrams(docs: DataFrame, k: Int, idCol: String,
+      textCol: String): (DataFrame, DataFrame) = {
+    val toks = graft.util.Materialize.eager(
+      docs.select(col(idCol), tokens(col(textCol)).as("__t")))
+    (toks, graft.util.Materialize.eager(toks
+      .withColumn("__sh", wordShinglesFastOf(docs.sparkSession, col("__t"), k))
+      .select(col(idCol), posexplode(col("__sh")).as(Seq("pos", "gram")))))
   }
 
   /** Shared tail of the span strippers: union the flagged [pos, pos+k)
@@ -848,22 +854,15 @@ object Dedup {
     * group is bounded by its own document's length). */
   def stripIntraDocRepeats(docs: DataFrame, k: Int,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
-    val toks = docs.select(col(idCol), tokens(col(textCol)).as("__t")).persist()
-    val grams = toks
-      .withColumn("__sh", wordShinglesFastOf(spark, col("__t"), k))
-      .select(col(idCol), posexplode(col("__sh")).as(Seq("pos", "gram")))
-      .persist()
-    try {
-      val dup = grams.groupBy(col(idCol), col("gram"))
-        .agg(min(col("pos")).as("__first"), count(lit(1)).as("__n"))
-        .filter(col("__n") >= 2)
-        .select(col(idCol), col("gram"), col("__first"))
-      val flagged = grams.join(dup, Seq(idCol, "gram"))
-        .filter(col("pos") > col("__first"))
-        .select(col(idCol), col("pos"))
-      rebuildWithoutSpans(toks, flagged, k, idCol)
-    } finally { grams.unpersist(); toks.unpersist() }
+    val (toks, grams) = tokensAndGrams(docs, k, idCol, textCol)
+    val dup = grams.groupBy(col(idCol), col("gram"))
+      .agg(min(col("pos")).as("__first"), count(lit(1)).as("__n"))
+      .filter(col("__n") >= 2)
+      .select(col(idCol), col("gram"), col("__first"))
+    val flagged = grams.join(dup, Seq(idCol, "gram"))
+      .filter(col("pos") > col("__first"))
+      .select(col(idCol), col("pos"))
+    rebuildWithoutSpans(toks, flagged, k, idCol)
   }
 
   /** Bloom filter over a corpus' content digests — the STORED half of
@@ -986,22 +985,29 @@ object Dedup {
     *
     * The result: zero corpus-table reads on the hot path, one
     * candidate-gated read on replay — versus the corpus-wide verify
-    * scan [[bloomNewDocs]] pays on every batch with a probe hit. */
+    * scan [[bloomNewDocs]] pays on every batch with a probe hit.
+    * `touched` is the candidates' digest buckets and row count, as the
+    * caller observed them; None takes [[DigestIndex.touched]]. The
+    * probe's matches are materialized once with their same-id count
+    * observed, so the steady state learns it has nothing to resolve
+    * without another job. */
   private[graft] def indexedDupDigests(candidates: DataFrame, idCol: String,
       digestCol: String, storeDir: String, spec: DigestIndex.Spec,
-      corpusDigests: => DataFrame): DataFrame = {
-    // output-sized (≤ candidate digests); consumed by two branches +
-    // an isEmpty — materialize once
-    val m = graft.util.Materialize.eager(
-      DigestIndex.probe(candidates, idCol, digestCol, storeDir, spec))
-    val trueDups = m.filter(!(col("corpus_id") <=> col("new_id")))
-      .select(col("digest"))
-    val self = m.filter(col("corpus_id") <=> col("new_id"))
-      .select(col("digest")).distinct()
+      corpusDigests: => DataFrame,
+      touched: Option[LsmIndex.Touched] = None): DataFrame = {
+    val t = touched.getOrElse(DigestIndex.touched(candidates, digestCol, spec))
+    val sameId = col("corpus_id") <=> col("new_id")
+    val (m, seen) = graft.util.Materialize.observed(
+      DigestIndex.probe(candidates, idCol, digestCol, storeDir, spec, t),
+      count(when(sameId, 1)).as("same_id"))
+    val trueDups = m.filter(!sameId).select(col("digest"))
     val resolved =
-      if (self.isEmpty) self // steady state: no corpus read at all
-      else corpusDigests.join(broadcast(self), Seq("digest"), "left_semi")
-    trueDups.union(resolved).distinct().select(col("digest").as("__dup"))
+      if (seen("same_id") == 0L) Nil // steady state: no corpus read at all
+      else Seq(corpusDigests.join(
+        broadcast(m.filter(sameId).select(col("digest")).distinct()),
+        Seq("digest"), "left_semi"))
+    (trueDups +: resolved).reduce(_ union _).distinct()
+      .select(col("digest").as("__dup"))
   }
 
   // ---- content-defined chunking (CDC) ----

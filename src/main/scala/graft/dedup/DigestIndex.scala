@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
@@ -64,21 +64,25 @@ object DigestIndex extends LsmIndex.Store("digest index", "digests-meta.json",
   protected def flatSchema(idType: DataType): StructType =
     StructType(Seq(StructField("doc", idType), StructField("digest", StringType)))
 
+  protected def keysOf(value: Column, spec: Spec): Column = array(value)
+
   /** Matches between a batch's candidate `(id, digest)` rows and the
-    * stored index: one row per (digest, new_id, corpus_id) triple. The
-    * candidates' touched buckets arrive as `PartitionFilters` on the
+    * stored index: one row per (digest, new_id, corpus_id) triple.
+    * `touched` is the candidates' (observed by the caller, or
+    * [[touched]]): its buckets arrive as `PartitionFilters` on the
     * compacted bulks plus the flat run tail, and the candidate side is
     * broadcast — bloom-hit candidates are batch-bounded in steady
     * state, but a cap-less backfill whose content is mostly duplicates
     * can make them batch-SIZED, hence the `maxBroadcastRows` guard.
     * Callers classify matches via [[Dedup.indexedDupDigests]]. */
   def probe(candidates: DataFrame, idCol: String, digestCol: String,
-      storeDir: String, spec: Spec,
+      storeDir: String, spec: Spec, touched: LsmIndex.Touched,
       maxBroadcastRows: Long = DefaultMaxBroadcastRows): DataFrame = {
     val (batch, store) = probeSides(
       candidates.select(col(idCol).as("new_id"), col(digestCol).as("digest"))
         .distinct(),
-      candidates.schema(idCol).dataType, storeDir, spec, maxBroadcastRows)(
+      candidates.schema(idCol).dataType, storeDir, spec, touched,
+      maxBroadcastRows)(
       col("new_id"), col("digest"))
     store.select(col("doc").as("corpus_id"), col("digest"))
       .join(batch, "digest")

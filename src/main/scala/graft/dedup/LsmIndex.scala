@@ -53,6 +53,23 @@ private[graft] object LsmIndex {
   /** Fresh-store state (first append / rebuild target). */
   val Empty: State = State(0L, Nil, Nil)
 
+  /** What a probe needs of its batch side: the key buckets it touches
+    * (the store read's prune list) and its key-row count (the broadcast
+    * guard), observed where the batch is materialized. */
+  final case class Touched(buckets: Seq[Int], rows: Long)
+
+  object Touched {
+    /** Read back the metrics [[Store.touchedMetrics]] named `name`: bit
+      * `i` of word `w` is bucket `64 * w + i`. */
+    def of(metrics: Map[String, Any], name: String): Touched = {
+      // a word over no rows is null
+      val words = Iterator.from(0).map(w => s"${name}_bits$w").takeWhile(metrics.contains)
+        .map(k => Option(metrics(k)).fold(0L)(_.asInstanceOf[Long])).toArray
+      Touched(scala.collection.immutable.BitSet.fromBitMaskNoCopy(words).toSeq,
+        metrics(s"${name}_rows").asInstanceOf[Long])
+    }
+  }
+
   /** Meta-fragment renderer — the index's own spec fields prefix it. */
   private def render(st: State): String = {
     def arr(xs: Seq[String]) = xs.map(x => s""""$x"""").mkString(",")
@@ -113,7 +130,8 @@ private[graft] object LsmIndex {
     * damage) fails loudly, naming the store.
     *
     * An instance supplies its `Spec` type, the row projection
-    * ([[project]]) with its flat schema, and its probe's final join. */
+    * ([[project]]) with its flat schema, the keys of one stored value
+    * ([[keysOf]]), and its probe's final join. */
   abstract class Store(kind: String, metaFile: String, val BucketCol: String,
       keyCol: String, fieldNames: Seq[String]) {
     type Spec <: LsmIndex.Spec
@@ -171,8 +189,37 @@ private[graft] object LsmIndex {
         case (active, st) if active == spec => st
       }
 
-    private def bucketOf(spec: Spec): Column =
-      pmod(xxhash64(col(keyCol)), lit(spec.buckets.toLong)).cast(IntegerType)
+    /** The layout's directory bucket of one key. */
+    private def bucketOf(key: Column, spec: Spec): Column =
+      pmod(xxhash64(key), lit(spec.buckets.toLong)).cast(IntegerType)
+
+    /** The index keys of one stored value (a digest is its own key; a
+      * signature has one band key per band). */
+    protected def keysOf(value: Column, spec: Spec): Column
+
+    /** Observed metrics (see [[graft.util.Materialize.observed]]) that
+      * give a probe its [[Touched]]: over the rows of the frame they
+      * observe whose `value` is not null, the key buckets touched and
+      * the key-row count, named `<name>_bits<w>` and `<name>_rows`. The
+      * buckets are one bit each, OR-ed over the rows in 64-bucket words,
+      * so the metrics stay bucket-sized however many rows a cap-less
+      * backfill's batch holds. */
+    def touchedMetrics(value: Column, spec: Spec, name: String): Seq[Column] = {
+      val buckets = transform(keysOf(value, spec), bucketOf(_, spec))
+      (0 until (spec.buckets + 63) / 64).map { w =>
+        bit_or(when(value.isNotNull, aggregate(buckets, lit(0L), (bits, b) =>
+          bits.bitwiseOR(when(b >= 64 * w && b < 64 * (w + 1),
+            call_function("shiftleft", lit(1L), b - 64 * w)).otherwise(0L)))))
+          .as(s"${name}_bits$w")
+      } :+ coalesce(sum(when(value.isNotNull, size(buckets))), lit(0L))
+        .as(s"${name}_rows")
+    }
+
+    /** The [[Touched]] of a `valueCol` frame that no materialization of
+      * the caller observes: one observed materialization. */
+    def touched(rows: DataFrame, valueCol: String, spec: Spec): Touched =
+      Touched.of(graft.util.Materialize.observed(rows.select(col(valueCol)),
+        touchedMetrics(col(valueCol), spec, "t"): _*)._2, "t")
 
     private def layoutPath(storeDir: String, spec: Spec): String =
       new Path(storeDir, spec.layoutDir).toString
@@ -246,7 +293,7 @@ private[graft] object LsmIndex {
       if (fs.exists(layout)) fs.delete(layout, true)
       val bulk = "compact-0"
       writeBulk(project(rows, idCol, valueCol, spec), s"$layout/$bulk",
-        BucketCol, bucketOf(spec))
+        BucketCol, bucketOf(col(keyCol), spec))
       // an empty corpus writes zero rows; the bulk dir must still exist
       // so the probe's explicit-schema read sees "empty", not "lost"
       if (!fs.exists(new Path(layout, bulk))) fs.mkdirs(new Path(layout, bulk))
@@ -268,7 +315,7 @@ private[graft] object LsmIndex {
         .filter { case (spec, _) => layoutExists(spark, storeDir, spec) }
         .map { case (spec, st) =>
           val layout = layoutPath(storeDir, spec)
-          spec -> compactStep(spark, layout, st, BucketCol, bucketOf(spec),
+          spec -> compactStep(spark, layout, st, BucketCol, bucketOf(col(keyCol), spec),
             minRuns, maxBulks).map { next =>
               commit(spark, storeDir, spec, next, None) // same layout: nothing superseded
               sweep(spark, layout, next)
@@ -276,32 +323,28 @@ private[graft] object LsmIndex {
             }
         }
 
-    /** The probe prelude: the batch's store-shaped `rows` (carrying
-      * `keyCol`) bucketed and materialized once — consumed twice, bucket
-      * list and join side — then ONE metadata-sized job (≤ buckets rows)
-      * that serves both the bucket prune list and the broadcast guard's
-      * row count. Returns (the batch side as `batchCols`, broadcast
-      * while it holds at most `maxBroadcastRows` rows; the live store
-      * read pruned to the touched buckets). Past the threshold the join
-      * falls back to a shuffle on the key — a cap-less backfill can
-      * make the batch side batch-SIZED, and AQE may still pick a
-      * broadcast from actual sizes, the safe version of the hint. */
+    /** The probe's two sides: the batch's store-shaped `rows` (carrying
+      * `keyCol`) as `batchCols`, broadcast while `touched.rows` is at
+      * most `maxBroadcastRows`, and the live store read pruned to
+      * `touched.buckets`. Nothing runs here: the caller observed
+      * `touched` on a materialization it makes anyway. Past the
+      * threshold the join falls back to a shuffle on the key — a
+      * cap-less backfill can make the batch side batch-SIZED, and AQE
+      * may still pick a broadcast from actual sizes, the safe version of
+      * the hint. `touched.rows` may count rows a later `distinct` drops:
+      * an upper bound, so the hint can only switch off early. */
     protected def probeSides(rows: DataFrame, idType: DataType,
-        storeDir: String, spec: Spec, maxBroadcastRows: Long)(
+        storeDir: String, spec: Spec, touched: Touched, maxBroadcastRows: Long)(
         batchCols: Column*): (DataFrame, DataFrame) = {
       val spark = rows.sparkSession
       val st = activeState(spark, storeDir, spec).getOrElse(sys.error(
         s"no active $kind at $storeDir for ${spec.layoutDir} — rebuild it " +
           "from the corpus first"))
-      val n = graft.util.Materialize.eager(rows.withColumn(BucketCol, bucketOf(spec)))
-      val perBucket = n.groupBy(BucketCol).count().collect()
-      val touched = perBucket.map(_.getInt(0)).toIndexedSeq
-      val batchSide = n.select(batchCols: _*)
+      val batchSide = rows.select(batchCols: _*)
       val guarded =
-        if (perBucket.map(_.getLong(1)).sum <= maxBroadcastRows) broadcast(batchSide)
-        else batchSide
+        if (touched.rows <= maxBroadcastRows) broadcast(batchSide) else batchSide
       (guarded, readLive(spark, layoutPath(storeDir, spec), st,
-        flatSchema(idType), BucketCol, Some(touched)))
+        flatSchema(idType), BucketCol, Some(touched.buckets)))
     }
   }
 

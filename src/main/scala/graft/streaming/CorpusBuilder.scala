@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.{BandIndex, Dedup, DigestIndex, LsmIndex}
-import graft.util.{FileCommit, Span}
+import graft.util.{FileCommit, Materialize, Span}
 
 /** Continuously build an exact-deduped corpus from a landing stream —
   * the streaming face of the incremental-dedup family (q52 band table,
@@ -388,7 +388,14 @@ object CorpusBuilder {
   }
 
   /** One batch of the build (also usable directly for batch-incremental
-    * corpus maintenance). Returns the number of docs appended. */
+    * corpus maintenance). Returns the number of docs appended.
+    *
+    * Three materializations per batch with a stored corpus, and no
+    * other action before the commit: the digest-keyed batch, observing
+    * the bloom hits' digest buckets and count (the index probe's
+    * [[LsmIndex.Touched]]); the probe's matches
+    * ([[Dedup.indexedDupDigests]]); the survivors, observing their
+    * count. */
   def appendNew(spark: SparkSession, batch: DataFrame, corpusDir: String,
       idCol: String, textCol: String,
       expectedItems: Long, fpp: Double,
@@ -410,28 +417,36 @@ object CorpusBuilder {
     }
     // no corpus yet → no probe: everything is new
     val probe = stored.filter(_ => idxReady).map(Dedup.broadcastFilter(spark, _))
-    // survivors are consumed by filter build, index append, docs
-    // append and count — materialize once; output-sized. The
-    // materialized frame no longer needs the filter: release it now
-    val staged = try Span("stage") {
+    // survivors are consumed by filter build, index append and docs
+    // append — materialized once, output-sized, with their count
+    // observed. The materialized frame no longer needs the filter:
+    // release it now
+    val (staged, appended) = try Span("stage") {
       // verify probe-hit candidates against the digest INDEX (bucket-
       // pruned, batch-sized I/O), not the corpus-wide digest column;
       // the corpus itself is consulted only for same-id matches — see
       // [[Dedup.indexedDupDigests]]
-      val fresh = probe.fold(keyed) { bf =>
-        val hits = keyed.filter(Dedup.bloomProbe(bf, xxhash64(col(DigestCol))))
-        val dup = Dedup.indexedDupDigests(hits.select(col(idCol), col(DigestCol)),
-          idCol, DigestCol, corpusDir, idxSpec, corpusDigests(spark, docsDir))
-        keyed.join(broadcast(dup), col(DigestCol) === col("__dup"), "left_anti")
-      }
-      graft.util.Materialize.eager(fresh)
+      counted(probe.fold(keyed) { bf =>
+        val hit = Dedup.bloomProbe(bf, xxhash64(col(DigestCol)))
+        val (k, seen) = Materialize.observed(keyed,
+          DigestIndex.touchedMetrics(when(hit, col(DigestCol)), idxSpec, "hits"): _*)
+        val dup = Dedup.indexedDupDigests(k.filter(hit).select(col(idCol), col(DigestCol)),
+          idCol, DigestCol, corpusDir, idxSpec, corpusDigests(spark, docsDir),
+          Some(LsmIndex.Touched.of(seen, "hits")))
+        k.join(broadcast(dup), col(DigestCol) === col("__dup"), "left_anti")
+      })
     } finally probe.foreach(_.destroy())
-    val appended = staged.count()
     if (appended > 0)
       Span("commit")(
         commitBatch(spark, staged, docsDir, bloomPath, stored, expectedItems,
           fpp, corpusDir, idCol, idxSpec, lockToken, appended))
     appended
+  }
+
+  /** `df` materialized with its row count observed. */
+  private def counted(df: DataFrame): (DataFrame, Long) = {
+    val (m, seen) = Materialize.observed(df, count(lit(1)).as("rows"))
+    (m, seen("rows").asInstanceOf[Long])
   }
 
   /** Resolve an index store against the corpus — rebuild-or-trust.
@@ -589,7 +604,15 @@ object CorpusBuilder {
     *
     * Docs too short to shingle (< shingleK tokens) carry a null
     * signature and are gated by exact content only. Needs a
-    * GraftExtensions session (native shingle/minhash kernels). */
+    * GraftExtensions session (native shingle/minhash kernels).
+    *
+    * Three materializations per batch with a stored corpus, and no
+    * other action before the commit: the stage (digest and signature),
+    * observing both probes' [[LsmIndex.Touched]] — the bloom hits'
+    * digest buckets and count, the signatures' band buckets and band
+    * rows; the digest probe's matches ([[Dedup.indexedDupDigests]]);
+    * the survivors, observing their count. So the derived stores
+    * resolve, and the bloom broadcast exists, before the stage runs. */
   def appendNearDupNew(spark: SparkSession, batch: DataFrame, corpusDir: String,
       idCol: String, textCol: String, nd: NearDup,
       expectedItems: Long = 1L << 20, fpp: Double = 0.01,
@@ -603,26 +626,7 @@ object CorpusBuilder {
     val minMatches = math.ceil(nd.minAgree * nd.k).toInt
     def agrees(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       Dedup.sigMatches(a, b) >= minMatches
-    // one projection computes digest + signature; consumed by several
-    // gates below — materialize once, batch-sized
-    // (null text rejected, not gated — see class doc)
-    val staged = Span("stage")(graft.util.Materialize.eager(
-      Dedup.exact(batch.filter(col(textCol).isNotNull), textCol, idCol)
-        .withColumn(DigestCol, Dedup.contentKey(col(textCol)))
-        .withColumn("__t", tokens(col(textCol)))
-        .withColumn(SigCol, when(size(col("__t")) >= nd.shingleK,
-          call_function("graft_minhash_mix",
-            array_distinct(call_function("graft_shingles", col("__t"), lit(nd.shingleK))),
-            lit(nd.k))))
-        .drop("__t")))
-    val batchSigs = staged.filter(col(SigCol).isNotNull)
-      .select(col(idCol), col(SigCol))
-    // within-batch: drop the larger id of any agreeing pair (canonical
-    // min-id per near-dup pair — pair-greedy, deterministic)
-    val withinDrop = Dedup.lshCandidatesWithSigs(batchSigs, idCol, SigCol, nd.bands)
-      .filter(agrees(col("siga"), col("sigb")))
-      .select(col("b").as("__drop"))
-    // the derived stores resolve BEFORE the gate (rebuild on resize /
+    // the derived stores resolve BEFORE the stage (rebuild on resize /
     // loss), and the gate and commit share them
     val bloomPath = Paths.get(corpusDir, "bloom.bin")
     val bandSpec = BandIndex.Spec(nd.bands, nd.indexBuckets)
@@ -646,28 +650,51 @@ object CorpusBuilder {
     }
     // the gate's probe filter, released once `fresh` is materialized
     val probe = if (hasDocs) stored.map(Dedup.broadcastFilter(spark, _)) else None
-    val fresh = try Span("gate") {
-      val corpusDrops: Seq[DataFrame] =
-        if (!hasDocs) Nil
-        else {
+    val hit = probe.map(bf => Dedup.bloomProbe(bf, xxhash64(col(DigestCol))))
+    val (fresh, appended) = try {
+      // one projection computes digest + signature; consumed by several
+      // gates below — materialize once, batch-sized, observing what the
+      // probes need of it (null text rejected, not gated — see class doc)
+      val (staged, seen) = Span("stage")(Materialize.observed(
+        Dedup.exact(batch.filter(col(textCol).isNotNull), textCol, idCol)
+          .withColumn(DigestCol, Dedup.contentKey(col(textCol)))
+          .withColumn("__t", tokens(col(textCol)))
+          .withColumn(SigCol, when(size(col("__t")) >= nd.shingleK,
+            call_function("graft_minhash_mix",
+              array_distinct(call_function("graft_shingles", col("__t"), lit(nd.shingleK))),
+              lit(nd.k))))
+          .drop("__t"),
+        hit.toSeq.flatMap(h =>
+          DigestIndex.touchedMetrics(when(h, col(DigestCol)), idxSpec, "hits")) ++
+          (if (bandReady) BandIndex.touchedMetrics(col(SigCol), bandSpec, "bands")
+           else Nil): _*))
+      val batchSigs = staged.filter(col(SigCol).isNotNull)
+        .select(col(idCol), col(SigCol))
+      // within-batch: drop the larger id of any agreeing pair (canonical
+      // min-id per near-dup pair — pair-greedy, deterministic)
+      val withinDrop = Dedup.lshCandidatesWithSigs(batchSigs, idCol, SigCol, nd.bands)
+        .filter(agrees(col("siga"), col("sigb")))
+        .select(col("b").as("__drop"))
+      Span("gate") {
+        val corpusDrops: Seq[DataFrame] = hit.toSeq.flatMap { h =>
           // EXACT pre-gate: bloom probe routes — only probe-hit digests
           // (batch-sized) reach the verify step, and the verify reads the
           // bucket-pruned digest INDEX, not the corpus digest column
           // (the [[Dedup.bloomNewDocsIndexed]] contract, kept here in
           // drop-id shape; same-id matches fall back to the corpus —
           // see [[Dedup.indexedDupDigests]])
-          val hits =
-            staged.filter(Dedup.bloomProbe(probe.get, xxhash64(col(DigestCol))))
           val dup = Dedup.indexedDupDigests(
-            hits.select(col(idCol), col(DigestCol)), idCol, DigestCol,
-            corpusDir, idxSpec, corpusDigests(spark, docsDir))
+            staged.filter(h).select(col(idCol), col(DigestCol)), idCol, DigestCol,
+            corpusDir, idxSpec, corpusDigests(spark, docsDir),
+            Some(LsmIndex.Touched.of(seen, "hits")))
           val exactDrop = staged
             .join(broadcast(dup), col(DigestCol) === col("__dup"), "left_semi")
             .select(col(idCol).as("__drop"))
           val nearDrop =
             if (!bandReady) Nil
             else {
-              val cands = BandIndex.probe(batchSigs, idCol, SigCol, corpusDir, bandSpec)
+              val cands = BandIndex.probe(batchSigs, idCol, SigCol, corpusDir, bandSpec,
+                  LsmIndex.Touched.of(seen, "bands"))
                 .filter(agrees(col("nsig"), col("csig")))
               // ghost absorb — see scaladoc: a candidate (id, sig)-equal
               // to a batch row is this batch's own crash-window ghost
@@ -680,11 +707,11 @@ object CorpusBuilder {
             }
           exactDrop +: nearDrop
         }
-      val drops = (withinDrop +: corpusDrops).reduce(_ union _).distinct()
-      graft.util.Materialize.eager(
-        staged.join(broadcast(drops), col(idCol) === col("__drop"), "left_anti"))
+        // a drop listed twice is harmless: it only feeds an anti-join
+        val drops = (withinDrop +: corpusDrops).reduce(_ union _)
+        counted(staged.join(broadcast(drops), col(idCol) === col("__drop"), "left_anti"))
+      }
     } finally probe.foreach(_.destroy())
-    val appended = fresh.count()
     if (appended > 0) Span("commit") {
       // commit order: {bloom, digest index, band index} → docs
       // (superset invariant for every derived store — each must be

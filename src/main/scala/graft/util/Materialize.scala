@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 
 /** Eager materialization with lineage truncation for output-sized
   * intermediates (candidate edges, dedup pairs, per-doc counts): the
@@ -27,6 +27,12 @@ import org.apache.spark.sql.DataFrame
   * GraftSession; Spark's default leaves them on disk) — sessions built
   * elsewhere should set it too, or clear the checkpoint dir between
   * runs.
+  *
+  * [[observed]] takes the same checkpoint with `Dataset.observe`
+  * metrics attached: aggregates over exactly the rows the checkpoint
+  * computes, delivered with it — no job of their own. A gate that needs
+  * a count or a touched-bucket set of a frame it materializes anyway
+  * reads them there instead of running a second action.
   */
 object Materialize {
   def eager(df: DataFrame): DataFrame =
@@ -40,4 +46,16 @@ object Materialize {
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try df.checkpoint() finally df.unpersist(blocking = false)
     } else df.localCheckpoint()
+
+  /** [[eager]] with `metrics` (named aggregate columns) observed on the
+    * materialization: returns the checkpointed frame and the metric
+    * values by name. A fresh uniquely named `Observation` per call;
+    * no metrics is plain [[eager]]. */
+  def observed(df: DataFrame, metrics: Column*): (DataFrame, Map[String, Any]) =
+    if (metrics.isEmpty) (eager(df), Map.empty)
+    else {
+      val obs = Observation()
+      val m = eager(df.observe(obs, metrics.head, metrics.tail: _*))
+      (m, obs.get)
+    }
 }

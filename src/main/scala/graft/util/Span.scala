@@ -14,9 +14,18 @@ import org.apache.spark.sql.SparkSession
   * as [[JobTraceListener]] charges each job to the span that started
   * it. Pool threads keep the local properties of the thread that
   * created them: a step handed to a pool re-sets the submitter's path
-  * with [[graft.streaming.ClusterStream.withJobGroup]]. */
+  * with [[graft.streaming.ClusterStream.withJobGroup]].
+  *
+  * The body's jobs also carry the leaf `name` as their short call site
+  * (`callSite.short`, restored the same way), so a job and stage label
+  * reads `gate` or `stage` even inside a streaming drain, where Spark
+  * would label every job with the query's `start` line. The long call
+  * site, which stack-based attribution reads, is left alone. */
 object Span {
   val Key = "graft.span"
+
+  /** Spark's local property for the short call site (`CallSite.SHORT_FORM`). */
+  private val ShortSite = "callSite.short"
 
   private[util] val log = org.slf4j.LoggerFactory.getLogger(Key)
 
@@ -24,12 +33,15 @@ object Span {
     val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(_.sparkContext)
     val parent = sc.flatMap(c => Option(c.getLocalProperty(Key)))
+    val site = sc.map(_.getLocalProperty(ShortSite)).orNull
     val path = parent.fold(name)(p => s"$p/$name")
-    sc.foreach(_.setLocalProperty(Key, path))
+    sc.foreach { c => c.setLocalProperty(Key, path); c.setLocalProperty(ShortSite, name) }
     val t0 = System.nanoTime()
     try body
     finally {
-      sc.foreach(_.setLocalProperty(Key, parent.orNull))
+      sc.foreach { c =>
+        c.setLocalProperty(Key, parent.orNull); c.setLocalProperty(ShortSite, site)
+      }
       if (log.isInfoEnabled) log.info(f"$path ${(System.nanoTime() - t0) / 1e9}%.3f")
     }
   }

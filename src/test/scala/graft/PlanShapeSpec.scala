@@ -64,7 +64,8 @@ class PlanShapeSpec extends SparkSpec {
       (i, (1 to 40).map(j => s"w${i}_$j").mkString(" "))))
     BandIndex.rebuild(corpusSigs, "doc_id", "sig", dir, spec)
     val batchSigs = sigged(Seq((100L, (1 to 40).map(j => s"w5_$j").mkString(" "))))
-    val probe = BandIndex.probe(batchSigs, "doc_id", "sig", dir, spec)
+    val probe = BandIndex.probe(batchSigs, "doc_id", "sig", dir, spec,
+      BandIndex.touched(batchSigs, "sig", spec))
     val plan = formatted(probe)
     val scanPart = plan.linesIterator
       .filter(_.trim.startsWith("PartitionFilters:")).mkString("\n")
@@ -90,12 +91,13 @@ class PlanShapeSpec extends SparkSpec {
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val guarded = BandIndex.probe(batchSigs, "doc_id", "sig", dir, spec,
-        maxBroadcastRows = 0L)
+        BandIndex.touched(batchSigs, "sig", spec), maxBroadcastRows = 0L)
       assert(!formatted(guarded).contains("BroadcastExchange"),
         s"past the row threshold the probe must not hint-broadcast:\n${formatted(guarded)}")
       assert(guarded.count() == probe.count(),
         "the shuffle fallback must produce identical candidates")
-      val hinted = BandIndex.probe(batchSigs, "doc_id", "sig", dir, spec)
+      val hinted = BandIndex.probe(batchSigs, "doc_id", "sig", dir, spec,
+        BandIndex.touched(batchSigs, "sig", spec))
       assert(formatted(hinted).contains("BroadcastExchange"),
         "under the threshold the batch side still broadcasts")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
@@ -209,8 +211,9 @@ class PlanShapeSpec extends SparkSpec {
       .select(col("doc_id"), col("digest"))
     DigestIndex.rebuild(digested((0L until 40L).map(i => (i, s"doc $i"))),
       "doc_id", "digest", dir, spec)
-    val probe = DigestIndex.probe(digested(Seq((100L, "doc 7"), (101L, "doc 9"))),
-      "doc_id", "digest", dir, spec)
+    val batch = digested(Seq((100L, "doc 7"), (101L, "doc 9")))
+    val probe = DigestIndex.probe(batch, "doc_id", "digest", dir, spec,
+      DigestIndex.touched(batch, "digest", spec))
     val plan = formatted(probe)
     val scanPart = plan.linesIterator
       .filter(_.trim.startsWith("PartitionFilters:")).mkString("\n")

@@ -301,6 +301,27 @@ class DedupSpec extends SparkSpec {
     assert(both.contains(1L))
   }
 
+  test("operators that read one derived frame twice compute each input row once") {
+    // docs pass through a counting UDF: every evaluation beyond one per
+    // row is a frame the operator computed twice (nondeterministic, so
+    // the optimizer neither duplicates nor moves it)
+    val evals = spark.sparkContext.longAccumulator("strip-evals")
+    val seen = udf((t: String) => { evals.add(1L); t }).asNondeterministic()
+    val docs = (0 until 40).map(i =>
+      (i.toLong, (0 until 30).map(j => s"f${i / 2}x$j").mkString(" ")))
+      .toDF("doc_id", "text").withColumn("text", seen(col("text")))
+    def evaluations(run: => Unit): Long = { evals.reset(); run; evals.value }
+    assert(evaluations(Dedup.fuzzyContamination(docs, col("doc_id") % 10 === 0)
+      .collect()) == 40L)
+    assert(evaluations(Dedup.stripDuplicateSpans(docs, 13).collect()) == 40L)
+    assert(evaluations(Dedup.stripIntraDocRepeats(docs, 13).collect()) == 40L)
+    assert(evaluations(Dedup.contamination(docs, col("doc_id") % 10 === 0)
+      .collect()) == 40L)
+    assert(evaluations(Dedup.jaccardPairs(docs, "doc_id", "text").collect()) == 40L)
+    assert(evaluations(Dedup.containmentPairs(docs, "doc_id", "text").collect()) == 40L)
+    assert(evaluations(Dedup.sharedSpanPairs(docs, "doc_id", "text").collect()) == 40L)
+  }
+
   test("clusterKeepBest retains the argmax member; singletons keep themselves") {
     // cluster {1,2,3} via pairs; doc 2 scores highest; 9 is a singleton
     val docs = Seq((1L, 10), (2L, 30), (3L, 20), (9L, 5))

@@ -20,10 +20,34 @@ class DigestIndexSpec extends SparkSpec {
       .withColumn("digest", Dedup.contentKey(col("text")))
       .select($"doc_id", $"digest")
 
+  /** [[DigestIndex.probe]] with the batch's touched buckets taken by
+    * [[DigestIndex.touched]] (a spec has no stage to observe them on). */
+  private def probe(batch: DataFrame, idCol: String, digestCol: String,
+      dir: String, s: DigestIndex.Spec): DataFrame =
+    DigestIndex.probe(batch, idCol, digestCol, dir, s,
+      DigestIndex.touched(batch, digestCol, s))
+
   /** A corpusDigests thunk that fails the test if evaluated — the
     * steady-state contract is "no corpus read at all". */
   private def corpusMustNotBeRead: DataFrame =
     sys.error("steady-state verify must not read the corpus")
+
+  test("touched observes exactly the batch's key buckets and key rows, past 64 buckets too") {
+    def bucketsOf(keys: DataFrame, n: Int) =
+      keys.select(pmod(xxhash64(col("k")), lit(n.toLong)).cast("int")).as[Int].collect().toSet
+    val batch = digested((0L until 300L).map(i => (i, s"touched doc $i")))
+      .union(Seq((900L, null: String)).toDF("doc_id", "digest"))
+    val t = DigestIndex.touched(batch, "digest", DigestIndex.Spec(150))
+    val want = bucketsOf(batch.select(col("digest").as("k")).filter($"k".isNotNull), 150)
+    assert(want.exists(_ >= 128), "the third 64-bucket word must be exercised")
+    assert(t.buckets.sorted == want.toSeq.sorted && t.rows == 300L)
+    val sigs = ((0L until 40L).map(i => (i, Seq.tabulate(8)(j => i * 31 + j))) :+
+      (99L, null: Seq[Long])).toDF("doc_id", "sig")
+    val b = BandIndex.touched(sigs, "sig", BandIndex.Spec(bands = 4, buckets = 100))
+    val bandWant = bucketsOf(sigs.filter($"sig".isNotNull)
+      .select(explode(Dedup.bandKeys(col("sig"), 4)).as("k")), 100)
+    assert(b.buckets.sorted == bandWant.toSeq.sorted && b.rows == 40L * 4)
+  }
 
   test("probe returns matches only from touched buckets; misses return empty") {
     val dir = tmpDir("dix-probe")
@@ -31,11 +55,11 @@ class DigestIndexSpec extends SparkSpec {
     DigestIndex.rebuild(corpus, "doc_id", "digest", dir, spec)
     assert(DigestIndex.readMeta(spark, dir).contains(spec))
     val batch = digested(Seq((100L, "doc 7"), (101L, "novel content")))
-    val m = DigestIndex.probe(batch, "doc_id", "digest", dir, spec)
+    val m = probe(batch, "doc_id", "digest", dir, spec)
       .select("new_id", "corpus_id").as[(Long, Long)].collect().toSet
     assert(m == Set((100L, 7L)))
     // a batch with no candidates probes to empty without error
-    assert(DigestIndex.probe(batch.filter($"doc_id" < 0L),
+    assert(probe(batch.filter($"doc_id" < 0L),
       "doc_id", "digest", dir, spec).count() == 0L)
   }
 
@@ -44,7 +68,7 @@ class DigestIndexSpec extends SparkSpec {
     DigestIndex.rebuild(digested(Nil), "doc_id", "digest", dir, spec)
     assert(DigestIndex.layoutExists(spark, dir, spec))
     val batch = digested(Seq((1L, "anything")))
-    assert(DigestIndex.probe(batch, "doc_id", "digest", dir, spec).count() == 0L)
+    assert(probe(batch, "doc_id", "digest", dir, spec).count() == 0L)
   }
 
   test("bucketing change rebuilds into a fresh layout with an atomic pointer flip") {
@@ -59,7 +83,7 @@ class DigestIndexSpec extends SparkSpec {
       java.nio.file.Paths.get(dir, spec.layoutDir)),
       "superseded digest layout must be garbage-collected after the flip")
     // and the rebuilt layout still answers probes
-    val m = DigestIndex.probe(digested(Seq((90L, "d3"))), "doc_id", "digest",
+    val m = probe(digested(Seq((90L, "d3"))), "doc_id", "digest",
       dir, spec2).select("corpus_id").as[Long].collect().toSeq
     assert(m == Seq(3L))
   }
@@ -74,7 +98,7 @@ class DigestIndexSpec extends SparkSpec {
       "not a meta".getBytes("UTF-8"))
     assert(DigestIndex.readMeta(spark, dir).contains(spec))
     DigestIndex.append(digested(Seq((2L, "two"))), "doc_id", "digest", dir, spec)
-    val m = DigestIndex.probe(digested(Seq((8L, "one"), (9L, "two"))),
+    val m = probe(digested(Seq((8L, "one"), (9L, "two"))),
       "doc_id", "digest", dir, spec).select("corpus_id").as[Long].collect().sorted.toSeq
     assert(m == Seq(1L, 2L))
   }
@@ -131,7 +155,7 @@ class DigestIndexSpec extends SparkSpec {
     assert(DigestIndex.readMeta(spark, dir).isEmpty)
     DigestIndex.rebuild(corpus, "doc_id", "digest", dir, spec)
     assert(DigestIndex.readMeta(spark, dir).contains(spec))
-    val m = DigestIndex.probe(digested(Seq((90L, "v1 doc 3"))), "doc_id",
+    val m = probe(digested(Seq((90L, "v1 doc 3"))), "doc_id",
       "digest", dir, spec).select("corpus_id").as[Long].collect().toSeq
     assert(m == Seq(3L))
   }
@@ -150,7 +174,7 @@ class DigestIndexSpec extends SparkSpec {
     assert(e.getMessage.contains("rebuild"), e.getMessage)
     // the old layout and meta are intact — the probe still answers
     assert(DigestIndex.readMeta(spark, dir).contains(spec))
-    val m = DigestIndex.probe(digested(Seq((91L, "guarded doc 3"))),
+    val m = probe(digested(Seq((91L, "guarded doc 3"))),
       "doc_id", "digest", dir, spec)
       .select("corpus_id").as[Long].collect().toSeq
     assert(m == Seq(3L))
@@ -241,7 +265,7 @@ class DigestIndexSpec extends SparkSpec {
       "every run must fold away at the cadence")
     // content from the first era (merged through a full merge) and the
     // last (latest L1 fold) both answer probes
-    val hits = DigestIndex.probe(
+    val hits = probe(
       digested(Seq((100L, "tier doc 0"), (101L, "tier doc 9"))),
       "doc_id", "digest", dir, spec)
       .select("corpus_id").as[Long].collect().toSet
@@ -267,7 +291,7 @@ class DigestIndexSpec extends SparkSpec {
     digested(Seq((999L, "stale leftover row")))
       .write.parquet(s"$layout/compact-4") // seq after 4 appends = 4
     assert(DigestIndex.compact(spark, dir, minRuns = 2).flatMap(_._2).isDefined)
-    val hits = DigestIndex.probe(
+    val hits = probe(
       digested(Seq((100L, "crash doc 2"), (101L, "stale leftover row"))),
       "doc_id", "digest", dir, spec)
       .select("corpus_id").as[Long].collect().toSet
@@ -288,7 +312,7 @@ class DigestIndexSpec extends SparkSpec {
     assert(!children.contains("run-77") && !children.contains("compact-99"),
       s"unreferenced ghosts must sweep at the next fold: $children")
     // every committed row still answers; no ghost row ever does
-    val all = DigestIndex.probe(
+    val all = probe(
       digested((0 until 4).map(i => (200L + i, s"crash doc $i")) ++
         Seq((300L, "post doc 0"), (301L, "ghost row"))),
       "doc_id", "digest", dir, spec)
@@ -317,7 +341,7 @@ class DigestIndexSpec extends SparkSpec {
       java.nio.file.Paths.get(dir, ".digests-meta.json.crc"))
     assert(DigestIndex.compact(spark, dir, minRuns = 2).flatMap(_._2).isDefined,
       "a debris-only run must fold as empty, not crash")
-    val afterTmp = DigestIndex.probe(
+    val afterTmp = probe(
       digested(Seq((400L, "tmp doc 0"), (401L, "temp debris row"))),
       "doc_id", "digest", dir, spec)
       .select("corpus_id").as[Long].collect().toSet
@@ -343,7 +367,7 @@ class DigestIndexSpec extends SparkSpec {
       f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
     assert(files == 4, s"expected 4 run files, got $files")
     // ...and the probe reads the fanned-out run like any flat tail
-    val m = DigestIndex.probe(digested(Seq((100L, "wide doc 7"))), "doc_id",
+    val m = probe(digested(Seq((100L, "wide doc 7"))), "doc_id",
       "digest", dir, spec).select("corpus_id").as[Long].collect().toSeq
     assert(m == Seq(7L))
     // a micro-batch append (default) adds exactly one file

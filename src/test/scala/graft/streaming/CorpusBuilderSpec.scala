@@ -38,6 +38,39 @@ class CorpusBuilderSpec extends SparkSpec {
     assert(docs.filter(col(CorpusBuilder.DigestCol) =!= md5(col("text"))).count() == 0L)
   }
 
+  test("a stored-corpus trigger takes its counts and probe buckets from its own materializations") {
+    val nd = CorpusBuilder.NearDup()
+    def doc(i: Int, edit: String = "") =
+      ((1 to 59).map(j => s"d${i}_w$j") :+ (if (edit.nonEmpty) edit else s"d${i}_w60"))
+        .mkString(" ")
+    val (exact, near) = (tmpDir("jobs-exact"), tmpDir("jobs-near"))
+    for (b <- 0 until 2) {
+      val rows = (0 until 10).map(i => (b * 10L + i, doc(b * 10 + i))).toDF("doc_id", "text")
+      assert(CorpusBuilder.appendNew(spark, rows, exact, "doc_id", "text", 1024L, 0.01) == 10L)
+      assert(CorpusBuilder.appendNearDupNew(spark, rows, near, "doc_id", "text", nd) == 10L)
+    }
+    // 8 new docs, an exact duplicate of stored doc 3 under a new id and
+    // (near-dup gate) a near duplicate of stored doc 12
+    val fresh = (0 until 8).map(i => (100L + i, doc(100 + i)))
+    val exactDup = 200L -> doc(3)
+    val nearDup = 201L -> doc(12, edit = "changed")
+    val exactSpans = jobSpans(assert(CorpusBuilder.appendNew(spark,
+      (fresh :+ exactDup).toDF("doc_id", "text"), exact, "doc_id", "text", 1024L, 0.01) == 8L))
+    val nearSpans = jobSpans(assert(CorpusBuilder.appendNearDupNew(spark,
+      (fresh :+ exactDup :+ nearDup).toDF("doc_id", "text"), near, "doc_id", "text", nd) == 8L))
+    Seq(exact, near).foreach(c => assert(corpusDocs(c).filter(col("doc_id") >= 200L).isEmpty))
+    def jobs(spans: Seq[Option[String]], path: String) = spans.count(_.contains(path))
+    info(s"exact: ${exactSpans.size} jobs, corpus/stage ${jobs(exactSpans, "corpus/stage")}; " +
+      s"near-dup: ${nearSpans.size} jobs, corpus/gate ${jobs(nearSpans, "corpus/gate")}, " +
+      s"corpus/stage ${jobs(nearSpans, "corpus/stage")}")
+    // no job outside a step: the survivors' count is observed, not a count()
+    Seq(exactSpans, nearSpans).foreach(spans => assert(jobs(spans, "corpus") == 0, spans))
+    // the probe preludes, the same-id isEmpty and the count are gone
+    // (before: exact 20 jobs, 14 in corpus/stage; near-dup 31, 22 in corpus/gate)
+    assert(exactSpans.size == 13 && jobs(exactSpans, "corpus/stage") == 9, exactSpans)
+    assert(nearSpans.size == 19 && jobs(nearSpans, "corpus/gate") == 12, nearSpans)
+  }
+
   test("out-of-band filter loss rebuilds ONCE, even when the batch appends nothing") {
     val corpus = tmpDir("corpus-rebuild-once")
     CorpusBuilder.appendNew(spark,

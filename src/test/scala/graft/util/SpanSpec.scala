@@ -40,6 +40,34 @@ class SpanSpec extends SparkSpec {
     assert(JobTraceListener.describe(js.copy(stageInfos = Nil)) == "graft-corpus-builder-x")
   }
 
+  test("a job's trace label names its span's leaf; the short call site is restored after") {
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.scheduler.SparkListenerJobStart]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty(Span.Key) == "outer/leaf"))
+          starts.add(js)
+    }
+    sc.addSparkListener(listener)
+    try {
+      Span("outer")(Span("leaf")(job()))
+      assert(sc.getLocalProperty("callSite.short") == null)
+      // a drain thread's site (Spark sets the query's start line) comes back too
+      sc.setCallSite("start at Drain.scala:1")
+      Span("outer")(Span("leaf")(job()))
+      assert(sc.getLocalProperty("callSite.short") == "start at Drain.scala:1")
+      val deadline = System.currentTimeMillis() + 15000
+      while (starts.size < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    } finally {
+      sc.setLocalProperty("callSite.short", null)
+      sc.removeSparkListener(listener)
+    }
+    assert(starts.size == 2, "one job per span")
+    starts.forEach(js => assert(JobTraceListener.describe(js).startsWith("leaf"),
+      JobTraceListener.describe(js)))
+  }
+
   test("a job submitted from a pool thread carries the submitting span's path, not a stale one") {
     val sc = spark.sparkContext
     val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
