@@ -36,7 +36,7 @@ object Main {
       |  schema  --rules <file|dir> [--warehouse <dir>] <glob>...
       |  migrate --warehouse <dir> [--backend registry] [--partition <unit>] <srcDs.srcTbl> <dstDs.dstTbl>
       |  sql     --warehouse <dir> [--backend registry] [--limit <n>] <query>
-      |  corpus  --corpus <dir> --checkpoint <dir> [--id-col <c>] [--text-col <c>] [--continuous <ms>] [--max-files <n> | --max-bytes <b>] [--expected-items <n>] [--fpp <p>] [--near-dup] [--min-agree <f>] [--compact-every <n>] <glob>
+      |  corpus  --corpus <dir> --checkpoint <dir> [--id-col <c>] [--text-col <c>] [--continuous <ms>] [--max-files <n> | --max-bytes <b>] [--near-dup] [--min-agree <f>] [--compact-every <n>] <glob>
       |  corpus compact --corpus <dir> [--target-bytes <b>] [--small-bytes <b>] [--min-files <n>]
       |  cluster --store <dir> --checkpoint <dir> [--output <dir>] [--id-col <c>] [--text-col <c>] [--threshold <t>] [--buckets <n>] [--max-files <n> | --max-bytes <b>] <glob>
       |  cluster compact --store <dir> [--min-dirs <n>]
@@ -92,8 +92,9 @@ object Main {
       "m" -> "migrate", "c" -> "corpus")
 
   /** Flags a verb no longer takes, with why. */
-  private val removedFlags = Map(("corpus", "shards") -> ("corpus --shards " +
-    "was removed: the corpus keeps one bloom.bin filter in front of its digest index"))
+  private val removedFlags = Seq("shards", "expected-items", "fpp").map(f => ("corpus", f) ->
+    (s"corpus --$f was removed: the corpus keeps no corpus-wide filter; each file " +
+      "of its digest index carries a filter sized for its own rows")).toMap
 
   /** Refuse any flag the form the call dispatches to does not take — a
     * misspelled or foreign flag would otherwise be ignored and the run
@@ -379,9 +380,8 @@ object Main {
         val trigger = flags.get("continuous")
           .map(ms => Trigger.ProcessingTime(ms.toLong))
           .getOrElse(Trigger.AvailableNow())
-        val items = flags.get("expected-items").map(_.toLong).getOrElse(1L << 20)
         // --max-bytes: mega-batch landing, the `cluster` verb's knob —
-        // each micro-batch pays the gate's fixed floor (bloom/index
+        // each micro-batch pays the gate's fixed floor (index
         // probes + derived-store appends), so a backlogged landing
         // zone should batch by bytes, not files
         val q = graft.streaming.CorpusBuilder.build(spark, pos.head,
@@ -391,8 +391,6 @@ object Main {
           trigger = trigger,
           maxFilesPerTrigger = flags.get("max-files").map(_.toInt),
           maxBytesPerTrigger = flags.get("max-bytes").map(_.toLong),
-          expectedItems = items,
-          fpp = flags.get("fpp").map(_.toDouble).getOrElse(0.01),
           nearDup = if (flags.contains("near-dup"))
             Some(graft.streaming.CorpusBuilder.NearDup(
               minAgree = flags.get("min-agree").map(_.toDouble).getOrElse(0.8)))

@@ -21,6 +21,13 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   * not the corpus. It is rebuilt from the corpus table's stored digest
   * column; freshness is declared by `digests-meta.json`.
   *
+  * It is a FILTERED store: every run and bulk file carries a Parquet
+  * split-block filter on `digest`, sized for its own row count, and a
+  * probe of at most [[LsmIndex.FilterProbeMaxRows]] candidates scans
+  * only the files whose filter may hold one. So the corpus gate probes
+  * it with every staged digest and needs no corpus-wide filter in
+  * front of it.
+  *
   * Crash-safety direction: callers append to the index BEFORE the docs
   * append, so the index is always a SUPERSET of the corpus' digests
   * (an index MISSING a committed digest would re-admit that content on
@@ -45,7 +52,7 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   * different id.
   */
 object DigestIndex extends LsmIndex.Store("digest index", "digests-meta.json",
-    BucketCol = "__dk", keyCol = "digest", fieldNames = Seq("buckets")) {
+    BucketCol = "__dk", keyCol = "digest", fieldNames = Seq("buckets"), filtered = true) {
 
   /** Declared index spec. `buckets` only shapes the layout — any probe
     * works against any bucketing, it just prunes differently. */
@@ -69,18 +76,18 @@ object DigestIndex extends LsmIndex.Store("digest index", "digests-meta.json",
   /** Matches between a batch's candidate `(id, digest)` rows and the
     * stored index: one row per (digest, new_id, corpus_id) triple.
     * `touched` is the candidates' (observed by the caller, or
-    * [[touched]]): its buckets arrive as `PartitionFilters` on the
-    * compacted bulks plus the flat run tail, and the candidate side is
-    * broadcast — bloom-hit candidates are batch-bounded in steady
-    * state, but a cap-less backfill whose content is mostly duplicates
-    * can make them batch-SIZED, hence the `maxBroadcastRows` guard.
+    * [[touched]]): up to [[LsmIndex.FilterProbeMaxRows]] candidates the
+    * probe scans only the live files whose filter may hold one of
+    * them; past it, its buckets arrive as `PartitionFilters` on the
+    * compacted bulks plus the flat run tail. The candidate side is
+    * broadcast — a micro-batch is small, but a cap-less backfill can
+    * make it batch-SIZED, hence the `maxBroadcastRows` guard.
     * Callers classify matches via [[Dedup.indexedDupDigests]]. */
   def probe(candidates: DataFrame, idCol: String, digestCol: String,
       storeDir: String, spec: Spec, touched: LsmIndex.Touched,
       maxBroadcastRows: Long = DefaultMaxBroadcastRows): DataFrame = {
     val (batch, store) = probeSides(
-      candidates.select(col(idCol).as("new_id"), col(digestCol).as("digest"))
-        .distinct(),
+      candidates.select(col(idCol).as("new_id"), col(digestCol).as("digest")),
       candidates.schema(idCol).dataType, storeDir, spec, touched,
       maxBroadcastRows)(
       col("new_id"), col("digest"))

@@ -27,6 +27,12 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
   *   - PROBES read the bucket-pruned bulks plus the flat
   *     post-compaction tail — per-batch probe I/O tracks the batch
   *     plus at most one compaction cadence of runs, never the corpus.
+  *   - A FILTERED store ([[DigestIndex]]) writes every run and bulk
+  *     file with a Parquet split-block filter on its key, sized for
+  *     the file's own row count; a probe of at most
+  *     [[FilterProbeMaxRows]] candidates tests them against each live
+  *     file's filter on the driver and scans only the files that may
+  *     hold one (the per-run filters of Monkey, Dayan et al. 2017).
   *
   * Run/bulk names are DETERMINISTIC (`<kind>-<seq>`, seq persisted in
   * the index meta): a crash between a run write and its meta swap
@@ -52,6 +58,16 @@ private[graft] object LsmIndex {
 
   /** Fresh-store state (first append / rebuild target). */
   val Empty: State = State(0L, Nil, Nil)
+
+  /** Probe rows up to which a filtered store's probe tests its
+    * candidates against the live files' key filters on the driver.
+    * Parquet sizes each filter for a false-positive rate of 0.01, so a
+    * file holding none of m candidates still passes with probability
+    * 1 − 0.99^m: 0.92 at m = 256, 0.99997 at m = 1,024. Past about a
+    * thousand candidates every file is read anyway and the filter reads
+    * are pure cost; below it, the candidates' keys the test collects
+    * stay a few tens of KB. */
+  val FilterProbeMaxRows: Long = 1024L
 
   /** What a probe needs of its batch side: the key buckets it touches
     * (the store read's prune list) and its key-row count (the broadcast
@@ -131,9 +147,11 @@ private[graft] object LsmIndex {
     *
     * An instance supplies its `Spec` type, the row projection
     * ([[project]]) with its flat schema, the keys of one stored value
-    * ([[keysOf]]), and its probe's final join. */
+    * ([[keysOf]]), and its probe's final join. A `filtered` store
+    * writes its files with a split-block filter on `keyCol` (a string
+    * column) and prunes small probes by it; see [[probeSides]]. */
   abstract class Store(kind: String, metaFile: String, val BucketCol: String,
-      keyCol: String, fieldNames: Seq[String]) {
+      keyCol: String, fieldNames: Seq[String], filtered: Boolean = false) {
     type Spec <: LsmIndex.Spec
 
     protected def specOf(fields: Seq[Int]): Spec
@@ -255,7 +273,10 @@ private[graft] object LsmIndex {
         /** Run-file count for mega-batch appends — callers that counted
           * the staged batch pass [[runParts]]; the micro-batch default
           * keeps the flat tail at one footer per batch. */
-        runFiles: Int = 1): Unit = {
+        runFiles: Int = 1,
+        /** `rows`' row count, which sizes a filtered store's per-file
+          * filters; 0 (unknown) writes the run without one. */
+        runRows: Long = 0L): Unit = {
       val spark = rows.sparkSession
       val current = meta(spark, storeDir)
       val st = current match {
@@ -271,9 +292,12 @@ private[graft] object LsmIndex {
             "into the LSM layout first; appending over it would orphan " +
             "every existing index row and re-admit their duplicates")
       }
-      val (_, next) = writeRun(project(rows, idCol, valueCol, spec),
-        layoutPath(storeDir, spec), st, runFiles)
+      val parts = math.max(1, runFiles)
+      val (run, next) = writeRun(project(rows, idCol, valueCol, spec),
+        layoutPath(storeDir, spec), st, parts,
+        filterOptions((runRows + parts - 1) / parts))
       commit(spark, storeDir, spec, next, current.map(_.declared))
+      if (filtered) filesOf(spark, layoutPath(storeDir, spec), next, Seq(run))
     }
 
     /** Build the index from scratch out of the corpus' stored
@@ -281,9 +305,10 @@ private[graft] object LsmIndex {
       * corpus, spec change, lost layout, ver-1 migration. The new
       * layout (one bucket-partitioned bulk, zero runs) is fully written
       * before the meta pointer flips; the superseded layout is removed
-      * after. */
+      * after. `inputRows` (evaluated only by a filtered store) is the
+      * source's row count, which sizes the per-bucket filters. */
     def rebuild(rows: DataFrame, idCol: String, valueCol: String,
-        storeDir: String, spec: Spec): Unit = {
+        storeDir: String, spec: Spec, inputRows: => Long = 0L): Unit = {
       val spark = rows.sparkSession
       val previous = meta(spark, storeDir).map(_.declared)
       val fs = fsOf(spark, storeDir)
@@ -293,11 +318,14 @@ private[graft] object LsmIndex {
       if (fs.exists(layout)) fs.delete(layout, true)
       val bulk = "compact-0"
       writeBulk(project(rows, idCol, valueCol, spec), s"$layout/$bulk",
-        BucketCol, bucketOf(col(keyCol), spec))
+        BucketCol, bucketOf(col(keyCol), spec),
+        options = filterOptions(perBucket(inputRows, spec)))
       // an empty corpus writes zero rows; the bulk dir must still exist
       // so the probe's explicit-schema read sees "empty", not "lost"
       if (!fs.exists(new Path(layout, bulk))) fs.mkdirs(new Path(layout, bulk))
-      commit(spark, storeDir, spec, State(1L, Seq(bulk), Nil), previous)
+      val st = State(1L, Seq(bulk), Nil)
+      commit(spark, storeDir, spec, st, previous)
+      if (filtered) filesOf(spark, layout.toString, st, Seq(bulk))
     }
 
     /** Fold the ACTIVE index's accumulated flat runs into its
@@ -316,23 +344,69 @@ private[graft] object LsmIndex {
         .map { case (spec, st) =>
           val layout = layoutPath(storeDir, spec)
           spec -> compactStep(spark, layout, st, BucketCol, bucketOf(col(keyCol), spec),
-            minRuns, maxBulks).map { next =>
+            minRuns, maxBulks, rows => filterOptions(perBucket(rows, spec)))
+            .map { next =>
               commit(spark, storeDir, spec, next, None) // same layout: nothing superseded
               sweep(spark, layout, next)
+              if (filtered) filesOf(spark, layout, next, next.bulks.filterNot(st.bulks.contains))
               (st.runs.size, next.bulks.size)
             }
         }
 
+    /** The data files under `dirs` of `layout` (committed as `st`), each
+      * with its bulk bucket (None: a run file) and its key filters, one
+      * per row group (None: that row group has none, so it may hold any
+      * key). Listing and filter reads run on the driver, through the
+      * layout's Hadoop FileSystem; no job. A filter is read on a
+      * [[filterCache]] miss — mostly by the file's writer, which calls
+      * this for the dirs it just committed. */
+    private def filesOf(spark: SparkSession, layout: String, st: State,
+        dirs: Seq[String]): Seq[(String, Option[Int], Filters)] = {
+      val fs = fsOf(spark, layout)
+      val root = fs.makeQualified(new Path(layout))
+      val live = st.live.map(d => s"${new Path(root, d)}/")
+      val known = Option(filterCache.get(root.toString)).getOrElse(Map.empty)
+        .filter { case (p, _) => live.exists(p.startsWith) }
+      val files = dirs.map(new Path(root, _)).filter(fs.exists).flatMap { d =>
+        val it = fs.listFiles(d, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath).toSeq
+      }.filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
+        .map(p => p -> known.getOrElse(p.toString, readFilters(spark, p, keyCol)))
+      filterCache.put(root.toString, known ++ files.map { case (p, f) => p.toString -> f })
+      files.map { case (p, f) =>
+        (p.toString, p.getParent.getName.stripPrefix(s"$BucketCol=").toIntOption, f)
+      }
+    }
+
+    /** Parquet write options that give every file written a split-block
+      * filter on `keyCol`, sized for `ndv` distinct keys per file —
+      * Parquet's default sizing gives even a 40-row file a 1 MB bitset.
+      * An unfiltered store or an unknown `ndv` (0) writes no filter;
+      * `ndv` is evaluated only for a filtered store. */
+    private def filterOptions(ndv: => Long): Map[String, String] =
+      Option.when(filtered)(ndv).filter(_ > 0).fold(Map.empty[String, String])(n =>
+        Map(s"parquet.bloom.filter.enabled#$keyCol" -> "true",
+          s"parquet.bloom.filter.expected.ndv#$keyCol" -> n.toString))
+
+    /** Per-file filter rows of a bulk written from `rows` input rows:
+      * one bucket's share. */
+    private def perBucket(rows: Long, spec: Spec): Long =
+      (rows + spec.buckets - 1) / spec.buckets
+
     /** The probe's two sides: the batch's store-shaped `rows` (carrying
       * `keyCol`) as `batchCols`, broadcast while `touched.rows` is at
-      * most `maxBroadcastRows`, and the live store read pruned to
-      * `touched.buckets`. Nothing runs here: the caller observed
-      * `touched` on a materialization it makes anyway. Past the
+      * most `maxBroadcastRows`, and the live store read. Past the
       * threshold the join falls back to a shuffle on the key — a
       * cap-less backfill can make the batch side batch-SIZED, and AQE
       * may still pick a broadcast from actual sizes, the safe version of
       * the hint. `touched.rows` may count rows a later `distinct` drops:
-      * an upper bound, so the hint can only switch off early. */
+      * an upper bound, so the hint can only switch off early.
+      *
+      * The store read is pruned to `touched.buckets`, which the caller
+      * observed on a materialization it makes anyway. A filtered store
+      * probed with at most [[FilterProbeMaxRows]] rows instead collects
+      * the batch's keys (one job over `rows`) and scans only the files
+      * [[filesMayHold]] finds. */
     protected def probeSides(rows: DataFrame, idType: DataType,
         storeDir: String, spec: Spec, touched: Touched, maxBroadcastRows: Long)(
         batchCols: Column*): (DataFrame, DataFrame) = {
@@ -343,9 +417,57 @@ private[graft] object LsmIndex {
       val batchSide = rows.select(batchCols: _*)
       val guarded =
         if (touched.rows <= maxBroadcastRows) broadcast(batchSide) else batchSide
-      (guarded, readLive(spark, layoutPath(storeDir, spec), st,
-        flatSchema(idType), BucketCol, Some(touched.buckets)))
+      val layout = layoutPath(storeDir, spec)
+      val store =
+        if (!filtered || touched.rows > FilterProbeMaxRows)
+          readLive(spark, layout, st, flatSchema(idType), BucketCol, Some(touched.buckets))
+        else filesMayHold(spark, layout, st, rows.select(bucketOf(col(keyCol), spec), col(keyCol))
+            .where(col(keyCol).isNotNull).collect().toSeq.groupMap(_.getInt(0))(_.getString(1))
+          ) match {
+          case Nil => emptyRows(spark, flatSchema(idType))
+          case files => spark.read.schema(flatSchema(idType)).parquet(files: _*)
+        }
+      (guarded, store)
     }
+
+    /** The live data files that may hold one of `keys` (by bucket):
+      * every run file and each touched bucket's bulk files whose filter
+      * may contain a key of that bucket (a run file is tested against
+      * every key). A file without a filter (written before the store
+      * was filtered, or with an unknown row count) may hold any key. */
+    private def filesMayHold(spark: SparkSession, layout: String, st: State,
+        keys: Map[Int, Seq[String]]): Seq[String] = {
+      val all = keys.values.flatten.toSeq
+      filesOf(spark, layout, st, st.runs ++ st.bulks).collect {
+        case (p, bucket, filters) if bucket.fold(Option(all))(keys.get).exists(ks =>
+            filters.exists(_.forall(f => ks.exists(k =>
+              f.findHash(f.hash(org.apache.parquet.io.api.Binary.fromString(k))))))) => p
+      }
+    }
+  }
+
+  private type Filters = Seq[Option[org.apache.parquet.column.values.bloomfilter.BloomFilter]]
+
+  /** Per layout (qualified path), the key filters read from its files,
+    * by file path. Index files are immutable — every write, a retried
+    * one too, names new part files — so each filter is read once. Each
+    * read drops the files of dirs the layout no longer references, so a
+    * layout's entries stay the size of its live files. Without the cache
+    * a probe reads the filters of every touched bulk file, and
+    * GateFlatnessSpec's exact gate (25 digests a batch) read 10× more
+    * files late than early. */
+  private val filterCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Filters]]()
+
+  /** One file's filters on `keyCol`, one per row group. */
+  private def readFilters(spark: SparkSession, file: Path, keyCol: String): Filters = {
+    import scala.jdk.CollectionConverters._
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet.hadoop.util
+      .HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    try r.getRowGroups.asScala.toSeq.map { block =>
+      block.getColumns.asScala.find(_.getPath.toDotString == keyCol)
+        .flatMap(c => Option(r.getBloomFilterDataReader(block).readBloomFilter(c)))
+    } finally r.close()
   }
 
   /** Write one flat run for `rows` and return (run name, next state).
@@ -361,10 +483,10 @@ private[graft] object LsmIndex {
     * The caller persists the returned state AFTER this returns (data
     * before pointer). */
   def writeRun(rows: DataFrame, layout: String, st: State,
-      parts: Int = 1): (String, State) = {
+      parts: Int = 1, options: Map[String, String] = Map.empty): (String, State) = {
     val run = s"run-${st.seq}"
     rows.coalesce(math.max(1, parts))
-      .write.mode("overwrite").parquet(s"$layout/$run")
+      .write.options(options).mode("overwrite").parquet(s"$layout/$run")
     (run, State(st.seq + 1, st.bulks, st.runs :+ run))
   }
 
@@ -372,6 +494,9 @@ private[graft] object LsmIndex {
     * capped so a pathological count can't explode the flat tail. */
   def runParts(rows: Long, perFile: Long): Int =
     math.min(64L, (rows + perFile - 1) / perFile).toInt
+
+  private def emptyRows(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** The layout's live rows in flat shape (no bucket column): bulks
     * pruned to `touched` buckets (or read whole when None — the
@@ -392,9 +517,7 @@ private[graft] object LsmIndex {
       if (st.runs.isEmpty) Nil
       else Seq(spark.read.schema(flatSchema)
         .parquet(st.runs.map(r => s"$layout/$r"): _*))
-    (bulks ++ runs).reduceOption(_.unionByName(_)).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        flatSchema))
+    (bulks ++ runs).reduceOption(_.unionByName(_)).getOrElse(emptyRows(spark, flatSchema))
   }
 
   /** Bucket + shuffle + partitioned write of a consolidated bulk — the
@@ -409,11 +532,12 @@ private[graft] object LsmIndex {
     * rebalance hint would silently no-op into a per-input-partition
     * fan-out) or where the one-file-per-bucket layout is load-bearing. */
   def writeBulk(rows: DataFrame, dir: String, bucketCol: String,
-      bucketOf: org.apache.spark.sql.Column, rebalance: Boolean = true): Unit = {
+      bucketOf: org.apache.spark.sql.Column, rebalance: Boolean = true,
+      options: Map[String, String] = Map.empty): Unit = {
     val bucketed = rows.withColumn(bucketCol, bucketOf)
     (if (rebalance) bucketed.hint("rebalance", bucketCol)
      else bucketed.repartition(col(bucketCol)))
-      .write.partitionBy(bucketCol).mode("overwrite").parquet(dir)
+      .write.options(options).partitionBy(bucketCol).mode("overwrite").parquet(dir)
   }
 
   /** Mixed-structure read of a store area's live dirs — flat runs and
@@ -494,11 +618,13 @@ private[graft] object LsmIndex {
     * L1 fold whose I/O is bounded by the run mass. The fold reads with
     * footer-inferred schema (the id column's type is whatever the
     * appends wrote — compaction has no candidates frame to take it
-    * from). Returns the state to persist; the caller swaps its meta
-    * pointer then calls [[sweep]]. */
+    * from). `options` gives the bulk's write options from the folded
+    * roots' footer row total. Returns the state to persist; the caller
+    * swaps its meta pointer then calls [[sweep]]. */
   def compactStep(spark: SparkSession, layout: String, st: State,
       bucketCol: String, bucketOf: org.apache.spark.sql.Column,
-      minRuns: Int, maxBulks: Int): Option[State] =
+      minRuns: Int, maxBulks: Int,
+      options: (=> Long) => Map[String, String]): Option[State] =
     if (st.runs.size < minRuns) None
     else {
       val target = s"compact-${st.seq}"
@@ -510,12 +636,14 @@ private[graft] object LsmIndex {
           // the runs (and, on a full merge, the empty bulks)
           Some(State(st.seq, if (full) Nil else st.bulks, Nil))
         case Some(rows) =>
+          val conf = spark.sparkContext.hadoopConfiguration
           // replays duplicate run rows; the fold is where they die
-          writeBulk(rows.distinct(), s"$layout/$target", bucketCol, bucketOf)
+          writeBulk(rows.distinct(), s"$layout/$target", bucketCol, bucketOf,
+            options = options(roots.map(r => graft.streaming.StoreManifest
+              .parquetRowCount(new Path(layout, r), conf, recursive = true)).sum))
           // an all-duplicate fold can write zero rows; the dir must
           // still exist so the pruned probe reads "empty", not "lost"
-          val fs = new Path(layout).getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
+          val fs = new Path(layout).getFileSystem(conf)
           if (!fs.exists(new Path(layout, target)))
             fs.mkdirs(new Path(layout, target))
           Some(State(st.seq + 1,

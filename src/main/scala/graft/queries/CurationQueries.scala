@@ -1553,8 +1553,8 @@ object CurationQueries {
   /** q67: the streaming face of incremental dedup
     * ([[graft.streaming.CorpusBuilder]]) — drain the documents table
     * from an NDJSON landing zone in 4 micro-batches, deduplicating each
-    * batch against the corpus built by the previous ones (bloom probe +
-    * exact verify), then aggregate the CORPUS. The output is
+    * batch against the corpus built by the previous ones (a digest-index
+    * probe), then aggregate the CORPUS. The output is
     * batch-order independent (counts and char totals over distinct
     * texts), so the oracle is a plain DISTINCT aggregate — what the
     * corpus must equal no matter how the stream was chopped. */
@@ -1562,8 +1562,7 @@ object CurationQueries {
     val work = graft.util.Workspace.temp("graft-q67")
     Tables.documents(s, d).repartition(8).write.json(s"$work/landing")
     val q = graft.streaming.CorpusBuilder.build(s, s"$work/landing/part-*",
-      s"$work/ckpt", s"$work/corpus", maxFilesPerTrigger = Some(2),
-      expectedItems = 1L << 16)
+      s"$work/ckpt", s"$work/corpus", maxFilesPerTrigger = Some(2))
     q.awaitTermination()
     s.read.parquet(s"$work/corpus/docs")
       .agg(count(lit(1)).as("n_kept"),

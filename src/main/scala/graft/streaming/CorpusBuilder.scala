@@ -13,40 +13,33 @@ import graft.util.{FileCommit, Materialize, Span}
   * the streaming face of the incremental-dedup family (q52 band table,
   * q62 IVF store, q64 bloom filter): each micro-batch keeps one row per
   * content digest (within-batch exact dedup), drops rows whose content
-  * already exists in the STORED corpus (bloom probe + exact verify,
-  * [[Dedup.bloomNewDocs]]), and appends the survivors. At-least-once
-  * file delivery composed with content-keyed drops gives an
-  * exactly-once-BY-CONTENT corpus no matter how micro-batches replay.
+  * already exists in the STORED corpus, and appends the survivors.
+  * At-least-once file delivery composed with content-keyed drops gives
+  * an exactly-once-BY-CONTENT corpus no matter how micro-batches replay.
   *
-  * Crash-safety invariant: the stored bloom filter is always a SUPERSET
-  * of the corpus' digests. The merged filter is persisted BEFORE the
-  * doc append, so a crash between the two steps leaves only false
-  * positives (absorbed by the exact verify), never false negatives —
-  * which would silently re-admit existing content on replay. The digest
-  * is stored as a COLUMN of the corpus table itself, so the RECOVERABLE
-  * source of truth rides the same atomic append as the data (no sidecar
-  * split-brain). The per-batch verify, though, never scans that column:
-  * probe-HIT digests confirm against a persisted digest-bucketed index
-  * ([[graft.dedup.DigestIndex]], maintained by every commit in both
-  * gate modes, rebuildable from the corpus column any time) whose scan
-  * prunes to the buckets the candidates hash to — per-batch verify I/O
-  * tracks the batch, not the corpus. Same-id matches (replay/crash
-  * windows only) fall back to the corpus column for exactly that digest
-  * set — see [[graft.dedup.Dedup.indexedDupDigests]].
+  * The digest is stored as a COLUMN of the corpus table itself, so the
+  * RECOVERABLE source of truth rides the same atomic append as the data
+  * (no sidecar split-brain). The per-batch gate, though, never scans
+  * that column: every staged digest probes a persisted digest-bucketed
+  * index ([[graft.dedup.DigestIndex]], maintained by every commit in
+  * both gate modes, rebuildable from the corpus column any time). Its
+  * run and bulk files carry per-file Parquet filters, so a micro-batch
+  * probe reads only the files that may hold one of its digests —
+  * per-batch verify I/O tracks the batch, not the corpus. Same-id
+  * matches (replay/crash windows only) fall back to the corpus column
+  * for exactly that digest set — see
+  * [[graft.dedup.Dedup.indexedDupDigests]].
   *
-  * Filter capacity (`expectedItems`/`fpp`) is declared per corpus;
-  * outgrowing it only raises the false-positive rate — more exact-verify
-  * work per batch, never wrong results. The filter is one `bloom.bin`
-  * (~1.2 MB at the 2^20-item default), read on the driver and
-  * BROADCAST for each trigger's probe ([[Dedup.bloomProbe]]) — the plan
-  * carries only the broadcast handle, and the broadcast is destroyed
-  * once the gate's frame is materialized. It only routes: the
-  * [[graft.dedup.DigestIndex]] verify makes the exact decision.
+  * Crash-safety invariant: the digest index is always a SUPERSET of the
+  * corpus' digests. Its run is appended BEFORE the doc append, so a
+  * crash between the two steps leaves only ghost rows (absorbed by the
+  * same-id fallback), never a missing digest — which would silently
+  * re-admit existing content on replay.
   *
   * Rows whose `textCol` is NULL are REJECTED up front (both gate
   * modes): null has no content identity — `contentKey(null)` is null,
-  * which never joins and never bloom-hits, so such a row would evade
-  * every digest gate forever and be re-appended on each replay.
+  * which never joins, so such a row would evade every digest gate
+  * forever and be re-appended on each replay.
   * Exactly-once-by-content is defined only over non-null text.
   *
   * Deliberately NOT bound to one checkpoint lineage (unlike the
@@ -124,8 +117,8 @@ object CorpusBuilder {
 
   /** Fault-injection seam for crash-recovery specs: invoked after each
     * derived-store persist step of a commit, BEFORE the docs append,
-    * with the step just completed (`"bloom"`, `"digest-index"`,
-    * `"band-index"`) and the corpus dir (so a hook can target ONE
+    * with the step just completed (`"digest-index"`, `"band-index"`)
+    * and the corpus dir (so a hook can target ONE
     * corpus — suites share the JVM). A test installs a throwing hook to
     * kill the stream inside the exact window the superset invariant
     * protects (derived stores ahead of the corpus), then restarts from
@@ -136,11 +129,11 @@ object CorpusBuilder {
     (_, _) => ()
 
   /** Shared daemon pool for one commit's INDEPENDENT derived-store
-    * persists (bloom filter, digest-index run, band-index run — each a
-    * separate Spark job over the same localCheckpointed batch frame).
-    * The superset invariant orders every derived store BEFORE the docs
-    * append, not the stores among themselves, so they overlap instead
-    * of paying three serial job latencies per trigger. */
+    * persists (digest-index run, band-index run — each a separate Spark
+    * job over the same localCheckpointed batch frame). The superset
+    * invariant orders every derived store BEFORE the docs append, not
+    * the stores among themselves, so they overlap instead of paying
+    * serial job latencies per trigger. */
   private lazy val commitEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutor(
       java.util.concurrent.Executors.newFixedThreadPool(6, r => {
@@ -218,9 +211,11 @@ object CorpusBuilder {
     * L1 fold's I/O is bounded by the RUN mass; the periodic full merge
     * is the only corpus-proportional step and is amortized over
     * `minFiles × maxBulks` batches. Row content is preserved exactly,
-    * so every derived-store invariant (bloom superset, index superset,
-    * PartitionFilters pruning) holds across a compaction; `bloom.bin` is
-    * one file rewritten in place and needs no maintenance.
+    * so every derived-store invariant (index superset, PartitionFilters
+    * pruning) holds across a compaction, and each digest-index bulk
+    * file is written with its own filter. A `bloom.bin` left by a
+    * corpus built before the digest index carried per-file filters is
+    * deleted: no gate reads it.
     *
     * Concurrency: the docs compaction is append-safe by
     * [[graft.ingest.Compact]]'s swap discipline, but the index folds
@@ -243,6 +238,7 @@ object CorpusBuilder {
         s"maintenance pid=${ProcessHandle.current().pid()}"))
     }
     try {
+      Files.deleteIfExists(Paths.get(corpusDir, "bloom.bin"))
       val docsDir = s"$corpusDir/docs"
       val docs =
         if (!Files.exists(Paths.get(docsDir))) Nil
@@ -270,8 +266,8 @@ object CorpusBuilder {
       minAgree: Double = 0.8, indexBuckets: Int = 64)
 
   /** Start the streaming build: NDJSON docs under `landingGlob` →
-    * exact-deduped corpus under `corpusDir` (docs parquet + bloom
-    * file), checkpointed. `Trigger.AvailableNow` drains and stops
+    * exact-deduped corpus under `corpusDir` (docs parquet + derived
+    * indexes), checkpointed. `Trigger.AvailableNow` drains and stops
     * (backfill); a processing-time trigger runs continuously. The doc
     * schema is inferred once from the files present at start (the
     * streaming source needs a fixed schema — same contract as every
@@ -281,12 +277,11 @@ object CorpusBuilder {
       trigger: Trigger = Trigger.AvailableNow(),
       maxFilesPerTrigger: Option[Int] = None,
       /** Mega-batch trigger sizing: each micro-batch pays the gate's
-        * fixed floor (bloom/index probes, derived-store appends), so a
+        * fixed floor (index probes, derived-store appends), so a
         * backlogged landing zone should batch by BYTES, not files.
         * Mutually exclusive with `maxFilesPerTrigger` (the file source
         * rejects both limits at once). */
       maxBytesPerTrigger: Option[Long] = None,
-      expectedItems: Long = 1L << 20, fpp: Double = 0.01,
       /** Some(params) switches the per-batch gate from exact-content
         * to MinHash near-dup ([[appendNearDupNew]]). */
       nearDup: Option[NearDup] = None,
@@ -325,11 +320,9 @@ object CorpusBuilder {
           nearDup match {
             case Some(nd) =>
               appendNearDupNew(spark, batch, corpusDir, idCol, textCol, nd,
-                expectedItems, fpp, digestBuckets,
-                lockToken = Some(token))
+                digestBuckets, lockToken = Some(token))
             case None => appendNew(spark, batch, corpusDir, idCol, textCol,
-              expectedItems, fpp, digestBuckets,
-              lockToken = Some(token))
+              digestBuckets, lockToken = Some(token))
           }
           // batchId is monotonic across restarts (checkpointed), so the
           // cadence survives stop/start without extra state
@@ -390,15 +383,14 @@ object CorpusBuilder {
   /** One batch of the build (also usable directly for batch-incremental
     * corpus maintenance). Returns the number of docs appended.
     *
-    * Three materializations per batch with a stored corpus, and no
-    * other action before the commit: the digest-keyed batch, observing
-    * the bloom hits' digest buckets and count (the index probe's
-    * [[LsmIndex.Touched]]); the probe's matches
+    * Three materializations per batch with a stored corpus: the
+    * digest-keyed batch, observing its digest buckets and count (the
+    * index probe's [[LsmIndex.Touched]]); the probe's matches
     * ([[Dedup.indexedDupDigests]]); the survivors, observing their
-    * count. */
+    * count. A micro-batch probe adds one job, collecting its digests
+    * for the index's per-file filter test. */
   def appendNew(spark: SparkSession, batch: DataFrame, corpusDir: String,
       idCol: String, textCol: String,
-      expectedItems: Long, fpp: Double,
       digestBuckets: Int = DefaultDigestBuckets,
       lockToken: Option[String] = None): Long = Span("corpus") {
     requireBuildLock(corpusDir, lockToken)
@@ -409,37 +401,32 @@ object CorpusBuilder {
     val hasDocs = Files.exists(Paths.get(docsDir))
     val keyed = inBatch.withColumn(DigestCol, Dedup.contentKey(col(textCol)))
     val idxSpec = DigestIndex.Spec(digestBuckets)
-    val bloomPath = Paths.get(corpusDir, "bloom.bin")
-    val (idxReady, stored) = Span("resolve") {
-      (resolveIndex(DigestIndex)(spark, docsDir, hasDocs, corpusDir,
-        idCol, DigestCol, idxSpec)(digestRows(idCol)),
-        resolveFilter(spark, bloomPath, docsDir, hasDocs, expectedItems, fpp))
-    }
-    // no corpus yet → no probe: everything is new
-    val probe = stored.filter(_ => idxReady).map(Dedup.broadcastFilter(spark, _))
-    // survivors are consumed by filter build, index append and docs
-    // append — materialized once, output-sized, with their count
-    // observed. The materialized frame no longer needs the filter:
-    // release it now
-    val (staged, appended) = try Span("stage") {
-      // verify probe-hit candidates against the digest INDEX (bucket-
-      // pruned, batch-sized I/O), not the corpus-wide digest column;
-      // the corpus itself is consulted only for same-id matches — see
-      // [[Dedup.indexedDupDigests]]
-      counted(probe.fold(keyed) { bf =>
-        val hit = Dedup.bloomProbe(bf, xxhash64(col(DigestCol)))
+    val idxReady = Span("resolve")(resolveIndex(DigestIndex)(spark, docsDir, hasDocs,
+      corpusDir, idCol, DigestCol, idxSpec)(digestRows(idCol)))
+    // survivors are consumed by the index append and the docs append —
+    // materialized once, output-sized, with their count observed
+    val (staged, appended) = Span("stage") {
+      if (!idxReady) counted(keyed) // no corpus yet → no probe: everything is new
+      else {
+        // verify every digest against the digest INDEX (filter-pruned,
+        // batch-sized I/O), not the corpus-wide digest column; the
+        // corpus itself is consulted only for same-id matches — see
+        // [[Dedup.indexedDupDigests]]
         val (k, seen) = Materialize.observed(keyed,
-          DigestIndex.touchedMetrics(when(hit, col(DigestCol)), idxSpec, "hits"): _*)
-        val dup = Dedup.indexedDupDigests(k.filter(hit).select(col(idCol), col(DigestCol)),
+          DigestIndex.touchedMetrics(col(DigestCol), idxSpec, "digests"): _*)
+        val dup = Dedup.indexedDupDigests(k.select(col(idCol), col(DigestCol)),
           idCol, DigestCol, corpusDir, idxSpec, corpusDigests(spark, docsDir),
-          Some(LsmIndex.Touched.of(seen, "hits")))
-        k.join(broadcast(dup), col(DigestCol) === col("__dup"), "left_anti")
-      })
-    } finally probe.foreach(_.destroy())
-    if (appended > 0)
-      Span("commit")(
-        commitBatch(spark, staged, docsDir, bloomPath, stored, expectedItems,
-          fpp, corpusDir, idCol, idxSpec, lockToken, appended))
+          Some(LsmIndex.Touched.of(seen, "digests")))
+        counted(k.join(broadcast(dup), col(DigestCol) === col("__dup"), "left_anti"))
+      }
+    }
+    if (appended > 0) Span("commit") {
+      // commit order: digest index → docs (superset invariant)
+      persistDerived(spark, corpusDir, Seq(digestIndexStep(staged, idCol, corpusDir,
+        idxSpec, appended)))
+      requireBuildLock(corpusDir, lockToken)
+      Span("docs")(staged.write.mode("append").parquet(docsDir))
+    }
     appended
   }
 
@@ -465,41 +452,15 @@ object CorpusBuilder {
       valueCol: String, spec: ix.Spec)(source: DataFrame => Option[DataFrame]): Boolean =
     hasDocs && (ix.ready(spark, corpusDir, spec) ||
       source(spark.read.option("mergeSchema", "true").parquet(docsDir)).exists { rows =>
-        ix.rebuild(rows, idCol, valueCol, corpusDir, spec)
+        ix.rebuild(rows, idCol, valueCol, corpusDir, spec,
+          StoreManifest.parquetRowCount(new org.apache.hadoop.fs.Path(docsDir),
+            spark.sparkContext.hadoopConfiguration, recursive = true))
         true
       })
 
   /** The digest index's rebuild source: every doc's `(id, digest)`. */
   private def digestRows(idCol: String)(docs: DataFrame): Option[DataFrame] =
     Some(docs.select(col(idCol), col(DigestCol)))
-
-  /** The filter to probe/merge against, REBUILT from the corpus
-    * digest column (one column-pruned scan) when bloom.bin is missing
-    * while docs exist: lost out-of-band, or never written (a corpus
-    * built with the removed `--shards` store). Trusting "no filter"
-    * would re-admit duplicates AND leave the rewritten filter covering
-    * only this batch — a permanent superset break. */
-  private def resolveFilter(spark: SparkSession, bloomPath: java.nio.file.Path,
-      docsDir: String, hasDocs: Boolean,
-      expectedItems: Long, fpp: Double): Option[Array[Byte]] =
-    if (Files.exists(bloomPath)) Some(Files.readAllBytes(bloomPath))
-    else if (hasDocs) {
-      val rebuilt = filterFromCorpus(spark, docsDir, expectedItems, fpp)
-      // persist the rebuild NOW, not at the next commit — a stream of
-      // all-duplicate batches (which never commit) would otherwise
-      // repeat this corpus-wide rebuild on every micro-batch
-      FileCommit.replace(bloomPath, rebuilt)
-      Some(rebuilt)
-    }
-    else None
-
-  /** The filter built from the corpus' stored digest column. */
-  private def filterFromCorpus(spark: SparkSession, docsDir: String,
-      expectedItems: Long, fpp: Double): Array[Byte] =
-    corpusDigests(spark, docsDir)
-      .agg(call_function("graft_bloom_agg", xxhash64(col("digest")),
-        lit(expectedItems), lit(Dedup.bloomBits(expectedItems, fpp))).as("f"))
-      .head.getAs[Array[Byte]]("f")
 
   /** The corpus digest column (mergeSchema: exact-mode and near-dup-mode
     * appends carry different optional columns; a single-footer read
@@ -508,62 +469,16 @@ object CorpusBuilder {
     spark.read.option("mergeSchema", "true").parquet(docsDir)
       .select(col(DigestCol).as("digest"))
 
-  /** Persist one batch under the superset invariant: merge the batch's
-    * digests into the stored filter FIRST, then append to the digest
-    * index, then append the docs — both derived stores stay supersets
-    * of the corpus. Shared by both gate modes, so switching modes on
-    * one corpus keeps the filter a superset and exact-mode probes stay
-    * correct. */
-  private def commitBatch(spark: SparkSession, staged: DataFrame, docsDir: String,
-      bloomPath: java.nio.file.Path, stored: Option[Array[Byte]],
-      expectedItems: Long, fpp: Double, corpusDir: String, idCol: String,
-      idxSpec: DigestIndex.Spec, lockToken: Option[String] = None,
-      appended: Long = 0L): Unit = {
-    persistDerived(spark, corpusDir, Seq(
-      "bloom" -> (() =>
-        persistMergedFilter(spark, staged, docsDir, bloomPath, stored,
-          expectedItems, fpp)),
-      "digest-index" -> (() =>
-        DigestIndex.append(staged.select(col(idCol), col(DigestCol)),
-          idCol, DigestCol, corpusDir, idxSpec,
-          runFiles = LsmIndex.runParts(appended, DigestRowsPerRunFile)))))
-    requireBuildLock(corpusDir, lockToken)
-    Span("docs")(staged.write.mode("append").parquet(docsDir))
-  }
-
-  /** The filter half of [[commitBatch]] — the near-dup path interleaves
-    * its band-index append between this and the docs write. */
-  private def persistMergedFilter(spark: SparkSession, staged: DataFrame,
-      docsDir: String, bloomPath: java.nio.file.Path, stored: Option[Array[Byte]],
-      expectedItems: Long, fpp: Double): Unit = {
-    val bits = Dedup.bloomBits(expectedItems, fpp)
-    // one batch-filter job; only the MERGE may fail on a resize — a
-    // failure of the job itself (e.g. cancelled by query.stop())
-    // propagates instead of being answered with a corpus-wide rebuild
-    val batchFilter = staged.agg(call_function("graft_bloom_agg",
-        xxhash64(col(DigestCol)), lit(expectedItems), lit(bits)).as("f"))
-      .head.getAs[Array[Byte]]("f")
-    val merged = stored match {
-      case None => batchFilter
-      case Some(cur) =>
-        try mergeFilters(cur, batchFilter)
-        catch { case _: Exception =>
-          // declared capacity changed (resize) — the stored filter's bit
-          // size no longer matches. Rebuild it from the corpus' digest
-          // column at the NEW sizing (one column-pruned scan, once per
-          // resize), then merge the batch in. Sizing stays a free knob.
-          // Resizing inside the first-batch crash window (filter
-          // persisted, docs never appended) has no corpus to rebuild
-          // from — and nothing to preserve: the stale filter's digests
-          // belong to docs that never landed, so the batch filter alone
-          // upholds the superset invariant.
-          if (!Files.exists(Paths.get(docsDir))) batchFilter
-          else mergeFilters(
-            filterFromCorpus(spark, docsDir, expectedItems, fpp), batchFilter)
-        }
-    }
-    FileCommit.replace(bloomPath, merged)
-  }
+  /** The commit step appending the staged batch's `(id, digest)` rows
+    * to the digest index as one run — shared by both gate modes, so
+    * switching modes on one corpus keeps the index a superset and
+    * exact-mode probes stay correct. */
+  private def digestIndexStep(staged: DataFrame, idCol: String, corpusDir: String,
+      idxSpec: DigestIndex.Spec, appended: Long): (String, () => Unit) =
+    "digest-index" -> (() =>
+      DigestIndex.append(staged.select(col(idCol), col(DigestCol)),
+        idCol, DigestCol, corpusDir, idxSpec,
+        runFiles = LsmIndex.runParts(appended, DigestRowsPerRunFile), runRows = appended))
 
   /** NEAR-DUP variant of [[appendNew]]: beyond exact-content drops, a
     * batch doc is dropped when its MinHash signature agrees with a
@@ -581,10 +496,9 @@ object CorpusBuilder {
     * corpus table unconditionally; both gates are candidate-routed
     * derived-store probes whose per-batch cost tracks the BATCH size:
     *
-    *   - exact: the broadcast bloom filter (same as [[appendNew]])
-    *     routes — only probe-HIT digests (true dups +
-    *     fpp·batch false positives) reach the verify, which reads the
-    *     bucket-pruned [[graft.dedup.DigestIndex]], not the corpus
+    *   - exact: every staged digest probes the
+    *     [[graft.dedup.DigestIndex]] (same as [[appendNew]]), which
+    *     reads only the files whose filter may hold one, not the corpus
     *     digest column (same-id matches fall back to the corpus —
     *     replay/crash windows only);
     *   - near-dup: the batch's bands probe the PERSISTED
@@ -594,7 +508,7 @@ object CorpusBuilder {
     *     time) is appended to on every commit, so the corpus is never
     *     re-banded.
     *
-    * Commit order per batch: bloom filter → band index → docs, so both
+    * Commit order per batch: {digest index, band index} → docs, so both
     * derived stores are always SUPERSETS of the corpus. A crash between
     * index and docs leaves GHOST band rows; a replayed batch row is
     * `(id, sig)`-identical to its ghost and must not be dropped by it —
@@ -606,16 +520,14 @@ object CorpusBuilder {
     * signature and are gated by exact content only. Needs a
     * GraftExtensions session (native shingle/minhash kernels).
     *
-    * Three materializations per batch with a stored corpus, and no
-    * other action before the commit: the stage (digest and signature),
-    * observing both probes' [[LsmIndex.Touched]] — the bloom hits'
-    * digest buckets and count, the signatures' band buckets and band
-    * rows; the digest probe's matches ([[Dedup.indexedDupDigests]]);
-    * the survivors, observing their count. So the derived stores
-    * resolve, and the bloom broadcast exists, before the stage runs. */
+    * Three materializations per batch with a stored corpus: the stage
+    * (digest and signature), observing both probes'
+    * [[LsmIndex.Touched]] — the digests' buckets and count, the
+    * signatures' band buckets and band rows; the digest probe's matches
+    * ([[Dedup.indexedDupDigests]]); the survivors, observing their
+    * count. So the derived stores resolve before the stage runs. */
   def appendNearDupNew(spark: SparkSession, batch: DataFrame, corpusDir: String,
       idCol: String, textCol: String, nd: NearDup,
-      expectedItems: Long = 1L << 20, fpp: Double = 0.01,
       digestBuckets: Int = DefaultDigestBuckets,
       lockToken: Option[String] = None): Long = Span("corpus") {
     import graft.text.TextFunctions.tokens
@@ -628,12 +540,9 @@ object CorpusBuilder {
       Dedup.sigMatches(a, b) >= minMatches
     // the derived stores resolve BEFORE the stage (rebuild on resize /
     // loss), and the gate and commit share them
-    val bloomPath = Paths.get(corpusDir, "bloom.bin")
     val bandSpec = BandIndex.Spec(nd.bands, nd.indexBuckets)
     val idxSpec = DigestIndex.Spec(digestBuckets)
-    val (stored, bandReady) = Span("resolve") {
-      val stored =
-        resolveFilter(spark, bloomPath, docsDir, hasDocs, expectedItems, fpp)
+    val (digestReady, bandReady) = Span("resolve") {
       // steady state trusts the band index without a corpus footer scan;
       // a rebuild needs signature history — an exact-era corpus has no
       // SigCol, nothing to probe, and the first near-dup commit creates it
@@ -642,16 +551,10 @@ object CorpusBuilder {
         Option.when(docs.columns.contains(SigCol))(
           docs.filter(col(SigCol).isNotNull).select(col(idCol), col(SigCol)))
       }
-      // side effect: rebuild-or-trust; with docs present the index is
-      // guaranteed probe-ready below
-      resolveIndex(DigestIndex)(spark, docsDir, hasDocs, corpusDir, idCol,
-        DigestCol, idxSpec)(digestRows(idCol))
-      (stored, bandReady)
+      (resolveIndex(DigestIndex)(spark, docsDir, hasDocs, corpusDir, idCol,
+        DigestCol, idxSpec)(digestRows(idCol)), bandReady)
     }
-    // the gate's probe filter, released once `fresh` is materialized
-    val probe = if (hasDocs) stored.map(Dedup.broadcastFilter(spark, _)) else None
-    val hit = probe.map(bf => Dedup.bloomProbe(bf, xxhash64(col(DigestCol))))
-    val (fresh, appended) = try {
+    val (fresh, appended) = {
       // one projection computes digest + signature; consumed by several
       // gates below — materialize once, batch-sized, observing what the
       // probes need of it (null text rejected, not gated — see class doc)
@@ -664,8 +567,8 @@ object CorpusBuilder {
               array_distinct(call_function("graft_shingles", col("__t"), lit(nd.shingleK))),
               lit(nd.k))))
           .drop("__t"),
-        hit.toSeq.flatMap(h =>
-          DigestIndex.touchedMetrics(when(h, col(DigestCol)), idxSpec, "hits")) ++
+        (if (digestReady) DigestIndex.touchedMetrics(col(DigestCol), idxSpec, "digests")
+         else Nil) ++
           (if (bandReady) BandIndex.touchedMetrics(col(SigCol), bandSpec, "bands")
            else Nil): _*))
       val batchSigs = staged.filter(col(SigCol).isNotNull)
@@ -676,17 +579,15 @@ object CorpusBuilder {
         .filter(agrees(col("siga"), col("sigb")))
         .select(col("b").as("__drop"))
       Span("gate") {
-        val corpusDrops: Seq[DataFrame] = hit.toSeq.flatMap { h =>
-          // EXACT pre-gate: bloom probe routes — only probe-hit digests
-          // (batch-sized) reach the verify step, and the verify reads the
-          // bucket-pruned digest INDEX, not the corpus digest column
-          // (the [[Dedup.bloomNewDocsIndexed]] contract, kept here in
-          // drop-id shape; same-id matches fall back to the corpus —
-          // see [[Dedup.indexedDupDigests]])
+        val corpusDrops: Seq[DataFrame] = if (!digestReady) Nil else {
+          // EXACT pre-gate: every digest verifies against the filter-
+          // pruned digest INDEX, not the corpus digest column (same-id
+          // matches fall back to the corpus — see
+          // [[Dedup.indexedDupDigests]])
           val dup = Dedup.indexedDupDigests(
-            staged.filter(h).select(col(idCol), col(DigestCol)), idCol, DigestCol,
+            staged.select(col(idCol), col(DigestCol)), idCol, DigestCol,
             corpusDir, idxSpec, corpusDigests(spark, docsDir),
-            Some(LsmIndex.Touched.of(seen, "hits")))
+            Some(LsmIndex.Touched.of(seen, "digests")))
           val exactDrop = staged
             .join(broadcast(dup), col(DigestCol) === col("__dup"), "left_semi")
             .select(col(idCol).as("__drop"))
@@ -711,21 +612,15 @@ object CorpusBuilder {
         val drops = (withinDrop +: corpusDrops).reduce(_ union _)
         counted(staged.join(broadcast(drops), col(idCol) === col("__drop"), "left_anti"))
       }
-    } finally probe.foreach(_.destroy())
+    }
     if (appended > 0) Span("commit") {
-      // commit order: {bloom, digest index, band index} → docs
-      // (superset invariant for every derived store — each must be
-      // persisted before the docs append, in no particular order among
-      // themselves; the digest stores also stay supersets across gate
+      // commit order: {digest index, band index} → docs (superset
+      // invariant for every derived store — each must be persisted
+      // before the docs append, in no particular order among
+      // themselves; the digest index also stays a superset across gate
       // modes, so a later exact-mode run probes correctly)
       persistDerived(spark, corpusDir, Seq(
-        "bloom" -> (() =>
-          persistMergedFilter(spark, fresh, docsDir, bloomPath, stored,
-            expectedItems, fpp)),
-        "digest-index" -> (() =>
-          DigestIndex.append(fresh.select(col(idCol), col(DigestCol)),
-            idCol, DigestCol, corpusDir, idxSpec,
-            runFiles = LsmIndex.runParts(appended, DigestRowsPerRunFile))),
+        digestIndexStep(fresh, idCol, corpusDir, idxSpec, appended),
         "band-index" -> (() =>
           BandIndex.append(fresh.filter(col(SigCol).isNotNull)
             .select(col(idCol), col(SigCol)), idCol, SigCol, corpusDir, bandSpec,
@@ -735,17 +630,5 @@ object CorpusBuilder {
       Span("docs")(fresh.write.mode("append").parquet(docsDir))
     }
     appended
-  }
-
-  /** Union of two serialized filters (both sides were sized with the
-    * same expectedItems/fpp, so the bitsets are compatible). */
-  private def mergeFilters(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    import org.apache.spark.util.sketch.BloomFilter
-    val fa = BloomFilter.readFrom(new java.io.ByteArrayInputStream(a))
-    val fb = BloomFilter.readFrom(new java.io.ByteArrayInputStream(b))
-    fa.mergeInPlace(fb)
-    val out = new java.io.ByteArrayOutputStream()
-    fa.writeTo(out)
-    out.toByteArray
   }
 }

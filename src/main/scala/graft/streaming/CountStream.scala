@@ -8,6 +8,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.util.Span
+
 /** Mergeable-count-table accumulation over a live feed — the third
   * streaming state discipline here, next to per-row scoring against
   * frozen state ([[ScoreStream]]) and bounded top-n state
@@ -78,13 +80,13 @@ object CountStream {
   def accumulateWith(spark: SparkSession, stream: DataFrame, storeDir: String,
       checkpointDir: String, maxKeys: Long = MaxStoreKeys)
       (table: DataFrame => DataFrame)
-      (merge: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+      (merge: (DataFrame, DataFrame) => DataFrame): DataFrame = Span("drain") {
     // the batch-id pointer is only meaningful within one checkpoint
     // lineage — a second stream's restarted ids would silently no-op
     Lineage.bind(storeDir, checkpointDir, "count store")
     stream.writeStream
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        mergeBatchWith(spark, storeDir, table(batch), batchId, maxKeys)(merge)
+        Span("trigger")(mergeBatchWith(spark, storeDir, table(batch), batchId, maxKeys)(merge))
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -153,7 +155,7 @@ object CountStream {
       storeDir: String, checkpointDir: String,
       compactEvery: Int = DefaultCompactEvery)
       (table: DataFrame => DataFrame)
-      (combine: DataFrame => DataFrame): DataFrame = {
+      (combine: DataFrame => DataFrame): DataFrame = Span("drain") {
     require(compactEvery >= 2, s"compactEvery must be >= 2, got $compactEvery")
     requireDeltaLayout(storeDir)
     // same lineage contract as the generation discipline: the DELTAS
@@ -161,7 +163,7 @@ object CountStream {
     Lineage.bind(storeDir, checkpointDir, "delta store")
     stream.writeStream
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        foldDelta(spark, storeDir, table(batch), batchId, compactEvery)(combine)
+        Span("trigger")(foldDelta(spark, storeDir, table(batch), batchId, compactEvery)(combine))
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.util.Span
+
 /** Streaming weighted reservoir — exact weighted sampling WITHOUT
   * replacement over a live feed. The batch operator's
   * Efraimidis–Spirakis priority key ([[graft.curation.Sampling.esKey]])
@@ -49,39 +51,40 @@ object Reservoir {
         * per-stratum quota reservoir (merge property holds per group,
         * so the store is n·|strata| rows and still equals the batch
         * [[graft.curation.Sampling.stratifiedWeightedSample]]) */
-      strata: Seq[String] = Nil): DataFrame = {
+      strata: Seq[String] = Nil): DataFrame = Span("drain") {
     require(n > 0, s"reservoir needs n > 0, got $n")
     stream.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val keyed = batch.withColumn(keyAs,
-          graft.curation.Sampling.esKey(col(idCol), col(weightCol), seed))
-        val merged = current(spark, storeDir) match {
-          case Some(cur) => cur.drop("rank").unionByName(keyed)
-          case None => keyed
+      .foreachBatch { (batch: Dataset[Row], _: Long) => Span("trigger") {
+          val keyed = batch.withColumn(keyAs,
+            graft.curation.Sampling.esKey(col(idCol), col(weightCol), seed))
+          val merged = current(spark, storeDir) match {
+            case Some(cur) => cur.drop("rank").unionByName(keyed)
+            case None => keyed
+          }
+          // id-level dedup must be DETERMINISTIC: a replayed row is
+          // byte-identical and collapses either way, but a feed that
+          // re-carries an id with a NEW weight/attributes would make
+          // dropDuplicates keep an arbitrary row. Keep the max-key row
+          // per id (ties broken by the remaining ORDERABLE columns), so
+          // the winner is a pure function of the rows seen — the batch
+          // twin's unique-id precondition, enforced rather than assumed.
+          // Non-orderable attributes (maps) ride in the VALUE struct but
+          // not the ordering — max(struct(...)) over them fails analysis
+          // — so a row carrying a map column still flows through; the
+          // pick is only tie-arbitrary if two rows agree on the key and
+          // every orderable attribute yet differ in a map.
+          val rest = merged.columns.filter(c => c != idCol && c != keyAs)
+          val orderable = rest.filter(c => org.apache.spark.sql.catalyst
+            .expressions.RowOrdering.isOrderable(merged.schema(c).dataType))
+          val deduped = merged.groupBy(col(idCol))
+            .agg(max_by(struct((col(keyAs) +: rest.map(col)): _*),
+              struct((col(keyAs) +: orderable.map(col)): _*)).as("__w"))
+            .select(merged.columns.map(c =>
+              if (c == idCol) col(c) else col(s"__w.$c").as(c)): _*)
+          val top = graft.util.TopN.exact(deduped,
+            strata.map(col), Seq(col(keyAs).desc, col(idCol).asc), n)
+          advance(spark, storeDir, top)
         }
-        // id-level dedup must be DETERMINISTIC: a replayed row is
-        // byte-identical and collapses either way, but a feed that
-        // re-carries an id with a NEW weight/attributes would make
-        // dropDuplicates keep an arbitrary row. Keep the max-key row
-        // per id (ties broken by the remaining ORDERABLE columns), so
-        // the winner is a pure function of the rows seen — the batch
-        // twin's unique-id precondition, enforced rather than assumed.
-        // Non-orderable attributes (maps) ride in the VALUE struct but
-        // not the ordering — max(struct(...)) over them fails analysis
-        // — so a row carrying a map column still flows through; the
-        // pick is only tie-arbitrary if two rows agree on the key and
-        // every orderable attribute yet differ in a map.
-        val rest = merged.columns.filter(c => c != idCol && c != keyAs)
-        val orderable = rest.filter(c => org.apache.spark.sql.catalyst
-          .expressions.RowOrdering.isOrderable(merged.schema(c).dataType))
-        val deduped = merged.groupBy(col(idCol))
-          .agg(max_by(struct((col(keyAs) +: rest.map(col)): _*),
-            struct((col(keyAs) +: orderable.map(col)): _*)).as("__w"))
-          .select(merged.columns.map(c =>
-            if (c == idCol) col(c) else col(s"__w.$c").as(c)): _*)
-        val top = graft.util.TopN.exact(deduped,
-          strata.map(col), Seq(col(keyAs).desc, col(idCol).asc), n)
-        advance(spark, storeDir, top)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

@@ -11,7 +11,7 @@ import graft.util.FileCommit
   * — extracted so the invariants live once instead of in five
   * hand-rolled copies ([[ClusterStream]]'s manifest, [[CountStream]]'s
   * generation and delta pointers, [[Reservoir]]'s generation,
-  * [[Lineage]]'s stamp, [[CorpusBuilder]]'s filter + builder lock):
+  * [[Lineage]]'s stamp, [[CorpusBuilder]]'s builder lock):
   *
   *   1. ATOMIC POINTER SWAP — [[graft.util.FileCommit.replace]] of
   *      one pointer/manifest file; readers see old or new, never torn.

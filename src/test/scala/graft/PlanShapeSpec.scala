@@ -211,7 +211,10 @@ class PlanShapeSpec extends SparkSpec {
       .select(col("doc_id"), col("digest"))
     DigestIndex.rebuild(digested((0L until 40L).map(i => (i, s"doc $i"))),
       "doc_id", "digest", dir, spec)
-    val batch = digested(Seq((100L, "doc 7"), (101L, "doc 9")))
+    // a probe past FilterProbeMaxRows candidates: smaller ones read only
+    // the files whose filter may hold a candidate (DigestIndexSpec)
+    val batch = digested(Seq((100L, "doc 7"), (101L, "doc 9")) ++
+      (0L until graft.dedup.LsmIndex.FilterProbeMaxRows).map(i => (1000L + i, s"new $i")))
     val probe = DigestIndex.probe(batch, "doc_id", "digest", dir, spec,
       DigestIndex.touched(batch, "digest", spec))
     val plan = formatted(probe)

@@ -157,15 +157,19 @@ class CliCurationSpec extends SparkSpec {
   }
 
   test("corpus refuses the removed --shards flag instead of ignoring it") {
-    val dir = tmpDir("cli-corpus-shards")
-    writeFile(s"$dir/landing", "f0.json", """{"doc_id": 1, "text": "alpha"}""" + "\n")
-    val ex = intercept[IllegalArgumentException] {
-      Main.run(spark, Array("corpus", "--corpus", s"$dir/corpus",
-        "--checkpoint", s"$dir/ckpt", "--shards", "2", s"$dir/landing/*.json"))
+    // also the two filter-sizing flags, gone with the corpus-wide filter
+    Seq("shards" -> "2", "expected-items" -> "4096", "fpp" -> "0.001").foreach {
+      case (flag, value) =>
+        val dir = tmpDir(s"cli-corpus-$flag")
+        writeFile(s"$dir/landing", "f0.json", """{"doc_id": 1, "text": "alpha"}""" + "\n")
+        val ex = intercept[IllegalArgumentException] {
+          Main.run(spark, Array("corpus", "--corpus", s"$dir/corpus",
+            "--checkpoint", s"$dir/ckpt", s"--$flag", value, s"$dir/landing/*.json"))
+        }
+        assert(ex.getMessage.contains(s"--$flag was removed"), ex.getMessage)
+        assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/corpus")),
+          "a refused call must not start a build")
     }
-    assert(ex.getMessage.contains("--shards was removed"))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/corpus")),
-      "a refused call must not start a build")
   }
 
   test("corpus refuses a misspelled flag before any build starts") {

@@ -378,6 +378,72 @@ class DigestIndexSpec extends SparkSpec {
       f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_")) == 1)
   }
 
+  /** Records `body`'s tasks read (task input metrics: parquet rows
+    * scanned; the listener bus is async — polls until the count goes
+    * quiet). */
+  private def recordsRead(body: => Unit): Long = {
+    val records = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m => records.addAndGet(m.inputMetrics.recordsRead))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      var (last, quiet) = (-1L, 0)
+      val deadline = System.currentTimeMillis() + 15000
+      while (quiet < 3 && System.currentTimeMillis() < deadline) {
+        Thread.sleep(100)
+        if (records.get() == last) quiet += 1 else { quiet = 0; last = records.get() }
+      }
+      records.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a small probe scans only the files whose filter may hold a candidate; filterless files are always read") {
+    val dir = tmpDir("dix-filtered")
+    // four runs of 50 digests each, written with their row counts, so
+    // each run file carries a filter
+    (0 until 4).foreach { r =>
+      DigestIndex.append(digested((0L until 50L).map(i => (r * 100L + i, s"run $r doc $i"))),
+        "doc_id", "digest", dir, spec, runRows = 50L)
+    }
+    /** (new_id, corpus_id) matches of `batch` and the store rows read. */
+    def probed(batch: DataFrame): (Set[(Long, Long)], Long) = {
+      val t = DigestIndex.touched(batch, "digest", spec)
+      var got = Set.empty[(Long, Long)]
+      val read = recordsRead {
+        got = DigestIndex.probe(batch, "doc_id", "digest", dir, spec, t)
+          .select("new_id", "corpus_id").as[(Long, Long)].collect().toSet
+      }
+      (got, read)
+    }
+    // candidates held by run 2 only, and new content
+    val batch = digested(Seq((900L, "run 2 doc 3"), (901L, "run 2 doc 17"), (902L, "novel")))
+    val (m1, read1) = probed(batch)
+    assert(m1 == Set((900L, 203L), (901L, 217L)))
+    assert(read1 == 50L, s"only run 2's rows may be read, read $read1")
+    // a run written with an unknown row count has no filter: it is
+    // read whatever the candidates, and its rows match
+    DigestIndex.append(digested(Seq((500L, "filterless doc"), (501L, "other"))),
+      "doc_id", "digest", dir, spec)
+    val (m2, read2) = probed(batch.union(digested(Seq((903L, "filterless doc")))))
+    assert(m2 == Set((900L, 203L), (901L, 217L), (903L, 500L)))
+    assert(read2 == 52L, s"run 2 and the filterless run, read $read2")
+    // past FilterProbeMaxRows the probe reads every run, as before
+    val big = digested((0L until LsmIndex.FilterProbeMaxRows).map(i => (1000L + i, s"big $i")) ++
+      Seq((5000L, "run 0 doc 5"), (5001L, "other")))
+    val (m3, read3) = probed(big)
+    assert(m3 == Set((5000L, 5L), (5001L, 501L)))
+    assert(read3 == 202L, s"the unfiltered scan reads every run, read $read3")
+    // a fold writes its bulk files with filters too: an absent digest
+    // reads no row of its bucket
+    assert(DigestIndex.compact(spark, dir, minRuns = 2).flatMap(_._2).isDefined)
+    val (m4, read4) = probed(batch)
+    assert(m4 == m1 && read4 < 202L / 2, s"read $read4")
+    assert(probed(digested(Seq((904L, "novel"))))._2 == 0L)
+  }
+
   test("bloomNewDocsIndexed matches bloomNewDocs and never reads the corpus steady-state") {
     val dir = tmpDir("dix-bloom")
     val corpusRows = (0L until 40L).map(i => (i, s"doc $i"))

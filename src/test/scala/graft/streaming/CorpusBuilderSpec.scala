@@ -17,15 +17,14 @@ class CorpusBuilderSpec extends SparkSpec {
     val spans = jobSpans {
       Seq(b1 -> 2L, b2 -> 1L).zipWithIndex.foreach { case ((b, n), i) =>
         graft.util.Span(s"b$i")(assert(
-          CorpusBuilder.appendNew(spark, b, corpus, "doc_id", "text", 1024L, 0.01) == n))
+          CorpusBuilder.appendNew(spark, b, corpus, "doc_id", "text") == n))
       }
     }
     // every job runs inside its batch's corpus span; every commit job
-    // (the bloom and digest-index persists run on the commit pool)
     // carries the path of the step it ran in, and every step ran one
     assert(spans.forall(_.exists(p => p.startsWith("b0/corpus") || p.startsWith("b1/corpus"))),
       spans)
-    val steps = for (i <- 0 to 1; step <- Seq("bloom", "digest-index", "docs"))
+    val steps = for (i <- 0 to 1; step <- Seq("digest-index", "docs"))
       yield s"b$i/corpus/commit/$step"
     assert(spans.flatten.filter(_.contains("/commit")).toSet == steps.toSet, spans)
     val docs = corpusDocs(corpus)
@@ -46,7 +45,7 @@ class CorpusBuilderSpec extends SparkSpec {
     val (exact, near) = (tmpDir("jobs-exact"), tmpDir("jobs-near"))
     for (b <- 0 until 2) {
       val rows = (0 until 10).map(i => (b * 10L + i, doc(b * 10 + i))).toDF("doc_id", "text")
-      assert(CorpusBuilder.appendNew(spark, rows, exact, "doc_id", "text", 1024L, 0.01) == 10L)
+      assert(CorpusBuilder.appendNew(spark, rows, exact, "doc_id", "text") == 10L)
       assert(CorpusBuilder.appendNearDupNew(spark, rows, near, "doc_id", "text", nd) == 10L)
     }
     // 8 new docs, an exact duplicate of stored doc 3 under a new id and
@@ -55,7 +54,7 @@ class CorpusBuilderSpec extends SparkSpec {
     val exactDup = 200L -> doc(3)
     val nearDup = 201L -> doc(12, edit = "changed")
     val exactSpans = jobSpans(assert(CorpusBuilder.appendNew(spark,
-      (fresh :+ exactDup).toDF("doc_id", "text"), exact, "doc_id", "text", 1024L, 0.01) == 8L))
+      (fresh :+ exactDup).toDF("doc_id", "text"), exact, "doc_id", "text") == 8L))
     val nearSpans = jobSpans(assert(CorpusBuilder.appendNearDupNew(spark,
       (fresh :+ exactDup :+ nearDup).toDF("doc_id", "text"), near, "doc_id", "text", nd) == 8L))
     Seq(exact, near).foreach(c => assert(corpusDocs(c).filter(col("doc_id") >= 200L).isEmpty))
@@ -66,57 +65,11 @@ class CorpusBuilderSpec extends SparkSpec {
     // no job outside a step: the survivors' count is observed, not a count()
     Seq(exactSpans, nearSpans).foreach(spans => assert(jobs(spans, "corpus") == 0, spans))
     // the probe preludes, the same-id isEmpty and the count are gone
-    // (before: exact 20 jobs, 14 in corpus/stage; near-dup 31, 22 in corpus/gate)
-    assert(exactSpans.size == 13 && jobs(exactSpans, "corpus/stage") == 9, exactSpans)
-    assert(nearSpans.size == 19 && jobs(nearSpans, "corpus/gate") == 12, nearSpans)
-  }
-
-  test("out-of-band filter loss rebuilds ONCE, even when the batch appends nothing") {
-    val corpus = tmpDir("corpus-rebuild-once")
-    CorpusBuilder.appendNew(spark,
-      Seq((1L, "one"), (2L, "two")).toDF("doc_id", "text"),
-      corpus, "doc_id", "text", 1024L, 0.01)
-    val bloom = java.nio.file.Paths.get(corpus, "bloom.bin")
-    java.nio.file.Files.delete(bloom)
-    // an ALL-DUPLICATE batch (appends 0, so commitBatch never runs):
-    // the rebuilt filter must still be persisted — otherwise every
-    // such batch repeats the corpus-wide rebuild
-    assert(CorpusBuilder.appendNew(spark,
-      Seq((3L, "one")).toDF("doc_id", "text"),
-      corpus, "doc_id", "text", 1024L, 0.01) == 0L)
-    assert(java.nio.file.Files.exists(bloom),
-      "rebuild must persist even when nothing is appended")
-    // and the persisted bytes actually gate: the duplicate still drops
-    assert(CorpusBuilder.appendNew(spark,
-      Seq((4L, "two")).toDF("doc_id", "text"),
-      corpus, "doc_id", "text", 1024L, 0.01) == 0L)
-  }
-
-  test("bloom superset invariant: a stale-ahead filter (crash between bloom and append) is safe") {
-    val corpus = tmpDir("corpus-crash")
-    CorpusBuilder.appendNew(spark,
-      Seq((1L, "one")).toDF("doc_id", "text"), corpus, "doc_id", "text", 1024L, 0.01)
-    // simulate the crash window: bloom already carries a digest whose doc
-    // append never happened — replaying that batch must still admit it
-    val phantom = Seq((9L, "phantom")).toDF("doc_id", "text")
-    val bloomWithPhantom = {
-      val cur = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(corpus, "bloom.bin"))
-      // merge a filter of the phantom batch without appending its docs
-      val f = graft.dedup.Dedup.digestFilter(phantom, "text", 1024L,
-        graft.dedup.Dedup.bloomBits(1024L, 0.01))
-      val m = classOf[CorpusBuilder.type].getDeclaredMethods
-        .find(_.getName == "mergeFilters").get
-      m.setAccessible(true)
-      m.invoke(CorpusBuilder, cur, f).asInstanceOf[Array[Byte]]
-    }
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(corpus, "bloom.bin"), bloomWithPhantom)
-    // replay of the phantom batch: bloom says "maybe present", the exact
-    // verify finds no digest row → the doc is (re-)admitted, not lost
-    assert(CorpusBuilder.appendNew(spark, phantom, corpus,
-      "doc_id", "text", 1024L, 0.01) == 1L)
-    assert(corpusDocs(corpus).count() == 2L)
+    // (before: exact 20 jobs, 14 in corpus/stage; near-dup 31, 22 in
+    // corpus/gate), and so are the corpus-wide filter's two commit jobs
+    // (before: exact 13, near-dup 19)
+    assert(exactSpans.size == 11 && jobs(exactSpans, "corpus/stage") == 9, exactSpans)
+    assert(nearSpans.size == 17 && jobs(nearSpans, "corpus/gate") == 12, nearSpans)
   }
 
   test("appendNearDupNew: near-dup gate within batch and vs corpus; short docs by content") {
@@ -206,46 +159,27 @@ class CorpusBuilderSpec extends SparkSpec {
       corpus, "doc_id", "text", nd) == 0L)
   }
 
-  test("gate modes interoperate on one corpus; filter resize rebuilds instead of crashing") {
+  test("gate modes interoperate on one corpus") {
     val nd = CorpusBuilder.NearDup()
     val corpus = tmpDir("mode-mix-corpus")
     // exact-mode first: files carry no signature column
     CorpusBuilder.appendNew(spark,
       Seq((1L, "alpha beta gamma")).toDF("doc_id", "text"),
-      corpus, "doc_id", "text", 1024L, 0.01)
+      corpus, "doc_id", "text")
     // switch to near-dup on the SAME corpus: must not crash on the
     // missing __corpus_sig column; exact-content still gates
     val n2 = CorpusBuilder.appendNearDupNew(spark,
       Seq((2L, "alpha beta gamma"), (3L, "delta epsilon zeta")).toDF("doc_id", "text"),
-      corpus, "doc_id", "text", nd, 1024L, 0.01)
+      corpus, "doc_id", "text", nd)
     assert(n2 == 1L, "exact dup must drop, new doc must land")
     // switch BACK to exact mode: near-dup-era doc 3's digest must be in
-    // the bloom filter (superset invariant across modes) so its replay
+    // the digest index (superset invariant across modes) so its replay
     // is dropped, not silently re-admitted
     val n3 = CorpusBuilder.appendNew(spark,
       Seq((4L, "delta epsilon zeta")).toDF("doc_id", "text"),
-      corpus, "doc_id", "text", 1024L, 0.01)
-    assert(n3 == 0L, "bloom must be maintained by the near-dup gate too")
-    // resize the declared capacity: stored filter has different bits —
-    // the merge rebuilds from the corpus digest column at the new size
-    val before = lastExecutionId
-    val n4 = CorpusBuilder.appendNew(spark,
-      Seq((5L, "entirely new"), (6L, "alpha beta gamma")).toDF("doc_id", "text"),
-      corpus, "doc_id", "text", 4096L, 0.001)
-    assert(n4 == 1L, "resize must keep dedup exact, not crash the merge")
-    // one batch-filter job plus one corpus rebuild — the batch filter
-    // is not recomputed after the failed merge. The marker query runs
-    // last, so once the async listener has recorded it, it has
-    // recorded every execution of the append too
-    spark.range(1).selectExpr("'resize-marker' AS m").collect()
-    val aggs = planDescriptionsAfter(before)(_.contains("resize-marker"))
-      .count(_.contains("bloom_filter_agg"))
-    assert(aggs == 2, s"resize ran $aggs bloom aggregate jobs, expected 2")
-    assert(corpusDocs(corpus).count() == 3L)
-    // and the resized filter still gates correctly
-    assert(CorpusBuilder.appendNew(spark,
-      Seq((7L, "entirely new")).toDF("doc_id", "text"),
-      corpus, "doc_id", "text", 4096L, 0.001) == 0L)
+      corpus, "doc_id", "text")
+    assert(n3 == 0L, "the digest index must be maintained by the near-dup gate too")
+    assert(corpusDocs(corpus).count() == 2L)
   }
 
   test("null text is rejected up front in both gate modes (no permanent gate evasion)") {
@@ -254,8 +188,8 @@ class CorpusBuilderSpec extends SparkSpec {
       .toDF("doc_id", "text")
     // nulls never land — contentKey(null) is null and would evade every
     // digest gate on every replay, accumulating duplicate rows forever
-    assert(CorpusBuilder.appendNew(spark, b, corpus, "doc_id", "text", 1024L, 0.01) == 1L)
-    assert(CorpusBuilder.appendNew(spark, b, corpus, "doc_id", "text", 1024L, 0.01) == 0L)
+    assert(CorpusBuilder.appendNew(spark, b, corpus, "doc_id", "text") == 1L)
+    assert(CorpusBuilder.appendNew(spark, b, corpus, "doc_id", "text") == 0L)
     assert(corpusDocs(corpus).count() == 1L)
     val ndCorpus = tmpDir("null-text-nd-corpus")
     val nd = CorpusBuilder.NearDup()
@@ -268,24 +202,24 @@ class CorpusBuilderSpec extends SparkSpec {
     import graft.dedup.DigestIndex
     val corpus = tmpDir("digest-index-corpus")
     val b1 = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
-    assert(CorpusBuilder.appendNew(spark, b1, corpus, "doc_id", "text", 1024L, 0.01) == 2L)
+    assert(CorpusBuilder.appendNew(spark, b1, corpus, "doc_id", "text") == 2L)
     val spec = DigestIndex.Spec(CorpusBuilder.DefaultDigestBuckets)
     assert(DigestIndex.readMeta(spark, corpus).contains(spec),
       "an exact-mode commit must declare the digest index")
     assert(DigestIndex.layoutExists(spark, corpus, spec))
     // different-id replay of corpus content: dropped via the index probe
     val b2 = Seq((10L, "alpha"), (11L, "gamma")).toDF("doc_id", "text")
-    assert(CorpusBuilder.appendNew(spark, b2, corpus, "doc_id", "text", 1024L, 0.01) == 1L)
+    assert(CorpusBuilder.appendNew(spark, b2, corpus, "doc_id", "text") == 1L)
     // lose the layout out-of-band: the gate must rebuild it from the
     // corpus' stored (id, digest) columns and still drop duplicates
     import scala.jdk.CollectionConverters._
     java.nio.file.Files.walk(java.nio.file.Paths.get(corpus, spec.layoutDir))
       .iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
-    assert(CorpusBuilder.appendNew(spark, b2, corpus, "doc_id", "text", 1024L, 0.01) == 0L)
+    assert(CorpusBuilder.appendNew(spark, b2, corpus, "doc_id", "text") == 0L)
     assert(DigestIndex.layoutExists(spark, corpus, spec), "lost index must be rebuilt")
     // bucketing change: rebuild into a fresh layout, atomic pointer
     // flip, superseded layout garbage-collected
-    assert(CorpusBuilder.appendNew(spark, b2, corpus, "doc_id", "text", 1024L, 0.01,
+    assert(CorpusBuilder.appendNew(spark, b2, corpus, "doc_id", "text",
       digestBuckets = 16) == 0L)
     val spec2 = DigestIndex.Spec(16)
     assert(DigestIndex.readMeta(spark, corpus).contains(spec2))
@@ -299,55 +233,64 @@ class CorpusBuilderSpec extends SparkSpec {
     import graft.dedup.{Dedup, DigestIndex}
     val corpus = tmpDir("digest-ghost-corpus")
     assert(CorpusBuilder.appendNew(spark,
-      Seq((1L, "seed")).toDF("doc_id", "text"), corpus, "doc_id", "text", 1024L, 0.01) == 1L)
-    // simulate the crash window: the batch's digests land in the bloom
-    // AND the index, the docs append never happens
+      Seq((1L, "seed")).toDF("doc_id", "text"), corpus, "doc_id", "text") == 1L)
+    // simulate the crash window: the batch's digests land in the
+    // index, the docs append never happens
     val ghost = Seq((7L, "ghost content")).toDF("doc_id", "text")
     val spec = DigestIndex.Spec(CorpusBuilder.DefaultDigestBuckets)
     DigestIndex.append(ghost.withColumn("__d", Dedup.contentKey(col("text")))
-      .select(col("doc_id"), col("__d")), "doc_id", "__d", corpus, spec)
-    val bloomPath = java.nio.file.Paths.get(corpus, "bloom.bin")
-    val merged = {
-      val cur = java.nio.file.Files.readAllBytes(bloomPath)
-      val f = graft.dedup.Dedup.digestFilter(ghost, "text", 1024L,
-        graft.dedup.Dedup.bloomBits(1024L, 0.01))
-      val m = classOf[CorpusBuilder.type].getDeclaredMethods
-        .find(_.getName == "mergeFilters").get
-      m.setAccessible(true)
-      m.invoke(CorpusBuilder, cur, f).asInstanceOf[Array[Byte]]
-    }
-    java.nio.file.Files.write(bloomPath, merged)
+      .select(col("doc_id"), col("__d")), "doc_id", "__d", corpus, spec, runRows = 1L)
     // replay of that batch: (id, digest)-identical to its ghost row —
     // the same-id fallback consults the corpus, finds nothing, ADMITS
     assert(CorpusBuilder.appendNew(spark, ghost, corpus,
-      "doc_id", "text", 1024L, 0.01) == 1L,
+      "doc_id", "text") == 1L,
       "a replayed batch must not be dropped by its own ghost digest rows")
     // now that the doc REALLY landed, a replay of the committed batch
     // is (id, digest)-identical to its COMMITTED row and must DROP
     assert(CorpusBuilder.appendNew(spark, ghost, corpus,
-      "doc_id", "text", 1024L, 0.01) == 0L)
+      "doc_id", "text") == 0L)
     // and a different-id carrier of the same content drops too
     assert(CorpusBuilder.appendNew(spark,
       Seq((8L, "ghost content")).toDF("doc_id", "text"), corpus,
-      "doc_id", "text", 1024L, 0.01) == 0L)
+      "doc_id", "text") == 0L)
     assert(corpusDocs(corpus).count() == 2L)
   }
 
-  test("lost bloom.bin with an existing corpus is REBUILT from the digest column, not bypassed") {
-    val corpus = tmpDir("lost-bloom-corpus")
-    val b1 = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
-    CorpusBuilder.appendNew(spark, b1, corpus, "doc_id", "text", 1024L, 0.01)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(corpus, "bloom.bin"))
-    // replay with the filter lost out-of-band: the gate must rebuild
-    // from the corpus digest column and still drop every duplicate
-    assert(CorpusBuilder.appendNew(spark, b1, corpus, "doc_id", "text", 1024L, 0.01) == 0L)
-    // a mixed batch persists the REBUILT ∪ batch filter (superset
-    // restored on disk, not just for one probe)
+  test("a legacy corpus (bloom.bin, filterless index run) still drops a stored duplicate; compaction removes bloom.bin") {
+    import graft.dedup.{Dedup, DigestIndex}
+    val corpus = tmpDir("legacy-corpus")
+    val spec = DigestIndex.Spec(CorpusBuilder.DefaultDigestBuckets)
+    // the layout a corpus built before per-file filters left: docs with
+    // their digest column, an index run written without a filter, and
+    // the corpus-wide filter file no gate reads any more
+    val docs = Seq((1L, "legacy one"), (2L, "legacy two")).toDF("doc_id", "text")
+      .withColumn(CorpusBuilder.DigestCol, Dedup.contentKey(col("text")))
+    DigestIndex.append(docs.select(col("doc_id"), col(CorpusBuilder.DigestCol)),
+      "doc_id", CorpusBuilder.DigestCol, corpus, spec)
+    docs.write.parquet(s"$corpus/docs")
+    val bloom = java.nio.file.Paths.get(corpus, "bloom.bin")
+    java.nio.file.Files.write(bloom, Array.fill[Byte](64)(0))
+    val run = new java.io.File(s"$corpus/${spec.layoutDir}/run-0").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(run.toURI), spark.sparkContext.hadoopConfiguration))
+    try {
+      val block = footer.getRowGroups.get(0)
+      assert(footer.getBloomFilterDataReader(block)
+        .readBloomFilter(block.getColumns.get(1)) == null, "the legacy run has no filter")
+    } finally footer.close()
+    // a different-id duplicate of stored content drops through the
+    // filterless run; new content lands
     assert(CorpusBuilder.appendNew(spark,
-      Seq((3L, "gamma"), (4L, "alpha")).toDF("doc_id", "text"),
-      corpus, "doc_id", "text", 1024L, 0.01) == 1L)
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(corpus, "bloom.bin")))
-    assert(CorpusBuilder.appendNew(spark, b1, corpus, "doc_id", "text", 1024L, 0.01) == 0L)
+      Seq((10L, "legacy two"), (11L, "modern")).toDF("doc_id", "text"),
+      corpus, "doc_id", "text") == 1L)
+    assert(java.nio.file.Files.exists(bloom))
+    CorpusBuilder.compactStores(spark, corpus)
+    assert(!java.nio.file.Files.exists(bloom), "the first compaction deletes bloom.bin")
+    assert(CorpusBuilder.appendNew(spark,
+      Seq((12L, "legacy one"), (13L, "modern")).toDF("doc_id", "text"),
+      corpus, "doc_id", "text") == 0L)
     assert(corpusDocs(corpus).count() == 3L)
   }
 
@@ -398,15 +341,15 @@ class CorpusBuilderSpec extends SparkSpec {
     }
     val corpus = tmpDir("nd-plans-corpus")
     val before = lastExecutionId
-    // default 2^20-item filter: ~1.2 MB serialized
     val q = CorpusBuilder.build(spark, s"$landing/*.json", tmpDir("nd-plans-ckpt"),
       corpus, maxFilesPerTrigger = Some(1), nearDup = Some(CorpusBuilder.NearDup()))
     q.awaitTermination()
     assert(q.recentProgress.count(_.numInputRows > 0) == 3)
     assert(corpusDocs(corpus).count() == 10L)
-    // the later triggers probe the stored filter (`might_contain` is
-    // Spark's own probe, which takes the filter as a plan literal)
-    def isProbe(p: String) = p.contains("bloom_probe") || p.contains("might_contain")
+    // the later triggers probe the digest index: its scan lists the
+    // files the filter test kept, and no filter rides in any plan
+    def isProbe(p: String) = p.contains(graft.dedup.DigestIndex.Spec(
+      CorpusBuilder.DefaultDigestBuckets).layoutDir)
     val plans = planDescriptionsAfter(before)(isProbe)
     assert(plans.exists(isProbe), "no probe execution was recorded")
     val limit = 64 * 1024
@@ -418,7 +361,7 @@ class CorpusBuilderSpec extends SparkSpec {
     // the real crash path, not a hand-built state: the fault seam kills
     // the QUERY inside foreachBatch after each derived store persists,
     // the batch never reaches the checkpoint, and the restart replays it
-    Seq("bloom", "digest-index").foreach { point =>
+    Seq("digest-index").foreach { point =>
       val landing = tmpDir(s"crash-landing-$point")
       val ckpt = tmpDir(s"crash-ckpt-$point")
       val corpus = tmpDir(s"crash-corpus-$point")
@@ -464,7 +407,7 @@ class CorpusBuilderSpec extends SparkSpec {
       val replayAll = Seq((20L, "seed one"), (21L, "fresh alpha"),
         (22L, "fresh beta")).toDF("doc_id", "text")
       assert(CorpusBuilder.appendNew(spark, replayAll, corpus,
-        "doc_id", "text", 1L << 20, 0.01) == 0L)
+        "doc_id", "text") == 0L)
     }
   }
 
@@ -472,7 +415,7 @@ class CorpusBuilderSpec extends SparkSpec {
     val nd = CorpusBuilder.NearDup()
     val seed = (1 to 80).map(i => s"nd$i").mkString(" ")
     val freshText = (1 to 80).map(i => s"fr$i").mkString(" ")
-    Seq("bloom", "digest-index", "band-index").foreach { point =>
+    Seq("digest-index", "band-index").foreach { point =>
       val landing = tmpDir(s"ndcrash-landing-$point")
       val ckpt = tmpDir(s"ndcrash-ckpt-$point")
       val corpus = tmpDir(s"ndcrash-corpus-$point")
@@ -502,8 +445,8 @@ class CorpusBuilderSpec extends SparkSpec {
         s"docs must not contain the crashed batch (point=$point)")
 
       // restart: the replayed new doc must survive its own ghost rows in
-      // whichever stores persisted before the kill (bloom / digest
-      // index / band index), and both dup shapes must still drop
+      // whichever stores persisted before the kill (digest index /
+      // band index), and both dup shapes must still drop
       CorpusBuilder.build(spark, s"$landing/*.json", ckpt, corpus,
         nearDup = Some(nd)).awaitTermination()
       val docs = corpusDocs(corpus)
@@ -548,7 +491,7 @@ class CorpusBuilderSpec extends SparkSpec {
       val batch = Seq((b * 10L, s"compact doc $b alpha"),
         (b * 10L + 1, s"compact doc $b beta")).toDF("doc_id", "text")
       total += CorpusBuilder.appendNew(spark, batch, corpus, "doc_id", "text",
-        1024L, 0.01, digestBuckets = 4)
+        digestBuckets = 4)
       // the build() hook's cadence, driven directly (appendNew is the
       // batch body foreachBatch runs)
       if (b % 10 == 9) CorpusBuilder.compactStores(spark, corpus, minFiles = 4)
@@ -574,7 +517,7 @@ class CorpusBuilderSpec extends SparkSpec {
     val replay = Seq((30L, "compact doc 3 alpha"), (31L, "compact doc 3 beta"))
       .toDF("doc_id", "text")
     assert(CorpusBuilder.appendNew(spark, replay, corpus, "doc_id", "text",
-      1024L, 0.01, digestBuckets = 4) == 0L)
+      digestBuckets = 4) == 0L)
   }
 
   test("near-dup store compaction bounds band-index buckets and keeps mixed-era docs intact") {
@@ -585,12 +528,12 @@ class CorpusBuilderSpec extends SparkSpec {
     // docs compaction MUST schema-merge or it would drop SigCol
     assert(CorpusBuilder.appendNew(spark,
       Seq((1L, "exact era doc one"), (2L, "exact era doc two")).toDF("doc_id", "text"),
-      corpus, "doc_id", "text", 1024L, 0.01, digestBuckets = 4) == 2L)
+      corpus, "doc_id", "text", digestBuckets = 4) == 2L)
     (0 until 12).foreach { b =>
       val text = (1 to 12).map(j => s"ndword${b}_$j").mkString(" ")
       val batch = Seq((100L + b, text)).toDF("doc_id", "text")
       assert(CorpusBuilder.appendNearDupNew(spark, batch, corpus, "doc_id",
-        "text", nd, 1024L, 0.01, digestBuckets = 4) == 1L)
+        "text", nd, digestBuckets = 4) == 1L)
       if (b % 4 == 3) CorpusBuilder.compactStores(spark, corpus, minFiles = 3)
     }
     val bandCounts = leafFileCounts(
@@ -608,7 +551,7 @@ class CorpusBuilderSpec extends SparkSpec {
     val neard = Seq((999L, (1 to 12).map(j => s"ndword5_$j").mkString(" ") + " tail"))
       .toDF("doc_id", "text")
     assert(CorpusBuilder.appendNearDupNew(spark, neard, corpus, "doc_id",
-      "text", nd, 1024L, 0.01, digestBuckets = 4) == 0L)
+      "text", nd, digestBuckets = 4) == 0L)
   }
 
   test("one live builder per corpus: a second build fails loudly; the lock releases on termination") {
@@ -670,7 +613,7 @@ class CorpusBuilderSpec extends SparkSpec {
     try {
       val e = intercept[IllegalArgumentException] {
         CorpusBuilder.appendNew(spark, b, corpus, "doc_id", "text",
-          1024L, 0.01, lockToken = Some(t1))
+          lockToken = Some(t1))
       }
       assert(e.getMessage.contains("no longer holds"), e.getMessage)
     } finally CorpusBuilder.commitFault = (_, _) => ()
@@ -679,12 +622,12 @@ class CorpusBuilderSpec extends SparkSpec {
     // the usurper's own folds proceed; builder-1's derived-store rows
     // are crash-window ghosts the gate absorbs
     assert(CorpusBuilder.appendNew(spark, b, corpus, "doc_id", "text",
-      1024L, 0.01, lockToken = Some(t2)) == 1L)
+      lockToken = Some(t2)) == 1L)
     assert(corpusDocs(corpus).count() == 1L)
     // a STALE token at fold ENTRY also aborts (the cheap early check)
     val e2 = intercept[IllegalArgumentException] {
       CorpusBuilder.appendNew(spark, b, corpus, "doc_id", "text",
-        1024L, 0.01, lockToken = Some(t1))
+        lockToken = Some(t1))
     }
     assert(e2.getMessage.contains("no longer holds"), e2.getMessage)
     CorpusBuilder.releaseBuildLock(corpus, t2)

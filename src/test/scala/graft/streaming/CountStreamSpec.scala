@@ -27,6 +27,23 @@ class CountStreamSpec extends SparkSpec {
     assert(CountStream.lastBatch(s"$work/store").exists(_ >= 4))
   }
 
+  test("every job of a count drain carries its span, on both disciplines") {
+    val work = graft.util.Workspace.temp("countstream-spans")
+    val feed = ScoreStream.feed(corpus, s"$work/landing", files = 3)
+    def table(b: org.apache.spark.sql.DataFrame) = b.groupBy($"g").agg(count(lit(1)).as("c"))
+    val gen = jobSpans {
+      CountStream.accumulate(spark, feed, s"$work/store", s"$work/ckpt", Seq("g"), "c")(table)
+    }
+    val deltas = jobSpans {
+      CountStream.accumulateDeltas(spark, feed, s"$work/deltas", s"$work/ckptD",
+        compactEvery = 2)(table)(_.groupBy($"g").agg(sum($"c").as("c")))
+    }
+    Seq(gen, deltas).foreach { spans =>
+      assert(spans.exists(_.exists(_.startsWith("drain/trigger"))), spans)
+      assert(spans.forall(_.exists(_.startsWith("drain"))), spans)
+    }
+  }
+
   test("parquetRowCount reads the written footers: matches count(), 0 on empty/missing") {
     val work = graft.util.Workspace.temp("countstream-footer")
     val dir = java.nio.file.Paths.get(s"$work/t")

@@ -73,8 +73,7 @@ class GateFlatnessSpec extends SparkSpec {
         (b * 100L + 50L + i, s"flat exact doc 0-$i payload"))
       val batch = (fresh ++ dups).toDF("doc_id", "text")
       inputBytes {
-        val n = CorpusBuilder.appendNew(spark, batch, corpus, "doc_id", "text",
-          1L << 20, 0.01)
+        val n = CorpusBuilder.appendNew(spark, batch, corpus, "doc_id", "text")
         assert(n == (if (b == 0) newPerBatch else newPerBatch).toLong)
         if (b % 8 == 7) CorpusBuilder.compactStores(spark, corpus, minFiles = 4)
       }
@@ -158,11 +157,14 @@ class GateFlatnessSpec extends SparkSpec {
     def fold1(df: org.apache.spark.sql.DataFrame, b: Long) =
       ClusterStream.fold(spark, s"$work/store", df, "doc_id", "text",
         3, 0.8, 128, bands = 8, ClusterStream.DefaultBuckets, batchId = b)
-    // two corpus batches: unique long docs + the seed
-    fold1(((0L until 150L).map(i => (i, longDoc(s"a$i"))) :+ (900L, seed))
-      .toDF("doc_id", "text"), 0)
-    fold1((150L until 300L).map(i => (i, longDoc(s"b$i")))
-      .toDF("doc_id", "text"), 1)
+    // two corpus batches: unique long docs + the seed, read back from
+    // parquet — a local relation of ~1.6 MB would ride in every task
+    def landed(rows: Seq[(Long, String)], name: String) = {
+      rows.toDF("doc_id", "text").write.parquet(s"$work/$name")
+      spark.read.parquet(s"$work/$name")
+    }
+    fold1(landed((0L until 150L).map(i => (i, longDoc(s"a$i"))) :+ (900L, seed), "in0"), 0)
+    fold1(landed((150L until 300L).map(i => (i, longDoc(s"b$i"))), "in1"), 1)
     // the probe batch: one twin of the seed, staged exactly as a fold
     // stages it
     val batchSigs = graft.dedup.Dedup.stagedSigs(

@@ -30,6 +30,17 @@ class ReservoirSpec extends SparkSpec {
     assert(gens.size == 1, s"generations left: $gens")
   }
 
+  test("every job of a reservoir drain carries its span") {
+    val work = graft.util.Workspace.temp("reservoir-spans")
+    val feed = ScoreStream.feed(corpus, s"$work/landing", files = 3)
+    val spans = jobSpans {
+      Reservoir.streamWeightedSample(spark, feed,
+        "doc_id", "w", n = 20, seed = "s", s"$work/store", s"$work/ckpt")
+    }
+    assert(spans.exists(_.exists(_.startsWith("drain/trigger"))), spans)
+    assert(spans.forall(_.exists(_.startsWith("drain"))), spans)
+  }
+
   test("re-delivered rows collapse; store stays O(n) across many batches") {
     val work = graft.util.Workspace.temp("reservoir-replay")
     // same rows fed TWICE (at-least-once replay): dedup by id must
