@@ -23,10 +23,10 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   *
   * It is a FILTERED store: every run and bulk file carries a Parquet
   * split-block filter on `digest`, sized for its own row count, and a
-  * probe of at most [[LsmIndex.FilterProbeMaxRows]] candidates scans
-  * only the files whose filter may hold one. So the corpus gate probes
-  * it with every staged digest and needs no corpus-wide filter in
-  * front of it.
+  * probe of at most [[LsmIndex.FilterProbeRowsPerBucket]] candidates a
+  * bucket scans only the files whose filter may hold one. So the corpus
+  * gate probes it with every staged digest and needs no corpus-wide
+  * filter in front of it.
   *
   * Crash-safety direction: callers append to the index BEFORE the docs
   * append, so the index is always a SUPERSET of the corpus' digests
@@ -76,10 +76,10 @@ object DigestIndex extends LsmIndex.Store("digest index", "digests-meta.json",
   /** Matches between a batch's candidate `(id, digest)` rows and the
     * stored index: one row per (digest, new_id, corpus_id) triple.
     * `touched` is the candidates' (observed by the caller, or
-    * [[touched]]): up to [[LsmIndex.FilterProbeMaxRows]] candidates the
-    * probe scans only the live files whose filter may hold one of
-    * them; past it, its buckets arrive as `PartitionFilters` on the
-    * compacted bulks plus the flat run tail. The candidate side is
+    * [[touched]]): up to [[LsmIndex.FilterProbeRowsPerBucket]]
+    * candidates a bucket the probe scans only the live files whose
+    * filter may hold one of them; past it, its buckets arrive as
+    * `PartitionFilters` on the compacted bulks plus the flat run tail. The candidate side is
     * broadcast — a micro-batch is small, but a cap-less backfill can
     * make it batch-SIZED, hence the `maxBroadcastRows` guard.
     * Callers classify matches via [[Dedup.indexedDupDigests]]. */

@@ -26,13 +26,19 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
   *     `maxBulks` before a full merge rewrites them into one.
   *   - PROBES read the bucket-pruned bulks plus the flat
   *     post-compaction tail — per-batch probe I/O tracks the batch
-  *     plus at most one compaction cadence of runs, never the corpus.
+  *     plus at most one compaction cadence of runs while the batch
+  *     touches few buckets. A batch with keys in most buckets reads
+  *     most of each bulk (a filtered store skips the bucket files
+  *     whose filter holds none of their keys, which stops paying past a
+  *     few hundred keys a bucket): a mega-batch's probe is
+  *     corpus-proportional.
   *   - A FILTERED store ([[DigestIndex]]) writes every run and bulk
   *     file with a Parquet split-block filter on its key, sized for
   *     the file's own row count; a probe of at most
-  *     [[FilterProbeMaxRows]] candidates tests them against each live
-  *     file's filter on the driver and scans only the files that may
-  *     hold one (the per-run filters of Monkey, Dayan et al. 2017).
+  *     [[FilterProbeRowsPerBucket]] candidates a bucket tests them
+  *     against each live file's filter on the driver and scans only
+  *     the files that may hold one (the per-run filters of Monkey,
+  *     Dayan et al. 2017).
   *
   * Run/bulk names are DETERMINISTIC (`<kind>-<seq>`, seq persisted in
   * the index meta): a crash between a run write and its meta swap
@@ -59,15 +65,29 @@ private[graft] object LsmIndex {
   /** Fresh-store state (first append / rebuild target). */
   val Empty: State = State(0L, Nil, Nil)
 
-  /** Probe rows up to which a filtered store's probe tests its
-    * candidates against the live files' key filters on the driver.
+  /** Probe rows a bucket up to which a filtered store's probe tests
+    * its candidates against the live files' key filters on the driver.
     * Parquet sizes each filter for a false-positive rate of 0.01, so a
-    * file holding none of m candidates still passes with probability
-    * 1 − 0.99^m: 0.92 at m = 256, 0.99997 at m = 1,024. Past about a
-    * thousand candidates every file is read anyway and the filter reads
-    * are pure cost; below it, the candidates' keys the test collects
-    * stay a few tens of KB. */
-  val FilterProbeMaxRows: Long = 1024L
+    * file holding none of the m keys it is tested with still passes
+    * with probability 1 − 0.99^m: 0.92 at m = 256, 0.99997 at
+    * m = 1,024. A bulk file is tested with its bucket's share of the
+    * candidates, about rows / buckets, so a probe of at most this many
+    * rows a bucket can still skip bulk files; past it every file would
+    * pass, the test is pure cost and the probe reads its touched
+    * buckets whole. (A run file is tested with every candidate and
+    * passes past about a thousand of them; runs are the flat tail, one
+    * compaction cadence of batches.) The candidates the test collects
+    * on the driver number at most this times the bucket count: 65,536
+    * digests at the default 64 buckets, about 20 MB of driver heap
+    * while the test runs. */
+  val FilterProbeRowsPerBucket: Long = 1024L
+
+  /** Bitset bytes up to which [[filterCache]] keeps files' key
+    * filters. A filter sized for n keys at fpp 0.01 takes 1.2 n bytes
+    * rounded up to a power of two, 1.2–2.4 B a key, so 32 MB holds the
+    * filters of an index of 13–27 M keys; past that the least recently
+    * probed files' filters are read again when next probed. */
+  val FilterCacheMaxBytes: Long = 32L << 20
 
   /** What a probe needs of its batch side: the key buckets it touches
     * (the store read's prune list) and its key-row count (the broadcast
@@ -149,7 +169,8 @@ private[graft] object LsmIndex {
     * ([[project]]) with its flat schema, the keys of one stored value
     * ([[keysOf]]), and its probe's final join. A `filtered` store
     * writes its files with a split-block filter on `keyCol` (a string
-    * column) and prunes small probes by it; see [[probeSides]]. */
+    * column) and prunes probes by it; see [[probeSides]]. Every write
+    * names its row count, which sizes those filters. */
   abstract class Store(kind: String, metaFile: String, val BucketCol: String,
       keyCol: String, fieldNames: Seq[String], filtered: Boolean = false) {
     type Spec <: LsmIndex.Spec
@@ -270,13 +291,13 @@ private[graft] object LsmIndex {
       * resolve path). */
     def append(rows: DataFrame, idCol: String, valueCol: String,
         storeDir: String, spec: Spec,
+        /** `rows`' row count, which sizes a filtered store's per-file
+          * filters. */
+        runRows: Long,
         /** Run-file count for mega-batch appends — callers that counted
           * the staged batch pass [[runParts]]; the micro-batch default
           * keeps the flat tail at one footer per batch. */
-        runFiles: Int = 1,
-        /** `rows`' row count, which sizes a filtered store's per-file
-          * filters; 0 (unknown) writes the run without one. */
-        runRows: Long = 0L): Unit = {
+        runFiles: Int = 1): Unit = {
       val spark = rows.sparkSession
       val current = meta(spark, storeDir)
       val st = current match {
@@ -297,7 +318,7 @@ private[graft] object LsmIndex {
         layoutPath(storeDir, spec), st, parts,
         filterOptions((runRows + parts - 1) / parts))
       commit(spark, storeDir, spec, next, current.map(_.declared))
-      if (filtered) filesOf(spark, layoutPath(storeDir, spec), next, Seq(run))
+      warm(spark, layoutPath(storeDir, spec), Seq(run))
     }
 
     /** Build the index from scratch out of the corpus' stored
@@ -306,9 +327,10 @@ private[graft] object LsmIndex {
       * layout (one bucket-partitioned bulk, zero runs) is fully written
       * before the meta pointer flips; the superseded layout is removed
       * after. `inputRows` (evaluated only by a filtered store) is the
-      * source's row count, which sizes the per-bucket filters. */
+      * source's row count or an upper bound on it, which sizes the
+      * per-bucket filters. */
     def rebuild(rows: DataFrame, idCol: String, valueCol: String,
-        storeDir: String, spec: Spec, inputRows: => Long = 0L): Unit = {
+        storeDir: String, spec: Spec, inputRows: => Long): Unit = {
       val spark = rows.sparkSession
       val previous = meta(spark, storeDir).map(_.declared)
       val fs = fsOf(spark, storeDir)
@@ -325,7 +347,7 @@ private[graft] object LsmIndex {
       if (!fs.exists(new Path(layout, bulk))) fs.mkdirs(new Path(layout, bulk))
       val st = State(1L, Seq(bulk), Nil)
       commit(spark, storeDir, spec, st, previous)
-      if (filtered) filesOf(spark, layout.toString, st, Seq(bulk))
+      warm(spark, layout.toString, Seq(bulk))
     }
 
     /** Fold the ACTIVE index's accumulated flat runs into its
@@ -348,45 +370,43 @@ private[graft] object LsmIndex {
             .map { next =>
               commit(spark, storeDir, spec, next, None) // same layout: nothing superseded
               sweep(spark, layout, next)
-              if (filtered) filesOf(spark, layout, next, next.bulks.filterNot(st.bulks.contains))
+              warm(spark, layout, next.bulks.filterNot(st.bulks.contains))
               (st.runs.size, next.bulks.size)
             }
         }
 
-    /** The data files under `dirs` of `layout` (committed as `st`), each
-      * with its bulk bucket (None: a run file) and its key filters, one
-      * per row group (None: that row group has none, so it may hold any
-      * key). Listing and filter reads run on the driver, through the
-      * layout's Hadoop FileSystem; no job. A filter is read on a
-      * [[filterCache]] miss — mostly by the file's writer, which calls
-      * this for the dirs it just committed. */
-    private def filesOf(spark: SparkSession, layout: String, st: State,
-        dirs: Seq[String]): Seq[(String, Option[Int], Filters)] = {
+    /** The data files of the live `dirs` of `layout`, each with its bulk
+      * bucket (None: a run file). The listing runs on the driver through
+      * the layout's Hadoop FileSystem, no job; a missing dir fails it, as
+      * it fails [[readLive]] — a lost run or bulk must not read as
+      * "holds no key". */
+    private def filesOf(spark: SparkSession, layout: String,
+        dirs: Seq[String]): Seq[(Path, Option[Int])] = {
       val fs = fsOf(spark, layout)
-      val root = fs.makeQualified(new Path(layout))
-      val live = st.live.map(d => s"${new Path(root, d)}/")
-      val known = Option(filterCache.get(root.toString)).getOrElse(Map.empty)
-        .filter { case (p, _) => live.exists(p.startsWith) }
-      val files = dirs.map(new Path(root, _)).filter(fs.exists).flatMap { d =>
-        val it = fs.listFiles(d, true)
+      dirs.flatMap { d =>
+        val it = fs.listFiles(new Path(layout, d), true)
         Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath).toSeq
       }.filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
-        .map(p => p -> known.getOrElse(p.toString, readFilters(spark, p, keyCol)))
-      filterCache.put(root.toString, known ++ files.map { case (p, f) => p.toString -> f })
-      files.map { case (p, f) =>
-        (p.toString, p.getParent.getName.stripPrefix(s"$BucketCol=").toIntOption, f)
-      }
+        .map(p => p -> p.getParent.getName.stripPrefix(s"$BucketCol=").toIntOption)
     }
 
-    /** Parquet write options that give every file written a split-block
-      * filter on `keyCol`, sized for `ndv` distinct keys per file —
-      * Parquet's default sizing gives even a 40-row file a 1 MB bitset.
-      * An unfiltered store or an unknown `ndv` (0) writes no filter;
-      * `ndv` is evaluated only for a filtered store. */
+    /** A filtered store's writer reads the filters of the `dirs` it
+      * just committed into [[filterCache]], so a probe finds them there
+      * rather than reading a fold's bucket files as it first touches
+      * each. */
+    private def warm(spark: SparkSession, layout: String, dirs: Seq[String]): Unit =
+      if (filtered) filesOf(spark, layout, dirs).foreach { case (p, _) =>
+        filtersOf(spark, p, keyCol)
+      }
+
+    /** Parquet write options that give a filtered store's every file a
+      * split-block filter on `keyCol`, sized for `ndv` distinct keys per
+      * file — Parquet's default sizing gives even a 40-row file a 1 MB
+      * bitset. `ndv` is evaluated only for a filtered store. */
     private def filterOptions(ndv: => Long): Map[String, String] =
-      Option.when(filtered)(ndv).filter(_ > 0).fold(Map.empty[String, String])(n =>
-        Map(s"parquet.bloom.filter.enabled#$keyCol" -> "true",
-          s"parquet.bloom.filter.expected.ndv#$keyCol" -> n.toString))
+      if (!filtered) Map.empty
+      else Map(s"parquet.bloom.filter.enabled#$keyCol" -> "true",
+        s"parquet.bloom.filter.expected.ndv#$keyCol" -> math.max(1L, ndv).toString)
 
     /** Per-file filter rows of a bulk written from `rows` input rows:
       * one bucket's share. */
@@ -404,9 +424,9 @@ private[graft] object LsmIndex {
       *
       * The store read is pruned to `touched.buckets`, which the caller
       * observed on a materialization it makes anyway. A filtered store
-      * probed with at most [[FilterProbeMaxRows]] rows instead collects
-      * the batch's keys (one job over `rows`) and scans only the files
-      * [[filesMayHold]] finds. */
+      * probed with at most [[FilterProbeRowsPerBucket]] rows a bucket
+      * instead collects the batch's keys (one job over `rows`) and
+      * scans only the files [[filesMayHold]] finds. */
     protected def probeSides(rows: DataFrame, idType: DataType,
         storeDir: String, spec: Spec, touched: Touched, maxBroadcastRows: Long)(
         batchCols: Column*): (DataFrame, DataFrame) = {
@@ -419,11 +439,11 @@ private[graft] object LsmIndex {
         if (touched.rows <= maxBroadcastRows) broadcast(batchSide) else batchSide
       val layout = layoutPath(storeDir, spec)
       val store =
-        if (!filtered || touched.rows > FilterProbeMaxRows)
+        if (!filtered || touched.rows > FilterProbeRowsPerBucket * spec.buckets)
           readLive(spark, layout, st, flatSchema(idType), BucketCol, Some(touched.buckets))
         else filesMayHold(spark, layout, st, rows.select(bucketOf(col(keyCol), spec), col(keyCol))
-            .where(col(keyCol).isNotNull).collect().toSeq.groupMap(_.getInt(0))(_.getString(1))
-          ) match {
+            .where(col(keyCol).isNotNull).collect().toSeq.groupMap(_.getInt(0))(r =>
+              org.apache.parquet.io.api.Binary.fromString(r.getString(1)))) match {
           case Nil => emptyRows(spark, flatSchema(idType))
           case files => spark.read.schema(flatSchema(idType)).parquet(files: _*)
         }
@@ -431,35 +451,44 @@ private[graft] object LsmIndex {
     }
 
     /** The live data files that may hold one of `keys` (by bucket):
-      * every run file and each touched bucket's bulk files whose filter
+      * each run file and each touched bucket's bulk files whose filter
       * may contain a key of that bucket (a run file is tested against
       * every key). A file without a filter (written before the store
-      * was filtered, or with an unknown row count) may hold any key. */
+      * was filtered) may hold any key. */
     private def filesMayHold(spark: SparkSession, layout: String, st: State,
-        keys: Map[Int, Seq[String]]): Seq[String] = {
+        keys: Map[Int, Seq[org.apache.parquet.io.api.Binary]]): Seq[String] = {
       val all = keys.values.flatten.toSeq
-      filesOf(spark, layout, st, st.runs ++ st.bulks).collect {
-        case (p, bucket, filters) if bucket.fold(Option(all))(keys.get).exists(ks =>
-            filters.exists(_.forall(f => ks.exists(k =>
-              f.findHash(f.hash(org.apache.parquet.io.api.Binary.fromString(k))))))) => p
+      filesOf(spark, layout, st.runs ++ st.bulks).collect {
+        case (p, bucket) if bucket.fold(Option(all))(keys.get).exists(ks =>
+            filtersOf(spark, p, keyCol).exists(_.forall(f =>
+              ks.exists(k => f.findHash(f.hash(k)))))) => p.toString
       }
     }
   }
 
   private type Filters = Seq[Option[org.apache.parquet.column.values.bloomfilter.BloomFilter]]
 
-  /** Per layout (qualified path), the key filters read from its files,
-    * by file path. Index files are immutable — every write, a retried
-    * one too, names new part files — so each filter is read once. Each
-    * read drops the files of dirs the layout no longer references, so a
-    * layout's entries stay the size of its live files. Without the cache
-    * a probe reads the filters of every touched bulk file, and
-    * GateFlatnessSpec's exact gate (25 digests a batch) read 10× more
-    * files late than early. */
-  private val filterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Filters]]()
+  /** Key filters read from index files, by file path, least recently
+    * used first, at most [[FilterCacheMaxBytes]] of bitset (an entry
+    * weighs its bitsets plus its path's length, so filterless files
+    * count too). Index files are immutable — every write, a retried
+    * one too, names new part files — so an entry never goes stale; the
+    * entries of files no longer live are never asked for again and age
+    * out. Without it a probe re-reads the filters of every touched bulk
+    * file: GateFlatnessSpec's exact gate (25 digests a batch) read 10×
+    * more files late than early. */
+  private val filterCache = com.google.common.cache.CacheBuilder.newBuilder()
+    .maximumWeight(FilterCacheMaxBytes)
+    .weigher[String, Filters]((path, filters) =>
+      filters.flatten.map(_.getBitsetSize).sum + path.length)
+    .build[String, Filters]()
 
-  /** One file's filters on `keyCol`, one per row group. */
+  /** One index file's key filters, through [[filterCache]]. */
+  private def filtersOf(spark: SparkSession, file: Path, keyCol: String): Filters =
+    filterCache.get(file.toString, () => readFilters(spark, file, keyCol))
+
+  /** One file's filters on `keyCol`, one per row group (None: that row
+    * group has none, so it may hold any key). */
   private def readFilters(spark: SparkSession, file: Path, keyCol: String): Filters = {
     import scala.jdk.CollectionConverters._
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet.hadoop.util

@@ -1730,7 +1730,7 @@ object CurationQueries {
     val spec = DigestIndex.Spec(16)
     DigestIndex.rebuild(
       corpus.select(col("doc_id"), Dedup.contentKey(col("text")).as("digest")),
-      "doc_id", "digest", store, spec)
+      "doc_id", "digest", store, spec, corpus.count())
     val filter = Dedup.digestFilter(corpus, "text",
       expectedItems = 256L, numBits = Dedup.bloomBits(256L, 0.01))
     Dedup.bloomNewDocsIndexed(batch, "doc_id", "text", filter, store, spec,

@@ -25,7 +25,9 @@ import graft.util.{FileCommit, Materialize, Span}
   * both gate modes, rebuildable from the corpus column any time). Its
   * run and bulk files carry per-file Parquet filters, so a micro-batch
   * probe reads only the files that may hold one of its digests —
-  * per-batch verify I/O tracks the batch, not the corpus. Same-id
+  * per-batch verify I/O tracks the batch, not the corpus. (A file
+  * tested with k absent digests passes with probability 1 − 0.99^k,
+  * so a mega-batch of thousands reads most of the index.) Same-id
   * matches (replay/crash windows only) fall back to the corpus column
   * for exactly that digest set — see
   * [[graft.dedup.Dedup.indexedDupDigests]].
@@ -387,8 +389,9 @@ object CorpusBuilder {
     * digest-keyed batch, observing its digest buckets and count (the
     * index probe's [[LsmIndex.Touched]]); the probe's matches
     * ([[Dedup.indexedDupDigests]]); the survivors, observing their
-    * count. A micro-batch probe adds one job, collecting its digests
-    * for the index's per-file filter test. */
+    * count. A probe of at most [[LsmIndex.FilterProbeRowsPerBucket]]
+    * digests a bucket adds one job, collecting its digests for the
+    * index's per-file filter test. */
   def appendNew(spark: SparkSession, batch: DataFrame, corpusDir: String,
       idCol: String, textCol: String,
       digestBuckets: Int = DefaultDigestBuckets,
@@ -624,7 +627,7 @@ object CorpusBuilder {
         "band-index" -> (() =>
           BandIndex.append(fresh.filter(col(SigCol).isNotNull)
             .select(col(idCol), col(SigCol)), idCol, SigCol, corpusDir, bandSpec,
-            runFiles = LsmIndex.runParts(
+            runRows = appended, runFiles = LsmIndex.runParts(
               appended * nd.bands, BandRowsPerRunFile)))))
       requireBuildLock(corpusDir, lockToken)
       Span("docs")(fresh.write.mode("append").parquet(docsDir))

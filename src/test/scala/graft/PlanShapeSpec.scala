@@ -62,7 +62,7 @@ class PlanShapeSpec extends SparkSpec {
       .select(col("doc_id"), col("sig"))
     val corpusSigs = sigged((0L until 30L).map(i =>
       (i, (1 to 40).map(j => s"w${i}_$j").mkString(" "))))
-    BandIndex.rebuild(corpusSigs, "doc_id", "sig", dir, spec)
+    BandIndex.rebuild(corpusSigs, "doc_id", "sig", dir, spec, 30L)
     val batchSigs = sigged(Seq((100L, (1 to 40).map(j => s"w5_$j").mkString(" "))))
     val probe = BandIndex.probe(batchSigs, "doc_id", "sig", dir, spec,
       BandIndex.touched(batchSigs, "sig", spec))
@@ -210,11 +210,13 @@ class PlanShapeSpec extends SparkSpec {
       .withColumn("digest", Dedup.contentKey(col("text")))
       .select(col("doc_id"), col("digest"))
     DigestIndex.rebuild(digested((0L until 40L).map(i => (i, s"doc $i"))),
-      "doc_id", "digest", dir, spec)
-    // a probe past FilterProbeMaxRows candidates: smaller ones read only
-    // the files whose filter may hold a candidate (DigestIndexSpec)
+      "doc_id", "digest", dir, spec, 40L)
+    // a probe past FilterProbeRowsPerBucket candidates a bucket: smaller
+    // ones read only the files whose filter may hold a candidate
+    // (DigestIndexSpec)
     val batch = digested(Seq((100L, "doc 7"), (101L, "doc 9")) ++
-      (0L until graft.dedup.LsmIndex.FilterProbeMaxRows).map(i => (1000L + i, s"new $i")))
+      (0L until graft.dedup.LsmIndex.FilterProbeRowsPerBucket * spec.buckets)
+        .map(i => (1000L + i, s"new $i")))
     val probe = DigestIndex.probe(batch, "doc_id", "digest", dir, spec,
       DigestIndex.touched(batch, "digest", spec))
     val plan = formatted(probe)
@@ -262,7 +264,7 @@ class PlanShapeSpec extends SparkSpec {
     val corpus = (0L until 50L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
       .withColumn("digest", Dedup.contentKey(col("text")))
     val spec = DigestIndex.Spec(8)
-    DigestIndex.rebuild(corpus.select($"doc_id", $"digest"), "doc_id", "digest", dir, spec)
+    DigestIndex.rebuild(corpus.select($"doc_id", $"digest"), "doc_id", "digest", dir, spec, 50L)
     val items = 1L << 20
     val filter = Dedup.digestFilter(corpus, "text", items, Dedup.bloomBits(items, 0.01))
     assert(filter.length > 1000000, "the default sizing serializes to ~1.2 MB")

@@ -52,7 +52,7 @@ class DigestIndexSpec extends SparkSpec {
   test("probe returns matches only from touched buckets; misses return empty") {
     val dir = tmpDir("dix-probe")
     val corpus = digested((0L until 50L).map(i => (i, s"doc $i")))
-    DigestIndex.rebuild(corpus, "doc_id", "digest", dir, spec)
+    DigestIndex.rebuild(corpus, "doc_id", "digest", dir, spec, corpus.count())
     assert(DigestIndex.readMeta(spark, dir).contains(spec))
     val batch = digested(Seq((100L, "doc 7"), (101L, "novel content")))
     val m = probe(batch, "doc_id", "digest", dir, spec)
@@ -65,7 +65,7 @@ class DigestIndexSpec extends SparkSpec {
 
   test("probe against an EMPTY rebuilt layout reads as empty, not lost") {
     val dir = tmpDir("dix-empty")
-    DigestIndex.rebuild(digested(Nil), "doc_id", "digest", dir, spec)
+    DigestIndex.rebuild(digested(Nil), "doc_id", "digest", dir, spec, 0L)
     assert(DigestIndex.layoutExists(spark, dir, spec))
     val batch = digested(Seq((1L, "anything")))
     assert(probe(batch, "doc_id", "digest", dir, spec).count() == 0L)
@@ -74,9 +74,9 @@ class DigestIndexSpec extends SparkSpec {
   test("bucketing change rebuilds into a fresh layout with an atomic pointer flip") {
     val dir = tmpDir("dix-resize")
     val corpus = digested((0L until 20L).map(i => (i, s"d$i")))
-    DigestIndex.rebuild(corpus, "doc_id", "digest", dir, spec)
+    DigestIndex.rebuild(corpus, "doc_id", "digest", dir, spec, corpus.count())
     val spec2 = DigestIndex.Spec(16)
-    DigestIndex.rebuild(corpus, "doc_id", "digest", dir, spec2)
+    DigestIndex.rebuild(corpus, "doc_id", "digest", dir, spec2, corpus.count())
     assert(DigestIndex.readMeta(spark, dir).contains(spec2))
     assert(DigestIndex.layoutExists(spark, dir, spec2))
     assert(!java.nio.file.Files.exists(
@@ -90,14 +90,14 @@ class DigestIndexSpec extends SparkSpec {
 
   test("a torn meta tmp (crash mid-write) is inert: the committed pointer stays active") {
     val dir = tmpDir("dix-torn-tmp")
-    DigestIndex.rebuild(digested(Seq((1L, "one"))), "doc_id", "digest", dir, spec)
+    DigestIndex.rebuild(digested(Seq((1L, "one"))), "doc_id", "digest", dir, spec, 1L)
     // a crash between the tmp write and its rename leaves garbage
     // beside the pointer; readers only ever read the committed name
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, "digests-meta.json.crashed-attempt.tmp"),
       "not a meta".getBytes("UTF-8"))
     assert(DigestIndex.readMeta(spark, dir).contains(spec))
-    DigestIndex.append(digested(Seq((2L, "two"))), "doc_id", "digest", dir, spec)
+    DigestIndex.append(digested(Seq((2L, "two"))), "doc_id", "digest", dir, spec, 1L)
     val m = probe(digested(Seq((8L, "one"), (9L, "two"))),
       "doc_id", "digest", dir, spec).select("corpus_id").as[Long].collect().sorted.toSeq
     assert(m == Seq(1L, 2L))
@@ -106,7 +106,7 @@ class DigestIndexSpec extends SparkSpec {
   test("indexedDupDigests: different-id dups drop with ZERO corpus reads (steady state)") {
     val dir = tmpDir("dix-steady")
     val corpus = digested((0L until 10L).map(i => (i, s"c$i")))
-    DigestIndex.rebuild(corpus, "doc_id", "digest", dir, spec)
+    DigestIndex.rebuild(corpus, "doc_id", "digest", dir, spec, corpus.count())
     // batch ids are disjoint from corpus ids — every match is
     // different-id, so the corpus thunk must never evaluate
     val cand = digested(Seq((100L, "c3"), (101L, "c7"), (102L, "new stuff")))
@@ -125,7 +125,7 @@ class DigestIndexSpec extends SparkSpec {
     // crashed (replay must ADMIT)
     val committed = digested(Seq((1L, "landed")))
     val ghost = digested(Seq((2L, "never landed")))
-    DigestIndex.rebuild(committed.union(ghost), "doc_id", "digest", dir, spec)
+    DigestIndex.rebuild(committed.union(ghost), "doc_id", "digest", dir, spec, 2L)
     val corpusDigests = committed.select($"digest") // only "landed" is real
     val replay = committed.union(ghost) // the at-least-once replay
     val dup = Dedup.indexedDupDigests(replay, "doc_id", "digest", dir, spec,
@@ -153,7 +153,7 @@ class DigestIndexSpec extends SparkSpec {
     // index" (the CorpusBuilder resolve path then rebuilds), never be
     // misparsed into the LSM reader
     assert(DigestIndex.readMeta(spark, dir).isEmpty)
-    DigestIndex.rebuild(corpus, "doc_id", "digest", dir, spec)
+    DigestIndex.rebuild(corpus, "doc_id", "digest", dir, spec, corpus.count())
     assert(DigestIndex.readMeta(spark, dir).contains(spec))
     val m = probe(digested(Seq((90L, "v1 doc 3"))), "doc_id",
       "digest", dir, spec).select("corpus_id").as[Long].collect().toSeq
@@ -165,11 +165,11 @@ class DigestIndexSpec extends SparkSpec {
     // restart-from-empty append (the superset-invariant guard)
     val dir = tmpDir("dix-append-guard")
     val corpus = digested((0L until 20L).map(i => (i, s"guarded doc $i")))
-    DigestIndex.rebuild(corpus, "doc_id", "digest", dir, spec)
+    DigestIndex.rebuild(corpus, "doc_id", "digest", dir, spec, corpus.count())
     val other = DigestIndex.Spec(16)
     val e = intercept[RuntimeException] {
       DigestIndex.append(digested(Seq((90L, "fresh"))), "doc_id", "digest",
-        dir, other)
+        dir, other, 1L)
     }
     assert(e.getMessage.contains("rebuild"), e.getMessage)
     // the old layout and meta are intact — the probe still answers
@@ -191,7 +191,7 @@ class DigestIndexSpec extends SparkSpec {
       .parquet(s"$v1/${spec.layoutDir}")
     val e1 = intercept[RuntimeException] {
       DigestIndex.append(digested(Seq((92L, "fresh"))), "doc_id", "digest",
-        v1, spec)
+        v1, spec, 1L)
     }
     assert(e1.getMessage.contains("ver-1") &&
       e1.getMessage.contains("rebuild"), e1.getMessage)
@@ -203,10 +203,10 @@ class DigestIndexSpec extends SparkSpec {
     val sigs = Dedup.stagedSigs(
       (0L until 10L).map(i => (i, s"band guard doc $i word")).toDF("doc_id", "text"),
       "doc_id", "text", shingleK = 2, k = 16)
-    BandIndex.rebuild(sigs, "doc", "sig", bDir, bSpec)
+    BandIndex.rebuild(sigs, "doc", "sig", bDir, bSpec, 10L)
     val eb = intercept[RuntimeException] {
       BandIndex.append(sigs, "doc", "sig", bDir,
-        BandIndex.Spec(bands = 8, buckets = 8))
+        BandIndex.Spec(bands = 8, buckets = 8), 10L)
     }
     assert(eb.getMessage.contains("rebuild"), eb.getMessage)
     assert(BandIndex.readMeta(spark, bDir).contains(bSpec))
@@ -251,7 +251,7 @@ class DigestIndexSpec extends SparkSpec {
     val dir = tmpDir("dix-tiers")
     (0 until 10).foreach { b =>
       DigestIndex.append(digested(Seq((b.toLong, s"tier doc $b"))),
-        "doc_id", "digest", dir, spec)
+        "doc_id", "digest", dir, spec, 1L)
       if (b % 2 == 1)
         DigestIndex.compact(spark, dir, minRuns = 2, maxBulks = 2)
     }
@@ -272,7 +272,7 @@ class DigestIndexSpec extends SparkSpec {
     assert(hits == Set(0L, 9L))
     // below the threshold the fold is a no-op
     DigestIndex.append(digested(Seq((20L, "tier doc 20"))),
-      "doc_id", "digest", dir, spec)
+      "doc_id", "digest", dir, spec, 1L)
     assert(DigestIndex.compact(spark, dir, minRuns = 2).flatMap(_._2).isEmpty)
     assert(children("run-").size == 1)
   }
@@ -281,7 +281,7 @@ class DigestIndexSpec extends SparkSpec {
     val dir = tmpDir("dix-crash")
     (0 until 4).foreach { b =>
       DigestIndex.append(digested(Seq((b.toLong, s"crash doc $b"))),
-        "doc_id", "digest", dir, spec)
+        "doc_id", "digest", dir, spec, 1L)
     }
     val layout = s"$dir/${spec.layoutDir}"
     // window 1 — crash BETWEEN the bulk write and the meta swap: the
@@ -304,7 +304,7 @@ class DigestIndexSpec extends SparkSpec {
     digested(Seq((997L, "ghost bulk row"))).write.parquet(s"$layout/compact-99")
     (0 until 2).foreach { b =>
       DigestIndex.append(digested(Seq((10L + b, s"post doc $b"))),
-        "doc_id", "digest", dir, spec)
+        "doc_id", "digest", dir, spec, 1L)
     }
     assert(DigestIndex.compact(spark, dir, minRuns = 2).flatMap(_._2).isDefined)
     val children = Option(new java.io.File(layout).listFiles())
@@ -324,7 +324,7 @@ class DigestIndexSpec extends SparkSpec {
     // and not count the invisible debris as rows
     (0 until 2).foreach { b =>
       DigestIndex.append(digested(Seq((30L + b, s"tmp doc $b"))),
-        "doc_id", "digest", dir, spec)
+        "doc_id", "digest", dir, spec, 1L)
     }
     val debris = new java.io.File(s"$layout/run-66/_temporary/0")
     assert(debris.mkdirs())
@@ -360,7 +360,7 @@ class DigestIndexSpec extends SparkSpec {
     // a "mega" append asked to fan out writes multiple files in ONE run
     val rows = digested((0L until 40L).map(i => (i, s"wide doc $i")))
       .repartition(8)
-    DigestIndex.append(rows, "doc_id", "digest", dir, spec, runFiles = 4)
+    DigestIndex.append(rows, "doc_id", "digest", dir, spec, 40L, runFiles = 4)
     val run = new java.io.File(s"$dir/${spec.layoutDir}/run-0")
     assert(run.isDirectory)
     val files = run.listFiles().count(f =>
@@ -372,7 +372,7 @@ class DigestIndexSpec extends SparkSpec {
     assert(m == Seq(7L))
     // a micro-batch append (default) adds exactly one file
     DigestIndex.append(digested(Seq((50L, "one more"))), "doc_id", "digest",
-      dir, spec)
+      dir, spec, 1L)
     val run1 = new java.io.File(s"$dir/${spec.layoutDir}/run-1")
     assert(run1.listFiles().count(f =>
       f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_")) == 1)
@@ -423,16 +423,19 @@ class DigestIndexSpec extends SparkSpec {
     val (m1, read1) = probed(batch)
     assert(m1 == Set((900L, 203L), (901L, 217L)))
     assert(read1 == 50L, s"only run 2's rows may be read, read $read1")
-    // a run written with an unknown row count has no filter: it is
-    // read whatever the candidates, and its rows match
-    DigestIndex.append(digested(Seq((500L, "filterless doc"), (501L, "other"))),
-      "doc_id", "digest", dir, spec)
+    // a run as written before the store was filtered has no filter: it
+    // is read whatever the candidates, and its rows match
+    val legacy = digested(Seq((500L, "filterless doc"), (501L, "other")))
+    DigestIndex.append(legacy, "doc_id", "digest", dir, spec, 2L)
+    legacy.select($"doc_id".as("doc"), $"digest").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/${spec.layoutDir}/run-4")
     val (m2, read2) = probed(batch.union(digested(Seq((903L, "filterless doc")))))
     assert(m2 == Set((900L, 203L), (901L, 217L), (903L, 500L)))
     assert(read2 == 52L, s"run 2 and the filterless run, read $read2")
-    // past FilterProbeMaxRows the probe reads every run, as before
-    val big = digested((0L until LsmIndex.FilterProbeMaxRows).map(i => (1000L + i, s"big $i")) ++
-      Seq((5000L, "run 0 doc 5"), (5001L, "other")))
+    // past FilterProbeRowsPerBucket candidates a bucket the probe reads
+    // every run, as before
+    val big = digested((0L until LsmIndex.FilterProbeRowsPerBucket * spec.buckets)
+      .map(i => (1000L + i, s"big $i")) ++ Seq((5000L, "run 0 doc 5"), (5001L, "other")))
     val (m3, read3) = probed(big)
     assert(m3 == Set((5000L, 5L), (5001L, 501L)))
     assert(read3 == 202L, s"the unfiltered scan reads every run, read $read3")
@@ -442,6 +445,43 @@ class DigestIndexSpec extends SparkSpec {
     val (m4, read4) = probed(batch)
     assert(m4 == m1 && read4 < 202L / 2, s"read $read4")
     assert(probed(digested(Seq((904L, "novel"))))._2 == 0L)
+    // past FilterProbeRowsPerBucket candidates in all, a bulk file is
+    // still tested with its own bucket's: 1,100 novel digests in
+    // bucket 0 and one in every other bucket pass bucket 0's file, and
+    // the other buckets' files only for the one they hold
+    val spread = digested((0L until 12000L).map(i => (10000L + i, s"spread $i")))
+      .withColumn("b", pmod(xxhash64($"digest"), lit(spec.buckets.toLong)))
+      .as[(Long, String, Long)].collect().toSeq
+    val skewed = spread.filter(_._3 == 0L).take(1100) ++
+      (1 until spec.buckets).map(b => spread.find(_._3 == b).get)
+    val (m5, read5) = probed(skewed.map(r => (r._1, r._2)).toDF("doc_id", "digest")
+      .union(digested(Seq((905L, "run 2 doc 3")))))
+    assert(m5 == Set((905L, 203L)))
+    assert(read5 < 202L / 2, s"only the buckets whose filter may hold a key, read $read5")
+  }
+
+  test("a small probe over a live run or bulk lost out-of-band fails; it never reads as no match") {
+    val dir = tmpDir("dix-lost")
+    (0 until 2).foreach(r => DigestIndex.append(digested(Seq((r.toLong, s"lost doc $r"))),
+      "doc_id", "digest", dir, spec, 1L))
+    val layout = s"$dir/${spec.layoutDir}"
+    val batch = digested(Seq((9L, "lost doc 0")))
+    assert(probe(batch, "doc_id", "digest", dir, spec).count() == 1L)
+    graft.streaming.StoreManifest.deleteRecursively(java.nio.file.Paths.get(layout, "run-0"))
+    val e = intercept[java.io.FileNotFoundException](
+      probe(batch, "doc_id", "digest", dir, spec).count())
+    assert(e.getMessage.contains("run-0"), e.getMessage)
+    // the same for a fold's bulk
+    val dir2 = tmpDir("dix-lost-bulk")
+    (0 until 2).foreach(r => DigestIndex.append(digested(Seq((r.toLong, s"lost doc $r"))),
+      "doc_id", "digest", dir2, spec, 1L))
+    assert(DigestIndex.compact(spark, dir2, minRuns = 2).flatMap(_._2).contains((2, 1)))
+    val bulk = new java.io.File(s"$dir2/${spec.layoutDir}").listFiles()
+      .filter(_.getName.startsWith("compact-")).head
+    graft.streaming.StoreManifest.deleteRecursively(bulk.toPath)
+    val e2 = intercept[java.io.FileNotFoundException](
+      probe(batch, "doc_id", "digest", dir2, spec).count())
+    assert(e2.getMessage.contains(bulk.getName), e2.getMessage)
   }
 
   test("bloomNewDocsIndexed matches bloomNewDocs and never reads the corpus steady-state") {
@@ -450,7 +490,7 @@ class DigestIndexSpec extends SparkSpec {
     val corpus = corpusRows.toDF("doc_id", "text")
       .withColumn("digest", Dedup.contentKey(col("text")))
     DigestIndex.rebuild(corpus.select($"doc_id", $"digest"),
-      "doc_id", "digest", dir, spec)
+      "doc_id", "digest", dir, spec, corpus.count())
     val filter = Dedup.digestFilter(corpus, "text", 256L, Dedup.bloomBits(256L, 0.01))
     val batch = (20L until 60L).map(i => (i + 1000L, s"doc $i")).toDF("doc_id", "text")
     val gated = Dedup.bloomNewDocsIndexed(batch, "doc_id", "text", filter,

@@ -147,7 +147,7 @@ class CorpusBuilderSpec extends SparkSpec {
         array_distinct(call_function("graft_shingles",
           tokens(col("text")), lit(nd.shingleK))), lit(nd.k)))
       .select(col("doc_id"), col("__sig"))
-    BandIndex.append(ghostSigs, "doc_id", "__sig", corpus, spec)
+    BandIndex.append(ghostSigs, "doc_id", "__sig", corpus, spec, 1L)
     // replay of that batch: the doc is (id, sig)-identical to its ghost
     // and must be ADMITTED, not dropped by its own crash artifact
     assert(CorpusBuilder.appendNearDupNew(spark,
@@ -266,7 +266,9 @@ class CorpusBuilderSpec extends SparkSpec {
     val docs = Seq((1L, "legacy one"), (2L, "legacy two")).toDF("doc_id", "text")
       .withColumn(CorpusBuilder.DigestCol, Dedup.contentKey(col("text")))
     DigestIndex.append(docs.select(col("doc_id"), col(CorpusBuilder.DigestCol)),
-      "doc_id", CorpusBuilder.DigestCol, corpus, spec)
+      "doc_id", CorpusBuilder.DigestCol, corpus, spec, 2L)
+    docs.select(col("doc_id").as("doc"), col(CorpusBuilder.DigestCol).as("digest"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$corpus/${spec.layoutDir}/run-0")
     docs.write.parquet(s"$corpus/docs")
     val bloom = java.nio.file.Paths.get(corpus, "bloom.bin")
     java.nio.file.Files.write(bloom, Array.fill[Byte](64)(0))
